@@ -79,7 +79,9 @@ _CHANGED_R14: list[str] = [
     #   retired)
     "pq_ann_topk",  # pq_encode: literal-codebook expression fold ->
     #   numpy mapInArrow argmin with the fold's exact IEEE
-    #   accumulation order (codes bit-identical; encode pass 2.4x)
+    #   accumulation order (same codes on well-formed, NULL and
+    #   NULL-element rows; wrong-length rows get NULL codes; encode
+    #   pass 2.4x)
     "curation_funnel_report",  # stage-1 ingest row rides the quality
     #   pass (scans 3 -> 2); kept-text-only persist preserves the
     #   memory posture

@@ -2,21 +2,14 @@
 report (data_gen/generator.py:210-270) and the QA scripts' audits
 (qa/validate_data.py:127-148, qa/validate_data_fast.py:156-171).
 
-Everything is a single aggregation pass per call; distinct counts use
-``approx_count_distinct`` by default (HLL sketch, mergeable, no
-shuffle explosion at 100 TB) with ``exact=True`` opt-in.
+Everything is a single aggregation pass per call; percentiles use a
+mergeable sketch by default with ``exact=True`` opt-in.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-_NUMERIC = (
-    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.DecimalType,
-)
 
 
 def null_audit(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -26,31 +19,6 @@ def null_audit(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     for c in cols:
         aggs.append(F.count(F.col(c)).alias(f"{c}_non_null"))
         aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}_nulls"))
-    return df.agg(*aggs)
-
-
-def profile(df: DataFrame, exact_distinct: bool = False) -> DataFrame:
-    """One-pass multi-metric profile (A7/A10): per numeric column
-    min/max/avg/median(approx), per column distinct count + nulls.
-
-    Returns a single-row DataFrame; callers `.collect()[0]` it (it is
-    an aggregate, so collecting is O(columns), not O(rows)).
-    """
-    aggs = [F.count("*").alias("total_rows")]
-    distinct = (
-        (lambda c: F.countDistinct(F.col(c)))
-        if exact_distinct
-        else (lambda c: F.approx_count_distinct(F.col(c)))
-    )
-    for field in df.schema.fields:
-        c = field.name
-        aggs.append(distinct(c).alias(f"{c}_distinct"))
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}_nulls"))
-        if isinstance(field.dataType, _NUMERIC):
-            aggs.append(F.min(c).alias(f"{c}_min"))
-            aggs.append(F.max(c).alias(f"{c}_max"))
-            aggs.append(F.avg(c).alias(f"{c}_avg"))
-            aggs.append(F.percentile_approx(c, 0.5).alias(f"{c}_median"))
     return df.agg(*aggs)
 
 
@@ -201,26 +169,4 @@ def selectivity_report(
             / F.col("actual_rows"),
             2,
         ).alias("rel_err_pct"),
-    )
-
-
-def value_counts(df: DataFrame, col: str, top: int = 20) -> DataFrame:
-    """pandas value_counts analog: groupBy + count + top-k."""
-    return (
-        df.groupBy(col)
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.col(col).asc())
-        .limit(top)
-    )
-
-
-def range_audit(df: DataFrame, col: str) -> DataFrame:
-    """Range audit (validate_data.py:139-148): min/max/avg plus the
-    'must be zero after cleaning' non-positive count, one pass."""
-    return df.agg(
-        F.count("*").alias("total_rows"),
-        F.min(col).alias(f"{col}_min"),
-        F.max(col).alias(f"{col}_max"),
-        F.avg(col).alias(f"{col}_avg"),
-        F.sum(F.when(F.col(col) <= 0, 1).otherwise(0)).alias(f"{col}_non_positive"),
     )

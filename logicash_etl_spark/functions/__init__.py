@@ -1,5 +1,5 @@
 """Scalar/aggregate function helpers shared by operators and queries."""
 
-from logicash_etl_spark.functions.money import money, dsum, davg, round2
+from logicash_etl_spark.functions.money import money, dsum, davg
 
-__all__ = ["money", "dsum", "davg", "round2"]
+__all__ = ["money", "dsum", "davg"]

@@ -38,9 +38,3 @@ def davg(c: Column | str, alias: str | None = None) -> Column:
     col = F.col(c) if isinstance(c, str) else c
     out = F.sum(money(col)).cast("double") / F.count(col)
     return out.alias(alias) if alias else out
-
-
-def round2(c: Column, alias: str | None = None) -> Column:
-    """ROUND(x, 2) — the reference's display rounding (F3)."""
-    out = F.round(c, 2)
-    return out.alias(alias) if alias else out

@@ -10,7 +10,6 @@ from logicash_etl_spark.operators.joins import (
     bloom_filter_probe,
 )
 from logicash_etl_spark.operators.aggregates import (
-    grouped_summary,
     conditional_pivot,
     scd1_latest,
     top_k,
@@ -18,10 +17,9 @@ from logicash_etl_spark.operators.aggregates import (
 from logicash_etl_spark.operators.graph import pagerank_int
 from logicash_etl_spark.operators.sampling import weighted_topk_sample
 from logicash_etl_spark.operators.windows import ranked, sessionize
-from logicash_etl_spark.operators.merge import upsert, scd2_apply, scd2_init
+from logicash_etl_spark.operators.merge import scd2_apply, scd2_init
 
 __all__ = [
-    "upsert",
     "scd2_apply",
     "scd2_init",
     "enrich",
@@ -31,7 +29,6 @@ __all__ = [
     "asof_join",
     "bloom_filter_build",
     "bloom_filter_probe",
-    "grouped_summary",
     "conditional_pivot",
     "scd1_latest",
     "top_k",

@@ -5,7 +5,7 @@ partial/final automatically (map-side combine), so a 100 TB groupBy
 shuffles only the partially-aggregated state, not raw rows. The
 helpers standardize the reference's aggregate shapes:
 
-- A2/A3 grouped summaries (count/sum/avg/min/max) — etl_job.py:147-174
+- A2/A3 grouped summaries (``daily_summary``) — etl_job.py:147-174
 - A8 conditional-aggregation pivot — ddl_gold.sql:36-47
 - A9 SELECT DISTINCT as SCD1 (bug-compatible) + correct latest-wins
 - O1 top-k — TakeOrderedAndProject, never a full sort
@@ -18,28 +18,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from logicash_etl_spark.functions.money import davg, dsum, money
-
-
-def grouped_summary(
-    df: DataFrame,
-    keys: list[str],
-    amount: str,
-    count_alias: str = "n",
-    sum_alias: str = "total",
-    avg_alias: str = "promedio",
-    extra: list[Column] | None = None,
-) -> DataFrame:
-    """GROUP BY keys -> COUNT(*), SUM(amount), AVG(amount) (A2 shape).
-
-    Sums/averages run in decimal (exact, order-independent) and emit
-    double — see functions.money.
-    """
-    aggs = [
-        F.count("*").alias(count_alias),
-        dsum(amount, sum_alias),
-        davg(amount, avg_alias),
-    ] + (extra or [])
-    return df.groupBy(*keys).agg(*aggs)
 
 
 def daily_summary(

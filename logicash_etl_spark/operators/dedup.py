@@ -74,47 +74,6 @@ def minhash_signatures(
     return _signatures_from_exploded(sh, id_col, num_hashes)
 
 
-def lsh_band_preset(
-    threshold: float,
-    num_hashes: int = 128,
-    catch_prob: float = 0.95,
-) -> tuple[int, int]:
-    """Calibrate ``(num_hashes, bands)`` so banded LSH catches true
-    pairs AT the given Jaccard ``threshold`` with at least
-    ``catch_prob`` probability — the knob for workloads whose
-    true-pair similarity sits near the s-curve knee, where the
-    defaults legitimately miss (the r11 longdoc adjudication: mixed
-    24k-char tails formed true pairs at J=0.377-0.491, which the
-    64-hash x 16-band defaults catch with only 28-62% probability).
-
-    P(candidate) for a pair at Jaccard J under b bands of r rows is
-    ``1 - (1 - J^r)^b``. Fewer rows per band moves the knee DOWN
-    (higher recall at low J) at the cost of more false-positive
-    candidates for the exact verifier to discard — so this picks the
-    LARGEST r (within the ``num_hashes`` budget, r dividing it) whose
-    catch probability at ``threshold`` still clears ``catch_prob``:
-    maximal candidate pruning subject to the recall contract. E.g.
-    ``lsh_band_preset(0.35)`` -> (128, 64): r=2 catches a J=0.38 pair
-    with P > 0.9999 where the default 64x16 (r=4) gives ~28%.
-
-    Raises if even r=1 (every hash its own band — catch prob
-    ``1-(1-J)^n``) cannot reach ``catch_prob``; raise ``num_hashes``
-    in that case."""
-    if not 0 < threshold < 1:
-        raise ValueError(f"threshold must be in (0,1), got {threshold}")
-    for r in range(num_hashes, 0, -1):
-        if num_hashes % r:
-            continue
-        b = num_hashes // r
-        if 1 - (1 - threshold**r) ** b >= catch_prob:
-            return num_hashes, b
-    raise ValueError(
-        f"lsh_band_preset: {num_hashes} hashes cannot reach "
-        f"catch_prob={catch_prob} at threshold={threshold}; "
-        "increase num_hashes"
-    )
-
-
 def _signatures_from_exploded(sh: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
     """(id, __s shingle) rows -> (id, __mh0..__mh{k-1}) signatures."""
     return sh.groupBy(id_col).agg(
@@ -231,7 +190,7 @@ def jaccard_pairs(
     cache must outlive this call — materialize inside a
     ``cache_scope()`` (operators/caching.py) to free it
     deterministically; without a scope, callers own cleanup
-    (``spark.catalog.clearCache()``), as bench.py does between
+    (``spark.catalog.clearCache()``), as perfbench does between
     queries.
     """
     # join/shuffle on the 64-bit shingle hash, not the string: smaller

@@ -5,8 +5,8 @@ The reference's only change handling is SCD1-by-DISTINCT
 lifecycle story; with plain parquet (no Delta/Iceberg in this image)
 MERGE is emulated the classic way:
 
-  upsert        = target anti-join updates  UNION  updates  (latest wins)
-  scd2_apply    = close changed rows (set valid_to) + append new versions
+  upsert_if_newer = target UNION updates -> latest-wins per key
+  scd2_apply      = close changed rows (set valid_to) + append new versions
 
 Both are full-file rewrites — correct for parquet; on Delta/Iceberg the
 same call shape maps to a real MERGE INTO (noted per function).
@@ -20,26 +20,6 @@ from pyspark.sql import functions as F
 from logicash_etl_spark.operators.aggregates import scd1_latest
 
 
-def upsert(
-    target: DataFrame,
-    updates: DataFrame,
-    keys: list[str],
-    order_by: str | None = None,
-) -> DataFrame:
-    """Key-wise upsert: rows in ``updates`` replace target rows with
-    the same key; unmatched update rows are inserts.
-
-    If ``updates`` may carry several versions of one key, pass
-    ``order_by`` to pick latest-wins first. Shuffles each side once on
-    the key (anti-join + union); Delta's MERGE INTO is the same plan
-    minus the rewrite.
-    """
-    if order_by is not None:
-        updates = scd1_latest(updates, pk=keys, order_by=order_by)
-    kept = target.join(updates.select(*keys), on=keys, how="left_anti")
-    return kept.unionByName(updates)
-
-
 def upsert_if_newer(
     target: DataFrame,
     updates: DataFrame,
@@ -48,9 +28,9 @@ def upsert_if_newer(
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Conditional upsert: an update replaces the target row only when
-    it is NEWER (``MERGE ... WHEN MATCHED AND s.ts > t.ts``). Plain
-    :func:`upsert` is last-writer-wins, which regresses state when
-    batches arrive out of event-time order (a replayed Kafka topic, a
+    it is NEWER (``MERGE ... WHEN MATCHED AND s.ts > t.ts``). A plain
+    last-writer-wins upsert regresses state when batches arrive out of
+    event-time order (a replayed Kafka topic, a
     file stream whose listing order is not time order). Emulated as
     union + latest-wins window — one shuffle on the key, same plan
     Delta generates for the conditional MERGE."""

@@ -23,15 +23,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_STRUCT = T.StructType(
-    [
-        T.StructField("data", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
 
 
 def pack_media(df: DataFrame, data_col: str, mime: str, alias: str = "media") -> DataFrame:

@@ -7,7 +7,6 @@ train/test hygiene. These operators key selection off a CONTENT hash
 across cluster sizes, re-runs, engines, and even re-implementations
 (md5 hex is universal; an external system can reproduce the split).
 
-- deterministic_sample: keep ~fraction of rows
 - train_test_split: disjoint, exhaustive, stable split
 - stratified_sample: per-stratum fractions (class rebalancing)
 - weighted_topk_sample: weighted sampling WITHOUT replacement
@@ -27,14 +26,6 @@ def _u(id_col: Column, salt: str) -> Column:
     """Uniform [0,1) from the content hash of (salt, id)."""
     h = F.md5(F.concat(F.lit(salt), id_col.cast("string")))
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("double") / _DENOM
-
-
-def deterministic_sample(
-    df: DataFrame, id_col: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Keep rows whose hash-draw < fraction (~fraction of rows,
-    binomially). Same rows selected regardless of partitioning."""
-    return df.filter(_u(F.col(id_col), salt) < fraction)
 
 
 def train_test_split(

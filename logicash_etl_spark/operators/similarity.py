@@ -33,10 +33,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def as_double(vec: Column | str) -> Column:
     c = F.col(vec) if isinstance(vec, str) else vec
     return c.cast("array<double>")
@@ -106,36 +102,6 @@ def _sign_matrix(dim: int, planes: int, plane_offset: int = 0) -> list[list[floa
     return out
 
 
-def hyperplane_signature(
-    vec: Column, dim: int, planes: int = 16, plane_offset: int = 0
-) -> Column:
-    """Random-hyperplane LSH signature as an int bucket id:
-    bit p = sign(v . h_p), hyperplanes shipped as a literal +-1 matrix.
-
-    One transform over the matrix (multiply-add folds, whole-stage
-    codegen) — no hash calls in the hot loop; 2^planes exact in a
-    double for planes <= 50, so bits pack via pow and cast.
-    """
-    mat = F.lit(_sign_matrix(dim, planes, plane_offset))
-    dots = F.transform(
-        mat,
-        lambda row: F.aggregate(
-            F.zip_with(vec, row, lambda a, b: a * b), F.lit(0.0), lambda s, v: s + v
-        ),
-    )
-    return (
-        F.aggregate(
-            F.transform(
-                dots,
-                lambda d, i: F.when(d > 0, F.pow(F.lit(2.0), i)).otherwise(F.lit(0.0)),
-            ),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        .cast("long")
-    )
-
-
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -170,9 +136,8 @@ def lsh_ann_topk(
     """
     # All T signatures in one Arrow pass: dense vector x sign-matrix is
     # exactly the workload pandas UDFs are for — (N,D) @ (D, T*P) BLAS
-    # matmul, then bit-pack. Bitwise-identical to the JVM
-    # hyperplane_signature path (same literal matrices), ~50x less
-    # plan/codegen overhead than T x P higher-order-function folds.
+    # matmul, then bit-pack: ~50x less plan/codegen overhead than
+    # T x P higher-order-function folds over the same sign matrices.
     mflat = np.array(
         [_sign_matrix(dim, planes, t * planes) for t in range(tables)]
     ).reshape(tables * planes, dim).T
@@ -588,18 +553,20 @@ def pq_encode(
     literal-codebook expression fold (MapInArrow over the scan, no
     Exchange, no Join), but the m*k*dsub multiply-adds per row run
     vectorized instead of as interpreted higher-order-function lambda
-    evals (measured 2.4x on the encode pass warm, codes identical).
+    evals (measured 2.4x on the encode pass warm).
 
-    Bit-parity with the retired fold is by construction, not luck:
-    the accumulation adds (a_t - b_t)^2 one subvector element at a
-    time in the fold's order — the identical IEEE op sequence — so
-    every distance, and therefore every argmin, rounds the same way.
-    Ties break to the lowest code (np.argmin first minimum ==
-    array_position first minimum) — deterministic everywhere.
+    On well-formed rows the codes equal the retired fold's by
+    construction: the accumulation adds (a_t - b_t)^2 one subvector
+    element at a time in the fold's order — the identical IEEE op
+    sequence — so every distance, and therefore every argmin, rounds
+    the same way. Ties break to the lowest code (np.argmin first
+    minimum == array_position first minimum).
 
     Rows whose vector is NULL or whose length differs from m*dsub
     yield NULL codes in every subspace (the fixed-dim contract made
-    explicit — the fold produced NULL codes on such rows too).
+    explicit — the fold produced NULL codes on such rows too). A NULL
+    element yields a NULL code for its own subspace only, as in the
+    fold, where it made every distance of that subspace NULL.
 
     Output rows are m ints instead of dim floats (32x compression at
     the defaults: the property that lets a 100 TB embedding corpus
@@ -631,8 +598,14 @@ def pq_encode(
             if not ok.all():
                 idx = np.flatnonzero(ok)
                 sub_col = col.take(pa.array(idx))
-            vals = pc.list_flatten(sub_col).to_numpy(zero_copy_only=False)
+            flat = pc.list_flatten(sub_col)
+            vals = flat.to_numpy(zero_copy_only=False)
             emb = vals.astype(np.float64, copy=False).reshape(-1, dim)
+            holes = (
+                pc.is_null(flat).to_numpy(zero_copy_only=False).reshape(-1, dim)
+                if flat.null_count
+                else None
+            )
             arrays, names = [ids], [id_col]
             for s in range(m):
                 sub = emb[:, s * dsub : (s + 1) * dsub]
@@ -644,12 +617,15 @@ def pq_encode(
                 codes = d.argmin(axis=1).astype(np.int32) if len(d) else (
                     np.zeros(0, dtype=np.int32)
                 )
-                if idx is None:
+                valid = ok.copy()
+                if holes is not None:
+                    valid[ok] = ~holes[:, s * dsub : (s + 1) * dsub].any(axis=1)
+                if valid.all():
                     arrays.append(pa.array(codes))
                 else:
                     full = np.zeros(n, dtype=np.int32)
-                    full[idx] = codes
-                    arrays.append(pa.array(full, mask=~ok))
+                    full[ok] = codes
+                    arrays.append(pa.array(full, mask=~valid))
                 names.append(f"code_{s}")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 

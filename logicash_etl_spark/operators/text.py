@@ -170,12 +170,6 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def min_shingle_sketch(text: Column | str, n: int = 3) -> Column:
-    """Cheap 1-perm document sketch: lexicographic min of md5(shingle).
-    Reproducible anywhere md5 exists (rolling-hash fingerprint analog)."""
-    return F.array_min(F.transform(word_shingles(text, n), F.md5))
-
-
 def bpe_train(
     word_counts: DataFrame,
     n_merges: int = 8,

@@ -49,34 +49,6 @@ def ranked(
     return df.withColumn(alias, c)
 
 
-def with_lag_lead(
-    df: DataFrame,
-    keys: list[str],
-    order_by: str,
-    col: str,
-    lag_alias: str = "prev",
-    lead_alias: str = "next",
-) -> DataFrame:
-    """Analytic lag/lead within a key (section 2.5 extension surface)."""
-    w = W.partitionBy(*keys).orderBy(order_by)
-    return df.withColumn(lag_alias, F.lag(col).over(w)).withColumn(
-        lead_alias, F.lead(col).over(w)
-    )
-
-
-def running(
-    df: DataFrame, keys: list[str], order_by: str, col: str, alias: str = "running_total"
-) -> DataFrame:
-    """Running total with an explicit frame (rowsBetween unbounded
-    preceding .. current row)."""
-    w = (
-        W.partitionBy(*keys)
-        .orderBy(order_by)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return df.withColumn(alias, F.sum(col).over(w))
-
-
 def sessionize(
     df: DataFrame,
     key: str,

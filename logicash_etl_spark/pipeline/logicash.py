@@ -17,13 +17,13 @@ collapsed into a library call:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logicash_etl_spark import schemas as S
-from logicash_etl_spark.dq.rules import RuleSet, logicash_rules
+from logicash_etl_spark.dq.rules import logicash_rules
 from logicash_etl_spark.functions.money import davg, dsum, money
 from logicash_etl_spark.operators.aggregates import scd1_latest
 from logicash_etl_spark.operators.joins import enrich
@@ -41,8 +41,6 @@ class LogicashConfig:
     silver_dir: str
     gold_dir: str
     as_of: str | None = None  # injectable 'now' for reproducible runs
-    rules: RuleSet | None = None
-    extra: dict = field(default_factory=dict)
 
 
 def extract(spark: SparkSession, cfg: LogicashConfig) -> tuple[DataFrame, DataFrame]:
@@ -56,7 +54,7 @@ def transform(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Returns (silver, quarantine, dq_report[1 row])."""
     as_of = F.to_timestamp(F.lit(cfg.as_of)) if cfg.as_of else None
-    rules = cfg.rules or logicash_rules(as_of)
+    rules = logicash_rules(as_of)
     joined = enrich(fact, dim, on="id_atm", how="left", broadcast_dim=True)
     # one source scan serves report + both splits
     joined = joined.persist()

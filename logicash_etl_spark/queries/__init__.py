@@ -13,7 +13,7 @@ references the cached frame, and eager cleanup would re-trigger the
 scans the persist exists to avoid. A caller that executes many catalog
 queries in one session must either wrap each execute+collect in
 `operators.caching.cache_scope()` or call
-`spark.catalog.clearCache()` between queries, as bench.py,
+`spark.catalog.clearCache()` between queries, as perfbench,
 scan_audit.py, and tests/test_oracle_parity.py do. Without cleanup the
 only cost is executor-memory pressure (Spark's cache LRU-evicts);
 results are never wrong.

@@ -1,31 +1,19 @@
-"""Shared build-once lot cache with per-lot build timing.
+"""Shared build-once lot cache.
 
 Query modules materialize expensive shared inputs ("lots") once per
-process and reuse them across queries; bench.py pre-builds them as
-named ``lot_build`` line items so consumer-query timings stay
-attribution-stable. This is the one implementation of the
-cache-and-time pattern those modules share (each keeps its own cache
-and seconds dicts, cleared by its own ``clear_lots``).
+process and reuse them across queries. This is the one implementation
+of the build-once pattern those modules share; each module keeps its
+own cache dict.
 """
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Hashable, MutableMapping
 
 
-def timed_lot(
-    cache: MutableMapping,
-    seconds: MutableMapping[str, float],
-    key: Hashable,
-    name: str,
-    build: Callable[[], object],
-):
-    """Build ``build()`` once per ``key``; record the build's seconds
-    under ``name``. Re-requests cost a dict lookup and keep reporting
-    the original build time."""
+def build_once(cache: MutableMapping, key: Hashable, build: Callable[[], object]):
+    """``build()`` on the first request for ``key``; later requests
+    cost a dict lookup."""
     if key not in cache:
-        t0 = time.perf_counter()
         cache[key] = build()
-        seconds[name] = round(time.perf_counter() - t0, 4)
     return cache[key]

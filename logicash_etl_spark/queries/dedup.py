@@ -39,6 +39,7 @@ from logicash_etl_spark.operators.dedup import (
     minhash_dedup_pairs,
     simhash_dup_pairs,
 )
+from logicash_etl_spark.queries._lots import build_once
 from logicash_etl_spark.queries.registry import query
 from logicash_etl_spark.sources.readers import read_table
 from logicash_etl_spark.tmp import session_tmpdir
@@ -46,29 +47,12 @@ from logicash_etl_spark.tmp import session_tmpdir
 # (abspath(sf_dir), lot name) -> parquet path + schema DDL of the lot
 _LOTS: dict[tuple[str, str], tuple[str, str]] = {}
 
-# lot name -> seconds of the most recent build: bench.py pre-builds
-# the lots as named line items so consumer-query timings are
-# attribution-stable (whichever query runs first no longer gets billed
-# the full pipeline build)
-LOT_BUILD_SECONDS: dict[str, float] = {}
-
-
-def clear_lots() -> None:
-    """Forget materialized pair lots (benchmarking hook: a timing
-    re-run must rebuild them or it measures a cached read). Dirs are
-    removed at process exit regardless."""
-    _LOTS.clear()
-    LOT_BUILD_SECONDS.clear()
-
-
 def _pair_lot(
     spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
     """Materialize ``build()`` once per (process, sf_dir) and read it
     back; subsequent calls — including from OTHER queries — reuse the
     lot. The explicit read schema keeps zero-row lots readable."""
-    from logicash_etl_spark.queries._lots import timed_lot
-
     def materialize() -> tuple[str, str]:
         path = os.path.join(session_tmpdir("lq_dedup_lot_"), name)
         with cache_scope():
@@ -77,24 +61,9 @@ def _pair_lot(
         return path, df.schema.json()
 
     key = (os.path.abspath(sf_dir), name)
-    path, schema_json = timed_lot(_LOTS, LOT_BUILD_SECONDS, key, name, materialize)
+    path, schema_json = build_once(_LOTS, key, materialize)
     schema = StructType.fromJson(json.loads(schema_json))
     return spark.read.schema(schema).parquet(path)
-
-
-def prebuild_lots(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Force every shared pair lot and report per-lot build seconds
-    (bench.py attribution hook). Safe to call repeatedly — already-
-    built lots cost a dict lookup and report their original time."""
-    _exact_pairs(spark, sf_dir)
-    _minhash_pairs(spark, sf_dir)
-    # the simhash + embedding-cosine lots are owned by their queries;
-    # invoking them (lazily imported: the registry imports this module)
-    from logicash_etl_spark.queries import QUERIES
-
-    QUERIES["simhash_dups"](spark, sf_dir)
-    QUERIES["near_dup_keep_decisions"](spark, sf_dir)
-    return dict(LOT_BUILD_SECONDS)
 
 
 def _exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from logicash_etl_spark.operators.sampling import stratified_sample
 from logicash_etl_spark.operators.text import tokens, word_shingles
+from logicash_etl_spark.queries._lots import build_once
 from logicash_etl_spark.queries.registry import query
 from logicash_etl_spark.sources.readers import read_table
 
@@ -1105,14 +1106,10 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CSV_LOT_CACHE: dict[str, str] = {}
 
-# lot name -> build seconds: bench attribution, see queries/dedup.py
-LOT_BUILD_SECONDS: dict[str, float] = {}
-
 
 def _csv_events_lot(spark: SparkSession, sf_dir: str) -> str:
     """READY-flagged CSV export of every-10th event (the custom
     datasource demo lot), built once per (process, sf_dir)."""
-    from logicash_etl_spark.queries._lots import timed_lot
     from logicash_etl_spark.tmp import session_tmpdir
 
     def materialize() -> str:
@@ -1135,15 +1132,7 @@ def _csv_events_lot(spark: SparkSession, sf_dir: str) -> str:
             fh.write("ok\n")
         return root
 
-    return timed_lot(
-        _CSV_LOT_CACHE, LOT_BUILD_SECONDS, sf_dir, "csv_events_lot", materialize
-    )
-
-
-def prebuild_lots(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Force the CSV demo lot (bench.py attribution hook)."""
-    _csv_events_lot(spark, sf_dir)
-    return dict(LOT_BUILD_SECONDS)
+    return build_once(_CSV_LOT_CACHE, sf_dir, materialize)
 
 
 @query(

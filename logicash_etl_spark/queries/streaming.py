@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logicash_etl_spark import schemas as S
+from logicash_etl_spark.queries._lots import build_once
 from logicash_etl_spark.queries.registry import query
 from logicash_etl_spark.sources.readers import read_table
 from logicash_etl_spark.tmp import session_tmpdir
@@ -71,10 +72,6 @@ def _state_parts(spark: SparkSession, lot: str) -> int:
         # the module-wide no-schema-less-readback rule.
         _LOT_ROWS[lot] = spark.read.schema(S.EVENTS).parquet(lot).count()
     return max(_STATE_PARTS, min(32, _LOT_ROWS[lot] // 25_000))
-
-
-# lot name -> build seconds: bench attribution, see queries/dedup.py
-LOT_BUILD_SECONDS: dict[str, float] = {}
 
 
 # (query name, abspath(sf_dir)) -> per-drain state: the stable root
@@ -118,14 +115,6 @@ def _mark_drained(state: dict) -> None:
     state["done"] = True
 
 
-def clear_lots() -> None:
-    """Forget the shared events lots and drain checkpoints
-    (benchmarking hook — see queries/dedup.clear_lots)."""
-    _LOT_CACHE.clear()
-    _DRAIN_MEMO.clear()
-    LOT_BUILD_SECONDS.clear()
-
-
 def clear_drains() -> None:
     """Forget ONLY the drain checkpoints/sinks: the next call of each
     streaming query performs a cold, full drain again while the shared
@@ -148,12 +137,6 @@ def drop_drain_sinks(spark: SparkSession) -> None:
             spark.catalog.dropTempView(tbl.name)
 
 
-def _timed_lot(key: str, name: str, write_fn) -> str:
-    from logicash_etl_spark.queries._lots import timed_lot
-
-    return timed_lot(_LOT_CACHE, LOT_BUILD_SECONDS, key, name, write_fn)
-
-
 def _events_lot(spark: SparkSession, sf_dir: str) -> str:
     def w() -> str:
         root = session_tmpdir("lq_stream_lot_")
@@ -161,7 +144,7 @@ def _events_lot(spark: SparkSession, sf_dir: str) -> str:
         read_table(spark, sf_dir, "events").write.mode("overwrite").parquet(lot)
         return lot
 
-    return _timed_lot(sf_dir, "events_lot", w)
+    return build_once(_LOT_CACHE, sf_dir, w)
 
 
 def _dup_events_lot(spark: SparkSession, sf_dir: str) -> str:
@@ -175,7 +158,7 @@ def _dup_events_lot(spark: SparkSession, sf_dir: str) -> str:
         ev.unionAll(dup).write.mode("overwrite").parquet(lot)
         return lot
 
-    return _timed_lot(f"{sf_dir}::dup", "events_dup_lot", w)
+    return build_once(_LOT_CACHE, f"{sf_dir}::dup", w)
 
 
 def _upsert_events_lot(spark: SparkSession, sf_dir: str) -> str:
@@ -190,16 +173,7 @@ def _upsert_events_lot(spark: SparkSession, sf_dir: str) -> str:
         ).write.mode("overwrite").parquet(lot)
         return lot
 
-    return _timed_lot(f"{sf_dir}::upsert", "events_upsert_lot", w)
-
-
-def prebuild_lots(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Force the shared events lots; per-lot build seconds
-    (bench.py attribution hook)."""
-    _events_lot(spark, sf_dir)
-    _dup_events_lot(spark, sf_dir)
-    _upsert_events_lot(spark, sf_dir)
-    return dict(LOT_BUILD_SECONDS)
+    return build_once(_LOT_CACHE, f"{sf_dir}::upsert", w)
 
 
 @query(
@@ -884,7 +858,7 @@ def _late_events_lot(spark: SparkSession, sf_dir: str) -> str:
         _pin_admission_order(lot)
         return lot
 
-    return _timed_lot(f"{sf_dir}::late", "events_late_lot", w)
+    return build_once(_LOT_CACHE, f"{sf_dir}::late", w)
 
 
 @query(
@@ -978,7 +952,7 @@ def _outer_join_lot(spark: SparkSession, sf_dir: str) -> str:
         _pin_admission_order(lot)
         return lot
 
-    return _timed_lot(f"{sf_dir}::loj", "events_outer_join_lot", w)
+    return build_once(_LOT_CACHE, f"{sf_dir}::loj", w)
 
 
 @query(
@@ -1103,7 +1077,7 @@ def _jitter_dup_lot(spark: SparkSession, sf_dir: str) -> str:
         ev.unionByName(dup).write.mode("overwrite").parquet(lot)
         return lot
 
-    return _timed_lot(f"{sf_dir}::jit", "events_jitter_dup_lot", w)
+    return build_once(_LOT_CACHE, f"{sf_dir}::jit", w)
 
 
 @query(

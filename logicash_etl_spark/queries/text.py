@@ -10,11 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from logicash_etl_spark.operators.text import (  # noqa: F401 — re-exported surface
+from logicash_etl_spark.operators.text import (
     bpe_ish_token_count,
-    char_class_counts,
     content_hash,
-    min_shingle_sketch,
     predict_lang,
     quality_features,
     quality_flag,

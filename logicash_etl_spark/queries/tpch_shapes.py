@@ -34,6 +34,7 @@ from pyspark.sql import Window as W
 
 from logicash_etl_spark.functions.money import money
 from logicash_etl_spark.operators.joins import broadcast_bounded
+from logicash_etl_spark.queries._lots import build_once
 from logicash_etl_spark.queries.registry import query
 from logicash_etl_spark.sources.readers import read_table
 
@@ -57,23 +58,8 @@ def _dim(d: DataFrame) -> DataFrame:
 # (abspath(sf_dir), lot name) -> (parquet path, schema json) for the
 # shared trade-graph fixture — same build-once-per-process pattern as
 # queries/dedup.py's pair lots: seven graph queries consume the same
-# 6-way Q7 join, so it is materialized once and re-read, and bench.py
-# pre-builds it as a named lot_build line item.
+# 6-way Q7 join, so it is materialized once and re-read.
 _LOTS: dict = {}
-LOT_BUILD_SECONDS: dict[str, float] = {}
-
-
-def clear_lots() -> None:
-    """Forget the materialized trade-pair lot (benchmark re-run hook);
-    dirs are removed at process exit (logicash_etl_spark/tmp.py)."""
-    _LOTS.clear()
-    LOT_BUILD_SECONDS.clear()
-
-
-def prebuild_lots(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Force the trade-pair lot; report per-lot build seconds."""
-    _trade_pairs(spark, sf_dir)
-    return dict(LOT_BUILD_SECONDS)
 
 
 def _rev() -> F.Column:
@@ -548,7 +534,6 @@ def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.types import StructType as _StructType
 
-    from logicash_etl_spark.queries._lots import timed_lot
     from logicash_etl_spark.tmp import session_tmpdir
 
     def materialize() -> tuple[str, str]:
@@ -558,9 +543,7 @@ def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return path, df.schema.json()
 
     key = (_os.path.abspath(sf_dir), "trade_pairs")
-    path, schema_json = timed_lot(
-        _LOTS, LOT_BUILD_SECONDS, key, "trade_pairs", materialize
-    )
+    path, schema_json = build_once(_LOTS, key, materialize)
     schema = _StructType.fromJson(_json.loads(schema_json))
     return spark.read.schema(schema).parquet(path)
 
@@ -875,27 +858,32 @@ def trade_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kcore_oracle(k: int = 4, rounds: int = 3) -> str:
     """Unrolled k-core peeling CTE chain: round i keeps the edges
     whose BOTH endpoints had degree >= k in round i-1's subgraph.
-    Integer degrees, so the iterative Spark loop hash-matches."""
+    Integer degrees, so the iterative Spark loop hash-matches.
+
+    Every CTE is MATERIALIZED: each round's edge set is referenced
+    three times by the next, and DuckDB otherwise inlines a CTE into
+    every reference, so the unrolled chain grows geometrically (out
+    of memory at sf0.01 under a 3 GB cap)."""
     sql = _TRADE_EDGE_SQL + """
-    , a0 AS (
+    , a0 AS MATERIALIZED (
       SELECT DISTINCT greatest(src, dst) AS u, least(src, dst) AS v
       FROM edges WHERE src <> dst
     )"""
     prev = "a0"
     for i in range(1, rounds + 1):
-        sql += f""", s{i} AS (
+        sql += f""", s{i} AS MATERIALIZED (
       SELECT u, v FROM {prev} UNION ALL SELECT v AS u, u AS v FROM {prev}
-    ), k{i} AS (
+    ), k{i} AS MATERIALIZED (
       SELECT u FROM s{i} GROUP BY u HAVING count(*) >= {k}
-    ), a{i} AS (
+    ), a{i} AS MATERIALIZED (
       SELECT e.u, e.v FROM {prev} e
         JOIN k{i} x ON x.u = e.u
         JOIN k{i} y ON y.u = e.v
     )"""
         prev = f"a{i}"
     sql += f"""
-    , sf AS (SELECT u, v FROM {prev} UNION ALL SELECT v AS u, u AS v FROM {prev})
-    , df AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM sf GROUP BY u)
+    , sf AS MATERIALIZED (SELECT u, v FROM {prev} UNION ALL SELECT v AS u, u AS v FROM {prev})
+    , df AS MATERIALIZED (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM sf GROUP BY u)
     SELECT n_name AS nation,
            COALESCE(d.deg, 0) AS deg,
            COALESCE(d.deg, 0) >= {k} AS in_core

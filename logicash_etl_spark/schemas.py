@@ -161,13 +161,3 @@ FIXTURE_TABLES: dict[str, T.StructType] = {
     "embeddings": EMBEDDINGS,
 }
 
-LOGICASH_TABLES: dict[str, T.StructType] = {
-    "dim_atms": DIM_ATMS,
-    "fact_transactions": FACT_TRANSACTIONS,
-}
-
-
-def ddl(schema: T.StructType) -> str:
-    """Schema as a Spark SQL DDL string (the reference's third schema
-    mode, sql/ddl_staging.sql:24-37)."""
-    return schema.simpleString()[7:-1]  # strip 'struct<' ... '>'

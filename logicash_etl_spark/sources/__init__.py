@@ -1,27 +1,19 @@
-"""Sources & sinks: schema-validated readers, idempotent writers, catalog."""
+"""Sources & sinks: schema-validated readers, idempotent writers."""
 
 from logicash_etl_spark.sources.readers import (
     read_csv_dir,
     read_parquet,
     read_table,
-    load_fixtures,
-    source_probe,
 )
 from logicash_etl_spark.sources.writers import (
     write_parquet_partitioned,
     write_parquet,
-    create_table_as,
 )
-from logicash_etl_spark.sources.catalog import register_sources
 
 __all__ = [
     "read_csv_dir",
     "read_parquet",
     "read_table",
-    "load_fixtures",
-    "source_probe",
     "write_parquet_partitioned",
     "write_parquet",
-    "create_table_as",
-    "register_sources",
 ]

@@ -603,47 +603,3 @@ class _LotStreamReader(SimpleDataSourceStreamReader):
                 "flagged lots must stay immutable once consumed"
             )
         return list(self._rows_of([ready[name] for name in sorted(todo)]))
-
-
-def drain_backlog_in_batches(start_drain, max_drains: int = 10_000) -> int:
-    """Consume an entire lot backlog under an admission cap in
-    ceil(N / cap) bounded batches — the restart-after-downtime story
-    a capped AvailableNow trigger alone cannot deliver.
-
-    ``Trigger.AvailableNow`` snapshots the stream offset ONCE per
-    drain, and the simple-reader harness admits at most
-    ``maxLotsPerTrigger`` lots into that snapshot — so one capped
-    drain processes ONE capped batch and leaves the rest of the
-    backlog unconsumed (documented + test-pinned, SURVEY §7.6.4).
-    This helper loops whole drains: each call to ``start_drain()``
-    must return a freshly ``start()``-ed streaming query configured
-    with ``.trigger(availableNow=True)``, ``maxLotsPerTrigger`` and a
-    FIXED checkpoint; the loop re-drains until the source offset
-    stops advancing (backlog empty). The checkpoint makes the whole
-    sequence exactly-once: every drain resumes from the committed
-    name-map offset, so no lot is re-delivered and a crash between
-    drains just shortens the sequence.
-
-    Returns the number of offset-advancing micro-batches across all
-    drains — ceil(backlog / cap) for a static backlog."""
-    n_batches = 0
-    last_end = object()
-    for _ in range(max_drains):
-        q = start_drain()
-        q.awaitTermination()
-        progs = [p for p in q.recentProgress if p.get("sources")]
-        advancing = [
-            p
-            for p in progs
-            if p["sources"][0]["startOffset"] != p["sources"][0]["endOffset"]
-        ]
-        n_batches += len(advancing)
-        end = progs[-1]["sources"][0]["endOffset"] if progs else None
-        if not advancing or end == last_end:
-            return n_batches
-        last_end = end
-    raise RuntimeError(
-        f"drain_backlog_in_batches: backlog still advancing after "
-        f"{max_drains} drains — a producer is outrunning the cap; "
-        "raise maxLotsPerTrigger or max_drains"
-    )

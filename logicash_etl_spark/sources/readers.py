@@ -6,7 +6,6 @@ Reference parity:
   ``infer=True`` is an explicit opt-in, never a default, because at
   100 TB an inference pass is a full extra scan.
 - S3 parquet scan (validate_data.py:43).
-- Source probe with fallback (validate_data.py:40-78).
 """
 
 from __future__ import annotations
@@ -120,38 +119,6 @@ def read_parquet(
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver fixture table with schema validation."""
     return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"), S.FIXTURE_TABLES.get(name))
-
-
-def load_fixtures(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> dict[str, DataFrame]:
-    """Load fixture tables and register temp views (SQL-over-views,
-    reference EP2: qa/validate_data.py:84)."""
-    out = {}
-    for name in tables or list(S.FIXTURE_TABLES):
-        df = read_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
-def source_probe(
-    spark: SparkSession, candidates: list[tuple[str, str]]
-) -> DataFrame:
-    """Try sources in order (format, path); first that loads wins.
-
-    Reference: validate_data.py:40-78 probes Silver parquet and falls
-    back to recomputing from raw CSV.
-    """
-    errs = []
-    for fmt, path in candidates:
-        try:
-            if fmt == "parquet":
-                return spark.read.parquet(path)
-            if fmt == "csv":
-                return read_csv_dir(spark, path, infer=True)
-            raise ValueError(f"unknown format {fmt}")
-        except Exception as e:  # noqa: BLE001 — probe semantics
-            errs.append((path, str(e)[:200]))
-    raise FileNotFoundError(f"no readable source among {errs}")
 
 
 def read_json_lines(

@@ -3,238 +3,36 @@
 Reference parity:
 - S4 day-partitioned parquet overwrite (etl_job.py:130-132).
 - S6 warehouse export == plain parquet overwrite (ddl_gold.sql:71-89).
-- S7 CTAS with DROP IF EXISTS == saveAsTable(overwrite) (ddl_gold.sql).
-- L5 idempotency contract: every write is re-runnable.
+- L5 idempotency contract: every write overwrites, so it is re-runnable.
 
-Scale notes: writers take ``target_file_rows``/``partition_cols`` so a
-100 TB job can size output files (small-files problem) — locally AQE
-coalescing mostly handles it; on a cluster pair with
-``spark.sql.files.maxRecordsPerFile``.
+Output file count: the partitioned writer repartitions by the partition
+columns, so each partition directory gets one file; unpartitioned
+exports leave file sizing to AQE partition coalescing.
 """
 
 from __future__ import annotations
 
-import logging
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_LOG = logging.getLogger(__name__)
 
-
-def write_parquet_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
-    compact: bool = True,
-) -> None:
-    """Partitioned parquet write (Silver sink).
+def write_parquet_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """Partitioned parquet overwrite (Silver sink).
 
     Partition columns must be low-cardinality (the reference uses the
     derived day column precisely for this). Consumers get partition
     pruning for free.
 
-    ``compact=True`` repartitions by the partition columns first so
-    each output directory gets ONE file instead of one per task —
-    without it, T tasks x P partition values emit up to T*P small
-    files (the small-files problem that kills 100 TB readers; at 10k
-    rows/730 days it already cost 30s of file churn). Set
-    compact=False when single partitions exceed executor memory and
-    pair with ``max_records_per_file`` instead.
+    Repartitioning by the partition columns first gives each output
+    directory ONE file instead of one per task — without it, T tasks x
+    P partition values emit up to T*P small files (at 10k rows/730
+    days that cost 30s of file churn).
     """
-    if compact:
-        df = df.repartition(*[F.col(c) for c in partition_cols])
-    writer = df.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(*partition_cols).parquet(path)
+    df.repartition(*[F.col(c) for c in partition_cols]).write.mode("overwrite").partitionBy(
+        *partition_cols
+    ).parquet(path)
 
 
-def zorder_key(df: DataFrame, cols: list[str], bits: int = 8) -> F.Column:
-    """Morton (Z-order) key over 2+ numeric columns: each column is
-    equi-width bucketed into 2**bits cells between its global min/max
-    (ONE bounded single-row agg to the driver), then the bucket bits
-    are interleaved — entirely with JVM bit expressions, no UDF.
-
-    Sorting by this key gives MULTI-dimensional locality: a contiguous
-    key range maps to a small hyper-rectangle in every dimension, so
-    parquet row-group zone maps prune on ALL the z-columns at once —
-    where a single-column sort leaves the other columns' min/max
-    spanning the whole table. The layout for 100 TB tables filtered
-    by more than one dimension (e.g. user_id AND event day).
-
-    Equi-width cells keep the key computation stat-free and scan-only;
-    heavily skewed columns should be pre-transformed (log, rank) or
-    bucketed by quantile boundaries — the interleave below is
-    unchanged either way.
-    """
-    if len(cols) < 2:
-        raise ValueError("zorder needs >= 2 columns (use a plain sort for 1)")
-    if bits * len(cols) > 62:
-        raise ValueError("bits * len(cols) must fit a signed 64-bit key")
-    n = 1 << bits
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"__mn_{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"__mx_{i}") for i, c in enumerate(cols)],
-    ).first()
-    key = F.lit(0).cast("long")
-    for j, c in enumerate(cols):
-        mn, mx = stats[f"__mn_{j}"], stats[f"__mx_{j}"]
-        if mn is None or mx is None or mx <= mn:
-            continue  # constant/empty column contributes no bits
-        bucket = F.least(
-            F.lit(n - 1),
-            F.greatest(
-                F.lit(0),
-                (
-                    F.width_bucket(
-                        F.col(c).cast("double"), F.lit(mn), F.lit(mx), F.lit(n)
-                    )
-                    - 1
-                ).cast("int"),
-            ),
-        )
-        for i in range(bits):
-            bit = F.shiftright(bucket, i).bitwiseAND(F.lit(1)).cast("long")
-            key = key + F.shiftleft(bit, i * len(cols) + j)
-    return key
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    cluster_by: list[str] | None = None,
-    global_sort_by: list[str] | None = None,
-    zorder_by: list[str] | None = None,
-    num_files: int | None = None,
-) -> None:
-    """Unpartitioned idempotent parquet export (Gold UNLOAD analog).
-
-    ``cluster_by`` sorts rows WITHIN each output task before writing
-    (no shuffle): parquet row-group min/max statistics on those columns
-    become tight, so later range/point filters skip whole row groups at
-    the footer — the zone-map pruning that makes a selective filter on
-    a 100 TB table read a fraction of it.
-
-    ``global_sort_by`` additionally range-repartitions first
-    (sampled-boundary range exchange, one shuffle), yielding files with
-    DISJOINT key ranges in total order — zone maps prune to one file
-    per point lookup, and merge-sorted consumers stream without a
-    re-sort. The right layout for write-once/read-many sorted tables.
-
-    ``zorder_by`` range-repartitions and sorts on a Morton-interleaved
-    key over 2+ numeric columns (see ``zorder_key``): every output
-    file covers a tight range in EACH z-column simultaneously, so zone
-    maps prune multi-dimensional filters — the Z-ORDER BY of
-    lakehouse engines, expressed as one range exchange.
-
-    ``num_files`` fixes the range-exchange partition count for the
-    sorted/z-ordered layouts. An EXPLICIT count opts out of AQE
-    coalescing — on small inputs AQE otherwise merges the range
-    exchange down to one partition (one file), erasing the disjoint
-    layout the caller asked for. Leave None to let AQE size files.
-    """
-    chosen = [x for x in (cluster_by, global_sort_by, zorder_by) if x]
-    if len(chosen) > 1:
-        raise ValueError("pass only one of cluster_by / global_sort_by / zorder_by")
-    if zorder_by:
-        zk = [F.col("__zkey")]
-        df = (
-            df.withColumn("__zkey", zorder_key(df, zorder_by))
-            .repartitionByRange(*([num_files] if num_files else []), *zk)
-            .sortWithinPartitions("__zkey")
-            .drop("__zkey")
-        )
-    elif global_sort_by:
-        df = df.repartitionByRange(
-            *([num_files] if num_files else []), *global_sort_by
-        ).sortWithinPartitions(*global_sort_by)
-    elif cluster_by:
-        df = df.sortWithinPartitions(*cluster_by)
-    df.write.mode(mode).parquet(path)
-
-
-def lakehouse_format_available(spark: SparkSession, fmt: str) -> bool:
-    """True when the table format's runtime (delta-spark / Iceberg) is
-    on the classpath. Probed, not assumed: the engine core depends only
-    on vanilla Spark, so lakehouse sinks are an optional capability
-    discovered at runtime."""
-    classes = {
-        "delta": "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        "iceberg": "org.apache.iceberg.spark.SparkCatalog",
-    }
-    cls = classes.get(fmt)
-    if cls is None:
-        return False
-    try:
-        spark._jvm.java.lang.Class.forName(cls)  # type: ignore[union-attr]
-        return True
-    except Exception as e:  # noqa: BLE001 — Py4J raises wrapped ClassNotFound
-        # log the probe by name: silent catch-and-fallback otherwise
-        # leaves anonymous exception fragments in logs/bench tails
-        _LOG.info(
-            "lakehouse probe %r: %s not on classpath (%s)",
-            fmt, cls, type(e).__name__,
-        )
-        return False
-
-
-def write_lakehouse(
-    df: DataFrame,
-    path: str,
-    fmt: str = "delta",
-    mode: str = "overwrite",
-    partition_cols: list[str] | None = None,
-    allow_fallback: bool = True,
-) -> str:
-    """ACID-table sink: Delta or Iceberg when the runtime is present,
-    else (``allow_fallback``) plain parquet with the same layout.
-    Returns the format actually written so pipelines can record it in
-    the run manifest.
-
-    On a production cluster the lakehouse format is what makes the
-    overwrite-everywhere idempotency contract (COVERAGE.md L5) cheap:
-    commit-log atomicity instead of directory swaps, and MERGE/OPTIMIZE
-    for the upsert + small-files paths. The engine's own upsert/SCD2
-    operators (operators/merge.py) stay format-agnostic."""
-    spark = df.sparkSession
-    if fmt not in ("delta", "iceberg"):
-        raise ValueError(f"unknown lakehouse format {fmt!r}")
-    actual = fmt if lakehouse_format_available(spark, fmt) else None
-    if actual is None:
-        if not allow_fallback:
-            raise RuntimeError(
-                f"{fmt} runtime not on the classpath and allow_fallback=False"
-            )
-        actual = "parquet"
-    writer = df.write.mode(mode).format(actual)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.save(path)
-    return actual
-
-
-def create_table_as(
-    spark: SparkSession,
-    name: str,
-    df: DataFrame,
-    partition_cols: list[str] | None = None,
-    bucket: tuple[int, str] | None = None,
-) -> None:
-    """CTAS: idempotent gold materialization (DROP IF EXISTS + CREATE,
-    ddl_gold.sql:22-62) as ``saveAsTable(mode="overwrite")``.
-
-    ``bucket=(n, col)`` bucketizes the table so later equi-joins /
-    aggs on ``col`` are shuffle-free — the scale path for repeatedly
-    joined gold tables.
-    """
-    writer = df.write.mode("overwrite").format("parquet")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    if bucket:
-        n, col = bucket
-        writer = writer.bucketBy(n, col).sortBy(col)
-    writer.saveAsTable(name)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """Unpartitioned idempotent parquet export (Gold UNLOAD analog)."""
+    df.write.mode("overwrite").parquet(path)

@@ -1,6 +1,6 @@
 """Structured Streaming surface: file-trigger ingestion + windowed ops."""
 
-from logicash_etl_spark.streaming.sources import stream_parquet_dir, run_available_now
+from logicash_etl_spark.streaming.sources import stream_parquet_dir
 from logicash_etl_spark.streaming.ops import (
     windowed_counts,
     session_windows,
@@ -9,7 +9,6 @@ from logicash_etl_spark.streaming.ops import (
 
 __all__ = [
     "stream_parquet_dir",
-    "run_available_now",
     "windowed_counts",
     "session_windows",
     "dedup_stream",

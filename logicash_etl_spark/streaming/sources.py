@@ -33,52 +33,6 @@ def stream_parquet_dir(
     return reader.load(path)
 
 
-def run_available_now(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    sink_table: str,
-    output_mode: str = "append",
-    state_partitions: int | None = None,
-) -> None:
-    """Drain everything currently available into an in-session memory
-    sink table, then stop — the lot-processing batch semantics of the
-    reference, with exactly-once bookkeeping via the checkpoint.
-
-    ``state_partitions`` sizes the stateful shuffle for THIS query:
-    Structured Streaming locks ``spark.sql.shuffle.partitions`` into
-    the checkpoint at first start, and every partition carries its own
-    state-store instance(s) per operator (a stream-stream join runs
-    FOUR per partition) — so a small drain under a cluster-sized
-    default pays 100+ state stores of per-batch overhead for kilobytes
-    of state (measured 4x on the interval join). Size it to expected
-    state volume: small lots low, production horizons high. The conf
-    is set only around query start and restored after the drain;
-    batch queries in the session are unaffected (AQE is disabled
-    inside streaming anyway, so the setting is purely the state
-    partition count).
-
-    For a real deployment swap ``format("memory")`` for parquet/Delta;
-    the call shape is identical.
-    """
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(sink_table)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def run_available_now_to_parquet(
     stream_df: DataFrame,
     checkpoint_dir: str,
@@ -91,7 +45,19 @@ def run_available_now_to_parquet(
     cannot recover a checkpoint; file sinks can). Also the SCALE
     variant for row-granular drains: a memory sink collects every
     emitted row into the driver, a file sink keeps them on executors.
-    ``state_partitions``: see run_available_now."""
+
+    ``state_partitions`` sizes the stateful shuffle for THIS query:
+    Structured Streaming locks ``spark.sql.shuffle.partitions`` into
+    the checkpoint at first start, and every partition carries its own
+    state-store instance(s) per operator (a stream-stream join runs
+    FOUR per partition) — so a small drain under a cluster-sized
+    default pays 100+ state stores of per-batch overhead for kilobytes
+    of state (measured 4x on the interval join). Size it to expected
+    state volume: small lots low, production horizons high. The conf
+    is set only around query start and restored after the drain;
+    batch queries in the session are unaffected (AQE is disabled
+    inside streaming anyway, so the setting is purely the state
+    partition count)."""
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
@@ -129,7 +95,7 @@ def run_available_now_foreach_batch(
     epoch plans its batch jobs under the session conf): a per-epoch
     merge window over kilobytes of state pays 32 shuffle files per
     epoch under the batch default — same sizing rationale as
-    :func:`run_available_now`."""
+    :func:`run_available_now_to_parquet`."""
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:

@@ -6,9 +6,7 @@ SCALING.md argues structurally that every plan survives scale-up; this
 script is the empirical leg: it replicates the sf0.1 fixtures 10x into
 an sf1-sized working set (FK-consistent key shifting per copy), runs
 the slowest queries from BENCH_FULL.json at both scales, and writes
-per-query sec + ratio to SCALING.json. bench.py embeds that file into
-BENCH_FULL.json under "sf1_spot" so the scaling evidence rides along
-with the per-round bench.
+per-query sec + ratio to SCALING.json.
 
 Replication, not re-generation, so the data distribution is held
 fixed while volume grows 10x:

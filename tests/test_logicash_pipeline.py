@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from logicash_etl_spark.datagen import gen_dim_atms, gen_fact_transactions, write_lot
+from tests.datagen import gen_dim_atms, gen_fact_transactions, write_lot
 from logicash_etl_spark.pipeline.logicash import LogicashConfig, run_logicash_pipeline
 
 AS_OF = "2026-01-01 00:00:00"

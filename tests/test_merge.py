@@ -1,4 +1,4 @@
-"""Upsert and SCD2 semantics tests."""
+"""SCD2 semantics tests."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from logicash_etl_spark.operators.merge import scd2_apply, scd2_init, upsert
+from logicash_etl_spark.operators.merge import scd2_apply, scd2_init
 
 SCHEMA = "id_atm string, estado string, ts timestamp"
 
@@ -15,19 +15,6 @@ def _df(spark, rows):
     return spark.createDataFrame(
         [(a, b, dt.datetime.fromisoformat(c)) for a, b, c in rows], SCHEMA
     )
-
-
-def test_upsert_semantics(spark):
-    target = _df(spark, [("A", "OPERATIVO", "2026-01-01T00:00:00"),
-                         ("B", "OPERATIVO", "2026-01-01T00:00:00")])
-    updates = _df(spark, [("B", "MANTENIMIENTO", "2026-02-01T00:00:00"),
-                          ("B", "FUERA_DE_SERVICIO", "2026-03-01T00:00:00"),
-                          ("C", "OPERATIVO", "2026-02-01T00:00:00")])
-    out = upsert(target, updates, keys=["id_atm"], order_by="ts")
-    got = {r.id_atm: r.estado for r in out.collect()}
-    # A untouched, B latest update wins, C inserted
-    assert got == {"A": "OPERATIVO", "B": "FUERA_DE_SERVICIO", "C": "OPERATIVO"}
-    assert out.count() == 3
 
 
 def test_scd2_history(spark):

@@ -12,7 +12,7 @@ from tests.oracle_utils import compare
 @pytest.fixture(autouse=True)
 def _clear_spark_cache(spark):
     """Query functions persist() small internal frames and document a
-    caller-owns-cleanup contract (queries package docstring); bench.py
+    caller-owns-cleanup contract (queries package docstring); perfbench
     and scan_audit.py clearCache between queries — this harness must
     too, or 240 parametrized runs accumulate hundreds of cached frames
     for the session lifetime (LRU pressure, not wrong results)."""

@@ -100,41 +100,6 @@ def test_asof_join_single_shuffle(spark, sf_dir):
     assert join_strategies(df) == []  # no join node at all — it's a window op
 
 
-def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
-    """Co-located bucketing: two tables bucketed on the join key join
-    with ZERO exchanges — the 100 TB answer to repeated fact-fact
-    joins (bucket once, join forever)."""
-    import uuid
-
-    from logicash_etl_spark.sources.writers import create_table_as
-
-    # unique names: managed-table dirs outlive the in-memory metastore
-    tag = uuid.uuid4().hex[:8]
-    ob, lb = f"orders_b_{tag}", f"lineitem_b_{tag}"
-    orders = read_table(spark, sf_dir, "orders")
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    try:
-        create_table_as(spark, ob, orders.withColumnRenamed("o_orderkey", "l_orderkey"),
-                        bucket=(8, "l_orderkey"))
-        create_table_as(spark, lb, li, bucket=(8, "l_orderkey"))
-        j = spark.table(ob).join(spark.table(lb), "l_orderkey")
-        agg = j.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("q"))
-        # join needs no exchange (bucket co-location), and the agg is
-        # also exchange-free: buckets already partition by the group key
-        assert count_exchanges(j) == 0, plan_string_safe(j)
-        assert count_exchanges(agg) == 0, plan_string_safe(agg)
-        assert j.count() > 0
-    finally:
-        for t in (ob, lb):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def plan_string_safe(df):
-    from logicash_etl_spark.plans import plan_string
-
-    return plan_string(df, "simple")
-
-
 def test_shipping_priority_plan(spark, sf_dir):
     """Q3 shape: customer broadcast; the orders x lineitem big-big join
     may broadcast at this sf but must never be a nested-loop product."""

@@ -110,33 +110,13 @@ def _shingle_set(text, n=3):
     return {" ".join(t[i:i + n]) for i in range(len(t) - n + 1)}
 
 
-def test_lsh_band_preset_math():
-    from logicash_etl_spark.operators.dedup import lsh_band_preset
-
-    n, b = lsh_band_preset(0.35)
-    assert n % b == 0
-    r = n // b
-    # the returned config clears the recall contract at the threshold
-    assert 1 - (1 - 0.35**r) ** b >= 0.95
-    # and the next-larger r (fewer, wider bands) would NOT — i.e. the
-    # preset maximizes candidate pruning subject to recall
-    for r2 in range(r + 1, n + 1):
-        if n % r2 == 0:
-            assert 1 - (1 - 0.35**r2) ** (n // r2) < 0.95
-            break
-    with pytest.raises(ValueError):
-        lsh_band_preset(0.001, num_hashes=4)
-
-
 def test_lsh_preset_catches_longdoc_knee_pair(spark):
     """The r11 longdoc adjudication: mixed-tail docs form TRUE pairs
     at J~0.38, below the default 64x16 s-curve knee (P(candidate)
-    ~28%). The calibrated preset must catch exactly this shape."""
+    ~28%). The calibrated 128x64 config (the smallest band count whose
+    s-curve clears 0.95 recall at J=0.35) must catch exactly this shape."""
     from logicash_etl_spark.operators.caching import cache_scope
-    from logicash_etl_spark.operators.dedup import (
-        lsh_band_preset,
-        minhash_dedup_pairs,
-    )
+    from logicash_etl_spark.operators.dedup import minhash_dedup_pairs
 
     tail = (
         "alpha bravo charlie delta echo foxtrot golf hotel india "
@@ -157,7 +137,7 @@ def test_lsh_preset_catches_longdoc_knee_pair(spark):
         [(1, a), (2, b_txt), (3, "completely unrelated filler words here")],
         "doc_id long, text string",
     )
-    n_hashes, bands = lsh_band_preset(0.35)
+    n_hashes, bands = 128, 64
     with cache_scope():
         pairs = {
             (r.id_a, r.id_b)

@@ -250,8 +250,10 @@ def test_pq_encode_arrow_matches_retired_expression_fold(spark):
     """pq_encode's numpy mapInArrow argmin must produce EXACTLY the
     codes of the retired literal-codebook expression fold on every
     well-formed row (same IEEE accumulation order, same first-minimum
-    tie break), NULL codes on NULL vectors like the fold did, and
-    all-NULL codes on wrong-length vectors (the fixed-dim contract)."""
+    tie break), NULL codes on NULL vectors like the fold did, a NULL
+    code in exactly the subspace holding a NULL element (the fold's
+    answer too), and all-NULL codes on wrong-length vectors (the
+    fixed-dim contract)."""
     import random
 
     from pyspark.sql import functions as F
@@ -319,10 +321,11 @@ def test_pq_encode_arrow_matches_retired_expression_fold(spark):
     }
     assert new == old
 
-    # NULL vector -> NULL codes (both paths); short vector -> all-NULL
-    # codes on the arrow path (pinned contract)
+    # NULL vector -> NULL codes (both paths); NULL element -> NULL code
+    # in its subspace only (both paths); short vector -> all-NULL codes
+    # on the arrow path (pinned contract)
     weird = spark.createDataFrame(
-        [(1, None), (2, [0.0] * 16), (3, [1.0, 2.0])],
+        [(1, None), (2, [0.0] * 16), (3, [1.0, 2.0]), (4, [0.5] * 5 + [None] + [0.5] * 10)],
         "vec_id int, embedding array<double>",
     )
     got = {
@@ -340,6 +343,8 @@ def test_pq_encode_arrow_matches_retired_expression_fold(spark):
     }
     assert old_null[1] == (None, None, None, None)
     assert got[2] == old_null[2]
+    assert got[4][1] is None and None not in (got[4][0], *got[4][2:])
+    assert got[4] == old_null[4]
 
 
 def test_funnel_ingest_row_from_quality_pass_matches_feat_scan(spark):

@@ -1,30 +1,15 @@
-"""Deterministic-sampling invariants: stability under repartitioning,
-disjoint/exhaustive splits, per-stratum fractions."""
+"""Deterministic-sampling invariants: disjoint/exhaustive splits,
+per-stratum fractions, weighted top-k, bloom filters."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.operators.sampling import (
-    deterministic_sample,
     stratified_sample,
     train_test_split,
 )
 from logicash_etl_spark.sources.readers import read_table
-
-
-def test_sample_stable_under_repartition(spark, sf_dir):
-    o = read_table(spark, sf_dir, "orders")
-    s1 = {r.o_orderkey for r in deterministic_sample(o, "o_orderkey", 0.2).select("o_orderkey").collect()}
-    s2 = {
-        r.o_orderkey
-        for r in deterministic_sample(o.repartition(7), "o_orderkey", 0.2)
-        .select("o_orderkey")
-        .collect()
-    }
-    assert s1 == s2  # df.sample() fails this; hash sampling must not
-    n = o.count()
-    assert 0.15 * n < len(s1) < 0.25 * n
 
 
 def test_split_disjoint_exhaustive_monotone(spark, sf_dir):

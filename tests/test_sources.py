@@ -1,5 +1,5 @@
 """Unit tests for the sources layer: CSV round-trips, schema
-validation failures, source probing, catalog registration."""
+validation failures, the lot datasource and the shard writer."""
 
 from __future__ import annotations
 
@@ -8,12 +8,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from logicash_etl_spark import schemas as S
-from logicash_etl_spark.sources.catalog import register_sources
 from logicash_etl_spark.sources.readers import (
     SchemaMismatchError,
     read_csv_dir,
     read_parquet,
-    source_probe,
 )
 
 
@@ -49,101 +47,6 @@ def test_schema_mismatch_fails_loudly(spark, tmp_path):
     spark.range(3).select(F.col("id").alias("wrong_col")).write.parquet(out)
     with pytest.raises(SchemaMismatchError, match="missing columns"):
         read_parquet(spark, out, S.DIM_ATMS)
-
-
-def test_source_probe_fallback(spark, tmp_path, sf_smoke):
-    got = source_probe(
-        spark,
-        [
-            ("parquet", str(tmp_path / "missing")),
-            ("parquet", f"{sf_smoke}/orders.parquet"),
-        ],
-    )
-    assert got.count() > 0
-    with pytest.raises(FileNotFoundError):
-        source_probe(spark, [("parquet", str(tmp_path / "nope"))])
-
-
-def test_register_sources(spark, sf_smoke):
-    reg = register_sources(spark, sf_smoke)
-    assert set(reg) == set(S.FIXTURE_TABLES)
-    # views usable from SQL
-    assert spark.sql("SELECT count(*) n FROM nation").collect()[0].n == 25
-
-
-def test_lakehouse_writer_fallback(spark, tmp_path):
-    """Without delta/iceberg on the classpath the lakehouse sink must
-    degrade to parquet with identical layout — and report what it did."""
-    from logicash_etl_spark.sources.writers import (
-        lakehouse_format_available,
-        write_lakehouse,
-    )
-
-    df = spark.range(10).select(
-        F.col("id"), (F.col("id") % 3).alias("bucket")
-    )
-    out = str(tmp_path / "lake")
-    actual = write_lakehouse(df, out, fmt="delta", partition_cols=["bucket"])
-    expected = "delta" if lakehouse_format_available(spark, "delta") else "parquet"
-    assert actual == expected
-    back = spark.read.format(actual).load(out)
-    assert back.count() == 10
-    assert set(back.columns) == {"id", "bucket"}
-    with pytest.raises(RuntimeError, match="classpath"):
-        if not lakehouse_format_available(spark, "iceberg"):
-            write_lakehouse(df, out, fmt="iceberg", allow_fallback=False)
-        else:
-            raise RuntimeError("classpath present; skip-equivalent")
-    with pytest.raises(ValueError, match="unknown lakehouse format"):
-        write_lakehouse(df, out, fmt="hudi")
-
-
-def test_clustered_write_tightens_rowgroup_stats(spark, tmp_path, sf_smoke):
-    """cluster_by sorts within each task so parquet row-group min/max
-    zone maps become selective: within every output file the column is
-    sorted, and a range filter prunes at the footer."""
-    import pyarrow.parquet as pq
-
-    from logicash_etl_spark.sources.readers import read_table
-    from logicash_etl_spark.sources.writers import write_parquet
-
-    o = read_table(spark, sf_smoke, "orders").select("o_orderkey", "o_totalprice")
-    path = str(tmp_path / "clustered")
-    write_parquet(o.repartition(4), path, cluster_by=["o_orderkey"])
-
-    import glob
-
-    files = glob.glob(f"{path}/*.parquet")
-    assert files
-    for f in files:
-        keys = pq.read_table(f, columns=["o_orderkey"])["o_orderkey"].to_pylist()
-        assert keys == sorted(keys), f"not clustered within {f}"
-
-
-def test_global_sort_write_disjoint_file_ranges(spark, tmp_path, sf_smoke):
-    """global_sort_by range-partitions then sorts: file key ranges must
-    be disjoint and each file internally sorted (total order across
-    the table — one-file point lookups, merge-sorted consumers)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from logicash_etl_spark.sources.readers import read_table
-    from logicash_etl_spark.sources.writers import write_parquet
-
-    o = read_table(spark, sf_smoke, "orders").select("o_orderkey", "o_totalprice")
-    path = str(tmp_path / "gsorted")
-    write_parquet(o.repartition(4), path, global_sort_by=["o_orderkey"])
-
-    ranges = []
-    for f in glob.glob(f"{path}/*.parquet"):
-        keys = pq.read_table(f, columns=["o_orderkey"])["o_orderkey"].to_pylist()
-        if keys:
-            assert keys == sorted(keys), f"not sorted within {f}"
-            ranges.append((keys[0], keys[-1]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2, "file key ranges overlap - not a total order"
 
 
 def test_json_lines_roundtrip_and_quarantine(spark, tmp_path):
@@ -199,102 +102,6 @@ def test_orc_schema_mismatch_fails_loudly(spark, tmp_path):
 
     with _pytest.raises(SchemaMismatchError, match="nope"):
         read_orc(spark, path, want)
-
-
-def test_zorder_write_bounds_both_dimensions(spark, tmp_path, sf_smoke):
-    """zorder_by: every output file must cover a SMALL range of BOTH
-    z-columns (multi-dim zone-map pruning), where a single-column
-    global sort leaves the second column spanning ~the whole table.
-    Uses two uncorrelated uniform columns (user_id, value)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from logicash_etl_spark.sources.readers import read_table
-    from logicash_etl_spark.sources.writers import write_parquet
-
-    ev = read_table(spark, sf_smoke, "events").select("user_id", "value")
-    lo_u, hi_u, lo_v, hi_v = ev.agg(
-        F.min("user_id"), F.max("user_id"), F.min("value"), F.max("value")
-    ).first()
-    span_u, span_v = hi_u - lo_u, hi_v - lo_v
-
-    def file_spans(path):
-        spans = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            t = pq.read_table(f, columns=["user_id", "value"])
-            u, v = t["user_id"].to_pylist(), t["value"].to_pylist()
-            if u:
-                spans.append(
-                    ((max(u) - min(u)) / span_u, (max(v) - min(v)) / span_v)
-                )
-        return spans
-
-    zpath = str(tmp_path / "zordered")
-    write_parquet(ev, zpath, zorder_by=["user_id", "value"], num_files=16)
-    zspans = file_spans(zpath)
-    assert len(zspans) > 4
-    z_avg_u = sum(s[0] for s in zspans) / len(zspans)
-    z_avg_v = sum(s[1] for s in zspans) / len(zspans)
-
-    spath = str(tmp_path / "usorted")
-    write_parquet(ev, spath, global_sort_by=["user_id"])
-    sspans = file_spans(spath)
-    s_avg_v = sum(s[1] for s in sspans) / len(sspans)
-
-    # z-order: both dims bounded; single sort: second dim ~full span
-    assert z_avg_u <= 0.6, f"z-order user_id span {z_avg_u}"
-    assert z_avg_v <= 0.6, f"z-order value span {z_avg_v}"
-    assert s_avg_v >= 0.8, f"1-col sort should NOT bound value ({s_avg_v})"
-
-
-def test_zorder_key_validation(spark, sf_smoke):
-    import pytest as _pytest
-
-    from logicash_etl_spark.sources.readers import read_table
-    from logicash_etl_spark.sources.writers import zorder_key
-
-    ev = read_table(spark, sf_smoke, "events")
-    with _pytest.raises(ValueError, match=">= 2 columns"):
-        zorder_key(ev, ["user_id"])
-    with _pytest.raises(ValueError, match="64-bit"):
-        zorder_key(ev, ["user_id", "value"], bits=32)
-
-
-def test_bucketed_tables_join_without_shuffle(spark, sf_smoke, tmp_path):
-    """The co-located-join contract: two tables bucketed (and sorted)
-    on the join key must SortMergeJoin with ZERO exchanges before the
-    join — the layout that turns the daily fact x fact join at 100 TB
-    from a full shuffle into a local merge. Bucket counts must match;
-    the only exchange left in the plan is the final aggregate's."""
-    from logicash_etl_spark.plans import plan_string
-    from logicash_etl_spark.sources.readers import read_table
-    from logicash_etl_spark.sources.writers import create_table_as
-
-    o = read_table(spark, sf_smoke, "orders").select("o_orderkey", "o_totalprice")
-    li = read_table(spark, sf_smoke, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        create_table_as(spark, "bk_orders", o, bucket=(8, "o_orderkey"))
-        create_table_as(spark, "bk_lineitem", li, bucket=(8, "o_orderkey"))
-        # at fixture size the planner would rightly broadcast; force
-        # the big-big path the contract is about
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        bo = spark.table("bk_orders")
-        bl = spark.table("bk_lineitem")
-        joined = bo.join(bl, "o_orderkey")
-        p = plan_string(joined)
-        assert "SortMergeJoin" in p or "ShuffledHashJoin" in p, p
-        assert "Exchange" not in p, f"bucketed join still shuffles:\n{p}"
-        assert "Bucketed: true" in p, p
-        # and the result is right
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bk_orders")
-        spark.sql("DROP TABLE IF EXISTS bk_lineitem")
 
 
 def test_token_balanced_shard_writer_end_to_end(spark, sf_smoke, tmp_path):

@@ -18,11 +18,21 @@ from pyspark.sql import functions as F
 from logicash_etl_spark import schemas as S
 from logicash_etl_spark.sources.readers import read_table
 from logicash_etl_spark.streaming.ops import dedup_stream, session_windows, windowed_counts
-from logicash_etl_spark.streaming.sources import (
-    run_available_now,
-    run_available_now_to_parquet,
-    stream_parquet_dir,
-)
+from logicash_etl_spark.streaming.sources import run_available_now_to_parquet, stream_parquet_dir
+
+
+def run_available_now(stream_df, checkpoint_dir, sink_table, output_mode="append"):
+    """Drain everything currently available into an in-session memory
+    sink table, then stop."""
+    q = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(sink_table)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 @pytest.fixture(scope="module")
@@ -566,57 +576,6 @@ def test_history_compaction_bounds_dirs_and_preserves_verdicts(spark, tmp_path):
     assert got_replay == got_u
 
 
-def test_drain_backlog_in_batches(spark, tmp_path):
-    """Restart-after-downtime: a 5-lot backlog under maxLotsPerTrigger=2
-    drains in exactly ceil(5/2)=3 bounded batches, exactly-once rows;
-    a follow-up call with nothing new consumes 0 batches; a late lot
-    drains in 1 more."""
-    import os
-
-    from logicash_etl_spark.sources.lot_datasource import (
-        drain_backlog_in_batches,
-        register_lot_source,
-    )
-
-    register_lot_source(spark)
-    root = str(tmp_path / "lots")
-    for i in range(5):
-        spark.range(10 * i, 10 * i + 3).write.format("logicash_lot").mode(
-            "append"
-        ).option("path", f"{root}/lot_{i:03d}").save()
-    ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
-
-    def start_drain():
-        return (
-            spark.readStream.format("logicash_lot")
-            .schema("id long")
-            .option("path", root)
-            .option("maxLotsPerTrigger", "2")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    n = drain_backlog_in_batches(start_drain)
-    assert n == 3, n
-    want = sorted(x for i in range(5) for x in range(10 * i, 10 * i + 3))
-    assert sorted(r.id for r in spark.read.parquet(out).collect()) == want
-    # idempotent: empty backlog -> zero advancing batches, no rows
-    assert drain_backlog_in_batches(start_drain) == 0
-    assert sorted(r.id for r in spark.read.parquet(out).collect()) == want
-    # a late lot drains in one more capped batch
-    spark.range(90, 92).write.format("logicash_lot").mode("append").option(
-        "path", f"{root}/lot_zz"
-    ).save()
-    assert drain_backlog_in_batches(start_drain) == 1
-    assert sorted(r.id for r in spark.read.parquet(out).collect()) == sorted(
-        want + [90, 91]
-    )
-
-
 def test_history_compaction_ignores_partial_snapshot(spark, tmp_path):
     """A crash mid-fold leaves a base_epoch dir WITHOUT the _SUCCESS
     marker: readers must skip it (using the previous base + gens,
@@ -740,7 +699,7 @@ def test_warm_redrain_returns_identical_results(spark, sf_smoke):
 
 def test_failed_cold_drain_never_warms():
     """A drain that RAISES must not warm the memo (round-7 ADVICE #1):
-    bench.py's run_one swallows exceptions, so if a failed cold drain
+    a harness that swallows exceptions retries, so if a failed cold drain
     flipped the state warm, the retry would skip fixture setup (lot
     production, history base) and silently drain nothing. Contract:
     warmth is recorded only by _mark_drained after a successful drain;
