@@ -22,17 +22,12 @@ def null_audit(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     return df.agg(*aggs)
 
 
-def percentiles(
-    col,
-    fractions,
-    exact: bool = False,
-    accuracy: int = 10_000,
-) -> Column:
+def percentiles(col, fractions, exact: bool = False) -> Column:
     """Percentile aggregate expression — THE sanctioned switch between
     the scale-safe sketch and the exact aggregate.
 
     Default (``exact=False``): ``percentile_approx`` — a KLL-style
-    quantile digest with rank error 1/accuracy. Mergeable, bounded
+    quantile digest with rank error 1/10,000. Mergeable, bounded
     memory per partition, combines map-side: the 100 TB path, and why
     it is the default rather than a docstring promise.
 
@@ -47,45 +42,43 @@ def percentiles(
     fr = fractions if isinstance(fractions, Column) else F.lit(fractions)
     if exact:
         return F.percentile(col, fr)
-    return F.percentile_approx(col, fr, F.lit(accuracy))
+    return F.percentile_approx(col, fr, F.lit(10_000))
 
 
 def selectivity_report(
     df: DataFrame,
     col: str,
     thresholds: list[float],
-    buckets: int = 32,
     exact: bool = False,
-    accuracy: int = 10_000,
-    quantize_scale: int = 100,
 ) -> DataFrame:
     """Equi-depth histogram statistics + CBO-style selectivity
     estimation (the estimator behind cost-based join ordering and
     scan-pruning decisions), as a measurable report: build the
-    ``buckets``-bucket equi-depth histogram an ANALYZE TABLE would
+    32-bucket equi-depth histogram an ANALYZE TABLE would
     store for ``df.col``, evaluate each ``v <= threshold`` predicate
     under the uniform-within-bucket assumption, and emit estimated
     rows vs exact rows vs relative error per threshold.
 
     Scale (100 TB posture): ONE scan computes the bucket bounds, the
     total, and every exact predicate count in a single aggregate;
-    estimation is arithmetic over the (buckets+1)-element bounds array
+    estimation is arithmetic over the 33-element bounds array
     on a single row, exploded to one row per threshold. No joins, no
     second scan, no driver-side math. Bounds default to the
     ``percentile_approx`` sketch (see :func:`percentiles` — mergeable,
     bounded memory); ``exact=True`` opts into true interpolated
     percentiles for oracle-checkable determinism.
 
-    Determinism (the exact path): bounds quantize to integer units via
-    ``floor(x*quantize_scale + 0.5)`` — pure double arithmetic
+    Determinism (the exact path): bounds quantize to hundredths via
+    ``floor(x*100 + 0.5)`` — pure double arithmetic
     identical across engines (native ``round(double, n)`` diverges at
     .xx5) — so an interpolation ulp cannot leak; per-bucket overlap
     fractions divide exact integer differences; the per-bucket sum is
     an order-pinned left fold; outputs round only at the edge.
 
-    Every ``threshold * quantize_scale`` must be an integer (the
-    predicate is evaluated in quantized units exactly).
+    Every ``threshold * 100`` must be an integer (the predicate is
+    evaluated in quantized units exactly).
     """
+    buckets, quantize_scale = 32, 100
     v = F.col(col)
     fractions = [i / buckets for i in range(buckets + 1)]
     xs = []
@@ -94,13 +87,11 @@ def selectivity_report(
         if xc != int(xc):
             raise ValueError(
                 f"threshold {x} is not an integer multiple of "
-                f"1/{quantize_scale}; pick a finer quantize_scale"
+                f"1/{quantize_scale}"
             )
         xs.append(int(xc))
     s = df.agg(
-        percentiles(col, fractions, exact=exact, accuracy=accuracy).alias(
-            "q"
-        ),
+        percentiles(col, fractions, exact=exact).alias("q"),
         F.count("*").alias("total"),
         *[
             F.sum((v <= t).cast("int")).alias(f"__a{i}")

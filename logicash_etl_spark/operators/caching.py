@@ -33,10 +33,10 @@ from pyspark.sql import DataFrame
 _SCOPES: list[list[DataFrame]] = []
 
 
-def scoped_persist(df: DataFrame, storage_level=None) -> DataFrame:
+def scoped_persist(df: DataFrame) -> DataFrame:
     """``df.persist()`` whose handle is released by the innermost
     active ``cache_scope`` (plain persist when no scope is active)."""
-    df = df.persist(storage_level) if storage_level is not None else df.persist()
+    df = df.persist()
     if _SCOPES:
         _SCOPES[-1].append(df)
     return df

@@ -19,7 +19,7 @@ across runs and cluster sizes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.operators.caching import scoped_persist
@@ -31,17 +31,14 @@ from logicash_etl_spark.operators.text import content_hash, tokens, word_shingle
 # Exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_dedup(
-    df: DataFrame, id_col: str, text_col: str = "text", keep: str = "min"
-) -> DataFrame:
+def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Keep one row per identical (normalized) content: group by
-    md5 fingerprint, keep min/max id — deterministic, unlike
+    md5 fingerprint, keep the min id — deterministic, unlike
     dropDuplicates which keeps an arbitrary row."""
-    agg = F.min(id_col) if keep == "min" else F.max(id_col)
     keep_ids = (
         df.select(F.col(id_col), content_hash(F.col(text_col)).alias("__h"))
         .groupBy("__h")
-        .agg(agg.alias(id_col))
+        .agg(F.min(id_col).alias(id_col))
         .drop("__h")
     )
     # semi join back: only ids survive the shuffle, not text payloads
@@ -269,11 +266,10 @@ def minhash_dedup_pairs(
     threshold: float = 0.7,
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup: LSH candidates, then exact-Jaccard
-    verification on the candidate set only (the scale path: candidates
-    << all pairs).
+    """Full MinHash-LSH near-dup over 3-word shingles: LSH candidates,
+    then exact-Jaccard verification on the candidate set only (the
+    scale path: candidates << all pairs).
 
     Caching: the shingle-array projection is persisted (feeds the
     signature path and both verification joins). As with
@@ -283,10 +279,10 @@ def minhash_dedup_pairs(
     # signature path and the verification joins
     sh = scoped_persist(
         scale_out(df.select(id_col, text_col))
-        .select(F.col(id_col), F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"))
+        .select(F.col(id_col), F.array_distinct(word_shingles(text_col, 3)).alias("sh"))
     )
     cands = minhash_lsh_candidates(
-        df, id_col, text_col, num_hashes, bands, shingle_n, shingles=sh
+        df, id_col, text_col, num_hashes, bands, 3, shingles=sh
     )
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
@@ -307,9 +303,7 @@ def minhash_dedup_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str = "text", bits: int = 60
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """SimHash signatures: (id, __sim bigint). Bit b of the signature
     = 1 iff sum over token OCCURRENCES of (bit b of hash60(token) ?
     +1 : -1) > 0.
@@ -325,8 +319,8 @@ def simhash_signatures(
     agree on those bits trivially).
 
     Plan shape: explode tokens -> hash once -> ONE groupBy(id) with
-    ``bits`` conditional sums (all whole-stage codegen) -> pack bits.
-    Scales linearly in corpus token count; shuffle carries ``bits``
+    60 conditional sums (all whole-stage codegen) -> pack bits.
+    Scales linearly in corpus token count; shuffle carries 60
     ints per doc. Docs with no tokens get signature 0.
     """
     tok = scale_out(df.select(id_col, text_col)).select(
@@ -345,13 +339,12 @@ def simhash_signatures(
                 .when(F.shiftright("__h", b).bitwiseAND(F.lit(1)) == 1, 1)
                 .otherwise(-1)
             ).alias(f"__v{b}")
-            for b in range(bits)
+            for b in range(60)
         ]
     )
     sig = None
-    for b in range(bits):
-        val = (1 << b) if b < 63 else -(1 << 63)  # bit 63 = sign bit of long
-        term = F.when(F.col(f"__v{b}") > 0, F.lit(val).cast("long")).otherwise(
+    for b in range(60):
+        term = F.when(F.col(f"__v{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
         sig = term if sig is None else sig.bitwiseOR(term)
@@ -556,12 +549,9 @@ def repeated_substring_spans(
     )
 
 
-def merge_spans_stats(
-    spans: DataFrame, id_col: str,
-    start_col: str = "span_start", end_col: str = "span_end",
-) -> DataFrame:
-    """Union overlapping [start, end] intervals per id and return one
-    row per id with the UNION length (``tokens_cut``) and interval
+def merge_spans_stats(spans: DataFrame, id_col: str) -> DataFrame:
+    """Union overlapping [span_start, span_end] intervals per id and
+    return one row per id with the UNION length (``tokens_cut``) and interval
     count — the piece that turns repeated-substring spans into honest
     per-doc cut accounting (overlapping spans must not double-count).
 
@@ -572,24 +562,24 @@ def merge_spans_stats(
 
     w_prev = (
         Window.partitionBy(id_col)
-        .orderBy(start_col, end_col)
+        .orderBy("span_start", "span_end")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    w_run = Window.partitionBy(id_col).orderBy(start_col, end_col)
+    w_run = Window.partitionBy(id_col).orderBy("span_start", "span_end")
     islands = spans.withColumn(
-        "__pmax", F.max(end_col).over(w_prev)
+        "__pmax", F.max("span_end").over(w_prev)
     ).withColumn(
         "__isl",
         F.sum(
             F.when(
                 F.col("__pmax").isNull()
-                | (F.col(start_col) > F.col("__pmax")),
+                | (F.col("span_start") > F.col("__pmax")),
                 1,
             ).otherwise(0)
         ).over(w_run),
     )
     merged = islands.groupBy(id_col, "__isl").agg(
-        F.min(start_col).alias("__s"), F.max(end_col).alias("__e")
+        F.min("span_start").alias("__s"), F.max("span_end").alias("__e")
     )
     return merged.groupBy(id_col).agg(
         F.sum(F.col("__e") - F.col("__s") + 1).cast("bigint").alias("tokens_cut"),

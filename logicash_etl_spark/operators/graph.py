@@ -243,15 +243,13 @@ def pagerank_int(
     nodes: DataFrame,
     edges: DataFrame,
     iterations: int = 3,
-    scale: int = 10**9,
-    damping_pct: int = 85,
     checkpoint_every: int = 5,
 ) -> DataFrame:
     """PageRank power iteration in FIXED-POINT INTEGER arithmetic.
 
     ``nodes``: one column ``node``; ``edges``: directed, deduped
     ``(src, dst)``. Returns ``(node, rank)`` with ranks scaled by
-    ``scale`` (initial rank = ``scale`` = 1.0).
+    ``scale`` = 10^9 (initial rank = ``scale`` = 1.0), damping 85%.
 
     Why integers: float PageRank is not reproducible across engines —
     summation order changes the low bits, so an oracle hash can never
@@ -286,6 +284,7 @@ def pagerank_int(
     if iterations > checkpoint_every:
         edges = edges.localCheckpoint()
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+    scale, damping_pct = 10**9, 85
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.select("node", F.lit(scale).cast("bigint").alias("rank"))
     for i in range(iterations):
@@ -453,7 +452,6 @@ def label_propagation(
     nodes: DataFrame,
     edges: DataFrame,
     iterations: int = 3,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Weighted SYNCHRONOUS label propagation (Raghavan et al. 2007,
     determinized): labels init to the node id; each round every node
@@ -472,19 +470,19 @@ def label_propagation(
     Scale: each round is one join of labels against the edge list
     (shuffle on src) + a groupBy (dst, label) + a per-NODE window
     over its candidate labels (bounded by degree, never graph-sized).
-    Lineage is localCheckpoint()ed every ``checkpoint_every`` rounds
+    Lineage is localCheckpoint()ed every 5 rounds
     — the iteration rule connected_components and pagerank_int pin.
 
     ``edges``: (src, dst, w) directed — symmetrize first for
     undirected community semantics. The edge list is
     localCheckpoint()ed ONCE before the loop when the label
     checkpoints will split the run into multiple ACTIONS (iterations >
-    checkpoint_every) — across actions a derived edge frame re-runs
+    5) — across actions a derived edge frame re-runs
     per segment; within one action ReusedExchange dedups it for
     free."""
     from pyspark.sql import Window
 
-    if iterations > checkpoint_every:
+    if iterations > 5:
         edges = edges.localCheckpoint()
     labels = nodes.select("node", F.col("node").alias("label"))
     for i in range(iterations):
@@ -504,7 +502,7 @@ def label_propagation(
         labels = labels.join(best, "node", "left").select(
             "node", F.coalesce("__new", "label").alias("label")
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
+        if (i + 1) % 5 == 0 and (i + 1) < iterations:
             labels = labels.localCheckpoint()
     return labels
 
@@ -639,8 +637,6 @@ def hits_int(
     nodes: DataFrame,
     edges: DataFrame,
     iterations: int = 2,
-    scale: int = 10**6,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg JACM'99) in FIXED-POINT
     INTEGER arithmetic — the link-analysis complement to
@@ -652,7 +648,7 @@ def hits_int(
 
     ``nodes``: one column ``node``; ``edges``: directed, deduped
     ``(src, dst)``. Returns ``(node, authority, hub)`` scaled by
-    ``scale`` (each round's max score = ``scale`` = 1.0).
+    ``scale`` = 10^6 (each round's max score = ``scale`` = 1.0).
 
     Why integers: the standard HITS normalizes by the L2 norm —
     irrational, engine-divergent. L-infinity normalization
@@ -668,12 +664,13 @@ def hits_int(
     the round max is a single broadcast scalar (one-row crossJoin),
     never a collect. Lineage: same rules as pagerank_int — edges
     checkpointed once IF score checkpoints split the run into
-    multiple actions; scores every ``checkpoint_every`` rounds."""
-    if iterations > checkpoint_every:
+    multiple actions; scores every 5 rounds."""
+    if iterations > 5:
         edges = edges.localCheckpoint()
     # only `hub` seeds the recursion (the first half-round overwrites
     # auth before any read); this init is returned solely when
     # iterations == 0
+    scale = 10**6
     auth = nodes.select("node", F.lit(scale).cast("bigint").alias("a"))
     hub = nodes.select("node", F.lit(scale).cast("bigint").alias("h"))
 
@@ -707,7 +704,7 @@ def hits_int(
         # authorities (out-edges) — the standard update order
         auth = _half(hub, "h", "src", "dst", "a")
         hub = _half(auth, "a", "dst", "src", "h")
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
+        if (i + 1) % 5 == 0 and (i + 1) < iterations:
             auth = auth.localCheckpoint()
             hub = hub.localCheckpoint()
     return (

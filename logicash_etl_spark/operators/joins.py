@@ -15,7 +15,7 @@ Scale notes baked into each operator's strategy choice:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
@@ -79,13 +79,11 @@ def range_join(
     right_lo: str,
     right_hi: str,
     bucket_width: float,
-    extra_on: list[str] | None = None,
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
     """Join left rows to right rows where ``lo <= point < hi``.
 
     Strategy: explode each right interval into the integer buckets it
-    overlaps, equi-join on bucket (+ optional keys), then apply the
+    overlaps, equi-join on bucket, then apply the
     exact range predicate. Turns an O(n*m) nested-loop into a shuffle
     hash/sort-merge join — the standard trick until Spark grows a
     native range-join optimizer. ``bucket_width`` should be the typical
@@ -102,12 +100,10 @@ def range_join(
             )
         ),
     )
-    on = ["__bucket"] + (extra_on or [])
     cond = (F.col(left_point) >= F.col(right_lo)) & (F.col(left_point) < F.col(right_hi))
     # interval tables are typically tiny and often local (no stats) —
     # without the hint Catalyst may broadcast the big point side instead
-    r2 = F.broadcast(r2) if broadcast_intervals else r2
-    return l2.join(r2, on=on, how="inner").filter(cond).drop("__bucket")
+    return l2.join(F.broadcast(r2), on="__bucket", how="inner").filter(cond).drop("__bucket")
 
 
 def asof_join(
@@ -116,12 +112,10 @@ def asof_join(
     on: str | list[str],
     left_ts: str = "ts",
     right_ts: str = "ts",
-    direction: str = "backward",
-    suffix: str = "_right",
 ) -> DataFrame:
     """As-of join: for each left row, the latest right row with
-    ``right_ts <= left_ts`` (backward) or earliest ``>=`` (forward),
-    per key.
+    ``right_ts <= left_ts``, per key; right columns come back with a
+    ``_right`` suffix.
 
     Strategy (pure DataFrame, no Python boundary): union the two
     sides tagged by origin, sort within key by time, and carry the
@@ -157,7 +151,7 @@ def asof_join(
     # ascending window and be carried forward as the 'earliest' match
     # for left rows with no real predecessor — drop them before the
     # union. NULL-ts LEFT rows stay: with right nulls gone and the
-    # window ordered NULLS FIRST in BOTH directions, they sort before
+    # window ordered NULLS FIRST, they sort before
     # every right row and naturally resolve to a NULL payload (the
     # left-outer posture) in the same single pass.
     right = right.filter(F.col(right_ts).isNotNull())
@@ -192,24 +186,12 @@ def asof_join(
     )
     unioned = l_tag.unionByName(r_tag)
 
-    if direction == "backward":
-        # right rows sort before left rows at equal ts => `<=` semantics
-        w = (
-            W.partitionBy(*keys)
-            .orderBy(F.col("__t").asc_nulls_first(), F.col("__is_left").asc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-    elif direction == "forward":
-        # desc_nulls_first so NULL-ts LEFT rows precede every right
-        # row (desc defaults to NULLS LAST, which would hand them the
-        # final right struct as a bogus match)
-        w = (
-            W.partitionBy(*keys)
-            .orderBy(F.col("__t").desc_nulls_first(), F.col("__is_left").asc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-    else:
-        raise ValueError(f"direction must be backward|forward, got {direction}")
+    # right rows sort before left rows at equal ts => `<=` semantics
+    w = (
+        W.partitionBy(*keys)
+        .orderBy(F.col("__t").asc_nulls_first(), F.col("__is_left").asc())
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
 
     filled = unioned.select(
         *keys,
@@ -224,8 +206,8 @@ def asof_join(
         *keys,
         F.col("__t").alias(left_ts),
         *[F.col(c) for c in lcols],
-        *[F.col("__r").getField(c).alias(f"{c}{suffix}") for c in rcols],
-        F.col("__r").getField("__rt").alias(f"{right_ts}{suffix}"),
+        *[F.col("__r").getField(c).alias(f"{c}_right") for c in rcols],
+        F.col("__r").getField("__rt").alias(f"{right_ts}_right"),
     )
 
 
@@ -400,7 +382,6 @@ def join_with_skew_salt(
     small: DataFrame,
     on: str,
     salt_buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join with manual key salting for pathological skew.
 
@@ -413,17 +394,17 @@ def join_with_skew_salt(
     salted_big = big.withColumn("__salt", (F.rand(seed=7) * salt_buckets).cast("int"))
     salts = small.sparkSession.range(salt_buckets).select(F.col("id").cast("int").alias("__salt"))
     salted_small = small.crossJoin(F.broadcast(salts))
-    out = salted_big.join(salted_small, on=[on, "__salt"], how=how)
+    out = salted_big.join(salted_small, on=[on, "__salt"])
     return out.drop("__salt")
 
 
-def _bf_hashes(key, salt: str) -> tuple:
+def _bf_hashes(key) -> tuple:
     """The Bloom family's shared md5 double-hash: (h1, h2) = the first
-    two 32-bit words of md5(salt || key). Build, key-level probe, and
+    two 32-bit words of md5('bf' || key). Build, key-level probe, and
     row-level literal probe MUST stay bit-identical (a drifted copy
     means silent false negatives) — one definition keeps them
     structurally in sync."""
-    h = F.md5(F.concat(F.lit(salt), key.cast("string")))
+    h = F.md5(F.concat(F.lit("bf"), key.cast("string")))
     return (
         F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint"),
         F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint"),
@@ -431,8 +412,7 @@ def _bf_hashes(key, salt: str) -> tuple:
 
 
 def bloom_filter_build(
-    keys: DataFrame, key_col: str, m_bits: int = 4096, k_hashes: int = 3,
-    salt: str = "bf",
+    keys: DataFrame, key_col: str, m_bits: int = 4096, k_hashes: int = 3
 ) -> DataFrame:
     """Build a Bloom filter over ``keys[key_col]`` as a tiny DataFrame
     of (word, bits) rows — ``m_bits/32`` rows of packed 32-bit words.
@@ -458,7 +438,7 @@ def bloom_filter_build(
         )
     if k_hashes < 1:
         raise ValueError(f"k_hashes must be >= 1, got {k_hashes}")
-    h1, h2 = _bf_hashes(F.col(key_col), salt)
+    h1, h2 = _bf_hashes(F.col(key_col))
     # null keys carry no information (a Bloom filter stores value
     # hashes) and would add a junk null-word row to the bitmap
     probes = keys.filter(F.col(key_col).isNotNull()).select(
@@ -476,8 +456,7 @@ def bloom_filter_build(
 
 def bloom_filter_probe(
     df: DataFrame, key_col: str, bloom: DataFrame,
-    m_bits: int = 4096, k_hashes: int = 3, salt: str = "bf",
-    verdict_col: str = "bloom_pass",
+    m_bits: int = 4096, k_hashes: int = 3,
 ) -> DataFrame:
     """Tag each row of ``df`` with ``bloom_pass``: True iff all
     k hash positions of its key are set in the broadcast bitmap.
@@ -489,7 +468,7 @@ def bloom_filter_probe(
     extra. Null keys cannot be members (a Bloom filter stores hashes
     of values): they get ``bloom_pass = False``. False positives
     possible (rate ~ (1-e^{-kn/m})^k), false negatives impossible."""
-    h1, h2 = _bf_hashes(F.col("__key"), salt)
+    h1, h2 = _bf_hashes(F.col("__key"))
     probes = (
         df.select(F.col(key_col).alias("__key"))
         .filter(F.col("__key").isNotNull())
@@ -523,22 +502,21 @@ def bloom_filter_probe(
         ).alias("__hit"),
     )
     verdict = hits.groupBy("__key").agg(
-        (F.count(F.when(F.col("__hit"), 1)) == k_hashes).alias(verdict_col)
+        (F.count(F.when(F.col("__hit"), 1)) == k_hashes).alias("bloom_pass")
     )
     # join strategy left to Catalyst: the verdict frame is one row per
     # distinct key — tiny for dimension-selective filters (broadcast),
     # a key-level shuffle at worst (never a row-level one)
     return (
         df.join(verdict, on=df[key_col] == F.col("__key"), how="left")
-        .withColumn(verdict_col, F.coalesce(verdict_col, F.lit(False)))
+        .withColumn("bloom_pass", F.coalesce("bloom_pass", F.lit(False)))
         .drop("__key")
     )
 
 
 def bloom_filter_probe_literal(
     df: DataFrame, key_col: str, bloom: DataFrame,
-    m_bits: int = 4096, k_hashes: int = 3, salt: str = "bf",
-    verdict_col: str = "bloom_pass",
+    m_bits: int = 4096, k_hashes: int = 3,
 ) -> DataFrame:
     """Row-level Bloom probe with ZERO shuffle and ZERO join: the
     bitmap's ``m_bits/32`` packed words (128 BIGINTs at the default)
@@ -592,7 +570,7 @@ def bloom_filter_probe_literal(
         *[F.lit(words.get(i, 0)).cast("bigint") for i in range(n_words)]
     )
     t = "__bfp"
-    h1, h2 = _bf_hashes(F.col(key_col), salt)
+    h1, h2 = _bf_hashes(F.col(key_col))
     out = (
         df.withColumn(f"{t}_words", arr)
         .withColumn(f"{t}_h1", h1)
@@ -606,7 +584,7 @@ def bloom_filter_probe_literal(
             f" >> CAST(({pos}) % 32 AS INT)) & 1) = 1"
         )
     return (
-        out.withColumn(verdict_col, F.coalesce(hit, F.lit(False)))
+        out.withColumn("bloom_pass", F.coalesce(hit, F.lit(False)))
         .drop(f"{t}_words", f"{t}_h1", f"{t}_h2")
     )
 

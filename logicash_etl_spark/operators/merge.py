@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 
 from logicash_etl_spark.operators.aggregates import scd1_latest
 
+# valid_to of every open (current) SCD2 version
+END_OF_TIME = "9999-12-31 00:00:00"
+
 
 def upsert_if_newer(
     target: DataFrame,
@@ -45,7 +48,6 @@ def scd2_apply(
     keys: list[str],
     effective_ts: str,
     tracked_cols: list[str] | None = None,
-    end_of_time: str = "9999-12-31 00:00:00",
 ) -> DataFrame:
     """SCD Type 2: keep full history with [valid_from, valid_to)
     ranges and an is_current flag.
@@ -112,18 +114,16 @@ def scd2_apply(
         joined.filter(is_changed | (is_new_key & upd_ts.isNotNull()))
         .select(*[F.col(f"__u_{c}").alias(c) for c in latest.columns])
         .withColumn("valid_from", F.col(effective_ts))
-        .withColumn("valid_to", F.to_timestamp(F.lit(end_of_time)))
+        .withColumn("valid_to", F.to_timestamp(F.lit(END_OF_TIME)))
         .withColumn("is_current", F.lit(True))
     )
     return hist.unionByName(keep_cur).unionByName(closed).unionByName(new_rows)
 
 
-def scd2_init(
-    snapshot: DataFrame, effective_ts: str, end_of_time: str = "9999-12-31 00:00:00"
-) -> DataFrame:
+def scd2_init(snapshot: DataFrame, effective_ts: str) -> DataFrame:
     """Bootstrap an SCD2 dimension from an initial snapshot."""
     return (
         snapshot.withColumn("valid_from", F.col(effective_ts))
-        .withColumn("valid_to", F.to_timestamp(F.lit(end_of_time)))
+        .withColumn("valid_to", F.to_timestamp(F.lit(END_OF_TIME)))
         .withColumn("is_current", F.lit(True))
     )

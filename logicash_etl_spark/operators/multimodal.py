@@ -25,10 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pack_media(df: DataFrame, data_col: str, mime: str, alias: str = "media") -> DataFrame:
-    """Wrap a raw binary column into the media struct convention."""
+def pack_media(df: DataFrame, data_col: str, mime: str) -> DataFrame:
+    """Wrap a raw binary column into the ``media`` struct convention."""
     return df.withColumn(
-        alias,
+        "media",
         F.struct(
             F.col(data_col).cast("binary").alias("data"),
             F.lit(mime).alias("mime"),
@@ -37,11 +37,11 @@ def pack_media(df: DataFrame, data_col: str, mime: str, alias: str = "media") ->
     )
 
 
-def media_stats(df: DataFrame, media_col: str = "media") -> DataFrame:
+def media_stats(df: DataFrame) -> DataFrame:
     """Cheap JVM-side metadata: byte length + content digest — no
     Python, no decode; this is what dedup/partitioning key off."""
-    return df.withColumn("media_bytes", F.length(F.col(f"{media_col}.data"))).withColumn(
-        "media_sha256", F.sha2(F.col(f"{media_col}.data"), 256)
+    return df.withColumn("media_bytes", F.length(F.col("media.data"))).withColumn(
+        "media_sha256", F.sha2(F.col("media.data"), 256)
     )
 
 
@@ -87,7 +87,6 @@ IMAGE_META_SCHEMA = "id long, width int, height int, format string, media_bytes 
 def decode_image_meta(
     df: DataFrame,
     id_col: str = "id",
-    media_col: str = "media",
     kernel=None,
 ) -> DataFrame:
     """Decode image dimensions via Arrow-batched mapInPandas.
@@ -99,7 +98,7 @@ def decode_image_meta(
     tests use this to drive the plumbing with a custom codec).
     """
     kernel = kernel or _select_kernel()
-    cols = df.select(F.col(id_col).alias("id"), F.col(f"{media_col}.data").alias("data"))
+    cols = df.select(F.col(id_col).alias("id"), F.col("media.data").alias("data"))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -133,13 +132,13 @@ def decode_image_meta(
 
 
 def frame_sample_plan(
-    df: DataFrame, id_col: str = "id", media_col: str = "media", every_n: int = 10
+    df: DataFrame, id_col: str = "id", every_n: int = 10
 ) -> DataFrame:
     """Video frame-sampling *plan*: emits (id, frame_idx) rows the
     decoder would materialize — demonstrates the explode/partition
     shape (1 video row -> k frame rows) without a codec. Frame count
     is derived from byte length as a deterministic stand-in."""
-    n_frames = (F.length(F.col(f"{media_col}.data")) / 100).cast("int") + 1
+    n_frames = (F.length(F.col("media.data")) / 100).cast("int") + 1
     return df.select(
         F.col(id_col).alias("id"),
         F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))).alias("frame_idx"),
@@ -186,7 +185,6 @@ def _dhash64(grid: list[int], w: int = 9, h: int = 8) -> int:
 def phash_image(
     df: DataFrame,
     id_col: str = "id",
-    media_col: str = "media",
     pixel_kernel=None,
 ) -> DataFrame:
     """Perceptual (difference) hash per media row -> (id, phash long),
@@ -202,7 +200,7 @@ def phash_image(
     if pixel_kernel is None:
         pixel_kernel = _pil_pixel_grid if _pil_available() else _fake_pixel_grid
 
-    cols = df.select(F.col(id_col).alias("id"), F.col(f"{media_col}.data").alias("data"))
+    cols = df.select(F.col(id_col).alias("id"), F.col("media.data").alias("data"))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -230,7 +228,6 @@ def phash_image(
 def audio_chunk_plan(
     df: DataFrame,
     id_col: str = "id",
-    media_col: str = "media",
     sample_rate: int = 16_000,
     bytes_per_sample: int = 2,
     channels: int = 1,
@@ -249,7 +246,7 @@ def audio_chunk_plan(
     Clips shorter than one chunk still emit their single partial
     chunk; zero-byte clips emit none."""
     frame_bytes = bytes_per_sample * channels
-    n_samples = (F.length(F.col(f"{media_col}.data")) / frame_bytes).cast("bigint")
+    n_samples = (F.length(F.col("media.data")) / frame_bytes).cast("bigint")
     chunk_samples = int(sample_rate * chunk_seconds)
     n_chunks = F.ceil(n_samples / F.lit(chunk_samples)).cast("bigint")
     start = F.col("chunk_idx") * chunk_samples

@@ -18,15 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def scale_out(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition to ``target`` (default: cluster default
-    parallelism) iff the DataFrame currently has fewer partitions.
+def scale_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to the cluster's default parallelism
+    iff the DataFrame currently has fewer partitions.
 
     Call on the *narrow* projection feeding CPU-heavy per-row work,
     before any ``persist()`` (a cache pins its input layout).
     """
-    sc = df.sparkSession.sparkContext
-    want = target or sc.defaultParallelism
+    want = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < want:
         return df.repartition(want)
     return df
@@ -37,23 +36,22 @@ def global_prefix_sum(
     order_col: str,
     value_col: str,
     out_col: str = "prefix_sum",
-    buckets: int = 32,
 ) -> DataFrame:
     """Exclusive prefix sum of ``value_col`` in global ``order_col``
     order, WITHOUT a global single-partition window — the classic
     two-pass distributed scan:
 
-      1. rows land in ``buckets`` deterministic, order-preserving
+      1. rows land in 32 deterministic, order-preserving
          ranges of ``order_col`` (fixed arithmetic split of
          [min, max] — NOT RangePartitioner, whose sampled bounds
          change run to run);
       2. a per-bucket window computes the local exclusive cumsum
          (each bucket's rows stay on one reducer — bounded, parallel);
-      3. bucket totals (``buckets`` rows) come to the driver, their
+      3. bucket totals (32 rows) come to the driver, their
          running sum re-enters as a broadcast offset join.
 
     At 100 TB the only full-data movement is the one shuffle into
-    range buckets; the driver handles ``buckets`` numbers. The result
+    range buckets; the driver handles 32 numbers. The result
     is bitwise-deterministic for integer/decimal values (ties in
     ``order_col`` must not exist — pass a unique key)."""
     from pyspark.sql import Window
@@ -88,6 +86,7 @@ def global_prefix_sum(
             f"{n_total - n_keyed} null(s) among {n_total} rows — the "
             "order key must be non-null (filter or fill before the scan)"
         )
+    buckets = 32
     span = max((hi - lo) / buckets, 1e-9)
     b = F.least(
         F.lit(buckets - 1),
@@ -385,15 +384,13 @@ def grouped_bottom_k(
     return out.drop("__bk_r2")
 
 
-def skew_profile(
-    df: DataFrame, key: str, label: str | None = None, n_parts: int = 32
-) -> DataFrame:
+def skew_profile(df: DataFrame, key: str) -> DataFrame:
     """One-row shuffle-skew diagnostic for ``key`` as a join/groupBy
     key — the "measure" half of the diagnose-then-salt workflow
     (operators/joins.py:skew_salt_join is the "fix" half): per-key
     frequencies, the share held by the heaviest keys, and the
     simulated per-reducer loads under hash partitioning into
-    ``n_parts`` tasks, whose max/avg ratio is the straggler factor a
+    32 tasks, whose max/avg ratio is the straggler factor a
     shuffle on this key would pay.
 
     Determinism: partition assignment uses an md5-derived bucket
@@ -405,13 +402,13 @@ def skew_profile(
     Scale: one groupBy(key) is the only data-sized shuffle (the
     per-key count frame is then tiny-aggregated twice); top-k uses
     TakeOrderedAndProject, never a global sort. avg load divides by
-    ALL n_parts, so empty reducers count toward the skew ratio
+    ALL 32 reducers, so empty reducers count toward the skew ratio
     exactly as idle tasks would."""
     from pyspark.sql import functions as F
 
     from logicash_etl_spark.operators.caching import scoped_persist
 
-    lbl = label or key
+    n_parts = 32
     cnts = df.groupBy(key).agg(F.count("*").alias("cnt"))
     # b (the per-key count frame — the thing being measured) feeds
     # the totals agg, the top-10 and the bucket loads; unpersisted,
@@ -443,7 +440,7 @@ def skew_profile(
         tot.crossJoin(F.broadcast(top10))
         .crossJoin(F.broadcast(lstats))
         .select(
-            F.lit(lbl).alias("key_name"),
+            F.lit(key).alias("key_name"),
             "n_keys",
             "total_rows",
             F.round(

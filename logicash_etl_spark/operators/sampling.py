@@ -29,12 +29,12 @@ def _u(id_col: Column, salt: str) -> Column:
 
 
 def train_test_split(
-    df: DataFrame, id_col: str, test_fraction: float = 0.1, salt: str = "split"
+    df: DataFrame, id_col: str, test_fraction: float = 0.1
 ) -> tuple[DataFrame, DataFrame]:
     """(train, test): disjoint, exhaustive, and stable — a row's side
     never changes when data is added elsewhere (the property random
     splits lack)."""
-    is_test = _u(F.col(id_col), salt) < test_fraction
+    is_test = _u(F.col(id_col), "split") < test_fraction
     return df.filter(~is_test), df.filter(is_test)
 
 
@@ -44,7 +44,6 @@ def stratified_sample(
     stratum_col: str,
     fractions: dict[str, float],
     default_fraction: float = 0.0,
-    salt: str = "strata",
 ) -> DataFrame:
     """Per-stratum deterministic fractions (e.g. downsample the
     majority class, keep all of the rare one). Unlisted strata get
@@ -52,7 +51,7 @@ def stratified_sample(
     frac = F.lit(default_fraction)
     for value, f in fractions.items():
         frac = F.when(F.col(stratum_col) == value, F.lit(f)).otherwise(frac)
-    return df.filter(_u(F.col(id_col), salt) < frac)
+    return df.filter(_u(F.col(id_col), "strata") < frac)
 
 
 def weighted_topk_sample(
@@ -61,13 +60,11 @@ def weighted_topk_sample(
     weight_col: str,
     group_col: str,
     k: int,
-    salt: str = "wsample",
-    rank_col: str = "rk",
 ) -> DataFrame:
-    """Weighted sampling WITHOUT replacement, k rows per group
-    (Efraimidis & Spirakis 2006): draw E_i = -ln(u_i) / w_i — an
-    Exponential(rate=w_i) variate — and keep the k smallest per
-    group. P(row first) = w_i / sum(w), exactly the
+    """Weighted sampling WITHOUT replacement, k rows per group ranked
+    1..k in ``rk`` (Efraimidis & Spirakis 2006): draw
+    E_i = -ln(u_i) / w_i — an Exponential(rate=w_i) variate — and keep
+    the k smallest per group. P(row first) = w_i / sum(w), exactly the
     weighted-without-replacement semantics curation pipelines need
     ("sample 1M docs proportional to length/quality score").
 
@@ -86,7 +83,7 @@ def weighted_topk_sample(
     sort FIRST), DuckDB ln(0) raises."""
     from logicash_etl_spark.operators.partitioning import grouped_bottom_k
 
-    u = _u(F.col(id_col), salt)
+    u = _u(F.col(id_col), "wsample")
     key = -F.log(u) / F.col(weight_col)
     pos = (
         df.filter((F.col(weight_col) > 0) & (u > 0))
@@ -100,5 +97,5 @@ def weighted_topk_sample(
         "__es_key",
         k,
         tiebreak_cols=[F.col(id_col).asc()],
-        rank_col=rank_col,
+        rank_col="rk",
     ).drop("__es_key")

@@ -24,6 +24,10 @@ from pyspark.sql import Window as W
 
 from logicash_etl_spark.operators.partitioning import scale_out
 
+# column names of the embedding tables (fixtures' embeddings.parquet)
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
@@ -41,10 +45,7 @@ def as_double(vec: Column | str) -> Column:
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    query_id: str = "query_id",
     exclude_self: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine.
@@ -57,23 +58,23 @@ def cosine_topk(
     # norms computed once per vector on each side — a per-pair cosine()
     # would fold each vector's norm Q (resp. N) times over
     q = queries.select(
-        F.col(id_col).alias(query_id),
-        as_double(vec_col).alias("__qv"),
-        _norm(as_double(vec_col)).alias("__qn"),
+        F.col(ID_COL).alias("query_id"),
+        as_double(VEC_COL).alias("__qv"),
+        _norm(as_double(VEC_COL)).alias("__qn"),
     )
     # scale_out: the N x Q score loop is CPU-bound and must not run on
     # the scan's (possibly single-split) layout
-    c = scale_out(corpus.select(id_col, vec_col)).select(
-        F.col(id_col),
-        as_double(vec_col).alias("__cv"),
-        _norm(as_double(vec_col)).alias("__cn"),
+    c = scale_out(corpus.select(ID_COL, VEC_COL)).select(
+        F.col(ID_COL),
+        as_double(VEC_COL).alias("__cv"),
+        _norm(as_double(VEC_COL)).alias("__cn"),
     )
     scored = c.crossJoin(F.broadcast(q))
     if exclude_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id))
+        scored = scored.filter(F.col(ID_COL) != F.col("query_id"))
     scored = scored.select(
-        query_id,
-        id_col,
+        "query_id",
+        ID_COL,
         # eps floor: see note in lsh_ann_topk — bitwise identical for
         # nonzero norms, zero vectors score 0.0 instead of ANSI error
         (
@@ -81,7 +82,7 @@ def cosine_topk(
             / F.greatest(F.col("__qn") * F.col("__cn"), F.lit(1e-12))
         ).alias("cosine_sim"),
     )
-    w = W.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.col(id_col).asc())
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.col(ID_COL).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -105,13 +106,10 @@ def _sign_matrix(dim: int, planes: int, plane_offset: int = 0) -> list[list[floa
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     planes: int = 4,
     tables: int = 8,
     k: int = 5,
-    query_id: str = "query_id",
     multi_probe: int = 0,
 ) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH.
@@ -166,10 +164,10 @@ def lsh_ann_topk(
     def keyed(df: DataFrame, out: str, probes: int = 0) -> DataFrame:
         udf = _sigs_probed if probes else _sigs
         if not probes:  # corpus side: parallelize the BLAS batches
-            df = scale_out(df.select(id_col, vec_col))
+            df = scale_out(df.select(ID_COL, VEC_COL))
         keys = df.select(
-            F.col(id_col).alias(out),
-            F.posexplode(udf(as_double(vec_col))).alias("pos", "bucket"),
+            F.col(ID_COL).alias(out),
+            F.posexplode(udf(as_double(VEC_COL))).alias("pos", "bucket"),
         )
         # probed arrays are laid out (tbl, probe): tbl = pos // (1+probes)
         return keys.select(
@@ -177,29 +175,29 @@ def lsh_ann_topk(
         )
 
     c_keys = keyed(corpus, "cand_id")
-    q_keys = keyed(queries, query_id, probes=multi_probe)
+    q_keys = keyed(queries, "query_id", probes=multi_probe)
     cand = (
         q_keys.join(c_keys, on=["tbl", "bucket"])
-        .filter(F.col("cand_id") != F.col(query_id))
-        .select(query_id, "cand_id")
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id")
         .distinct()
     )
     q_vec = queries.select(
-        F.col(id_col).alias(query_id),
-        as_double(vec_col).alias("__qv"),
-        _norm(as_double(vec_col)).alias("__qn"),
+        F.col(ID_COL).alias("query_id"),
+        as_double(VEC_COL).alias("__qv"),
+        _norm(as_double(VEC_COL)).alias("__qn"),
     )
-    c_vec = scale_out(corpus.select(id_col, vec_col)).select(
-        F.col(id_col).alias("cand_id"),
-        as_double(vec_col).alias("__cv"),
-        _norm(as_double(vec_col)).alias("__cn"),
+    c_vec = scale_out(corpus.select(ID_COL, VEC_COL)).select(
+        F.col(ID_COL).alias("cand_id"),
+        as_double(VEC_COL).alias("__cv"),
+        _norm(as_double(VEC_COL)).alias("__cn"),
     )
     scored = (
-        cand.join(F.broadcast(q_vec), query_id)
+        cand.join(F.broadcast(q_vec), "query_id")
         .join(c_vec, "cand_id")
         .select(
-            query_id,
-            F.col("cand_id").alias(id_col),
+            "query_id",
+            F.col("cand_id").alias(ID_COL),
             # eps floor on the norm product: zero vectors score 0.0
             # instead of ANSI divide-by-zero; bitwise identical for all
             # nonzero norms, so oracle parity is unaffected
@@ -209,21 +207,20 @@ def lsh_ann_topk(
             ).alias("cosine_sim"),
         )
     )
-    w = W.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.col(id_col).asc())
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.col(ID_COL).asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def knn_label_vote(topk: DataFrame, labels: DataFrame, id_col: str = "vec_id",
-                   label_col: str = "label", query_id: str = "query_id") -> DataFrame:
+def knn_label_vote(topk: DataFrame, labels: DataFrame) -> DataFrame:
     """Majority label among a query's top-k neighbors (classification
     by retrieval). Ties broken by smaller label value."""
-    joined = topk.join(labels.select(id_col, label_col), on=id_col)
-    counts = joined.groupBy(query_id, label_col).agg(F.count("*").alias("votes"))
-    w = W.partitionBy(query_id).orderBy(F.desc("votes"), F.col(label_col).asc())
+    joined = topk.join(labels.select(ID_COL, "label"), on=ID_COL)
+    counts = joined.groupBy("query_id", "label").agg(F.count("*").alias("votes"))
+    w = W.partitionBy("query_id").orderBy(F.desc("votes"), F.col("label").asc())
     return (
         counts.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select(query_id, F.col(label_col).alias("predicted_label"), "votes")
+        .select("query_id", F.col("label").alias("predicted_label"), "votes")
     )
 
 
@@ -233,8 +230,6 @@ def knn_label_vote(topk: DataFrame, labels: DataFrame, id_col: str = "vec_id",
 
 def kmeans_lite(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 16,
     iterations: int = 5,
     train_sample: int = 65536,
@@ -251,7 +246,7 @@ def kmeans_lite(
     partition, never a full sort shuffle. Init = the k lowest-id
     sample vectors. Returns (centroid_id, centroid array<double>).
     """
-    v = vectors.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v"))
+    v = vectors.select(F.col(ID_COL).alias("id"), as_double(VEC_COL).alias("v"))
     # Arrow transfer (toPandas), not collect(): a 64k x 64-double
     # sample is ~33 MB — Row-object deserialization costs seconds,
     # the Arrow batch milliseconds
@@ -289,11 +284,8 @@ def ivf_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 3,
-    query_id: str = "query_id",
     broadcast_queries: bool = False,
 ) -> DataFrame:
     """IVF search: corpus rows live in their nearest centroid's cell;
@@ -327,26 +319,26 @@ def ivf_ann_topk(
             return pd.Series(list(order))
         return cells
 
-    c_vec = scale_out(corpus.select(id_col, vec_col)).select(
-        F.col(id_col).alias("cand_id"),
-        as_double(vec_col).alias("__cv"),
-        _norm(as_double(vec_col)).alias("__cn"),
-        F.element_at(cells_udf(1)(as_double(vec_col)), 1).alias("cell"),
+    c_vec = scale_out(corpus.select(ID_COL, VEC_COL)).select(
+        F.col(ID_COL).alias("cand_id"),
+        as_double(VEC_COL).alias("__cv"),
+        _norm(as_double(VEC_COL)).alias("__cn"),
+        F.element_at(cells_udf(1)(as_double(VEC_COL)), 1).alias("cell"),
     )
     q_vec = queries.select(
-        F.col(id_col).alias(query_id),
-        as_double(vec_col).alias("__qv"),
-        _norm(as_double(vec_col)).alias("__qn"),
-        F.explode(cells_udf(n_probe)(as_double(vec_col))).alias("cell"),
+        F.col(ID_COL).alias("query_id"),
+        as_double(VEC_COL).alias("__qv"),
+        _norm(as_double(VEC_COL)).alias("__qn"),
+        F.explode(cells_udf(n_probe)(as_double(VEC_COL))).alias("cell"),
     )
     if broadcast_queries:
         q_vec = F.broadcast(q_vec)
     scored = (
         q_vec.join(c_vec, on="cell")
-        .filter(F.col("cand_id") != F.col(query_id))
+        .filter(F.col("cand_id") != F.col("query_id"))
         .select(
-            query_id,
-            F.col("cand_id").alias(id_col),
+            "query_id",
+            F.col("cand_id").alias(ID_COL),
             # eps floor on the norm product: zero vectors score 0.0
             # instead of ANSI divide-by-zero; bitwise identical for all
             # nonzero norms, so oracle parity is unaffected
@@ -359,15 +351,13 @@ def ivf_ann_topk(
         # cell and a query's probed cells are distinct, so each
         # (query, candidate) pair joins at most once
     )
-    w = W.partitionBy(query_id).orderBy(F.desc("cosine_sim"), F.col(id_col).asc())
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.col(ID_COL).asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def assign_cells(
     vectors: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Nearest-centroid (cosine) cell assignment with ZERO shuffle:
     the k centroids are inlined as a literal array of structs and the
@@ -385,7 +375,7 @@ def assign_cells(
         (int(r["centroid_id"]), [float(x) for x in r["centroid"]])
         for r in centroids.collect()
     ]
-    v = as_double(vec_col)
+    v = as_double(VEC_COL)
     vn = _norm(v)
     scored = F.array(
         *[
@@ -406,8 +396,6 @@ def semantic_dedup(
     vectors: DataFrame,
     centroids: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means cells
     as the blocking key, exact cosine within each cell, and a greedy
@@ -429,11 +417,11 @@ def semantic_dedup(
     # centroid-argmax fold per consumer (r13 scan-audit fix).
     assigned = scoped_persist(
         assign_cells(
-            scale_out(vectors.select(id_col, vec_col)), centroids, id_col, vec_col
+            scale_out(vectors.select(ID_COL, VEC_COL)), centroids
         ).select(
-            F.col(id_col).alias("id"),
-            as_double(vec_col).alias("__v"),
-            _norm(as_double(vec_col)).alias("__n"),
+            F.col(ID_COL).alias("id"),
+            as_double(VEC_COL).alias("__v"),
+            _norm(as_double(VEC_COL)).alias("__n"),
             "cell",
         )
     )
@@ -466,7 +454,7 @@ def semantic_dedup(
         assigned.select("id", "cell")
         .join(dup_of, on="id", how="left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias(ID_COL),
             "cell",
             F.coalesce("removed", F.lit(False)).alias("removed"),
         )
@@ -479,8 +467,6 @@ def semantic_dedup(
 
 def pq_train_codebooks(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     m: int = 8,
     k_codes: int = 16,
@@ -498,7 +484,7 @@ def pq_train_codebooks(
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
     dsub = dim // m
-    v = vectors.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v"))
+    v = vectors.select(F.col(ID_COL).alias("id"), as_double(VEC_COL).alias("v"))
     pdf = (
         v.orderBy(F.xxhash64(F.col("id")), F.col("id"))
         .limit(train_sample)
@@ -544,8 +530,6 @@ def _pq_book_sql(book: list[list[float]]) -> str:
 def pq_encode(
     vectors: DataFrame,
     books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode each vector to ``m`` one-byte codes: argmin centroid per
     subspace, run as a numpy ``mapInArrow`` batch pass (r14; guide
@@ -578,8 +562,8 @@ def pq_encode(
     dsub = len(books[0][0])
     dim = m * dsub
     codebooks = [np.asarray(b, dtype=np.float64) for b in books]
-    id_type = vectors.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, " + ", ".join(
+    id_type = vectors.schema[ID_COL].dataType.simpleString()
+    out_schema = f"{ID_COL} {id_type}, " + ", ".join(
         f"code_{s} int" for s in range(m)
     )
 
@@ -606,7 +590,7 @@ def pq_encode(
                 if flat.null_count
                 else None
             )
-            arrays, names = [ids], [id_col]
+            arrays, names = [ids], [ID_COL]
             for s in range(m):
                 sub = emb[:, s * dsub : (s + 1) * dsub]
                 bk = codebooks[s]
@@ -629,7 +613,7 @@ def pq_encode(
                 names.append(f"code_{s}")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return vectors.select(id_col, vec_col).mapInArrow(_encode, out_schema)
+    return vectors.select(ID_COL, VEC_COL).mapInArrow(_encode, out_schema)
 
 
 def pq_ann_topk(
@@ -637,8 +621,6 @@ def pq_ann_topk(
     queries: DataFrame,
     books: list[list[list[float]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     rerank_candidates: int = 0,
 ) -> DataFrame:
     """PQ asymmetric-distance top-k: approx squared L2 from each query
@@ -663,11 +645,11 @@ def pq_ann_topk(
     vec_id, approx_sq_l2, rank). Self-matches excluded."""
     dsub = len(books[0][0])
     m = len(books)
-    codes = pq_encode(vectors, books, id_col, vec_col)
+    codes = pq_encode(vectors, books)
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("__qv")
+        F.col(ID_COL).alias("query_id"), as_double(VEC_COL).alias("__qv")
     )
-    joined = codes.join(F.broadcast(q), on=codes[id_col] != F.col("query_id"))
+    joined = codes.join(F.broadcast(q), on=codes[ID_COL] != F.col("query_id"))
     # asymmetric distance as ONE server-parsed expression: per
     # subspace, element_at into the literal codebook by this row's
     # code, then a zip_with fold against the query subvector (built
@@ -682,10 +664,10 @@ def pq_ann_topk(
         for s in range(m)
     )
     scored = joined.select(
-        "query_id", F.col(id_col), F.expr(dist).alias("approx_sq_l2")
+        "query_id", F.col(ID_COL), F.expr(dist).alias("approx_sq_l2")
     )
     w = W.partitionBy("query_id").orderBy(
-        F.col("approx_sq_l2").asc(), F.col(id_col).asc()
+        F.col("approx_sq_l2").asc(), F.col(ID_COL).asc()
     )
     # a shortlist smaller than k could only shrink the answer set
     shortlist_n = max(rerank_candidates, k) if rerank_candidates > 0 else k
@@ -696,7 +678,7 @@ def pq_ann_topk(
     if rerank_candidates <= 0:
         return shortlist
     # exact re-rank: raw vectors fetched for the C shortlist rows only
-    raw = vectors.select(F.col(id_col), as_double(vec_col).alias("__rv"))
+    raw = vectors.select(F.col(ID_COL), as_double(VEC_COL).alias("__rv"))
     exact = F.aggregate(
         F.zip_with(F.col("__rv"), F.col("__qv"), lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
@@ -704,9 +686,9 @@ def pq_ann_topk(
     )
     rescored = (
         shortlist.drop("rank", "approx_sq_l2")
-        .join(raw, on=id_col)
+        .join(raw, on=ID_COL)
         .join(F.broadcast(q), on="query_id")
-        .select("query_id", F.col(id_col), exact.alias("approx_sq_l2"))
+        .select("query_id", F.col(ID_COL), exact.alias("approx_sq_l2"))
     )
     return (
         rescored.withColumn("rank", F.row_number().over(w))
@@ -719,8 +701,6 @@ def mmr_select(
     query_vec: list[float],
     k: int = 5,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Greedy MAXIMAL MARGINAL RELEVANCE selection (Carbonell &
     Goldstein, SIGIR'98): pick ``k`` exemplars that are relevant to
@@ -767,13 +747,13 @@ def mmr_select(
 
     q_lit = F.array(*[F.lit(float(v)) for v in query_vec])
     q_norm = F.lit(_pynorm(query_vec))
-    xv = as_double(vec_col)
+    xv = as_double(VEC_COL)
     # __n rides in the persisted pool: each pass's |S| cosine folds
     # reuse it instead of re-deriving the candidate norm per selected
     # vector (the step-i expression previously held i+1 norm folds per
     # row; now exactly the dot folds remain)
     base = scoped_persist(
-        corpus.select(F.col(id_col), xv.alias("__v"), _norm(xv).alias("__n"))
+        corpus.select(F.col(ID_COL), xv.alias("__v"), _norm(xv).alias("__n"))
         .withColumn(
             "__rel",
             _dot(F.col("__v"), q_lit)
@@ -801,15 +781,15 @@ def mmr_select(
         pool = base
         if selected:
             pool = base.filter(
-                ~F.col(id_col).isin([sid for sid, _ in selected])
+                ~F.col(ID_COL).isin([sid for sid, _ in selected])
             )
         picked = (
             pool.select(
-                F.col(id_col),
+                F.col(ID_COL),
                 "__v",
                 F.round(score, 6).alias("__score"),
             )
-            .orderBy(F.desc("__score"), F.asc(id_col))
+            .orderBy(F.desc("__score"), F.asc(ID_COL))
             .limit(1)
             .collect()
         )
@@ -820,8 +800,8 @@ def mmr_select(
             # the r10 empty-corpus sweep)
             break
         top = picked[0]
-        selected.append((top[id_col], list(top["__v"])))
-        out.append((step, top[id_col], float(top["__score"])))
+        selected.append((top[ID_COL], list(top["__v"])))
+        out.append((step, top[ID_COL], float(top["__score"])))
     return spark.createDataFrame(
-        out, f"rank int, {id_col} long, mmr_score double"
+        out, f"rank int, {ID_COL} long, mmr_score double"
     )

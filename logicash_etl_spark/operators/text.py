@@ -28,10 +28,10 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def tokens(text: Column | str, pattern: str = r"\s+") -> Column:
+def tokens(text: Column | str) -> Column:
     """Whitespace tokenization -> array<string> (empty array for blank)."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(F.trim(c), pattern), lambda t: t != "")
+    return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
 
 def token_count(text: Column | str) -> Column:
@@ -61,13 +61,14 @@ def char_class_counts(text: Column | str) -> dict[str, Column]:
     }
 
 
-def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
-    """Attach quality-scoring features: token count, mean token length,
-    punctuation/digit ratios, stopword ratio (en) — the standard
-    pre-training quality filters (C4/Gopher-style rules)."""
-    cc = char_class_counts(text)
-    toks = token_count(text)
-    stop_hits = _marker_hits(F.col(text), LANG_MARKERS["en"])
+def quality_features(df: DataFrame) -> DataFrame:
+    """Attach quality-scoring features of the ``text`` column: token
+    count, mean token length, punctuation/digit ratios, stopword ratio
+    (en) — the standard pre-training quality filters (C4/Gopher-style
+    rules)."""
+    cc = char_class_counts("text")
+    toks = token_count("text")
+    stop_hits = _marker_hits(F.col("text"), LANG_MARKERS["en"])
     n_chars = F.greatest(cc["n_chars"], F.lit(1))
     out = df.withColumn("n_tokens", toks)
     out = out.withColumn("n_chars_calc", cc["n_chars"])
@@ -84,17 +85,13 @@ def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
     return out
 
 
-def quality_flag(
-    df: DataFrame,
-    min_tokens: int = 10,
-    max_mean_token_len: float = 12.0,
-    max_digit_ratio: float = 0.3,
-) -> DataFrame:
-    """Gopher-ish keep/drop flag from quality_features columns."""
+def quality_flag(df: DataFrame) -> DataFrame:
+    """Gopher-ish keep/drop flag from quality_features columns: at
+    least 10 tokens, mean token length <= 12, digit ratio <= 0.3."""
     keep = (
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("mean_token_len") <= max_mean_token_len)
-        & (F.col("digit_ratio") <= max_digit_ratio)
+        (F.col("n_tokens") >= 10)
+        & (F.col("mean_token_len") <= 12.0)
+        & (F.col("digit_ratio") <= 0.3)
     )
     return df.withColumn("quality_keep", keep)
 
@@ -116,9 +113,9 @@ def lang_scores(text: Column | str) -> dict[str, Column]:
     return {lang: _marker_hits(c, words) for lang, words in LANG_MARKERS.items()}
 
 
-def predict_lang(df: DataFrame, text: str = "text", alias: str = "lang_pred") -> DataFrame:
-    """Argmax over language marker scores; deterministic tiebreak by
-    language code order; 'und' when no marker hits at all."""
+def predict_lang(df: DataFrame, text: str = "text") -> DataFrame:
+    """``lang_pred`` = argmax over language marker scores; deterministic
+    tiebreak by language code order; 'und' when no marker hits at all."""
     scores = lang_scores(text)
     # build argmax as chained CASE WHEN over a greatest() pivot
     langs = sorted(scores)
@@ -126,7 +123,7 @@ def predict_lang(df: DataFrame, text: str = "text", alias: str = "lang_pred") ->
     expr = F.lit("und")
     for l in reversed(langs):
         expr = F.when((greatest > 0) & (scores[l] == greatest), F.lit(l)).otherwise(expr)
-    return df.withColumn(alias, expr)
+    return df.withColumn("lang_pred", expr)
 
 
 # ---------------------------------------------------------------------------
@@ -173,12 +170,11 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
 def bpe_train(
     word_counts: DataFrame,
     n_merges: int = 8,
-    word_col: str = "word",
-    count_col: str = "n",
     driver_vocab_threshold: int = 2_000_000,
 ) -> list[tuple[str, str, str, int]]:
     """Byte-pair-encoding merge training, Spark-first: the corpus is
-    touched ONCE (the ``word_counts`` aggregate the caller builds);
+    touched ONCE (the ``word_counts`` aggregate of ``(word, n)`` rows
+    the caller builds);
     every merge iteration then runs on the VOCABULARY frame — pair
     counts are weighted by word frequency, so at 100 TB the iteration
     cost is bounded by distinct words, not corpus bytes (the shape
@@ -207,7 +203,7 @@ def bpe_train(
     # small — already IS the data; the driver never holds more than
     # threshold+1 rows either way.
     probe = (
-        word_counts.select(F.col(word_col).alias("w"), F.col(count_col).alias("n"))
+        word_counts.select(F.col("word").alias("w"), "n")
         .limit(driver_vocab_threshold + 1)
         .toPandas()
     )
@@ -240,8 +236,8 @@ def bpe_train(
         return merges
 
     syms = word_counts.select(
-        F.col(count_col).alias("__n"),
-        F.split(F.col(word_col), "").alias("__s"),
+        F.col("n").alias("__n"),
+        F.split(F.col("word"), "").alias("__s"),
     ).persist()
     merges: list[tuple[str, str, str, int]] = []
     try:

@@ -26,6 +26,7 @@ from logicash_etl_spark import schemas as S
 from logicash_etl_spark.dq.rules import logicash_rules
 from logicash_etl_spark.functions.money import davg, dsum, money
 from logicash_etl_spark.operators.aggregates import scd1_latest
+from logicash_etl_spark.operators.caching import cache_scope, scoped_persist
 from logicash_etl_spark.operators.joins import enrich
 from logicash_etl_spark.operators.windows import ranked
 from logicash_etl_spark.pipeline.runner import Pipeline, Step
@@ -56,8 +57,9 @@ def transform(
     as_of = F.to_timestamp(F.lit(cfg.as_of)) if cfg.as_of else None
     rules = logicash_rules(as_of)
     joined = enrich(fact, dim, on="id_atm", how="left", broadcast_dim=True)
-    # one source scan serves report + both splits
-    joined = joined.persist()
+    # one source scan serves report + both splits; released when the
+    # run's cache_scope ends
+    joined = scoped_persist(joined)
     report = rules.violation_counts(joined)
     clean, quarantine = rules.split(joined)
     silver = clean.withColumn("fecha_dia", F.to_date("fecha")).withColumn(
@@ -94,10 +96,9 @@ def build_gold(spark: SparkSession, silver: DataFrame, cfg: LogicashConfig) -> d
         dsum("monto", "dinero_total_movido"),
         davg("monto", "monto_promedio"),
     )
-    gold_rank = ranked(
+    gold_rank = ranked(  # bounded by |ATMs|
         ranking_base,
         order_by=[F.col("dinero_total_movido").desc(), F.col("id_atm").asc()],
-        small_input_ok=True,  # bounded by |ATMs|
     )
     return {
         "dim_atms": gold_dim,
@@ -142,7 +143,9 @@ def validate(spark: SparkSession, silver: DataFrame) -> dict[str, DataFrame]:
 
 
 def run_logicash_pipeline(spark: SparkSession, cfg: LogicashConfig) -> dict:
-    """The full EP1 DAG as a Pipeline; every step idempotent."""
+    """The full EP1 DAG as a Pipeline; every step idempotent. Frames the
+    steps persist are released when the run ends, so a driver can run
+    lot after lot without accumulating cached data."""
 
     def _extract(ctx):
         return extract(spark, cfg)
@@ -177,4 +180,5 @@ def run_logicash_pipeline(spark: SparkSession, cfg: LogicashConfig) -> dict:
             Step("validate", _validate),
         ]
     )
-    return pipe.run()
+    with cache_scope():
+        return pipe.run()

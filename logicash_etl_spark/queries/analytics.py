@@ -1161,10 +1161,8 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _skew_profile_sql(key_expr: str, label: str, n_parts: int = 32) -> str:
     """Oracle block mirroring operators/partitioning.skew_profile for
     one key — generated from a shared template so both profiled keys
-    run the exact same arithmetic. ``n_parts`` is templated exactly
-    like key/label: an oracle-paired caller passing a non-default
-    bucket count to skew_profile must pass the SAME value here, or
-    the simulated placements diverge."""
+    run the exact same arithmetic. ``n_parts`` must equal
+    skew_profile's 32 simulated reducers, or the placements diverge."""
     return f"""
     SELECT '{label}' AS key_name,
            CAST(n_keys AS BIGINT) AS n_keys,

@@ -329,14 +329,14 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_DENOM = float(1 << 48)
 
 
-def _kmv_u(col, salt: str = "kmv"):
-    h = F.md5(F.concat(F.lit(salt), col.cast("string")))
+def _kmv_u(col):
+    h = F.md5(F.concat(F.lit("kmv"), col.cast("string")))
     return F.conv(F.substring(h, 1, 12), 16, 10).cast("double") / F.lit(
         _KMV_DENOM
     )
 
 
-def kmv_sketch(df: DataFrame, value_col: str, k: int, salt: str = "kmv") -> DataFrame:
+def kmv_sketch(df: DataFrame, value_col: str, k: int) -> DataFrame:
     """Bottom-k distinct hash draws of ``value_col`` — a KMV/theta
     distinct-count sketch as a k-row DataFrame of ``u`` in [0,1).
 
@@ -353,7 +353,7 @@ def kmv_sketch(df: DataFrame, value_col: str, k: int, salt: str = "kmv") -> Data
     property ``kmv_partial_merge`` hash-proves — which is also the
     escape hatch when the distinct shuffle is too big: sketch
     partitions/groups independently and merge k-row samples."""
-    u = _kmv_u(F.col(value_col), salt).alias("u")
+    u = _kmv_u(F.col(value_col)).alias("u")
     return (
         df.filter(F.col(value_col).isNotNull())
         .select(u)

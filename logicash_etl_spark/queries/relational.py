@@ -31,10 +31,6 @@ from logicash_etl_spark.operators.joins import broadcast_bounded
 from logicash_etl_spark.sources.readers import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Flagship: the reference's "top-5 ATMs by money moved" (etl_job.py:147-158)
 # transposed onto orders x customer: scan -> quality filter -> broadcast
@@ -56,7 +52,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def flagship_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders, customer = _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "customer")
+    orders, customer = read_table(spark, sf_dir, "orders"), read_table(spark, sf_dir, "customer")
     clean = orders.filter(
         F.col("o_custkey").isNotNull()
         & (F.col("o_totalprice") > 0)
@@ -109,7 +105,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tight factors the whole chain is (28,6) — exact, engine-agnostic
     at any corpus size.
     """
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
     one_minus_disc = (1 - money("l_discount")).cast("decimal(4,2)")
     one_plus_tax = (1 + money("l_tax")).cast("decimal(4,2)")
     disc_price = money("l_extendedprice") * one_minus_disc
@@ -141,7 +137,7 @@ def daily_order_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 daily summary with the P2 derived date column
     (etl_job.py:163-174). Unordered: the driver compare is order-
     insensitive, and a global sort at scale is a needless exchange."""
-    orders = _t(spark, sf_dir, "orders").withColumn(
+    orders = read_table(spark, sf_dir, "orders").withColumn(
         "fecha_dia", F.to_date("o_orderdate")
     )
     return daily_summary(orders, "fecha_dia", "o_totalprice")
@@ -165,7 +161,7 @@ def daily_order_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def daily_balance_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The rpt_diario_balance shape: per-key-per-day conditional pivot
     with net flow (deposits - withdrawals -> purchase - error)."""
-    ev = _t(spark, sf_dir, "events").withColumn("fecha_dia", F.to_date("ts"))
+    ev = read_table(spark, sf_dir, "events").withColumn("fecha_dia", F.to_date("ts"))
     return conditional_pivot(
         ev,
         keys=["user_id", "fecha_dia"],
@@ -187,7 +183,7 @@ def daily_balance_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     return distinct_dedup(
-        _t(spark, sf_dir, "lineitem"), ["l_suppkey", "l_returnflag", "l_linestatus"]
+        read_table(spark, sf_dir, "lineitem"), ["l_suppkey", "l_returnflag", "l_linestatus"]
     )
 
 
@@ -204,7 +200,7 @@ def distinct_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scd1_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-wins per key — the correct version of the reference's
     DISTINCT-as-SCD1 (ddl_gold.sql:20-32)."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type", "value")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "event_type", "value")
     return scd1_latest(ev, pk=["user_id"], order_by="ts", tiebreak=["event_id"])
 
 
@@ -221,8 +217,8 @@ def scd1_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 orphan report as a left-anti join (no right columns, no
     row duplication, shuffle only on the key)."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
-    orders = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
+    orders = read_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
     return anti_join(cust, orders, on="c_custkey")
 
 
@@ -234,9 +230,9 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def suppliers_with_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    sup = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
         .select(F.col("l_suppkey").alias("s_suppkey"))
     )
@@ -258,7 +254,7 @@ def suppliers_with_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def price_band_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join: point-in-interval via bucketized equi-join
     (operators/joins.py:range_join) instead of a nested-loop join."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     # inline VALUES -> JVM LocalRelation (known-tiny, no Python RDD ship)
     bands = spark.sql(
         """SELECT * FROM VALUES
@@ -288,7 +284,7 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each click matched to the user's most recent
     purchase at-or-before it (operators/joins.py:asof_join — one
     shuffle union+window, no per-group pandas)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "event_id", "ts")
     purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
     out = asof_join(clicks, purchases, on="user_id", left_ts="ts", right_ts="ts")
@@ -310,7 +306,7 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def null_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return null_audit(_t(spark, sf_dir, "orders"), ["o_custkey", "o_totalprice"])
+    return null_audit(read_table(spark, sf_dir, "orders"), ["o_custkey", "o_totalprice"])
 
 
 @query(
@@ -330,7 +326,7 @@ def null_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quality_scan_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: the 'una sola pasada' multi-metric quality scan
     (validate_data_fast.py:156-171) — 8 metrics, one aggregation."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count("*").alias("total_rows"),
         F.countDistinct("l_orderkey").alias("distinct_orders"),
@@ -370,7 +366,7 @@ def dq_violation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             Rule("future_order", F.col("o_orderdate") <= F.to_timestamp(F.lit("2001-01-01 00:00:00"))),
         ]
     )
-    return rules.violation_counts(_t(spark, sf_dir, "orders"))
+    return rules.violation_counts(read_table(spark, sf_dir, "orders"))
 
 
 @query(
@@ -385,7 +381,7 @@ def dq_violation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def conditional_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 conditional counts per group."""
-    return _t(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
+    return read_table(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.count(F.when(F.col("l_discount") > 0.05, 1)).alias("discounted"),
         F.count(F.when(F.col("l_tax") == 0, 1)).alias("tax_free"),
@@ -412,16 +408,15 @@ def supplier_ranking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (validate_data_fast.py:124-154), with CAST(rank AS STRING) as the
     display column (F4). Global window is safe: post-agg input is
     bounded by |suppliers|."""
-    li, sup = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "supplier")
+    li, sup = read_table(spark, sf_dir, "lineitem"), read_table(spark, sf_dir, "supplier")
     agg = (
         enrich(li, sup, on=li.l_suppkey == sup.s_suppkey, how="inner")
         .groupBy("s_suppkey", "s_name")
         .agg(dsum("l_extendedprice", "total_movido"))
     )
-    out = ranked(
+    out = ranked(  # bounded by |suppliers|
         agg,
         order_by=[F.col("total_movido").desc(), F.col("s_suppkey").asc()],
-        small_input_ok=True,
     )
     return out.select(
         F.col("ranking").cast("string").alias("posicion"),
@@ -444,7 +439,7 @@ def supplier_ranking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def top3_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group: partitioned window, one shuffle on the group
     key; never a global sort."""
-    o, c = _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "customer")
+    o, c = read_table(spark, sf_dir, "orders"), read_table(spark, sf_dir, "customer")
     j = enrich(o, c, on=o.o_custkey == c.c_custkey, how="inner").select(
         "c_mktsegment", "o_orderkey", "o_totalprice"
     )
@@ -465,7 +460,7 @@ def top3_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def event_value_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analytic lag/lead + explicit-frame running total."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     frame = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     return (
@@ -497,7 +492,7 @@ def event_value_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
 def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization (30-min gap): lag + cumulative-sum windows,
     single shuffle on user_id."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "ts")
     s = sessionize(ev, key="user_id", ts="ts", gap_seconds=1800)
     return s.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"), F.min("ts").alias("session_start")
@@ -570,7 +565,7 @@ def session_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries, so boundary maxima are exact)."""
     from logicash_etl_spark.operators.partitioning import grouped_prefix_peak
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts")
+    ev = read_table(spark, sf_dir, "events").select("user_id", "ts")
     s = sessionize(ev, key="user_id", ts="ts", gap_seconds=1800)
     from logicash_etl_spark.operators.caching import scoped_persist
 
@@ -648,7 +643,7 @@ def brand_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersisted, audited r10)
     from logicash_etl_spark.operators.caching import scoped_persist
 
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     large = scoped_persist(
         part.filter(F.col("p_size") > 25).select("p_brand").distinct()
     )
@@ -673,7 +668,7 @@ def brand_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def rollup_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "lineitem").rollup("l_returnflag", "l_linestatus").agg(
+    return read_table(spark, sf_dir, "lineitem").rollup("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n"), dsum("l_quantity", "sum_qty")
     )
 
@@ -704,7 +699,7 @@ def rollup_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F7 + the broader scalar surface (dates, string, conditional,
     cast) — all JVM built-ins inside whole-stage codegen."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.to_date("o_orderdate").alias("order_date"),
@@ -739,7 +734,7 @@ def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def json_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON column handling: get_json_object (JVM-side) + aggregate."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("bigint")
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -771,7 +766,7 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable)."""
     from logicash_etl_spark.dq.profile import percentiles
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.round(percentiles("value", 0.5, exact=True), 6).alias("p50"),
         F.round(percentiles("value", 0.9, exact=True), 6).alias("p90"),
@@ -794,7 +789,7 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hourly_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1h windows via F.window — identical code shape to the
     streaming version (streaming/ops.py) minus the watermark."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), dsum("value", "total_value"))
@@ -826,9 +821,9 @@ def shipping_priority_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_contracts.py::test_bucketed_join_no_shuffle).
     The customer filter reduces orders via a broadcast semi-ish join
     first, so the big shuffle carries only matching orders."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-01-01")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1996-06-30")
+    cust = read_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = read_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-01-01")
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1996-06-30")
     revenue = money("l_extendedprice") * (1 - money("l_discount"))
     return (
         orders.join(broadcast_bounded(cust, bounded=False), orders.o_custkey == cust.c_custkey)
@@ -867,10 +862,10 @@ def revenue_by_nation_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality), supplier by Catalyst's size check (unhinted; AQE
     decides at scale). The 100 TB plan: no shuffle until the final
     groupBy."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") >= "1996-01-01")
-    sup = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region")
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") >= "1996-01-01")
+    sup = read_table(spark, sf_dir, "supplier")
+    nat = read_table(spark, sf_dir, "nation")
+    reg = read_table(spark, sf_dir, "region")
     revenue = money("l_extendedprice") * (1 - money("l_discount"))
     return (
         li.join(broadcast_bounded(sup, bounded=False), li.l_suppkey == sup.s_suppkey)
@@ -897,7 +892,7 @@ def per_user_event_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     result comparable), plus distinct-day counting. The array is
     serialized to a csv string: oracle-checked queries must not emit
     raw array columns (the driver canonicalizer can't hash lists)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.array_join(F.sort_array(F.collect_set("event_type")), ",").alias("event_types"),
         F.count("*").alias("n_events"),
@@ -923,7 +918,7 @@ def null_safe_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equality join (<=> / IS NOT DISTINCT FROM): NULL keys
     match each other instead of vanishing — the semantics audits need
     when the join key itself is the dirty column."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     keyed = o.select(
         "o_orderkey",
         F.when(F.col("o_orderkey") % 7 == 0, F.lit(None)).otherwise(
@@ -952,7 +947,7 @@ def schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     that lacks a column — Spark null-pads by NAME (positional UNION
     would silently misalign columns; this is the schema-evolution-safe
     form)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     v2 = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -974,7 +969,7 @@ def pivot_native_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The idiomatic .pivot() form of A8 (explicit value list: no
     extra distinct-values pass, stable output schema). Absent combos
     are NULL here, vs the conditional_pivot ELSE-0 variant."""
-    ev = _t(spark, sf_dir, "events").withColumn("fecha_dia", F.to_date("ts"))
+    ev = read_table(spark, sf_dir, "events").withColumn("fecha_dia", F.to_date("ts"))
     out = (
         ev.groupBy("fecha_dia")
         .pivot("event_type", ["click", "purchase", "error"])
@@ -1009,7 +1004,7 @@ def ranking_function_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     (global window acceptable: |suppliers| is a bounded dimension);
     last_value needs the explicit unbounded frame — the default frame
     ends at CURRENT ROW, a classic correctness trap."""
-    sup = _t(spark, sf_dir, "supplier")
+    sup = read_table(spark, sf_dir, "supplier")
     w = W.orderBy(F.col("s_acctbal").desc(), F.col("s_suppkey").asc())
     w_full = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     return sup.select(
@@ -1062,7 +1057,7 @@ def calendar_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent in January 1995)."""
     from logicash_etl_spark.operators.caching import scoped_persist
 
-    all_orders = _t(spark, sf_dir, "orders")
+    all_orders = read_table(spark, sf_dir, "orders")
     # the month window feeds BOTH the span agg and the actual rollup;
     # persisted as a 2-column projection so the partition-pruned scan
     # runs once (3 orders scans unpersisted, audited r10 — the dims
@@ -1127,7 +1122,7 @@ def fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors the same candidate generation so results hash-match."""
     from logicash_etl_spark.operators.joins import fuzzy_self_join
 
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     # collapse_exact: the fixture's name vocabulary is tiny (64 names
     # x 25 brands vs 20k rows at sf0.1), so the edit-distance DP runs
     # once per distinct (brand, name) pair and the quadratic-in-copies
@@ -1224,7 +1219,7 @@ def part_name_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     — and vocabulary^2, not rows^2, is already the collapsed frame."""
     from logicash_etl_spark.operators.joins import qgram_edit_join
 
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     return qgram_edit_join(part, "p_name", max_dist=2, q=2)
 
 

@@ -27,10 +27,6 @@ from logicash_etl_spark.operators.joins import broadcast_bounded
 from logicash_etl_spark.sources.readers import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 @query(
     "min_cost_supplier",
     oracle="""
@@ -50,7 +46,7 @@ def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties collapse to min suppkey for determinism). At 100 TB the
     window and the groupBy share the same partitioning, so Catalyst
     reuses the exchange."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     w = W.partitionBy("l_partkey")
     return (
         li.withColumn("__mn", F.min("l_extendedprice").over(w))
@@ -78,11 +74,11 @@ def priority_order_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     The date filter prunes the orders scan BEFORE the join (pushed to
     parquet), and the semi join shuffles only orderkeys — the probe
     side never carries payload columns."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     )
     flagged = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
         .select(F.col("l_orderkey").alias("o_orderkey"))
     )
@@ -116,14 +112,14 @@ def big_ticket_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join-then-rejoin shape scans it twice), and the rare
     qualifying set arrives pre-shrunk at the joins. Customer dim
     broadcasts."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy(F.col("l_orderkey").alias("o_orderkey"))
         .agg(F.sum(money("l_quantity")).alias("__q"))
         .filter(F.col("__q") > 250)
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         big.join(o, on="o_orderkey")
         .join(broadcast_bounded(c, bounded=False), o.o_custkey == c.c_custkey)
@@ -154,8 +150,8 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE — customers with zero matches must survive with count 0),
     then a distribution-of-counts double aggregate. count(col) vs
     count(*) distinction does the null accounting."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
     per_cust = (
         c.join(o, c.c_custkey == o.o_custkey, how="left")
         .groupBy("c_custkey")
@@ -187,14 +183,14 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange under AQE); the max is a one-row broadcast joined back —
     equality on a DECIMAL-exact sum is safe where a float sum's
     partition-order noise would drop the winner."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
     rev = li.groupBy("l_suppkey").agg(
         F.sum(money("l_extendedprice") * (1 - money("l_discount"))).alias("__rev")
     )
     mx = rev.agg(F.max("__rev").alias("__mx"))
-    s = _t(spark, sf_dir, "supplier")
+    s = read_table(spark, sf_dir, "supplier")
     return (
         rev.join(F.broadcast(mx), rev.__rev == mx.__mx)
         .join(broadcast_bounded(s, bounded=False), rev.l_suppkey == s.s_suppkey)
@@ -223,13 +219,13 @@ def rich_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decimal-exact avg (sum(dec)/count in double) on BOTH sides:
     comparing against a float avg is partition-order-dependent and
     flips borderline rows between runs."""
-    c = _t(spark, sf_dir, "customer")
+    c = read_table(spark, sf_dir, "customer")
     thr = (
         c.filter(F.col("c_acctbal") > 0)
         .agg((F.sum(money("c_acctbal")).cast("double") / F.count("c_acctbal")).alias("__thr"))
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= "2000-01-01")
         .select(F.col("o_custkey").alias("c_custkey"))
     )
@@ -274,8 +270,8 @@ def waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_late = 1 for a late supplier. Two shuffles total (orderkey x
     suppkey, then orderkey), vs the naive plan's two extra correlated
     rescans of lineitem. The supplier dim joins broadcast."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
     lo = (
@@ -292,7 +288,7 @@ def waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_supp"), F.sum("late").alias("n_late")
     )
     sup = broadcast_bounded(
-        _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name"), bounded=False
+        read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name"), bounded=False
     )
     return (
         lo.filter(F.col("late") == 1)
@@ -325,7 +321,7 @@ def important_parts_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups and once for the scalar, never rescanned per group. The
     threshold compare is decimal*integer on BOTH sides — exact, no
     float boundary flips."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
         F.sum(money("l_extendedprice")).alias("__val")
     )

@@ -41,10 +41,6 @@ from logicash_etl_spark.sources.readers import read_table
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 def _dim(d: DataFrame) -> DataFrame:
     """Scale-proportional dim leg (customer/supplier/part): no forced
     broadcast hint — Catalyst auto-broadcasts below the session
@@ -85,7 +81,7 @@ def discount_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes on a date-partitioned 100 TB layout; the rest are row-group
     min/max prunable) — the plan is scan -> partial agg -> single-row
     exchange, no shuffle of data rows at all."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -130,16 +126,16 @@ def bilateral_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     hint; AQE degrades them to shuffle joins when they outgrow the
     threshold at scale). The inequality ns<>nc is applied post-join on two
     broadcast-resolved ints — free."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
-    od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cu = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    su = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    ns = _t(spark, sf_dir, "nation").select(
+    od = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cu = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    su = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    ns = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    nc = _t(spark, sf_dir, "nation").select(
+    nc = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
     )
     return (
@@ -187,17 +183,17 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     per year. Share-of-total via a CASE numerator inside ONE aggregate
     pass (never a self-join against the denominator). Decimal sums ->
     one double division -> round 6dp keeps both engines bit-identical."""
-    li = _t(spark, sf_dir, "lineitem")
-    od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    cu = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    su = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nc = _t(spark, sf_dir, "nation").select(
+    li = read_table(spark, sf_dir, "lineitem")
+    od = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    cu = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    su = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nc = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk")
     )
-    ns = _t(spark, sf_dir, "nation").select(
+    ns = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    reg = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    reg = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     rev = _rev()
     nation_rev = F.sum(F.when(F.col("supp_nation") == "NATION_7", rev)).cast("double")
     total_rev = F.sum(rev).cast("double")
@@ -243,13 +239,13 @@ def product_margin_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame
     the fact FIRST (broadcast join on the filtered ~1/12th of part),
     so the expensive orders join only sees matching lines. Decimal
     arithmetic keeps the mixed +/- sum order-independent."""
-    li = _t(spark, sf_dir, "lineitem")
-    pt = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%")).select(
+    li = read_table(spark, sf_dir, "lineitem")
+    pt = read_table(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%")).select(
         "p_partkey", "p_retailprice"
     )
-    od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    su = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    ns = _t(spark, sf_dir, "nation").select(
+    od = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    su = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    ns = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
     margin = _rev() - (
@@ -294,12 +290,12 @@ def returned_item_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition top-20, heap-merged on the
     driver — never a global sort); ties broken by custkey so the
     LIMIT edge is deterministic on both engines."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    od = _t(spark, sf_dir, "orders").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    od = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
     ).select("o_orderkey", "o_custkey")
-    cu = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
-    na = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    cu = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
+    na = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         li.join(od, li.l_orderkey == od.o_orderkey)
         .join(_dim(cu), od.o_custkey == cu.c_custkey)
@@ -333,10 +329,10 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: percent of a quarter's revenue attributable to
     promo-class parts. One broadcast join + one aggregate pass with a
     CASE numerator; the date band prunes the fact scan."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-03-01") & (F.col("l_shipdate") < "1996-06-01")
     )
-    pt = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    pt = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = money("l_extendedprice") * (1 - money("l_discount"))
     promo = F.sum(F.when(F.col("p_type") == "PROMO", rev)).cast("double")
     total = F.sum(rev).cast("double")
@@ -376,16 +372,16 @@ def supplier_count_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     partsupp proxy) BEFORE the dim join so the distinct-agg input is
     minimal."""
     ps = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
         .distinct()
     )
-    pt = _t(spark, sf_dir, "part").filter(
+    pt = read_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & (F.col("p_size").isin(1, 9, 19, 23, 36, 45, 49))
     ).select("p_partkey", "p_brand", "p_type", "p_size")
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    bad = read_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
     return (
@@ -416,8 +412,8 @@ def disjunctive_predicate_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     derivable and pushable to the fact scan, and the brand/size
     disjunction prunes part before the broadcast — worth pinning
     because a naive engine evaluates the whole OR post-join."""
-    li = _t(spark, sf_dir, "lineitem")
-    pt = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = read_table(spark, sf_dir, "lineitem")
+    pt = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     j = li.join(_dim(pt), li.l_partkey == pt.p_partkey)
     cond = (
         (F.col("p_brand") == "Brand#3")
@@ -468,10 +464,10 @@ def excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     total share one shuffle on partkey; the qualifying suppkey set is
     DISTINCTed small before the broadcast joins out to names. Decimal
     qty sums make the share compare exact on both engines."""
-    pt = _t(spark, sf_dir, "part").filter(F.col("p_name").like("red%")).select(
+    pt = read_table(spark, sf_dir, "part").filter(F.col("p_name").like("red%")).select(
         "p_partkey"
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     shipped = (
@@ -486,8 +482,8 @@ def excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    su = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    na = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    su = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
+    na = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         qualifying.join(_dim(su), qualifying.l_suppkey == su.s_suppkey)
         .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
@@ -549,14 +545,14 @@ def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _trade_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cu = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    su = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    ns = _t(spark, sf_dir, "nation").select(
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    od = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cu = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    su = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    ns = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst")
     )
-    nc = _t(spark, sf_dir, "nation").select(
+    nc = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src")
     )
     return (
@@ -636,7 +632,7 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.graph import pagerank_int
 
     edges = _trade_edges(spark, sf_dir)
-    nodes = _t(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
+    nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
     ranks = pagerank_int(nodes, edges, iterations=3)
     # global ranking window over #nations rows — driver-scale frame
     w = W.orderBy(F.desc("rank"), F.asc("node"))
@@ -724,7 +720,7 @@ def nation_trade_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.graph import label_propagation
 
     sym = _trade_sym(spark, sf_dir)
-    nodes = _t(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
+    nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
     labels = label_propagation(nodes, sym, iterations=3)
     # community sizes: a window over #nations rows — driver-scale
     w = W.partitionBy("label")
@@ -787,7 +783,7 @@ def trade_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _trade_edges(spark, sf_dir)
     stats = triangle_counts(edges, src="src", dst="dst")
-    nations = _t(spark, sf_dir, "nation").select(F.col("n_name").alias("nation"))
+    nations = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("nation"))
     return (
         nations.join(stats, nations.nation == stats.id, "left")
         .select(
@@ -849,7 +845,7 @@ def trade_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.graph import bfs_hops
 
     edges = _trade_edges(spark, sf_dir)
-    nodes = _t(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
+    nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
     source = nodes.agg(F.min("node")).collect()[0][0]
     out = bfs_hops(nodes, edges, source, max_hops=3)
     return out.select(F.col("node").alias("nation"), "hops")
@@ -909,7 +905,7 @@ def trade_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _trade_edges(spark, sf_dir).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
-    nodes = _t(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
+    nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
     return k_core(nodes, edges, k=4, rounds=3).select(
         F.col("node").alias("nation"), "deg", "in_core"
     )
@@ -943,7 +939,7 @@ def pareto_part_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join back on x."""
     from logicash_etl_spark.operators.skyline import pareto_frontier_2d
 
-    part = _t(spark, sf_dir, "part").select(
+    part = read_table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_size", "p_retailprice"
     )
     return pareto_frontier_2d(
@@ -1053,7 +1049,7 @@ def trade_min_cost_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pair = _trade_pairs(spark, sf_dir)
     edges = pair.select("src", "dst", F.col("n").alias("w"))
-    nodes = _t(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
+    nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
     source = nodes.agg(F.min("node").alias("node"))
     return sssp_bounded(nodes, edges, source, iterations=4).select(
         F.col("node").alias("nation"), F.col("dist").alias("min_cost")
@@ -1124,7 +1120,7 @@ def nation_trade_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.graph import hits_int
 
     edges = _trade_edges(spark, sf_dir)
-    nodes = _t(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
+    nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
     res = hits_int(nodes, edges, iterations=2)
     w = W.orderBy(F.desc("authority"), F.asc("node"))
     return res.select(
@@ -1190,7 +1186,7 @@ def trade_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.graph import label_propagation
 
     sym = _trade_sym(spark, sf_dir)
-    nodes = _t(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
+    nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
     lab = label_propagation(nodes, sym, iterations=3).select("node", "label")
     la = lab.select(F.col("node").alias("src"), F.col("label").alias("ca"))
     lb = lab.select(F.col("node").alias("dst"), F.col("label").alias("cb"))
@@ -1265,7 +1261,7 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     don't."""
     edges = _trade_edges(spark, sf_dir)
     edges.createOrReplaceTempView("__rec_reach_edges")
-    nations = _t(spark, sf_dir, "nation")
+    nations = read_table(spark, sf_dir, "nation")
     nations.createOrReplaceTempView("__rec_reach_nation")
     sql = (
         "WITH RECURSIVE reach AS ("

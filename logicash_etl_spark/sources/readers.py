@@ -1,9 +1,8 @@
 """Readers.
 
 Reference parity:
-- S1 CSV directory scan with header/delimiter (etl_job.py:45-60) — but
-  engine policy is explicit schemas (S2, validate_data_fast.py:63-88);
-  ``infer=True`` is an explicit opt-in, never a default, because at
+- S1 CSV directory scan with header (etl_job.py:45-60) — but engine
+  policy is explicit schemas (S2, validate_data_fast.py:63-88): at
   100 TB an inference pass is a full extra scan.
 - S3 parquet scan (validate_data.py:43).
 """
@@ -39,33 +38,15 @@ def _validate(df: DataFrame, schema: T.StructType, source: str) -> DataFrame:
     return df
 
 
-def read_csv_dir(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    infer: bool = False,
-    delimiter: str = ",",
-) -> DataFrame:
+def read_csv_dir(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Directory CSV scan (reads every file under ``path``).
 
     Multi-file reads are an implicit UNION ALL handled by Spark's scan;
     at scale the file listing itself is distributed by the parquet/csv
     FileIndex, so a directory with 10^6 objects still plans.
     """
-    reader = (
-        spark.read.format("csv")
-        .option("header", "true")
-        .option("delimiter", delimiter)
-    )
-    if schema is not None:
-        df = reader.schema(schema).load(path)
-        return _validate(df, schema, path)
-    if not infer:
-        raise ValueError(
-            "read_csv_dir requires an explicit schema unless infer=True "
-            "(inference is a full extra pass over the data)"
-        )
-    return reader.option("inferSchema", "true").load(path)
+    df = spark.read.format("csv").option("header", "true").schema(schema).load(path)
+    return _validate(df, schema, path)
 
 
 def read_parquet(
@@ -125,23 +106,22 @@ def read_json_lines(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    corrupt_col: str = "_corrupt_record",
 ) -> DataFrame:
     """Newline-delimited JSON scan with an explicit schema (inference
     on JSON is a full extra pass AND type-unstable — a column that is
     integer in one shard and float in another silently widens).
 
-    PERMISSIVE mode with a named corrupt-record column: malformed rows
-    land in ``corrupt_col`` instead of failing the job or silently
+    PERMISSIVE mode with a ``_corrupt_record`` column: malformed rows
+    land there instead of failing the job or silently
     disappearing (DROPMALFORMED) — the caller decides whether to
     quarantine or fail, matching the engine's count-don't-drop DQ
     posture (dq/rules.py)."""
-    full = T.StructType(schema.fields + [T.StructField(corrupt_col, T.StringType())])
+    full = T.StructType(schema.fields + [T.StructField("_corrupt_record", T.StringType())])
     return (
         spark.read.format("json")
         .schema(full)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
         .load(path)
     )
 

@@ -19,20 +19,17 @@ from logicash_etl_spark.functions.money import dsum
 
 def windowed_counts(
     events: DataFrame,
-    ts: str = "ts",
     window: str = "1 hour",
-    slide: str | None = None,
     watermark: str = "30 minutes",
     keys: list[str] | None = None,
 ) -> DataFrame:
-    """Tumbling (or sliding, with ``slide``) windowed count+sum with an
+    """Tumbling windowed count+sum over ``ts`` with an
     event-time watermark bounding state: windows older than
     max(event_time) - watermark are finalized and their state dropped —
     that bound is what makes this runnable forever at 100 TB/day.
     """
-    w = F.window(ts, window, slide) if slide else F.window(ts, window)
-    grouped = events.withWatermark(ts, watermark).groupBy(
-        w.alias("w"), *(keys or [])
+    grouped = events.withWatermark("ts", watermark).groupBy(
+        F.window("ts", window).alias("w"), *(keys or [])
     )
     return grouped.agg(F.count("*").alias("n"), dsum("value", "total_value")).select(
         F.col("w.start").alias("window_start"),
@@ -45,17 +42,16 @@ def windowed_counts(
 
 def session_windows(
     events: DataFrame,
-    ts: str = "ts",
     gap: str = "30 minutes",
     key: str = "user_id",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Native streaming sessionization: ``session_window`` merges
+    """Native streaming sessionization: ``session_window`` over ``ts`` merges
     events within ``gap`` into one growing window per key (the
     streaming analog of operators/windows.py:sessionize)."""
     return (
-        events.withWatermark(ts, watermark)
-        .groupBy(F.session_window(ts, gap).alias("s"), key)
+        events.withWatermark("ts", watermark)
+        .groupBy(F.session_window("ts", gap).alias("s"), key)
         .agg(F.count("*").alias("n_events"), dsum("value", "total_value"))
         .select(
             key,
@@ -68,13 +64,13 @@ def session_windows(
 
 
 def dedup_stream(
-    events: DataFrame, keys: list[str], ts: str = "ts", watermark: str = "1 hour"
+    events: DataFrame, keys: list[str], watermark: str = "1 hour"
 ) -> DataFrame:
-    """Exactly-once event dedup within the watermark horizon — state
+    """Exactly-once event dedup on ``(*keys, ts)`` within the watermark horizon — state
     holds one entry per key and is GC'd past the watermark (without it
     the state grows unboundedly; with it, memory is bounded by
     arrival-rate x horizon)."""
-    return events.withWatermark(ts, watermark).dropDuplicates([*keys, ts])
+    return events.withWatermark("ts", watermark).dropDuplicates([*keys, "ts"])
 
 
 

@@ -1,5 +1,5 @@
 """Property test for the hand-rolled as-of join: on random inputs it
-must agree with pandas.merge_asof (backward and forward, per key),
+must agree with pandas.merge_asof (backward, per key),
 including edge cases hypothesis likes — equal timestamps, empty
 sides, single-row keys."""
 
@@ -30,20 +30,20 @@ right_row = st.tuples(
 )
 
 
-def _spark_asof(spark, lrows, rrows, direction):
+def _spark_asof(spark, lrows, rrows):
     left = spark.createDataFrame(
         [(k, t, v) for k, t, v in lrows], "k long, ts timestamp, lval long"
     )
     right = spark.createDataFrame(
         [(k, t, v) for k, t, v in rrows], "k long, ts timestamp, rval double"
     )
-    out = asof_join(left, right, on="k", left_ts="ts", right_ts="ts", direction=direction)
+    out = asof_join(left, right, on="k", left_ts="ts", right_ts="ts")
     return {
         (r.k, r.ts, r.lval): (r.rval_right, r.ts_right) for r in out.collect()
     }
 
 
-def _pandas_asof(lrows, rrows, direction):
+def _pandas_asof(lrows, rrows):
     left = pd.DataFrame(lrows, columns=["k", "ts", "lval"])
     right = pd.DataFrame(rrows, columns=["k", "ts", "rval"])
     left["ts"] = pd.to_datetime(left["ts"])
@@ -64,7 +64,7 @@ def _pandas_asof(lrows, rrows, direction):
             left_on="ts",
             right_on="ts_r",
             by="k",
-            direction=direction,
+            direction="backward",
         )
     return {
         (r.k, r.ts.to_pydatetime(), r.lval): (
@@ -83,22 +83,20 @@ def _pandas_asof(lrows, rrows, direction):
 @given(
     lrows=st.lists(left_row, min_size=0, max_size=25, unique_by=lambda r: (r[0], r[1], r[2])),
     rrows=st.lists(right_row, min_size=0, max_size=25, unique_by=lambda r: (r[0], r[1])),
-    direction=st.sampled_from(["backward", "forward"]),
 )
-def test_asof_matches_pandas(spark, lrows, rrows, direction):
-    got = _spark_asof(spark, lrows, rrows, direction)
-    want = _pandas_asof(lrows, rrows, direction)
+def test_asof_matches_pandas(spark, lrows, rrows):
+    got = _spark_asof(spark, lrows, rrows)
+    want = _pandas_asof(lrows, rrows)
     assert set(got) == set(want)
     for key in want:
-        assert got[key] == want[key], f"{direction} {key}: {got[key]} != {want[key]}"
+        assert got[key] == want[key], f"{key}: {got[key]} != {want[key]}"
 
 
 def test_null_ts_rows_never_match(spark):
     """SQL ASOF: NULL timestamps match nothing on either side. A
     NULL-ts right row must not be carried as the 'earliest' match
-    under forward/backward windows (it used to sort NULLS FIRST into
-    the ascending window); a NULL-ts left row keeps its row with a
-    NULL payload in both directions."""
+    (it used to sort NULLS FIRST into the ascending window); a NULL-ts
+    left row keeps its row with a NULL payload."""
     left = spark.createDataFrame(
         [(1, BASE, 10), (1, None, 11)],
         "k long, ts timestamp, lval long",
@@ -107,21 +105,15 @@ def test_null_ts_rows_never_match(spark):
         [(1, None, 99.0), (1, BASE + dt.timedelta(seconds=5), 7.0)],
         "k long, ts timestamp, rval double",
     )
-    for direction, want_real in (("backward", None), ("forward", 7.0)):
-        out = {
-            (r.lval): (r.rval_right, r.ts_right)
-            for r in asof_join(
-                left, right, on="k", direction=direction
-            ).collect()
-        }
-        assert len(out) == 2
-        # NULL-ts left row: present, never matched
-        assert out[11] == (None, None)
-        # real left row: never matched to the NULL-ts right row
-        if want_real is None:
-            assert out[10] == (None, None)
-        else:
-            assert out[10] == (7.0, BASE + dt.timedelta(seconds=5))
+    out = {
+        (r.lval): (r.rval_right, r.ts_right)
+        for r in asof_join(left, right, on="k").collect()
+    }
+    assert len(out) == 2
+    # NULL-ts left row: present, never matched
+    assert out[11] == (None, None)
+    # real left row: never matched to the NULL-ts right row
+    assert out[10] == (None, None)
 
 
 def test_reserved_rt_column_raises(spark):

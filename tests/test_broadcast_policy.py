@@ -59,7 +59,7 @@ _AUDITED = {
     ("operators/joins.py", 'F.broadcast(hot.withColumnRenamed("__k", key)),'),
     ("operators/joins.py", "d = F.broadcast(dim) if broadcast_dim else dim"),
     ("operators/joins.py", 'hits = probes.join(F.broadcast(bloom), on="word", how="left").select('),
-    ("operators/joins.py", "r2 = F.broadcast(r2) if broadcast_intervals else r2"),
+    ("operators/joins.py", 'return l2.join(F.broadcast(r2), on="__bucket", how="inner").filter(cond).drop("__bucket")'),
     ("operators/joins.py", "return F.broadcast(df) if bounded else df"),
     ("operators/joins.py", "sa.crossJoin(F.broadcast(sb))"),
     ("operators/joins.py", "salted_small = small.crossJoin(F.broadcast(salts))"),
@@ -67,8 +67,8 @@ _AUDITED = {
     ("operators/partitioning.py", "tot.crossJoin(F.broadcast(top10))"),
     ("operators/partitioning.py", ".crossJoin(F.broadcast(lstats))"),
     ("operators/similarity.py", '.join(F.broadcast(q), on="query_id")'),
-    ("operators/similarity.py", "cand.join(F.broadcast(q_vec), query_id)"),
-    ("operators/similarity.py", 'joined = codes.join(F.broadcast(q), on=codes[id_col] != F.col("query_id"))'),
+    ("operators/similarity.py", 'cand.join(F.broadcast(q_vec), "query_id")'),
+    ("operators/similarity.py", 'joined = codes.join(F.broadcast(q), on=codes[ID_COL] != F.col("query_id"))'),
     ("operators/similarity.py", "q_vec = F.broadcast(q_vec)"),
     ("operators/similarity.py", "scored = c.crossJoin(F.broadcast(q))"),
     ("operators/skyline.py", "off = F.broadcast("),

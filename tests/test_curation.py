@@ -4,8 +4,6 @@ DuckDB hash parity (which pins exact values for one dataset)."""
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.queries import QUERIES

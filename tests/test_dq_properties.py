@@ -8,7 +8,6 @@ from __future__ import annotations
 import datetime as dt
 from decimal import Decimal
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F

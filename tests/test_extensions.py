@@ -523,7 +523,6 @@ def test_semantic_dedup_matches_numpy_twin(spark, emb):
     import numpy as np
 
     from logicash_etl_spark.operators.similarity import (
-        assign_cells,
         kmeans_lite,
         semantic_dedup,
     )
@@ -1612,7 +1611,7 @@ def test_hits_int_geometry(spark):
     scale = 10**6
     out = {
         r.node: (r.authority, r.hub)
-        for r in hits_int(nodes, edges, iterations=2, scale=scale).collect()
+        for r in hits_int(nodes, edges, iterations=2).collect()
     }
     # c: max authority (both hubs point at it), zero hub (no out-edges)
     assert out["c"] == (scale, 0)
@@ -1741,6 +1740,6 @@ def test_hits_int_edgeless_graph_yields_zeros(spark):
     edges = spark.createDataFrame([], "src string, dst string")
     out = {
         r.node: (r.authority, r.hub)
-        for r in hits_int(nodes, edges, iterations=2, scale=10**6).collect()
+        for r in hits_int(nodes, edges, iterations=2).collect()
     }
     assert out == {"a": (0, 0), "b": (0, 0)}

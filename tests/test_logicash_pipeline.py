@@ -114,6 +114,28 @@ def test_idempotent_rerun(pipeline_result, spark):
     assert [m["status"] for m in ctx2["__manifest__"]] == ["ok"] * 5
 
 
+def test_runs_release_their_persisted_frames(pipeline_result, spark, tmp_path):
+    """A long-lived driver runs lot after lot: each run must leave the
+    session's persistent-RDD count where it found it. Each run reads a
+    lot at its own path, as a new lot would (a re-run of the same plan
+    would hit the cache entry the last run left instead of adding one)."""
+    import shutil
+
+    ctx, cfg, root = pipeline_result
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    for i in range(2):
+        shutil.copytree(cfg.raw_dir, tmp_path / f"raw{i}")
+        lot = LogicashConfig(
+            raw_dir=str(tmp_path / f"raw{i}"),
+            silver_dir=str(tmp_path / f"silver{i}"),
+            gold_dir=str(tmp_path / f"gold{i}"),
+            as_of=AS_OF,
+        )
+        before = persistent().size()
+        run_logicash_pipeline(spark, lot)
+        assert persistent().size() == before
+
+
 def test_golden_outputs(pipeline_result, spark):
     """Golden-file regression guard: the seeded 10k lot must produce
     byte-identical DQ accounting and top-5 ranking across engine

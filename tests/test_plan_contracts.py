@@ -4,7 +4,6 @@ never globally sorts, shuffle counts stay minimal."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.plans import (

@@ -1,5 +1,8 @@
-"""Dead-code guard: every top-level definition under ``logicash_etl_spark/``
-must be reachable from an entry point.
+"""Dead-code guards over ``logicash_etl_spark/``:
+- every top-level definition must be reachable from an entry point;
+- every defaulted parameter of a public engine function must be passed
+  by some entry-point call (or be allowlisted with its reason);
+- no module, test or root script imports a name it never reads.
 
 Definitions are top-level functions, classes and module constants
 (``NAME = ...``). Roots:
@@ -9,7 +12,8 @@ Definitions are top-level functions, classes and module constants
 - all code in ``__spark_entry__.py``, ``perfbench/*.py`` and the root
   ``*.py`` scripts.
 
-Tests are not roots: a definition that only its own tests call is dead.
+Tests are not roots: a definition or option that only its own tests
+use is dead.
 ``__init__`` re-exports are followed as aliases, never counted as uses.
 Names resolve through each module's imports (``from m import x``,
 ``import m``, ``m.x``); a name that resolves to nothing is ignored.
@@ -140,22 +144,25 @@ class _Scan:
                 out.append(f"{target[1]}.{target[2]}")
         return out
 
+    def resolve(self, module: str, node: ast.AST) -> set[tuple[str, str]]:
+        """Definitions that one ``Name`` or ``Attribute`` node stands for."""
+        if isinstance(node, ast.Name):
+            return self._symbol(module, node.id)
+        out: set[tuple[str, str]] = set()
+        chain = _attr_chain(node) if isinstance(node, ast.Attribute) else None
+        for mod in self._module_alias(module, chain[0]) if chain else []:
+            for attr in chain[1:]:
+                if f"{mod}.{attr}" in self.modules:
+                    mod = f"{mod}.{attr}"
+                    continue
+                out |= self._symbol(mod, attr)
+                break
+        return out
+
     def references(self, module: str, node: ast.AST) -> set[tuple[str, str]]:
         out: set[tuple[str, str]] = set()
         for sub in ast.walk(node):
-            if isinstance(sub, ast.Name):
-                out |= self._symbol(module, sub.id)
-            elif isinstance(sub, ast.Attribute):
-                chain = _attr_chain(sub)
-                if not chain:
-                    continue
-                for mod in self._module_alias(module, chain[0]):
-                    for attr in chain[1:]:
-                        if f"{mod}.{attr}" in self.modules:
-                            mod = f"{mod}.{attr}"
-                            continue
-                        out |= self._symbol(mod, attr)
-                        break
+            out |= self.resolve(module, sub)
         return out
 
     def unreached(self) -> list[str]:
@@ -200,3 +207,147 @@ def test_scan_sees_the_catalog():
     assert (f"{PKG}.sources.writers", "write_parquet_partitioned") in scan.references(
         f"{PKG}.pipeline.logicash", run
     )
+
+
+# ---------------------------------------------------------------------------
+# Option guard: every defaulted parameter of a public engine function must be
+# passed by some entry-point call. A parameter no caller sets only renames a
+# column or selects a branch nobody takes: inline its default.
+#
+# The allowlist names each kept parameter's reason: a deployment setting, or
+# a test seam (a tier-1 test sets it to reach, on a small input, a path the
+# entry points reach only with larger inputs).
+ALLOWED_OPTIONS = {
+    "session.get_spark.master": "deployment setting: the cluster to run on",
+    "operators.graph.connected_components.driver_threshold":
+        "test_extensions::test_components_distributed_matches_driver_path",
+    "operators.graph.connected_components.max_iterations":
+        "test_extensions::test_large_star_small_star_path_graph",
+    "operators.graph.pagerank_int.checkpoint_every":
+        "test_extensions::test_pagerank_deep_iteration_flat_plan",
+    "operators.graph.bfs_hops.checkpoint_every":
+        "test_extensions::test_bfs_hops_chain_and_unreached",
+    "operators.text.bpe_train.driver_vocab_threshold":
+        "test_extensions::test_bpe_train_matches_python_twin",
+    "operators.partitioning.grouped_prefix_sum.buckets":
+        "test_dq_properties::test_grouped_prefix_sum_random_differential",
+    "operators.partitioning.grouped_prefix_peak.buckets":
+        "test_round14_opts::test_grouped_prefix_peak_matches_prefix_sum_then_max",
+    "operators.partitioning.grouped_bottom_k.salt_buckets":
+        "test_extensions::test_grouped_bottom_k_matches_plain_window",
+    "operators.skyline.pareto_frontier_2d.buckets":
+        "test_extensions::test_pareto_frontier_matches_bruteforce",
+    "streaming.history.incremental_dedup_batch_fn.keep_gens":
+        "test_streaming::test_history_compaction_bounds_dirs_and_preserves_verdicts",
+}
+
+
+def _public_engine_fns(scan: _Scan):
+    for module, mod in scan.modules.items():
+        if not module.startswith(PKG) or module in ALLOWLIST_MODULES:
+            continue
+        for name, node in mod.defs.items():
+            if (
+                not name.startswith("_")
+                and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not any(_is_query_decorator(d) for d in node.decorator_list)
+            ):
+                yield module, name, node
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """(position, or None if keyword-only; name) of defaulted parameters."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    first = len(pos) - len(a.defaults)
+    out = [(i, p.arg) for i, p in enumerate(pos) if i >= first]
+    out += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _options_passed(scan: _Scan) -> dict[tuple[str, str], set]:
+    """(module, function) -> what its entry-point uses pass: keyword
+    names, ``("pos", n)`` for n positional arguments, and ``"*"`` for
+    ``*args``/``**kwargs`` or a use as a value (which may pass anything)."""
+    public = {(m, n) for m, n, _ in _public_engine_fns(scan)}
+    passed: dict[tuple[str, str], set] = {}
+    for module, mod in scan.modules.items():
+        calls = {id(n.func): n for n in ast.walk(mod.tree) if isinstance(n, ast.Call)}
+        for sub in ast.walk(mod.tree):
+            for ref in scan.resolve(module, sub) & public:
+                got = passed.setdefault(ref, set())
+                call = calls.get(id(sub))
+                if call is None or any(isinstance(a, ast.Starred) for a in call.args) or any(
+                    k.arg is None for k in call.keywords
+                ):
+                    got.add("*")
+                    continue
+                got.add(("pos", len(call.args)))
+                got.update(k.arg for k in call.keywords)
+    return passed
+
+
+def _unset_options(scan: _Scan) -> list[str]:
+    passed = _options_passed(scan)
+    out = []
+    for module, name, node in _public_engine_fns(scan):
+        got = passed.get((module, name), set())
+        if "*" in got:
+            continue
+        n_pos = max((g[1] for g in got if isinstance(g, tuple)), default=0)
+        out += [
+            f"{module[len(PKG) + 1:]}.{name}.{param}"
+            for i, param in _defaulted(node)
+            if param not in got and (i is None or i >= n_pos)
+        ]
+    return out
+
+
+def test_every_engine_option_is_set_by_an_entry_point():
+    unset = set(_unset_options(_Scan()))
+    fresh = sorted(unset - ALLOWED_OPTIONS.keys())
+    assert not fresh, (
+        "options no entry point sets (inline the default and delete the "
+        "branches only other values select):\n  " + "\n  ".join(fresh)
+    )
+    stale = sorted(ALLOWED_OPTIONS.keys() - unset)
+    assert not stale, (
+        "allowlisted options that are gone or now set by an entry point:\n  "
+        + "\n  ".join(stale)
+    )
+
+
+def test_option_scan_resolves_a_known_keyword():
+    """Guard the guard: perfbench's ``get_spark(..., extra_conf=...)``
+    must count as setting ``extra_conf``."""
+    passed = _options_passed(_Scan())
+    assert "extra_conf" in passed[(f"{PKG}.session", "get_spark")]
+
+
+def test_no_unused_imports():
+    """No linter is in the toolchain: an import whose name is never read
+    in its module fails here. ``__init__`` re-exports and ``# noqa``
+    lines are exempt."""
+    paths = [
+        *sorted((REPO / PKG).rglob("*.py")),
+        *sorted((REPO / "tests").rglob("*.py")),
+        *sorted(REPO.glob("*.py")),
+    ]
+    unused = []
+    for path in paths:
+        if path.name == "__init__.py":
+            continue
+        src = path.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src, filename=str(path))
+        read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(node, "module", None) == "__future__" or "# noqa" in lines[node.lineno - 1]:
+                continue
+            for a in node.names:
+                name = a.asname or a.name.split(".")[0]
+                if name not in read:
+                    unused.append(f"{path.relative_to(REPO)}:{node.lineno}: {name}")
+    assert not unused, "unused imports:\n  " + "\n  ".join(unused)

@@ -13,7 +13,6 @@ Posture record:
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from logicash_etl_spark.queries import QUERIES
 

@@ -10,8 +10,6 @@ from __future__ import annotations
 import os
 import shutil
 
-import pytest
-
 from logicash_etl_spark.sources.lot_datasource import (
     lot_stream_quiet,
     register_lot_source,

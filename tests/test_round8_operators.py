@@ -94,13 +94,13 @@ def test_skew_profile_on_crafted_frame(spark):
 
     rows = [("hot",)] * 90 + [(f"k{i}",) for i in range(10)]
     df = spark.createDataFrame(rows, ["k"])
-    r = skew_profile(df, "k", n_parts=4).first()
+    r = skew_profile(df, "k").first()
     assert r["key_name"] == "k"
     assert r["n_keys"] == 11
     assert r["total_rows"] == 100
     assert r["top1_pct"] == 90.0
     assert r["max_part_load"] >= 90  # the hot key's bucket
-    assert r["skew_ratio"] >= 90 / (100 / 4) * 0.999
+    assert r["skew_ratio"] >= 90 / (100 / 32) * 0.999
 
 
 def test_padding_waste_hand_fixture(spark, tmp_path):

