@@ -49,7 +49,6 @@ def selectivity_report(
     df: DataFrame,
     col: str,
     thresholds: list[float],
-    exact: bool = False,
 ) -> DataFrame:
     """Equi-depth histogram statistics + CBO-style selectivity
     estimation (the estimator behind cost-based join ordering and
@@ -63,12 +62,12 @@ def selectivity_report(
     total, and every exact predicate count in a single aggregate;
     estimation is arithmetic over the 33-element bounds array
     on a single row, exploded to one row per threshold. No joins, no
-    second scan, no driver-side math. Bounds default to the
-    ``percentile_approx`` sketch (see :func:`percentiles` — mergeable,
-    bounded memory); ``exact=True`` opts into true interpolated
-    percentiles for oracle-checkable determinism.
+    second scan, no driver-side math. Bounds are true interpolated
+    percentiles (:func:`percentiles` with ``exact=True``), for
+    oracle-checkable determinism; the exact buffer holds every value
+    of ``col``, so this is for bounded frames.
 
-    Determinism (the exact path): bounds quantize to hundredths via
+    Determinism: bounds quantize to hundredths via
     ``floor(x*100 + 0.5)`` — pure double arithmetic
     identical across engines (native ``round(double, n)`` diverges at
     .xx5) — so an interpolation ulp cannot leak; per-bucket overlap
@@ -91,7 +90,7 @@ def selectivity_report(
             )
         xs.append(int(xc))
     s = df.agg(
-        percentiles(col, fractions, exact=exact).alias("q"),
+        percentiles(col, fractions, exact=True).alias("q"),
         F.count("*").alias("total"),
         *[
             F.sum((v <= t).cast("int")).alias(f"__a{i}")

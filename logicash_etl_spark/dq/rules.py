@@ -10,8 +10,10 @@ splits clean vs quarantine with one filter each.
 
 Reference rules reproduced in ``logicash_rules`` (etl_job.py:92-97):
 id_atm IS NOT NULL, monto > 0, fecha <= now, status = 'EXITOSA'.
-``now`` is injectable (as_of) because current_timestamp() in a filter
-breaks reproducible tests (SURVEY section 7.5).
+``now`` is the required ``as_of`` Column, resolved once by the caller:
+current_timestamp() in a filter breaks reproducible tests (SURVEY
+section 7.5) and is evaluated again in every action, so two actions
+over one frame could disagree on a row near the cut.
 """
 
 from __future__ import annotations
@@ -91,14 +93,13 @@ class RuleSet:
         return self.clean(df), self.quarantine(df)
 
 
-def logicash_rules(as_of: Column | None = None) -> RuleSet:
+def logicash_rules(as_of: Column) -> RuleSet:
     """The reference's four-rule quality gate (etl_job.py:92-97)."""
-    now = as_of if as_of is not None else F.current_timestamp()
     return RuleSet(
         [
             Rule("null_fk", F.col("id_atm").isNotNull()),
             Rule("non_positive_amount", F.col("monto") > 0),
-            Rule("future_date", F.col("fecha") <= now),
+            Rule("future_date", F.col("fecha") <= as_of),
             Rule("failed_status", F.col("status_transaccion") == "EXITOSA"),
         ]
     )

@@ -26,17 +26,12 @@ def enrich(
     dim: DataFrame,
     on: str | list[str],
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
-    """Fact x dim enrichment join; dim is broadcast by default.
+    """Fact x dim enrichment join with the dim broadcast.
 
-    Matches the reference's hinted broadcast (dims "<200MB"). With
-    ``broadcast_dim=False`` Catalyst/AQE still auto-broadcasts below
-    the session threshold, or falls back to sort-merge with skew
-    splitting for genuinely large dims.
+    Matches the reference's hinted broadcast (dims "<200MB").
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def broadcast_bounded(df: DataFrame, *, bounded: bool) -> DataFrame:

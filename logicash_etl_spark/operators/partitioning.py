@@ -384,14 +384,19 @@ def grouped_bottom_k(
     return out.drop("__bk_r2")
 
 
+SKEW_REDUCERS = 32
+"""Simulated reducers of ``skew_profile``; the ``join_skew_profile``
+oracle (queries/analytics.py) reads the same constant."""
+
+
 def skew_profile(df: DataFrame, key: str) -> DataFrame:
     """One-row shuffle-skew diagnostic for ``key`` as a join/groupBy
     key — the "measure" half of the diagnose-then-salt workflow
     (operators/joins.py:skew_salt_join is the "fix" half): per-key
     frequencies, the share held by the heaviest keys, and the
     simulated per-reducer loads under hash partitioning into
-    32 tasks, whose max/avg ratio is the straggler factor a
-    shuffle on this key would pay.
+    ``SKEW_REDUCERS`` tasks, whose max/avg ratio is the straggler
+    factor a shuffle on this key would pay.
 
     Determinism: partition assignment uses an md5-derived bucket
     (portable to the SQL oracle) rather than Spark's internal
@@ -402,13 +407,12 @@ def skew_profile(df: DataFrame, key: str) -> DataFrame:
     Scale: one groupBy(key) is the only data-sized shuffle (the
     per-key count frame is then tiny-aggregated twice); top-k uses
     TakeOrderedAndProject, never a global sort. avg load divides by
-    ALL 32 reducers, so empty reducers count toward the skew ratio
+    ALL reducers, so empty reducers count toward the skew ratio
     exactly as idle tasks would."""
     from pyspark.sql import functions as F
 
     from logicash_etl_spark.operators.caching import scoped_persist
 
-    n_parts = 32
     cnts = df.groupBy(key).agg(F.count("*").alias("cnt"))
     # b (the per-key count frame — the thing being measured) feeds
     # the totals agg, the top-10 and the bucket loads; unpersisted,
@@ -421,7 +425,7 @@ def skew_profile(df: DataFrame, key: str) -> DataFrame:
             F.conv(
                 F.substring(F.md5(F.col(key).cast("string")), 1, 8), 16, 10
             ).cast("bigint")
-            % n_parts
+            % SKEW_REDUCERS
         ).alias("bucket"),
     ))
     tot = b.agg(
@@ -452,7 +456,7 @@ def skew_profile(df: DataFrame, key: str) -> DataFrame:
             "max_part_load",
             F.round(
                 F.col("max_part_load")
-                / (F.col("total_rows") / F.lit(float(n_parts))),
+                / (F.col("total_rows") / F.lit(float(SKEW_REDUCERS))),
                 3,
             ).alias("skew_ratio"),
         )

@@ -46,14 +46,13 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine.
 
     queries is broadcast (small Q); the corpus streams once; per-query
     heap via window row_number. Deterministic: doubles from a
-    sequential fold, ties broken by neighbor id. ``exclude_self``
-    drops the query point itself (matched by id) before ranking.
+    sequential fold, ties broken by neighbor id. The query point
+    itself (matched by id) is dropped before ranking.
     """
     # norms computed once per vector on each side — a per-pair cosine()
     # would fold each vector's norm Q (resp. N) times over
@@ -70,9 +69,7 @@ def cosine_topk(
         _norm(as_double(VEC_COL)).alias("__cn"),
     )
     scored = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        scored = scored.filter(F.col(ID_COL) != F.col("query_id"))
-    scored = scored.select(
+    scored = scored.filter(F.col(ID_COL) != F.col("query_id")).select(
         "query_id",
         ID_COL,
         # eps floor: see note in lsh_ann_topk — bitwise identical for

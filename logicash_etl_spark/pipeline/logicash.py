@@ -13,11 +13,22 @@ collapsed into a library call:
              as Spark SQL CTAS over the session catalog + parquet export
              (the Redshift COPY/UNLOAD legs become reads/writes)
   validate   the QA queries (qa/validate_data.py) as library calls
+
+Gold and validate consume the silver frame the load step just wrote,
+not a re-read of its 730 day directories. The frame holds exactly the
+rows on disk: the overwrite is static, so the directory holds only this
+run's rows; the frame's columns and types are those a re-read infers
+(``fecha_dia`` a date and last, ``monto`` decimal(18,2)); and the
+quality gate's ``now`` is one literal per run, so every action over the
+frame filters the same rows. It is a filter over the ``joined`` frame
+``transform`` persists, so each consumer reads the run's cache, not
+the bronze CSVs.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,10 +64,15 @@ def extract(spark: SparkSession, cfg: LogicashConfig) -> tuple[DataFrame, DataFr
 def transform(
     dim: DataFrame, fact: DataFrame, cfg: LogicashConfig
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Returns (silver, quarantine, dq_report[1 row])."""
-    as_of = F.to_timestamp(F.lit(cfg.as_of)) if cfg.as_of else None
+    """Returns (silver, quarantine, dq_report[1 row]).
+
+    The quality gate's ``now`` is resolved once, here: an unset
+    ``cfg.as_of`` becomes the driver's UTC clock as a literal, so the
+    report, both writes and every consumer of silver apply the same
+    ``fecha <= now`` cut."""
+    as_of = F.to_timestamp(F.lit(cfg.as_of)) if cfg.as_of else F.lit(datetime.now(timezone.utc))
     rules = logicash_rules(as_of)
-    joined = enrich(fact, dim, on="id_atm", how="left", broadcast_dim=True)
+    joined = enrich(fact, dim, on="id_atm", how="left")
     # one source scan serves report + both splits; released when the
     # run's cache_scope ends
     joined = scoped_persist(joined)
@@ -161,15 +177,13 @@ def run_logicash_pipeline(spark: SparkSession, cfg: LogicashConfig) -> dict:
         return report.collect()[0].asDict()
 
     def _gold(ctx):
-        silver = spark.read.parquet(f"{cfg.silver_dir}/transactions")
-        tables = build_gold(spark, silver, cfg)
+        tables = build_gold(spark, ctx["transform"][0], cfg)
         for name, df in tables.items():
             write_parquet(df, f"{cfg.gold_dir}/{name}")
         return sorted(tables)
 
     def _validate(ctx):
-        silver = spark.read.parquet(f"{cfg.silver_dir}/transactions")
-        return {k: v.collect() for k, v in validate(spark, silver).items()}
+        return {k: v.collect() for k, v in validate(spark, ctx["transform"][0]).items()}
 
     pipe = Pipeline(
         steps=[

@@ -2,30 +2,19 @@
 
 The reference orchestrates DeleteTrigger -> Crawler -> poll -> ETL ->
 warehouse SQL -> poll via AWS Step Functions (infrastructure/
-main.tf:341-511), with per-state Retry blocks and idempotent restarts
-(the trigger delete at main.tf:350-361 exists so a rerun is safe).
-In-engine, every stage is a synchronous Python call in one
-SparkSession, so the runner stays simple — named steps, run in order,
-each timed, each idempotent (all engine writers are mode=overwrite,
-L5's contract), with a manifest of results instead of ``job.commit()``
-(L4) — but it carries the two SFN behaviors that matter operationally:
+main.tf:341-511). In-engine, every stage is a synchronous Python call
+in one SparkSession, so the runner is named steps, run in order, each
+timed, failing fast, with a manifest of results instead of
+``job.commit()`` (L4).
 
-- **per-step retry** (``Step.retries`` extra attempts with
-  ``Step.retry_wait`` seconds between them — the SFN
-  MaxAttempts/IntervalSeconds analog);
-- **manifest-based resume**: with a ``manifest_path``, the manifest is
-  flushed to disk after EVERY step, and ``run(resume=True)`` skips
-  steps the previous run completed — a run killed at step 3 restarts
-  at step 3, not step 1. Steps whose downstream consumers need their
-  in-memory result provide ``Step.restore`` to rebuild it cheaply
-  (typically re-reading what the step wrote — the same way SFN states
-  pass S3 paths, not values).
+Steps hand each other in-memory results (the silver frame gold and
+validate consume), so a failed run is recovered by running it again,
+not by resuming it: every engine write overwrites (L5), so a rerun is
+safe.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import time
 from dataclasses import dataclass, field
 from collections.abc import Callable
@@ -37,88 +26,28 @@ class Step:
     name: str
     fn: Callable[[dict[str, Any]], Any]
     """fn(context) -> result; result is stored in context[name]."""
-    retries: int = 0
-    """Extra attempts after the first failure (SFN MaxAttempts - 1)."""
-    retry_wait: float = 0.0
-    """Seconds between attempts (SFN IntervalSeconds)."""
-    restore: Callable[[dict[str, Any]], Any] | None = None
-    """When the step is SKIPPED on resume, rebuild context[name]
-    (e.g. re-read the parquet the step wrote). Optional: steps whose
-    result no one consumes in-memory can omit it."""
 
 
 @dataclass
 class Pipeline:
     steps: list[Step]
-    context: dict[str, Any] = field(default_factory=dict)
-    manifest_path: str | None = None
-    """When set, the manifest is flushed here after every step (JSON),
-    making the run resumable."""
+    context: dict[str, Any] = field(default_factory=dict, init=False)
 
-    def _flush(self, manifest: list[dict[str, Any]]) -> None:
-        if self.manifest_path:
-            tmp = f"{self.manifest_path}.tmp"
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh, indent=1)
-            os.replace(tmp, self.manifest_path)  # atomic: no torn manifests
-
-    def _completed_from_prior_run(self, resume: bool) -> set[str]:
-        if not (resume and self.manifest_path and os.path.exists(self.manifest_path)):
-            return set()
-        with open(self.manifest_path) as fh:
-            prior = json.load(fh)
-        # a step counts as done if ANY prior entry finished it
-        # ("ok" or a resume-skip of an earlier ok)
-        return {e["step"] for e in prior if e["status"] in ("ok", "skipped")}
-
-    def run(self, resume: bool = False) -> dict[str, Any]:
+    def run(self) -> dict[str, Any]:
         """Run all steps in order; returns the context including a
-        ``__manifest__`` of per-step wall-clock + status + attempts.
-        A failing step aborts after its retries (fail-fast, like the
-        SFN Fail state); reruns are safe because every write is
-        overwrite-idempotent, and with ``resume=True`` + a
-        ``manifest_path`` they skip already-completed steps."""
-        done = self._completed_from_prior_run(resume)
+        ``__manifest__`` of per-step wall-clock + status. A failing
+        step is marked ``failed`` and re-raised; later steps do not
+        run (fail-fast, like the SFN Fail state)."""
         manifest: list[dict[str, Any]] = []
-        for step in self.steps:
-            if step.name in done:
-                if step.restore is not None:
-                    self.context[step.name] = step.restore(self.context)
-                manifest.append(
-                    {"step": step.name, "status": "skipped", "sec": 0.0, "attempts": 0}
-                )
-                self._flush(manifest)
-                continue
-            t0 = time.perf_counter()
-            attempts = 0
-            while True:
-                attempts += 1
-                try:
-                    self.context[step.name] = step.fn(self.context)
-                    break
-                except Exception:
-                    if attempts > step.retries:
-                        manifest.append(
-                            {
-                                "step": step.name,
-                                "status": "failed",
-                                "sec": round(time.perf_counter() - t0, 3),
-                                "attempts": attempts,
-                            }
-                        )
-                        self.context["__manifest__"] = manifest
-                        self._flush(manifest)
-                        raise
-                    if step.retry_wait:
-                        time.sleep(step.retry_wait)
-            manifest.append(
-                {
-                    "step": step.name,
-                    "status": "ok",
-                    "sec": round(time.perf_counter() - t0, 3),
-                    "attempts": attempts,
-                }
-            )
-            self._flush(manifest)
         self.context["__manifest__"] = manifest
+        for step in self.steps:
+            t0 = time.perf_counter()
+            status = "failed"
+            try:
+                self.context[step.name] = step.fn(self.context)
+                status = "ok"
+            finally:
+                manifest.append(
+                    {"step": step.name, "status": status, "sec": round(time.perf_counter() - t0, 3)}
+                )
         return self.context

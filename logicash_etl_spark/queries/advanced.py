@@ -1200,7 +1200,7 @@ def histogram_selectivity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders").select(
         F.col("o_totalprice").cast("double").alias("v")
     )
-    return selectivity_report(o, "v", _HIST_THRESHOLDS, exact=True)
+    return selectivity_report(o, "v", _HIST_THRESHOLDS)
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from logicash_etl_spark.functions.money import money
 from logicash_etl_spark.operators.joins import broadcast_bounded
+from logicash_etl_spark.operators.partitioning import SKEW_REDUCERS
 from logicash_etl_spark.queries.registry import query
 from logicash_etl_spark.sources.readers import read_table
 
@@ -1158,11 +1159,11 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _skew_profile_sql(key_expr: str, label: str, n_parts: int = 32) -> str:
+def _skew_profile_sql(key_expr: str, label: str) -> str:
     """Oracle block mirroring operators/partitioning.skew_profile for
     one key — generated from a shared template so both profiled keys
-    run the exact same arithmetic. ``n_parts`` must equal
-    skew_profile's 32 simulated reducers, or the placements diverge."""
+    run the exact same arithmetic, over the same ``SKEW_REDUCERS``
+    simulated reducers."""
     return f"""
     SELECT '{label}' AS key_name,
            CAST(n_keys AS BIGINT) AS n_keys,
@@ -1173,7 +1174,7 @@ def _skew_profile_sql(key_expr: str, label: str, n_parts: int = 32) -> str:
              AS top10_pct,
            CAST(max_part_load AS BIGINT) AS max_part_load,
            round(CAST(max_part_load AS DOUBLE)
-                 / (CAST(total_rows AS DOUBLE) / {n_parts}), 3)
+                 / (CAST(total_rows AS DOUBLE) / {SKEW_REDUCERS}), 3)
              AS skew_ratio
     FROM (
       WITH c AS (
@@ -1189,7 +1190,7 @@ def _skew_profile_sql(key_expr: str, label: str, n_parts: int = 32) -> str:
                (SELECT SUM(cnt) AS load FROM
                  (SELECT cnt,
                          CAST(('0x' || substr(md5(k), 1, 8)) AS BIGINT)
-                           % {n_parts} AS bucket
+                           % {SKEW_REDUCERS} AS bucket
                   FROM c)
                 GROUP BY bucket)) AS max_part_load
       FROM c

@@ -53,7 +53,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     product (bitwise-deterministic doubles)."""
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    out = cosine_topk(emb, queries, k=5, exclude_self=True)
+    out = cosine_topk(emb, queries, k=5)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -80,7 +80,7 @@ def knn_label_vote_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors."""
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    top5 = cosine_topk(emb, queries, k=5, exclude_self=True)
+    top5 = cosine_topk(emb, queries, k=5)
     return knn_label_vote(top5, emb)
 
 
@@ -287,7 +287,7 @@ def ivf_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, queries, centroids, k=5, n_probe=3, broadcast_queries=True
         )
     )
-    exact = cosine_topk(emb, queries, k=5, exclude_self=True).select(
+    exact = cosine_topk(emb, queries, k=5).select(
         "query_id", F.col("vec_id").alias("__exact_id")
     )
     hits = approx.join(

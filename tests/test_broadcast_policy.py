@@ -57,7 +57,7 @@ _AUDITED = {
     ("operators/dedup.py", 'sh = sh.join(F.broadcast(hot), on="sh", how="left_anti")'),
     ("operators/graph.py", "F.broadcast(mx)"),
     ("operators/joins.py", 'F.broadcast(hot.withColumnRenamed("__k", key)),'),
-    ("operators/joins.py", "d = F.broadcast(dim) if broadcast_dim else dim"),
+    ("operators/joins.py", "return fact.join(F.broadcast(dim), on=on, how=how)"),
     ("operators/joins.py", 'hits = probes.join(F.broadcast(bloom), on="word", how="left").select('),
     ("operators/joins.py", 'return l2.join(F.broadcast(r2), on="__bucket", how="inner").filter(cond).drop("__bucket")'),
     ("operators/joins.py", "return F.broadcast(df) if bounded else df"),

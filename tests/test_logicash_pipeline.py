@@ -10,7 +10,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.datagen import gen_dim_atms, gen_fact_transactions, write_lot
-from logicash_etl_spark.pipeline.logicash import LogicashConfig, run_logicash_pipeline
+from logicash_etl_spark.operators.caching import cache_scope
+from logicash_etl_spark.pipeline.logicash import (
+    LogicashConfig,
+    build_gold,
+    extract,
+    run_logicash_pipeline,
+    transform,
+    validate,
+)
 
 AS_OF = "2026-01-01 00:00:00"
 
@@ -157,3 +165,35 @@ def test_golden_outputs(pipeline_result, spark):
     assert top5 == golden["top5_ranking"]
     assert spark.read.parquet(f"{cfg.gold_dir}/dim_atms").count() == golden["gold_dim_rows"]
     assert spark.read.parquet(f"{cfg.gold_dir}/rpt_diario_balance").count() == golden["balance_rows"]
+
+
+def test_gold_and_validate_match_a_reread_of_silver(pipeline_result, spark):
+    """Gold and validate are built from the silver frame the run wrote;
+    recomputed from the day-partitioned parquet on disk, as the
+    reference's CTAS over silver would, they must give the same rows."""
+    ctx, cfg, root = pipeline_result
+    silver = spark.read.parquet(f"{cfg.silver_dir}/transactions")
+    for name, recomputed in build_gold(spark, silver, cfg).items():
+        written = spark.read.parquet(f"{cfg.gold_dir}/{name}")
+        assert recomputed.exceptAll(written).count() == 0, name
+        assert written.exceptAll(recomputed).count() == 0, name
+    assert {k: v.collect() for k, v in validate(spark, silver).items()} == ctx["validate"]
+
+
+def test_unset_as_of_is_one_literal_per_run(pipeline_result, spark, tmp_path):
+    """Without ``as_of`` the quality gate's ``now`` is the driver clock,
+    read once: no plan carries ``current_timestamp`` (which each action
+    would evaluate anew), so the report, the silver write and validate
+    count the same rows."""
+    ctx, cfg, root = pipeline_result
+    lot = LogicashConfig(
+        raw_dir=cfg.raw_dir, silver_dir=str(tmp_path / "silver"), gold_dir=str(tmp_path / "gold")
+    )
+    with cache_scope():
+        silver, quarantine, report = transform(*extract(spark, lot), lot)
+        for df in (silver, quarantine, report):
+            assert "current_timestamp" not in df._jdf.queryExecution().analyzed().toString()
+    ctx2 = run_logicash_pipeline(spark, lot)
+    clean = ctx2["load_silver"]["clean_rows"]
+    assert spark.read.parquet(f"{lot.silver_dir}/transactions").count() == clean
+    assert ctx2["validate"]["audit"][0]["total_rows"] == clean

@@ -1,102 +1,35 @@
-"""Pipeline runner retry + manifest-based resume (no Spark needed)."""
+"""Pipeline runner: ordered, timed steps that fail fast (no Spark needed)."""
 
 from __future__ import annotations
-
-import json
 
 import pytest
 
 from logicash_etl_spark.pipeline.runner import Pipeline, Step
 
 
-def test_retry_succeeds_within_attempts(tmp_path):
-    calls = {"n": 0}
-
-    def flaky(ctx):
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise RuntimeError("transient")
-        return "done"
-
-    pipe = Pipeline([Step("flaky", flaky, retries=2)])
-    ctx = pipe.run()
-    assert ctx["flaky"] == "done"
-    assert calls["n"] == 3
-    assert ctx["__manifest__"][0]["status"] == "ok"
-    assert ctx["__manifest__"][0]["attempts"] == 3
-
-
-def test_retry_exhausted_raises_with_failed_manifest():
-    def always(ctx):
-        raise RuntimeError("permanent")
-
-    pipe = Pipeline([Step("bad", always, retries=1)])
-    with pytest.raises(RuntimeError, match="permanent"):
-        pipe.run()
-    m = pipe.context["__manifest__"]
-    assert m[0] == {"step": "bad", "status": "failed", "sec": m[0]["sec"], "attempts": 2}
-
-
-def test_resume_skips_completed_steps(tmp_path):
-    """Kill at step 3, rerun with resume: steps 1-2 skipped, manifest
-    continuous (entries for every step), context restored via
-    Step.restore."""
-    manifest_path = str(tmp_path / "manifest.json")
+def test_steps_run_in_order_and_a_failure_stops_the_run():
     runs: list[str] = []
 
-    def mk(name):
+    def ok(name):
         def fn(ctx):
             runs.append(name)
             return f"{name}-result"
         return fn
 
-    def boom_once(ctx):
+    def boom(ctx):
         runs.append("three")
-        if not (tmp_path / "fixed").exists():
-            raise RuntimeError("step 3 dies")
-        # a real step would read its predecessors' outputs
-        assert ctx["one"] == "one-result"
-        return "three-result"
+        assert ctx["two"] == "two-result"  # earlier results are in the context
+        raise RuntimeError("step 3 dies")
 
-    steps = [
-        Step("one", mk("one"), restore=lambda ctx: "one-result"),
-        Step("two", mk("two")),
-        Step("three", boom_once),
-        Step("four", mk("four")),
-    ]
-
-    pipe = Pipeline(steps, manifest_path=manifest_path)
+    pipe = Pipeline([Step("one", ok("one")), Step("two", ok("two")), Step("three", boom), Step("four", ok("four"))])
     with pytest.raises(RuntimeError, match="step 3 dies"):
         pipe.run()
     assert runs == ["one", "two", "three"]
-    on_disk = json.load(open(manifest_path))
-    assert [e["status"] for e in on_disk] == ["ok", "ok", "failed"]
+    m = pipe.context["__manifest__"]
+    assert [(e["step"], e["status"]) for e in m] == [("one", "ok"), ("two", "ok"), ("three", "failed")]
+    assert all(set(e) == {"step", "status", "sec"} and e["sec"] >= 0 for e in m)
+    assert "three" not in pipe.context and "four" not in pipe.context
 
-    (tmp_path / "fixed").touch()
-    pipe2 = Pipeline(steps, manifest_path=manifest_path)
-    ctx = pipe2.run(resume=True)
-    # steps 1-2 were NOT re-executed
-    assert runs == ["one", "two", "three", "three", "four"]
-    m = ctx["__manifest__"]
-    assert [(e["step"], e["status"]) for e in m] == [
-        ("one", "skipped"),
-        ("two", "skipped"),
-        ("three", "ok"),
-        ("four", "ok"),
-    ]
-    # restore rebuilt the skipped step's context entry
-    assert ctx["one"] == "one-result"
-    assert ctx["four"] == "four-result"
-    # a third resume skips everything
-    ctx3 = Pipeline(steps, manifest_path=manifest_path).run(resume=True)
-    assert [e["status"] for e in ctx3["__manifest__"]] == ["skipped"] * 4
-    assert runs == ["one", "two", "three", "three", "four"]
-
-
-def test_resume_false_reruns_everything(tmp_path):
-    manifest_path = str(tmp_path / "m.json")
-    runs: list[str] = []
-    steps = [Step("a", lambda ctx: runs.append("a") or 1)]
-    Pipeline(steps, manifest_path=manifest_path).run()
-    Pipeline(steps, manifest_path=manifest_path).run()  # no resume flag
-    assert runs == ["a", "a"]
+    ctx = Pipeline([Step("one", ok("one")), Step("two", ok("two"))]).run()
+    assert ctx["one"] == "one-result" and ctx["two"] == "two-result"
+    assert [e["status"] for e in ctx["__manifest__"]] == ["ok", "ok"]
