@@ -44,6 +44,7 @@ Usage:
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -51,7 +52,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
-SF = "/root/testdata/sf0.001"
+from oracle_utils import TABLES, compare, copy_fixture_tables  # noqa: E402
 
 # --- empty-corpus manifest: two deliberate classes -------------------
 # trainer/required-input contracts: iterative quantizers and the MMR
@@ -166,39 +167,14 @@ _MIX_TAIL = (
     "kilo lima mike november oscar papa quebec romeo sierra tango "
     "uniform victor whiskey xray yankee zulu "
 )
-
-
-def build_longdoc() -> str:
-    import duckdb
-
-    from oracle_utils import TABLES
-
-    d = tempfile.mkdtemp(prefix="lq_longdoc_")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW t_{t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
-        if t == "documents":
-            sel = (
-                "SELECT doc_id, "
-                "CASE WHEN doc_id % 31 = 0 THEN text || ' ' || "
-                f"repeat('{_REP_TAIL}', 600) "
-                "WHEN doc_id % 37 = 0 THEN text || ' ' || "
-                f"repeat('{_MIX_TAIL}', 160) "
-                "ELSE text END AS text, lang, source, "
-                "length(CASE WHEN doc_id % 31 = 0 THEN text || ' ' || "
-                f"repeat('{_REP_TAIL}', 600) "
-                "WHEN doc_id % 37 = 0 THEN text || ' ' || "
-                f"repeat('{_MIX_TAIL}', 160) "
-                "ELSE text END) AS n_chars FROM t_documents"
-            )
-        else:
-            sel = f"SELECT * FROM t_{t}"
-        con.execute(f"COPY ({sel}) TO '{d}/{t}.parquet' (FORMAT PARQUET)")
-    con.close()
-    return d
+_LONG_TEXT = (
+    f"CASE WHEN doc_id % 31 = 0 THEN text || ' ' || repeat('{_REP_TAIL}', 600) "
+    f"WHEN doc_id % 37 = 0 THEN text || ' ' || repeat('{_MIX_TAIL}', 160) "
+    "ELSE text END"
+)
+LONGDOC = {
+    "documents": f"SELECT * REPLACE ({_LONG_TEXT} AS text, length({_LONG_TEXT}) AS n_chars) FROM t",
+}
 
 
 # --- skew-corpus manifest ---------------------------------------------
@@ -215,73 +191,19 @@ def build_longdoc() -> str:
 # corpus, but Spark and DuckDB must still agree bit-for-bit.
 KNOWN_SKEW: dict[str, str] = {}
 
+SKEW = {
+    "events": "SELECT * REPLACE (CASE WHEN event_id % 3 = 0 THEN "
+    "(SELECT min(user_id) FROM t) ELSE user_id END AS user_id) FROM t",
+    "orders": "SELECT * REPLACE (CASE WHEN o_orderkey % 3 = 0 THEN "
+    "(SELECT min(c_custkey) FROM t_customer) ELSE o_custkey END AS o_custkey) FROM t",
+    "lineitem": "SELECT * REPLACE (CASE WHEN l_orderkey % 3 = 0 THEN "
+    "(SELECT min(s_suppkey) FROM t_supplier) ELSE l_suppkey END AS l_suppkey) FROM t",
+}
 
-def build_skew() -> str:
-    import duckdb
-
-    from oracle_utils import TABLES
-
-    d = tempfile.mkdtemp(prefix="lq_skew_")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW t_{t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
-        if t == "events":
-            sel = (
-                "SELECT event_id, ts, "
-                "CASE WHEN event_id % 3 = 0 THEN "
-                "(SELECT min(user_id) FROM t_events) ELSE user_id END "
-                "AS user_id, event_type, value, props FROM t_events"
-            )
-        elif t == "orders":
-            sel = (
-                "SELECT o_orderkey, "
-                "CASE WHEN o_orderkey % 3 = 0 THEN "
-                "(SELECT min(c_custkey) FROM t_customer) ELSE o_custkey "
-                "END AS o_custkey, o_orderstatus, o_totalprice, "
-                "o_orderdate, o_orderpriority FROM t_orders"
-            )
-        elif t == "lineitem":
-            cols = [
-                r[0] for r in con.execute("DESCRIBE t_lineitem").fetchall()
-            ]
-            sel = "SELECT " + ", ".join(
-                "CASE WHEN l_orderkey % 3 = 0 THEN "
-                "(SELECT min(s_suppkey) FROM t_supplier) ELSE l_suppkey "
-                "END AS l_suppkey" if c == "l_suppkey" else c
-                for c in cols
-            ) + " FROM t_lineitem"
-        else:
-            sel = f"SELECT * FROM t_{t}"
-        con.execute(f"COPY ({sel}) TO '{d}/{t}.parquet' (FORMAT PARQUET)")
-    con.close()
-    return d
-
-
-def build_duppk() -> str:
-    import duckdb
-
-    from oracle_utils import TABLES
-
-    d = tempfile.mkdtemp(prefix="lq_duppk_")
-    keys = {"documents": "doc_id", "events": "event_id",
-            "orders": "o_orderkey"}
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW t_{t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
-        if t in keys:
-            sel = (f"SELECT * FROM t_{t} UNION ALL SELECT * FROM t_{t} "
-                   f"WHERE {keys[t]} % 6 = 0")
-        else:
-            sel = f"SELECT * FROM t_{t}"
-        con.execute(f"COPY ({sel}) TO '{d}/{t}.parquet' (FORMAT PARQUET)")
-    con.close()
-    return d
+DUPPK = {
+    t: f"SELECT * FROM t UNION ALL SELECT * FROM t WHERE {key} % 6 = 0"
+    for t, key in {"documents": "doc_id", "events": "event_id", "orders": "o_orderkey"}.items()
+}
 
 
 KNOWN_TIMEWARP: dict[str, str] = {
@@ -295,39 +217,12 @@ KNOWN_TIMEWARP: dict[str, str] = {
     # DECIMAL(19,2) (int128 in DuckDB; (19,2)x(19,2)->(38,4) exact)
 }
 
-
-def build_timewarp() -> str:
-    import duckdb
-
-    from oracle_utils import TABLES
-
-    d = tempfile.mkdtemp(prefix="lq_timewarp_")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW t_{t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
-        if t == "events":
-            sel = (
-                "SELECT event_id, "
-                "CASE WHEN event_id % 9 = 0 THEN ts - INTERVAL 70 YEAR "
-                "WHEN event_id % 13 = 0 THEN ts + INTERVAL 150 YEAR "
-                "ELSE ts END AS ts, "
-                "user_id, event_type, value, props FROM t_events"
-            )
-        elif t == "orders":
-            sel = (
-                "SELECT o_orderkey, o_custkey, o_orderstatus, "
-                "o_totalprice, CASE WHEN o_orderkey % 11 = 0 THEN "
-                "o_orderdate - INTERVAL 80 YEAR ELSE o_orderdate END "
-                "AS o_orderdate, o_orderpriority FROM t_orders"
-            )
-        else:
-            sel = f"SELECT * FROM t_{t}"
-        con.execute(f"COPY ({sel}) TO '{d}/{t}.parquet' (FORMAT PARQUET)")
-    con.close()
-    return d
+TIMEWARP = {
+    "events": "SELECT * REPLACE (CASE WHEN event_id % 9 = 0 THEN ts - INTERVAL 70 YEAR "
+    "WHEN event_id % 13 = 0 THEN ts + INTERVAL 150 YEAR ELSE ts END AS ts) FROM t",
+    "orders": "SELECT * REPLACE (CASE WHEN o_orderkey % 11 = 0 THEN "
+    "o_orderdate - INTERVAL 80 YEAR ELSE o_orderdate END AS o_orderdate) FROM t",
+}
 
 
 # emoji, CJK, RTL arabic, combining accent, ZWJ family emoji
@@ -336,94 +231,28 @@ _PATHOLOGICAL = (
     "مرحبا éclair "
     "\U0001F468‍\U0001F469‍\U0001F467"
 )
+UNICODE = {
+    "documents": "SELECT * REPLACE (CASE WHEN doc_id % 7 = 0 THEN text || "
+    f"$${_PATHOLOGICAL}$$ ELSE text END AS text) FROM t",
+}
 
+EMPTY = {t: "SELECT * FROM t LIMIT 0" for t in TABLES}
 
-def build_unicode() -> str:
-    import duckdb
-
-    from oracle_utils import TABLES
-
-    d = tempfile.mkdtemp(prefix="lq_unicode_")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW t_{t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
-        if t == "documents":
-            cols = [
-                r[0] for r in con.execute("DESCRIBE t_documents").fetchall()
-            ]
-            sel = "SELECT " + ", ".join(
-                "CASE WHEN doc_id % 7 = 0 THEN text || "
-                f"$${_PATHOLOGICAL}$$ ELSE text END AS text"
-                if c == "text" else c
-                for c in cols
-            ) + " FROM t_documents"
-        else:
-            sel = f"SELECT * FROM t_{t}"
-        con.execute(f"COPY ({sel}) TO '{d}/{t}.parquet' (FORMAT PARQUET)")
-    con.close()
-    return d
-
-
-def build_empty() -> str:
-    import duckdb
-
-    from oracle_utils import TABLES
-
-    d = tempfile.mkdtemp(prefix="lq_empty_")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet('{SF}/{t}.parquet') "
-            f"LIMIT 0) TO '{d}/{t}.parquet' (FORMAT PARQUET)"
-        )
-    con.close()
-    return d
-
-
-def build_nulls() -> str:
-    import duckdb
-
-    from oracle_utils import TABLES
-
-    d = tempfile.mkdtemp(prefix="lq_nulls_")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW t_{t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
-        if t == "documents":
-            cols = [r[0] for r in con.execute("DESCRIBE t_documents").fetchall()]
-            sel = "SELECT " + ", ".join(
-                "CASE WHEN doc_id % 13 = 0 THEN NULL ELSE text END AS text"
-                if c == "text" else c
-                for c in cols
-            ) + " FROM t_documents"
-        elif t == "events":
-            sel = (
-                "SELECT event_id, ts, user_id, event_type, "
-                "CASE WHEN event_id % 11 = 0 THEN NULL ELSE value END AS value, "
-                "CASE WHEN event_id % 17 = 0 THEN NULL ELSE props END AS props "
-                "FROM t_events"
-            )
-        else:
-            sel = f"SELECT * FROM t_{t}"
-        con.execute(f"COPY ({sel}) TO '{d}/{t}.parquet' (FORMAT PARQUET)")
-    con.close()
-    return d
+NULLS = {
+    "documents": "SELECT * REPLACE (CASE WHEN doc_id % 13 = 0 THEN NULL ELSE text END AS text) FROM t",
+    "events": "SELECT * REPLACE (CASE WHEN event_id % 11 = 0 THEN NULL ELSE value END AS value, "
+    "CASE WHEN event_id % 17 = 0 THEN NULL ELSE props END AS props) FROM t",
+}
 
 
 MODES = {
-    "empty": (build_empty, KNOWN_EMPTY),
-    "nulls": (build_nulls, KNOWN_NULLS),
-    "unicode": (build_unicode, KNOWN_UNICODE),
-    "timewarp": (build_timewarp, KNOWN_TIMEWARP),
-    "duppk": (build_duppk, KNOWN_DUPPK),
-    "skew": (build_skew, KNOWN_SKEW),
-    "longdoc": (build_longdoc, KNOWN_LONGDOC),
+    "empty": (EMPTY, KNOWN_EMPTY),
+    "nulls": (NULLS, KNOWN_NULLS),
+    "unicode": (UNICODE, KNOWN_UNICODE),
+    "timewarp": (TIMEWARP, KNOWN_TIMEWARP),
+    "duppk": (DUPPK, KNOWN_DUPPK),
+    "skew": (SKEW, KNOWN_SKEW),
+    "longdoc": (LONGDOC, KNOWN_LONGDOC),
 }
 
 
@@ -431,23 +260,19 @@ def main() -> int:
     if len(sys.argv) != 2 or sys.argv[1] not in MODES:
         print(__doc__, file=sys.stderr)
         return 2
-    build, known = MODES[sys.argv[1]]
-
-    from oracle_utils import compare
+    overrides, known = MODES[sys.argv[1]]
 
     from logicash_etl_spark import get_spark
     from logicash_etl_spark.queries import ORACLES, QUERIES
 
-    d = build()
+    d = tempfile.mkdtemp(prefix=f"lq_{sys.argv[1]}_")
+    copy_fixture_tables(d, overrides)
     spark = get_spark(app_name=f"robustness-{sys.argv[1]}")
     failed: dict[str, str] = {}
     names = sorted(QUERIES)
     for i, name in enumerate(names, 1):
         try:
-            if name in ORACLES:
-                compare(QUERIES[name](spark, d), ORACLES[name], d)
-            else:
-                QUERIES[name](spark, d).count()
+            compare(QUERIES[name](spark, d), ORACLES[name], d)
         except Exception as exc:  # noqa: BLE001 — classified below
             failed[name] = f"{type(exc).__name__}: {str(exc)[:120]}"
             tag = "KNOWN" if name in known else "NEW !"
@@ -456,6 +281,7 @@ def main() -> int:
         finally:
             spark.catalog.clearCache()
     spark.stop()
+    shutil.rmtree(d)
 
     new = sorted(set(failed) - set(known))
     fixed = sorted(set(known) - set(failed))

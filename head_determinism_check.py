@@ -1,24 +1,22 @@
 #!/usr/bin/env python
-"""Head-determinism gate: run the driver snapshot head TWICE, in two
-SEPARATE JVMs, and SHA-256 the full canonicalized result sets.
+"""Determinism gate: run catalog queries TWICE, in two SEPARATE JVMs,
+and SHA-256 the full canonicalized result sets.
 
 Oracle parity proves Spark == DuckDB on one execution; this proves
 Spark == Spark across process, scheduling, and partition-order
-variation — the property the driver implicitly relies on when it
-hashes a single execution. A query that passes parity but floats
-bit-wise across JVMs (an unstable sample, an undeterministic
-tie-break, a float reduction order leak) is a latent red row; rounds
-10-11 ran this as ad-hoc scripts, this commits it as a one-command
-gate.
+variation — the property a single-execution value hash implicitly
+relies on. A query that passes parity but floats bit-wise across JVMs
+(an unstable sample, an undeterministic tie-break, a float reduction
+order leak) is a latent red row.
 
-Canonical form per query: columns sorted by name, every cell
-stringified (repr floats), rows sorted lexicographically, sha256 of
-the CSV bytes. Streaming queries re-drain warm from their
-checkpoints — cross-JVM stability of the checkpointed readback is
-exactly what the gate should cover.
+Canonical form per query: the oracle comparator's canonical rows
+(``tests/oracle_utils.canon``: columns sorted by name, cells
+normalised, rows sorted), sha256 of their ``repr``. Streaming queries
+re-drain warm from their checkpoints — cross-JVM stability of the
+checkpointed readback is exactly what the gate should cover.
 
 Usage:
-    python head_determinism_check.py [N]     # first N head rows (default 50)
+    python head_determinism_check.py         # every catalog query
     python head_determinism_check.py q1 q2   # named queries
 
 Exit 0 iff every query's two hashes match and nothing errored.
@@ -35,30 +33,23 @@ import tempfile
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
+
+from oracle_utils import canon  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
-
-
-def _canonical_sha256(pdf) -> str:
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    body = pdf.astype(str)
-    body = body.sort_values(list(body.columns), kind="mergesort")
-    return hashlib.sha256(
-        body.to_csv(index=False).encode("utf-8")
-    ).hexdigest()
 
 
 def _worker(names: list[str], out_path: str) -> int:
     from logicash_etl_spark import get_spark
     from logicash_etl_spark.queries import QUERIES
 
-    spark = get_spark(app_name="head-determinism")
+    spark = get_spark(app_name="determinism")
     hashes: dict[str, str] = {}
     for i, name in enumerate(names, 1):
         try:
-            hashes[name] = _canonical_sha256(
-                QUERIES[name](spark, SF).toPandas()
-            )
+            rows = canon(QUERIES[name](spark, SF).toPandas())
+            hashes[name] = hashlib.sha256(repr(rows).encode("utf-8")).hexdigest()
             print(f"  {i}/{len(names)} {name}", flush=True)
         except Exception as exc:  # noqa: BLE001 — recorded, gate fails
             hashes[name] = f"ERROR: {type(exc).__name__}: {str(exc)[:160]}"
@@ -76,18 +67,13 @@ def main() -> int:
         with open(args[1], encoding="utf-8") as fh:
             return _worker(json.load(fh), args[2])
 
-    import __spark_entry__ as mod
+    from logicash_etl_spark.queries import QUERIES
 
-    qs = mod.queries()
-    if args and not args[0].isdigit():
-        names = args
-        unknown = [n for n in names if n not in qs]
-        if unknown:
-            print(f"unknown queries: {unknown}", file=sys.stderr)
-            return 2
-    else:
-        n = int(args[0]) if args else 50
-        names = list(qs)[:n]
+    names = args or list(QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
 
     with tempfile.TemporaryDirectory(prefix="lq_determinism_") as d:
         names_path = os.path.join(d, "names.json")
@@ -113,7 +99,7 @@ def main() -> int:
         if runs[0][n] != runs[1][n] or runs[0][n].startswith("ERROR")
     )
     ok = len(names) - len(bad)
-    print(f"head determinism: {ok}/{len(names)} byte-identical across JVMs")
+    print(f"determinism: {ok}/{len(names)} byte-identical across JVMs")
     for n in bad:
         print(f"  MISMATCH {n}:\n    jvm1 {runs[0][n]}\n    jvm2 {runs[1][n]}")
     return 1 if bad else 0

@@ -84,7 +84,7 @@ def transform(
     return silver, quarantine, report
 
 
-def build_gold(spark: SparkSession, silver: DataFrame, cfg: LogicashConfig) -> dict[str, DataFrame]:
+def build_gold(silver: DataFrame) -> dict[str, DataFrame]:
     """The three gold tables (ddl_gold.sql:22-62).
 
     dim_atms uses correct SCD1 latest-wins (row_number by fecha desc)
@@ -177,7 +177,7 @@ def run_logicash_pipeline(spark: SparkSession, cfg: LogicashConfig) -> dict:
         return report.collect()[0].asDict()
 
     def _gold(ctx):
-        tables = build_gold(spark, ctx["transform"][0], cfg)
+        tables = build_gold(ctx["transform"][0])
         for name, df in tables.items():
             write_parquet(df, f"{cfg.gold_dir}/{name}")
         return sorted(tables)

@@ -1,7 +1,8 @@
 """Query catalog: every implemented operator exposed as a named query
 with (where SQL-expressible) a DuckDB oracle for differential testing.
 
-`__spark_entry__.py` re-exports this registry; tests run each pair at
+`__spark_entry__.py` re-exports this registry, in registration order
+(the module import order below); tests run each pair at
 sf0.001/sf0.01 and compare row-count + schema + order-insensitive
 values, mirroring the driver's correctness gate.
 

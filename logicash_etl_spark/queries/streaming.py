@@ -57,8 +57,8 @@ _LOT_CACHE: dict[str, str] = {}
 # join). _state_parts() sizes UP from this floor with the drain's
 # input volume — the production rule (state partitions ~ state
 # volume) expressed as ~25k input rows per partition: the sf0.1
-# fixture stays at 8, the 10x scaling replica gets its parallelism
-# back (measured 6.4x -> ~2x on the session drain at 10x data).
+# fixture stays at 8, a 10x-larger lot gets its parallelism back
+# (measured 6.4x -> ~2x on the session drain at 10x data).
 _STATE_PARTS = 8
 
 _LOT_ROWS: dict[str, int] = {}
@@ -113,28 +113,6 @@ def _mark_drained(state: dict) -> None:
     and the sink readback is constructed — never before, so a raise
     anywhere in the drain leaves the entry cold-on-fresh-root."""
     state["done"] = True
-
-
-def clear_drains() -> None:
-    """Forget ONLY the drain checkpoints/sinks: the next call of each
-    streaming query performs a cold, full drain again while the shared
-    lots stay cached. Scaling measurements use this so their ratios
-    compare cold drain work at both volumes (a warm re-drain is a
-    constant no-new-files micro-batch and would read as a flat 1x)."""
-    _DRAIN_MEMO.clear()
-
-
-def drop_drain_sinks(spark: SparkSession) -> None:
-    """Drop the memory-sink tables streaming drains leave behind.
-
-    Lives here because this module owns the ``*_drain_*`` sink naming
-    convention. Each drain's memory table holds its FULL drained
-    output in the JVM until dropped; measurement harnesses call this
-    between queries so accumulated sinks don't GC-throttle later runs
-    (a 4.7 s sf1 drain measured at 18 s under the pile-up)."""
-    for tbl in spark.catalog.listTables():
-        if "_drain_" in tbl.name and tbl.tableType == "TEMPORARY":
-            spark.catalog.dropTempView(tbl.name)
 
 
 def _events_lot(spark: SparkSession, sf_dir: str) -> str:

@@ -18,24 +18,31 @@ import pandas as pd
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+FIXTURE_SF = "/root/testdata/sf0.001"
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """DuckDB connection with the fixture tables registered as views.
-
-    Handles both layouts: the driver fixtures are single parquet FILES
-    (``<sf_dir>/<table>.parquet``); Spark-written working sets (e.g.
-    the scaling_check 10x replica) are DIRECTORIES of part files —
-    those get a ``/*.parquet`` glob so sf1 parity runs through the
-    same comparator as the driver-scale tests."""
-    import os
-
+    """DuckDB connection with the fixture tables
+    (``<sf_dir>/<table>.parquet``) registered as views."""
     con = duckdb.connect()
     for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        pat = f"{p}/*.parquet" if os.path.isdir(p) else p
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     return con
+
+
+def copy_fixture_tables(dst: str, overrides: dict[str, str]) -> None:
+    """Copy the sf0.001 fixture tables to ``dst`` via DuckDB COPY,
+    substituting the SELECT in ``overrides`` for that table. In an
+    override, ``t`` is the table being copied and ``t_<name>`` any
+    source table. Both engines then read the same dirty files."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW t_{t} AS SELECT * FROM read_parquet('{FIXTURE_SF}/{t}.parquet')")
+    for t in TABLES:
+        con.execute(f"CREATE OR REPLACE VIEW t AS SELECT * FROM t_{t}")
+        sel = overrides.get(t, "SELECT * FROM t")
+        con.execute(f"COPY ({sel}) TO '{dst}/{t}.parquet' (FORMAT PARQUET)")
+    con.close()
 
 
 def _norm_cell(v):
@@ -85,7 +92,9 @@ def _dtype_kind(s: pd.Series) -> str:
     return "object"
 
 
-def _canon(df: pd.DataFrame) -> list[tuple]:
+def canon(df: pd.DataFrame) -> list[tuple]:
+    """Order-insensitive canonical rows: columns sorted by name, cells
+    normalised, rows sorted."""
     cols = sorted(df.columns)
     out = []
     for row in df[cols].itertuples(index=False, name=None):
@@ -147,7 +156,7 @@ def compare(spark_df, oracle_sql: str, sf_dir: str) -> None:
             "the oracle or the Spark column):\n  " + "\n  ".join(kind_mismatches)
         )
 
-    s_rows, o_rows = _canon(sdf), _canon(odf)
+    s_rows, o_rows = canon(sdf), canon(odf)
     mismatches = [
         (i, a, b) for i, (a, b) in enumerate(zip(s_rows, o_rows)) if a != b
     ]

@@ -1,15 +1,5 @@
 """Driver-contract invariants for __spark_entry__.py — pure-Python
-(no SparkSession): the rotation arithmetic that decides which queries
-land in the driver's 50-row CORRECTNESS snapshot. A broken invariant
-here silently costs a round of driver signal (round-6 lesson: 62
-changed queries against a 50-row window left 14 waiting).
-
-Round-8 scheme (green-rotation aging): head = changed-this-round ∪
-never-driver-checked ∪ OLDEST greens, with the green ledger parsed
-from CORRECTNESS_r*.json — self-maintaining, no hand-edited list.
-Round 9 adds red-un-proves-green: a red row newer than a query's last
-green drops it from the ledger so it re-enters the head immediately.
-"""
+(no SparkSession)."""
 
 from __future__ import annotations
 
@@ -20,8 +10,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 
-SNAPSHOT_ROWS = 50
-
 
 def test_every_query_has_an_oracle():
     qs, osql = entry.queries(), entry.oracle_sql()
@@ -29,124 +17,3 @@ def test_every_query_has_an_oracle():
         "queries() and oracle_sql() must cover the same names; "
         f"diff={set(qs) ^ set(osql)}"
     )
-
-
-def test_changed_list_is_registered_names():
-    qs = entry.queries()
-    missing = [n for n in entry._CHANGED_THIS_ROUND if n not in qs]
-    assert not missing, f"changed-list names not in catalog: {missing}"
-
-
-def test_green_ledger_parses_and_covers_catalog():
-    """The aging rotation only works if the ledger parses: every
-    registered query must either hold a green row in some
-    CORRECTNESS_r*.json or sit inside the snapshot head (where the
-    next driver round records one)."""
-    green = entry._green_rounds()
-    assert green, "no CORRECTNESS ledger parsed — aging would degrade"
-    names = list(entry.queries())
-    head = set(names[:SNAPSHOT_ROWS])
-    unproven_outside = [
-        n for n in names if n not in green and n not in head
-    ]
-    assert not unproven_outside, (
-        f"queries with no driver-green row outside the head: "
-        f"{unproven_outside}"
-    )
-
-
-def test_snapshot_head_covers_changed_and_unchecked():
-    """Every changed-this-round query and every query without a
-    driver-green row must sit inside the first SNAPSHOT_ROWS entries —
-    the only rows the driver's correctness pass reads. Changed queries
-    come FIRST (a head overflow should push out re-confirmations of
-    old greens, never changed work)."""
-    names = list(entry.queries())
-    head = set(names[:SNAPSHOT_ROWS])
-    changed = [n for n in entry._CHANGED_THIS_ROUND if n in set(names)]
-    assert len(changed) <= SNAPSHOT_ROWS, "changed list exceeds snapshot"
-    assert names[: len(changed)] == changed
-    green = entry._green_rounds()
-    nongreen = [n for n in names if n not in green]
-    outside = [n for n in nongreen if n not in head]
-    assert not outside, f"never-driver-checked queries outside head: {outside}"
-
-
-def test_head_fills_with_oldest_greens():
-    """GREEN-ROTATION AGING: after the changed and never-checked
-    queries, the remaining head slots must hold the greens whose last
-    driver confirmation is OLDEST — ascending (round, name) — so
-    driver rows refresh on a rolling cadence instead of going stale."""
-    green = entry._green_rounds()
-    names = list(entry.queries())
-    changed = [n for n in entry._CHANGED_THIS_ROUND if n in set(names)]
-    k = len(changed) + len([n for n in names if n not in green])
-    expected_tail = sorted(
-        (n for n in names[k:]), key=lambda n: (green[n], n)
-    )
-    assert names[k:] == expected_tail, (
-        "greens not ordered oldest-confirmation-first after the head "
-        "priority lists"
-    )
-
-
-def test_green_rounds_matches_raw_ledger():
-    """_green_rounds() must agree with a direct read of the JSON files
-    — green means rows AND schema AND hash all matched, latest round
-    wins."""
-    import glob
-    import json
-    import re
-
-    repo = os.path.dirname(os.path.abspath(entry.__file__))
-    greens: dict[str, int] = {}
-    reds: dict[str, int] = {}
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        # mirror _green_rounds exactly: skip non-numeric suffixes and
-        # unparseable JSON rather than crashing on the edge cases the
-        # function deliberately tolerates
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            rows = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, r in rows.items():
-            if not isinstance(r, dict):
-                continue
-            ok = (
-                r.get("rows_match")
-                and r.get("schema_match")
-                and r.get("hash_match")
-            )
-            bucket = greens if ok else reds
-            bucket[name] = max(bucket.get(name, 0), int(m.group(1)))
-    expected = {
-        n: rnd for n, rnd in greens.items() if reds.get(n, -1) <= rnd
-    }
-    assert entry._green_rounds() == expected
-
-
-def test_red_row_unproves_green(tmp_path, monkeypatch):
-    """A query green in round N but RED in round N+1 must drop out of
-    the green ledger (re-entering the head's never-checked bucket),
-    not age quietly at green[n]=N."""
-    import json
-
-    g = {"q_ok": {"rows_match": True, "schema_match": True,
-                  "hash_match": True}}
-    bad = {"q_ok": {"rows_match": True, "schema_match": True,
-                    "hash_match": False}}
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(g))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps(bad))
-    monkeypatch.setattr(
-        entry.os.path, "abspath", lambda _: str(tmp_path / "x.py")
-    )
-    assert entry._green_rounds() == {}
-
-    # and a NEWER green re-proves it
-    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps(g))
-    assert entry._green_rounds() == {"q_ok": 3}

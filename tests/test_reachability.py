@@ -2,6 +2,8 @@
 - every top-level definition must be reachable from an entry point;
 - every defaulted parameter of a public engine function must be passed
   by some entry-point call (or be allowlisted with its reason);
+- every parameter of a top-level engine function other than a ``@query``
+  must be read by its body;
 - no module, test or root script imports a name it never reads.
 
 Definitions are top-level functions, classes and module constants
@@ -351,3 +353,31 @@ def test_no_unused_imports():
                 if name not in read:
                     unused.append(f"{path.relative_to(REPO)}:{node.lineno}: {name}")
     assert not unused, "unused imports:\n  " + "\n  ".join(unused)
+
+
+def _unused_parameters(scan: _Scan) -> list[str]:
+    out = []
+    for module, mod in scan.modules.items():
+        if not module.startswith(PKG):
+            continue
+        for name, node in mod.defs.items():
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) or any(
+                _is_query_decorator(d) for d in node.decorator_list
+            ):
+                continue
+            a = node.args
+            params = [*a.posonlyargs, *a.args, *a.kwonlyargs, *filter(None, (a.vararg, a.kwarg))]
+            read = {
+                n.id for stmt in node.body for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            out += [f"{module[len(PKG) + 1:]}.{name}.{p.arg}" for p in params if p.arg not in read]
+    return out
+
+
+def test_no_unused_parameters():
+    """A parameter the body never reads makes every caller build and
+    pass a value for nothing: drop it. ``@query`` functions are exempt,
+    since ``(spark, sf_dir)`` is the driver contract."""
+    unused = _unused_parameters(_Scan())
+    assert not unused, "parameters the body never reads:\n  " + "\n  ".join(unused)

@@ -12,29 +12,7 @@ import duckdb
 import pytest
 
 from logicash_etl_spark.queries import ORACLES, QUERIES
-from tests.oracle_utils import TABLES, compare
-
-SF = "/root/testdata/sf0.001"
-
-
-def _copy_tables(dst: str, overrides: dict[str, str]) -> None:
-    """Copy the sf0.001 fixture tables to ``dst`` via DuckDB COPY,
-    substituting the SELECT in ``overrides`` for that table (FROM t is
-    the source view). Both engines then read the same dirty files."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW t_{t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
-        if t in overrides:
-            sel = overrides[t].replace(" FROM t", f" FROM t_{t}")
-        else:
-            sel = f"SELECT * FROM t_{t}"
-        con.execute(
-            f"COPY ({sel}) TO '{dst}/{t}.parquet' (FORMAT PARQUET)"
-        )
-    con.close()
+from tests.oracle_utils import compare, copy_fixture_tables
 
 
 @pytest.fixture(scope="module")
@@ -42,7 +20,7 @@ def dup_parent_dir(tmp_path_factory):
     """A corpus where one customer PK is duplicated — the join-fanout
     pathology key_uniqueness_audit exists to detect."""
     d = str(tmp_path_factory.mktemp("dirty_dup_parent"))
-    _copy_tables(
+    copy_fixture_tables(
         d,
         {
             # parenthesized arm: appends exactly one duplicate of the
@@ -87,7 +65,7 @@ def refund_dir(tmp_path_factory):
     negated — exercises the GREATEST(cents, 0) refund contract on
     conversions with negative value."""
     d = str(tmp_path_factory.mktemp("dirty_refunds"))
-    _copy_tables(
+    copy_fixture_tables(
         d,
         {
             "events": (

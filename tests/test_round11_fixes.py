@@ -14,29 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.queries import ORACLES, QUERIES
-from tests.oracle_utils import TABLES, compare
-
-SF = "/root/testdata/sf0.001"
-
-
-def _copy_tables(dst: str, overrides: dict[str, str]) -> None:
-    """Copy the sf0.001 fixture tables to ``dst`` via DuckDB COPY,
-    substituting the SELECT in ``overrides`` for that table (FROM t is
-    the source view). Both engines then read the same dirty files."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW t_{t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
-        if t in overrides:
-            sel = overrides[t].replace(" FROM t", f" FROM t_{t}")
-        else:
-            sel = f"SELECT * FROM t_{t}"
-        con.execute(
-            f"COPY ({sel}) TO '{dst}/{t}.parquet' (FORMAT PARQUET)"
-        )
-    con.close()
+from tests.oracle_utils import compare, copy_fixture_tables
 
 
 @pytest.fixture(scope="module")
@@ -45,7 +23,7 @@ def nulls_dir(tmp_path_factory):
     corpus_robustness_check.py nulls mode): NULL documents.text 1/13,
     NULL events.value 1/11, NULL events.props 1/17."""
     d = str(tmp_path_factory.mktemp("dirty_nulls"))
-    _copy_tables(
+    copy_fixture_tables(
         d,
         {
             "documents": (
@@ -70,7 +48,7 @@ def all_null_user_dir(tmp_path_factory):
     pathology behind the ewma DIVIDE_BY_ZERO and the trend-forecast
     NaN slope."""
     d = str(tmp_path_factory.mktemp("dirty_all_null_user"))
-    _copy_tables(
+    copy_fixture_tables(
         d,
         {
             "events": (
@@ -276,7 +254,7 @@ def unicode_dir(tmp_path_factory):
         "مرحبا éclair "
         "\U0001f468‍\U0001f469‍\U0001f467"
     )
-    _copy_tables(
+    copy_fixture_tables(
         d,
         {
             "documents": (

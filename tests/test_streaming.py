@@ -669,10 +669,8 @@ def test_warm_redrain_returns_identical_results(spark, sf_smoke):
     docstring): a second invocation in the same process re-starts the
     checkpointed query, drains zero new files, and returns EXACTLY the
     rows of the first (cold) drain — for an aggregate drain, a
-    stream-stream join drain, and the foreachBatch upsert drain.
-    clear_drains() then restores the cold path (scaling hook)."""
+    stream-stream join drain, and the foreachBatch upsert drain."""
     from logicash_etl_spark.queries import QUERIES
-    from logicash_etl_spark.queries.streaming import _DRAIN_MEMO, clear_drains
 
     for name in (
         "streaming_tumbling_counts",
@@ -683,18 +681,6 @@ def test_warm_redrain_returns_identical_results(spark, sf_smoke):
         warm = sorted(map(str, QUERIES[name](spark, sf_smoke).collect()))
         assert cold == warm, name
         assert cold, name
-    keys_before = set(_DRAIN_MEMO)
-    assert keys_before
-    clear_drains()
-    assert not _DRAIN_MEMO
-    # cold again after the clear: fresh checkpoint, same rows
-    again = sorted(
-        map(str, QUERIES["streaming_tumbling_counts"](spark, sf_smoke).collect())
-    )
-    cold2 = sorted(
-        map(str, QUERIES["streaming_tumbling_counts"](spark, sf_smoke).collect())
-    )
-    assert again == cold2
 
 
 def test_failed_cold_drain_never_warms():
