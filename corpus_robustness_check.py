@@ -154,8 +154,9 @@ KNOWN_DUPPK: dict[str, str] = {
 # oracle therefore legitimately contains pairs the LSH path misses;
 # the fixture corpora's true pairs all sit ABOVE the knee, which is
 # why the oracle-equality contract holds there (and the driver pins
-# it). At a real 0.35-threshold workload the operator's bands/
-# num_hashes knobs move the knee down — the documented trade.
+# it). At a real 0.35-threshold workload a larger signature (more
+# MINHASH_BANDS in operators/dedup.py) would move the knee down — the
+# documented trade.
 KNOWN_LONGDOC: dict[str, str] = {
     "minhash_lsh_dups": "[lsh-recall] 3 true pairs at J=0.377-0.491 sit below the 64x16 s-curve knee (28-62% catch) — probabilistic contract, exact verifier unaffected",
     "dedup_clusters": "[lsh-recall] the same missed borderline pairs cascade into different cluster labels vs the exact-closure oracle",

@@ -12,9 +12,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def null_audit(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def null_audit(df: DataFrame, cols: list[str]) -> DataFrame:
     """COUNT(*) vs COUNT(col) per column, one pass (A4)."""
-    cols = cols or df.columns
     aggs = [F.count("*").alias("total_rows")]
     for c in cols:
         aggs.append(F.count(F.col(c)).alias(f"{c}_non_null"))

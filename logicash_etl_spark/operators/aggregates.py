@@ -39,14 +39,14 @@ def conditional_pivot(
     pivot_col: str,
     pivot_values: list[str],
     amount: str,
-    net_pair: tuple[str, str] | None = None,
+    net_pair: tuple[str, str],
 ) -> DataFrame:
     """A8: SUM(CASE WHEN pivot=v THEN amount ELSE 0 END) per value.
 
     Implemented as conditional aggregation rather than ``.pivot()`` —
     identical single-shuffle plan, but with explicit column names and
     ELSE 0 (not null) semantics matching ddl_gold.sql:42-45. With
-    ``net_pair=(a, b)`` adds ``flujo_neto = sum_a - sum_b``
+    ``net_pair=(a, b)``, adds ``flujo_neto = sum_a - sum_b``
     (ddl_gold.sql:44-45).
     """
     aggs = [F.count("*").alias("total_transacciones")]
@@ -56,13 +56,10 @@ def conditional_pivot(
             .cast("double")
             .alias(f"total_{v.lower()}")
         )
-    out = df.groupBy(*keys).agg(*aggs)
-    if net_pair:
-        a, b = net_pair
-        out = out.withColumn(
-            "flujo_neto", F.col(f"total_{a.lower()}") - F.col(f"total_{b.lower()}")
-        )
-    return out
+    a, b = net_pair
+    return df.groupBy(*keys).agg(*aggs).withColumn(
+        "flujo_neto", F.col(f"total_{a.lower()}") - F.col(f"total_{b.lower()}")
+    )
 
 
 def distinct_dedup(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -106,10 +103,11 @@ def top_k(df: DataFrame, order_col: Column | str, k: int, tiebreak: list[str] | 
 
 
 def top_k_per_group(
-    df: DataFrame, keys: list[str], order_col: str, k: int, tiebreak: list[str] | None = None
+    df: DataFrame, keys: list[str], order_col: str, k: int, tiebreak: list[str]
 ) -> DataFrame:
-    """Top-k within each group: window row_number <= k (one shuffle)."""
-    order = [F.col(order_col).desc()] + [F.col(c).asc() for c in (tiebreak or [])]
+    """Top-k within each group: window row_number <= k (one shuffle),
+    ties on ``order_col`` broken by ``tiebreak`` ascending."""
+    order = [F.col(order_col).desc()] + [F.col(c).asc() for c in tiebreak]
     w = W.partitionBy(*keys).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))

@@ -26,17 +26,24 @@ from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.operators.partitioning import scale_out
 from logicash_etl_spark.operators.text import content_hash, tokens, word_shingles
 
+# Near-dup shape of the catalog's text dedup: 3-word shingles, pairs at
+# exact Jaccard >= 0.35, MinHash signatures of 64 seeded minima banded
+# into 16 LSH bands of 4 rows.
+NEAR_DUP_JACCARD = 0.35
+MINHASH_HASHES = 64
+MINHASH_BANDS = 16
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Keep one row per identical (normalized) content: group by
+def exact_dedup(df: DataFrame, id_col: str) -> DataFrame:
+    """Keep one row per identical (normalized) ``text``: group by
     md5 fingerprint, keep the min id — deterministic, unlike
     dropDuplicates which keeps an arbitrary row."""
     keep_ids = (
-        df.select(F.col(id_col), content_hash(F.col(text_col)).alias("__h"))
+        df.select(F.col(id_col), content_hash(F.col("text")).alias("__h"))
         .groupBy("__h")
         .agg(F.min(id_col).alias(id_col))
         .drop("__h")
@@ -49,41 +56,22 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """MinHash signatures as (id, __mh0..__mh{k-1}): min over distinct
-    shingles of xxhash64(shingle, seed_i).
+def _signatures_from_exploded(sh: DataFrame, id_col: str) -> DataFrame:
+    """(id, __s shingle) rows -> (id, __mh0..__mh{k-1}) MinHash
+    signatures: min over distinct shingles of xxhash64(shingle, seed_i).
 
-    Plan shape: explode distinct shingles -> ONE groupBy(id) with k
-    min-aggregates (seeds are python ints -> flat codegen, no nested
-    array recomputation). Shuffle carries k longs per doc. Docs with
-    no shingles are dropped (nothing to near-dup on).
-    """
-    sh = scale_out(df.select(id_col, text_col)).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(word_shingles(text_col, shingle_n))).alias("__s"),
-    )
-    return _signatures_from_exploded(sh, id_col, num_hashes)
-
-
-def _signatures_from_exploded(sh: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
-    """(id, __s shingle) rows -> (id, __mh0..__mh{k-1}) signatures."""
+    Plan shape: ONE groupBy(id) with k min-aggregates (seeds are python
+    ints -> flat codegen). Shuffle carries k longs per doc. Docs with
+    no shingles are absent (nothing to near-dup on)."""
     return sh.groupBy(id_col).agg(
-        *[F.min(F.xxhash64("__s", F.lit(i))).alias(f"__mh{i}") for i in range(num_hashes)]
+        *[F.min(F.xxhash64("__s", F.lit(i))).alias(f"__mh{i}") for i in range(MINHASH_HASHES)]
     )
 
 
-def _banded_keys(
-    with_sig: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
+def _banded_keys(with_sig: DataFrame, id_col: str) -> DataFrame:
     """(id, __mh0..__mh{k-1}) signatures -> (id, band, bhash) LSH
     bucket keys: one xxhash64 over each band's signature slice."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_HASHES // MINHASH_BANDS
     return with_sig.select(
         id_col,
         F.explode(
@@ -100,7 +88,7 @@ def _banded_keys(
                             ]
                         ).alias("bhash"),
                     )
-                    for b in range(bands)
+                    for b in range(MINHASH_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -109,33 +97,19 @@ def _banded_keys(
     )
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded LSH: split the signature
-    into ``bands`` groups of ``num_hashes/bands`` values, bucket on
-    (band_idx, xxhash64(band values)), self-join buckets.
+def minhash_lsh_candidates(shingles: DataFrame, id_col: str) -> DataFrame:
+    """Candidate near-dup pairs via banded LSH over ``shingles`` (id, sh
+    array): split each MinHash signature into ``MINHASH_BANDS`` groups
+    of ``MINHASH_HASHES / MINHASH_BANDS`` values, bucket on (band_idx,
+    xxhash64(band values)), self-join buckets.
 
     Shuffle volume: num_docs x bands small rows; candidate pairs only
     where a full band collides (the LSH s-curve). Returns distinct
-    (id_a, id_b), id_a < id_b. Pass ``shingles`` (id, sh array) to
-    reuse a precomputed/persisted tokenization.
+    (id_a, id_b), id_a < id_b.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    if shingles is not None:
-        exploded = shingles.select(F.col(id_col), F.explode("sh").alias("__s"))
-        with_sig = _signatures_from_exploded(exploded, id_col, num_hashes)
-    else:
-        with_sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
+    exploded = shingles.select(F.col(id_col), F.explode("sh").alias("__s"))
     banded = scoped_persist(
-        _banded_keys(with_sig, id_col, num_hashes, bands)
+        _banded_keys(_signatures_from_exploded(exploded, id_col), id_col)
         # persist: both self-join sides otherwise recompute the whole
         # signature pipeline (explode + k-agg groupBy). bands rows x
         # 20 bytes per doc; freed by the innermost cache_scope (callers
@@ -161,26 +135,21 @@ def minhash_lsh_candidates(
     return pairs
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup pairs via inverted index:
-    explode distinct shingles -> self-join on shingle -> |intersect| =
-    co-occurrence count -> Jaccard = inter / (|A|+|B|-inter).
+def jaccard_pairs(df: DataFrame, id_col: str, max_doc_freq: int = 100) -> DataFrame:
+    """EXACT 3-word-shingle Jaccard near-dup pairs (>= NEAR_DUP_JACCARD)
+    of ``text`` via inverted index: explode distinct shingles ->
+    self-join on shingle -> |intersect| = co-occurrence count ->
+    Jaccard = inter / (|A|+|B|-inter).
 
     No all-pairs comparison: only documents sharing >=1 shingle meet.
     At 100 TB, hot shingles are the skew risk: a shingle in k docs
-    produces k^2 candidate rows. With ``max_doc_freq`` set, shingles
-    above that document frequency are dropped from the inverted index,
-    which then serves as CANDIDATE GENERATION only; surviving pairs
-    are re-scored exactly from their full shingle arrays (so scores
-    are still exact). Pairs sharing ONLY stop-shingles are missed —
-    the deliberate trade (boilerplate overlap, not content overlap).
+    produces k^2 candidate rows. Shingles above ``max_doc_freq``
+    document frequency are dropped from the inverted index, which then
+    serves as CANDIDATE GENERATION only; surviving pairs are re-scored
+    exactly from their full shingle sets (so scores are still exact).
+    Pairs sharing ONLY stop-shingles are missed — the deliberate trade
+    (boilerplate overlap, not content overlap). A cap of at least the
+    document count makes no shingle hot: the plain inverted index.
 
     Caching: the (id, hash) projection is persisted because the plan
     consumes it up to 4x. The returned DataFrame is lazy, so the
@@ -196,9 +165,9 @@ def jaccard_pairs(
     sh = scoped_persist(
         # scale_out first: tokenization is CPU-bound and must not be
         # serialized onto the scan's (possibly single-split) layout
-        scale_out(df.select(id_col, text_col))
+        scale_out(df.select(id_col, "text"))
         .select(
-            F.col(id_col), F.explode(F.array_distinct(word_shingles(text_col, shingle_n))).alias("__s")
+            F.col(id_col), F.explode(F.array_distinct(word_shingles("text", 3))).alias("__s")
         )
         .select(id_col, F.xxhash64("__s").alias("sh"))
         # consumed 3x (sizes + both join sides): persist the tiny
@@ -206,17 +175,14 @@ def jaccard_pairs(
     )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
 
-    index = sh
-    hot_idx = None
-    if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("sh")
-        )
-        index = sh.join(F.broadcast(hot), on="sh", how="left_anti")
-        hot_idx = sh.join(F.broadcast(hot), on="sh", how="left_semi")
+    hot = (
+        sh.groupBy("sh")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > max_doc_freq)
+        .select("sh")
+    )
+    index = sh.join(F.broadcast(hot), on="sh", how="left_anti")
+    hot_idx = sh.join(F.broadcast(hot), on="sh", how="left_semi")
 
     a, b = index.alias("a"), index.alias("b")
     inter = (
@@ -225,28 +191,27 @@ def jaccard_pairs(
         .agg(F.count("*").alias("inter"))
     )
 
-    if max_doc_freq is not None:
-        # The rare index undercounts each candidate's intersection by
-        # exactly |hot(A) & hot(B)| (shingle sets partition into
-        # rare + hot), so correct with the TINY hot sub-index only —
-        # never re-score against the full index: that join scales with
-        # candidates x shingles-per-doc and triples the query at sf0.1
-        # even when zero shingles are actually hot.
-        inter = scoped_persist(inter)  # consumed twice below
-        hot_a = hot_idx.select(F.col(id_col).alias("id_a"), F.col("sh").alias("__hsh"))
-        hot_b = hot_idx.select(F.col(id_col).alias("id_b"), F.col("sh").alias("__hsh"))
-        hot_inter = (
-            inter.select("id_a", "id_b")
-            .join(hot_a, on="id_a")
-            .join(hot_b, on=["id_b", "__hsh"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("__hot_n"))
-        )
-        inter = (
-            inter.join(hot_inter, on=["id_a", "id_b"], how="left")
-            .withColumn("inter", F.col("inter") + F.coalesce("__hot_n", F.lit(0)))
-            .drop("__hot_n")
-        )
+    # The rare index undercounts each candidate's intersection by
+    # exactly |hot(A) & hot(B)| (shingle sets partition into rare +
+    # hot), so correct with the TINY hot sub-index only — never
+    # re-score against the full index: that join scales with
+    # candidates x shingles-per-doc and triples the query at sf0.1
+    # even when zero shingles are actually hot.
+    inter = scoped_persist(inter)  # consumed twice below
+    hot_a = hot_idx.select(F.col(id_col).alias("id_a"), F.col("sh").alias("__hsh"))
+    hot_b = hot_idx.select(F.col(id_col).alias("id_b"), F.col("sh").alias("__hsh"))
+    hot_inter = (
+        inter.select("id_a", "id_b")
+        .join(hot_a, on="id_a")
+        .join(hot_b, on=["id_b", "__hsh"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("__hot_n"))
+    )
+    inter = (
+        inter.join(hot_inter, on=["id_a", "id_b"], how="left")
+        .withColumn("inter", F.col("inter") + F.coalesce("__hot_n", F.lit(0)))
+        .drop("__hot_n")
+    )
 
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
@@ -254,22 +219,16 @@ def jaccard_pairs(
         inter.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn("jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NEAR_DUP_JACCARD)
     )
     return out.select("id_a", "id_b", "jaccard")
 
 
-def minhash_dedup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    threshold: float = 0.7,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> DataFrame:
-    """Full MinHash-LSH near-dup over 3-word shingles: LSH candidates,
-    then exact-Jaccard verification on the candidate set only (the
-    scale path: candidates << all pairs).
+def minhash_dedup_pairs(df: DataFrame, id_col: str) -> DataFrame:
+    """Full MinHash-LSH near-dup over 3-word shingles of ``text``: LSH
+    candidates, then exact-Jaccard verification (>= NEAR_DUP_JACCARD)
+    on the candidate set only (the scale path: candidates << all
+    pairs).
 
     Caching: the shingle-array projection is persisted (feeds the
     signature path and both verification joins). As with
@@ -278,12 +237,10 @@ def minhash_dedup_pairs(
     # tokenize once: the shingle-array projection feeds both the LSH
     # signature path and the verification joins
     sh = scoped_persist(
-        scale_out(df.select(id_col, text_col))
-        .select(F.col(id_col), F.array_distinct(word_shingles(text_col, 3)).alias("sh"))
+        scale_out(df.select(id_col, "text"))
+        .select(F.col(id_col), F.array_distinct(word_shingles("text", 3)).alias("sh"))
     )
-    cands = minhash_lsh_candidates(
-        df, id_col, text_col, num_hashes, bands, 3, shingles=sh
-    )
+    cands = minhash_lsh_candidates(sh, id_col)
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     verified = (
@@ -294,7 +251,7 @@ def minhash_dedup_pairs(
             F.size(F.array_intersect("sh_a", "sh_b"))
             / F.size(F.array_union("sh_a", "sh_b")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NEAR_DUP_JACCARD)
     )
     return verified.select("id_a", "id_b", "jaccard")
 
@@ -303,8 +260,8 @@ def minhash_dedup_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_signatures(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """SimHash signatures: (id, __sim bigint). Bit b of the signature
+def simhash_signatures(df: DataFrame, id_col: str) -> DataFrame:
+    """SimHash signatures of ``text``: (id, __sim bigint). Bit b of the signature
     = 1 iff sum over token OCCURRENCES of (bit b of hash60(token) ?
     +1 : -1) > 0.
 
@@ -323,8 +280,8 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str = "text") -> Da
     Scales linearly in corpus token count; shuffle carries 60
     ints per doc. Docs with no tokens get signature 0.
     """
-    tok = scale_out(df.select(id_col, text_col)).select(
-        F.col(id_col), F.explode_outer(tokens(text_col)).alias("__t")
+    tok = scale_out(df.select(id_col, "text")).select(
+        F.col(id_col), F.explode_outer(tokens("text")).alias("__t")
     )
     # conv(NULL) is NULL, so no-token docs (explode_outer's single
     # NULL row) hit the null vote branch below -> signature 0
@@ -351,45 +308,33 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str = "text") -> Da
     return votes.select(F.col(id_col), sig.alias("__sim"))
 
 
-def simhash_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash_a, simhash_b) <= max_hamming.
-
-    Pigeonhole LSH: split 64 bits into ``bands`` chunks; any pair
-    within Hamming <= bands-1 must agree exactly on >=1 chunk -> block
-    on (chunk_idx, chunk_value), verify Hamming on candidates via
-    bit_count(xor). For max_hamming=3, bands=4 gives exact recall.
+def simhash_dup_pairs(df: DataFrame, id_col: str) -> DataFrame:
+    """Near-dup pairs of ``text`` with Hamming(simhash_a, simhash_b) <= 3,
+    via :func:`banded_hamming_pairs` (exact recall at 4 bands).
     """
     # persist: both sides of the block self-join consume the signature
     # pipeline (explode + 64-agg groupBy) — without this it runs twice.
     # (id, sim64) is 16 bytes/doc; freed by the innermost cache_scope.
-    sig = scoped_persist(simhash_signatures(df, id_col, text_col))
-    return banded_hamming_pairs(
-        sig, id_col=id_col, sig_col="__sim", max_hamming=max_hamming, bands=bands
-    )
+    sig = scoped_persist(simhash_signatures(df, id_col))
+    return banded_hamming_pairs(sig, id_col=id_col, sig_col="__sim", max_hamming=3)
 
 
 def banded_hamming_pairs(
     sig: DataFrame,
     id_col: str,
     sig_col: str,
-    max_hamming: int = 3,
-    bands: int = 4,
+    max_hamming: int,
 ) -> DataFrame:
     """Pairs with Hamming(sig_a, sig_b) <= max_hamming over ANY 64-bit
     signature frame (SimHash, perceptual image hash, audio hash...).
 
-    Pigeonhole LSH: split 64 bits into ``bands`` chunks; any pair
-    within Hamming <= bands-1 must agree exactly on >=1 chunk -> block
-    on (chunk_idx, chunk_value), verify Hamming on candidates via
-    bit_count(xor). For max_hamming=3, bands=4 gives exact recall.
+    Pigeonhole LSH: split 64 bits into 4 chunks; any pair within
+    Hamming <= 3 must agree exactly on >=1 chunk -> block on
+    (chunk_idx, chunk_value), verify Hamming on candidates via
+    bit_count(xor). Exact recall for max_hamming <= 3.
     Callers own persisting ``sig`` (both join sides consume it).
     """
+    bands = 4
     chunk = 64 // bands
     blocked = sig.select(
         id_col,
@@ -441,12 +386,10 @@ def banded_hamming_pairs(
 def repeated_substring_spans(
     df: DataFrame,
     id_col: str,
-    text_col: str = "text",
-    min_tokens: int = 8,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Maximal token spans every position of which lies inside SOME
-    repeated ``>= min_tokens``-token substring — exactly the REMOVAL
+    repeated >= 8-token substring — exactly the REMOVAL
     SET of the exact-substring dedup pass production LM curation runs
     (Lee et al. 2022 cut any repeated 50-token substring; the
     reference implementation builds a corpus suffix array).
@@ -491,9 +434,7 @@ def repeated_substring_spans(
     """
     from pyspark.sql import Window
 
-    L = int(min_tokens)
-    if L < 2:
-        raise ValueError(f"min_tokens must be >= 2, got {L}")
+    L = 8
     # tokens_col lets a caller that ALSO needs the token arrays (the
     # apply/stats pair) tokenize the corpus once and share the frame —
     # the expression below must stay identical to the default path
@@ -502,7 +443,7 @@ def repeated_substring_spans(
         toks = df.select(F.col(id_col), F.col(tokens_col).alias("__t"))
     else:
         toks = df.select(
-            F.col(id_col), tokens(F.lower(F.col(text_col))).alias("__t")
+            F.col(id_col), tokens(F.lower(F.col("text"))).alias("__t")
         )
     # guard: sequence(1, 0) would DESCEND in Spark, fabricating
     # positions for short docs — emit an empty shingle array instead
@@ -591,11 +532,6 @@ def minhash_probe_pairs(
     incoming: DataFrame,
     history: DataFrame,
     id_col: str,
-    text_col: str = "text",
-    threshold: float = 0.7,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """ASYMMETRIC MinHash-LSH probe: near-dup pairs between an
     incoming lot and a (much larger) history corpus — the incremental
@@ -608,36 +544,30 @@ def minhash_probe_pairs(
 
     Candidates collide on (band, bhash) exactly as in the symmetric
     operator (same s-curve); verification re-scores every candidate
-    at exact Jaccard on the full shingle arrays, so precision is
-    100% by construction. Returns (id_in, id_hist, jaccard).
+    at exact Jaccard (>= NEAR_DUP_JACCARD) on the full shingle arrays,
+    so precision is 100% by construction. Returns (id_in, id_hist,
+    jaccard).
 
     Skew note: a viral boilerplate bucket fans out |lot-bucket| x
     |hist-bucket|; both sides of the join carry only (id, band,
     bhash) so AQE's skew split applies, and the verify join caps the
     damage at candidate count, not pair count squared."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
     sh_in = scoped_persist(
-        scale_out(incoming.select(id_col, text_col)).select(
+        scale_out(incoming.select(id_col, "text")).select(
             F.col(id_col),
-            F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"),
+            F.array_distinct(word_shingles("text", 3)).alias("sh"),
         )
     )
     sh_hist = scoped_persist(
-        scale_out(history.select(id_col, text_col)).select(
+        scale_out(history.select(id_col, "text")).select(
             F.col(id_col),
-            F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh"),
+            F.array_distinct(word_shingles("text", 3)).alias("sh"),
         )
     )
 
     def banded(sh: DataFrame) -> DataFrame:
         exploded = sh.select(F.col(id_col), F.explode("sh").alias("__s"))
-        return _banded_keys(
-            _signatures_from_exploded(exploded, id_col, num_hashes),
-            id_col,
-            num_hashes,
-            bands,
-        )
+        return _banded_keys(_signatures_from_exploded(exploded, id_col), id_col)
 
     cands = (
         banded(sh_in)
@@ -663,20 +593,14 @@ def minhash_probe_pairs(
             F.size(F.array_intersect("sh_a", "sh_b"))
             / F.size(F.array_union("sh_a", "sh_b")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NEAR_DUP_JACCARD)
         .select("id_in", "id_hist", "jaccard")
     )
 
 
-def prefix_filter_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """EXACT Jaccard near-dup pairs via PREFIX FILTERING (Chaudhuri
+def prefix_filter_pairs(df: DataFrame, id_col: str) -> DataFrame:
+    """EXACT Jaccard >= t = 1/2 near-dup pairs of ``text``'s 3-word
+    shingles via PREFIX FILTERING (Chaudhuri
     et al. SSJoin'06 / Bayardo et al. All-Pairs WWW'07 / Xiao et al.
     PPJoin WWW'08): order every document's shingle set by a global
     total order (document frequency ascending — rarest first), index
@@ -691,72 +615,38 @@ def prefix_filter_pairs(
     So recall is exactly 1 for ANY consistent tie-broken order, and
     the final exact re-score makes precision 1: the output EQUALS the
     full inverted-index join's, while the candidate join touches only
-    prefix postings — at t=0.7 that is ~30% of the index, and the
+    prefix postings — at t=0.5 that is ~half of the index, and the
     df-ascending order concentrates prefixes on RARE shingles, so
     posting lists in the candidate join are short where it matters.
     A length filter (min_sz >= t * max_sz, implied by J >= t since
     J <= min/max) prunes candidates before the verify join.
 
-    With ``max_doc_freq`` set, shingles above that document frequency
-    are REMOVED from the shingle space entirely and Jaccard is
-    computed over the remaining (content-bearing) shingles — unlike
-    ``jaccard_pairs``' candidate-only prune + full-set re-score, this
-    keeps the prefix theorem exact over the filtered sets AND bounds
-    every posting list at ``max_doc_freq``, which is the 100 TB
-    posture: boilerplate never fans out, and the quadratic term is
-    capped at df^2 per shingle.
+    Shingles with document frequency above 100 are REMOVED from the
+    shingle space entirely and Jaccard is computed over the remaining
+    (content-bearing) shingles — unlike ``jaccard_pairs``' candidate-
+    only prune + full-set re-score, this keeps the prefix theorem exact
+    over the filtered sets AND bounds every posting list at 100, which
+    is the 100 TB posture: boilerplate never fans out, and the
+    quadratic term is capped at df^2 per shingle.
 
     Returns (id_a, id_b, jaccard) over the (filtered) shingle space.
     Caching: the (id, shingle-hash) projection is consumed 4x
     (df ranks, sizes, both verify legs) — persisted via
     ``scoped_persist``; materialize within a ``cache_scope()``.
     """
-    from fractions import Fraction
-
     from pyspark.sql import Window
 
-    # exact rational threshold p/q: float ceil(t*sz) can overshoot the
-    # prefix theorem's integer bound when t's double representation
-    # rounds UP (e.g. 0.1 -> 0.1000000000000000055..., ceil(0.1*30)=4
-    # not 3), shrinking the indexed prefix below what the theorem
-    # requires and silently dropping pairs at exactly J = t. All three
-    # bounds (prefix, length filter, final Jaccard cut) use integer
-    # arithmetic on p/q so recall is exactly 1 at the boundary.
-    # Fraction(str(x)) is EXACT for any float: str() yields a finite
-    # decimal (the shortest round-tripping repr), and every finite
-    # decimal is a rational. A threshold like 2/3 arrives as the float
-    # 0.6666666666666666, whose exact fraction has q = 10^16 — large
-    # enough that the integer bound products below (worst case
-    # ~2*max_set_size*(p+q)) overflow int64 for set sizes above a few
-    # hundred and, with ANSI off, WRAP SILENTLY into wrong filters. So:
-    # keep the exact fraction when its products provably fit; otherwise
-    # reduce via limit_denominator and accept the reduction ONLY if it
-    # round-trips to the caller's float (2/3 does — same threshold,
-    # exact); else fail loudly rather than compute wrong bounds.
-    # q <= 2^31 keeps every product under 2^63 for set sizes < 2^30
-    # (a single document's distinct shingle count; ~10^9 shingles/doc
-    # is far beyond any real document).
-    _MAX_DEN = 1 << 31
-    frac = Fraction(str(threshold))
-    if frac.denominator > _MAX_DEN:
-        reduced = frac.limit_denominator(_MAX_DEN)
-        if float(reduced) != float(threshold):
-            raise ValueError(
-                f"threshold {threshold!r} needs denominator "
-                f"{frac.denominator} > 2^31; integer Jaccard bounds "
-                "would overflow int64. Pass a threshold whose exact "
-                "rational form has a denominator <= 2^31 (e.g. a "
-                "short decimal like 0.7, or a float that is exactly "
-                "p/q such as 2/3)."
-            )
-        frac = reduced
-    t_num, t_den = frac.numerator, frac.denominator
+    # t = 1/2 as the exact rational p/q: all three bounds (prefix,
+    # length filter, final Jaccard cut) use integer arithmetic on p/q,
+    # so a pair at exactly J = t is kept (a float ceil(t*sz) can
+    # overshoot the prefix theorem's integer bound).
+    t_num, t_den = 1, 2
 
     sh = (
-        scale_out(df.select(id_col, text_col))
+        scale_out(df.select(id_col, "text"))
         .select(
             F.col(id_col),
-            F.explode(F.array_distinct(word_shingles(text_col, shingle_n))).alias("__s"),
+            F.explode(F.array_distinct(word_shingles("text", 3))).alias("__s"),
         )
         .select(id_col, F.xxhash64("__s").alias("sh"))
     )
@@ -769,18 +659,14 @@ def prefix_filter_pairs(
     # shingle). Previously: shingling ran twice (hot lineage + sh
     # materialization) and the df groupBy shuffled the stream twice
     # (hot + dfreq).
-    if max_doc_freq is not None:
-        sh = scoped_persist(sh)
-        wc = scoped_persist(sh.groupBy("sh").agg(F.count("*").alias("tdf")))
-        hot = wc.filter(F.col("tdf") > max_doc_freq).select("sh")
-        # broadcast anti-join stays map-side over the cached frame; its
-        # two consumers (prefix ranks, verify sets) re-run only the
-        # row-local probe, never the shingling
-        sh = sh.join(F.broadcast(hot), on="sh", how="left_anti")
-        dfreq = wc.filter(F.col("tdf") <= max_doc_freq)
-    else:
-        sh = scoped_persist(sh)
-        dfreq = sh.groupBy("sh").agg(F.count("*").alias("tdf"))
+    sh = scoped_persist(sh)
+    wc = scoped_persist(sh.groupBy("sh").agg(F.count("*").alias("tdf")))
+    hot = wc.filter(F.col("tdf") > 100).select("sh")
+    # broadcast anti-join stays map-side over the cached frame; its
+    # two consumers (prefix ranks, verify sets) re-run only the
+    # row-local probe, never the shingling
+    sh = sh.join(F.broadcast(hot), on="sh", how="left_anti")
+    dfreq = wc.filter(F.col("tdf") <= 100)
 
     # per-doc sorted set + size in ONE groupBy (sizes was a second
     # full shuffle on the same key); doc_sets persists for its three

@@ -31,6 +31,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Superstep counts and integer scales of the catalog's graph queries;
+# their unrolled-CTE oracles in queries/tpch_shapes.py read the same
+# constants, so an operator and its oracle cannot drift apart.
+PAGERANK_ITERATIONS, PAGERANK_SCALE, PAGERANK_DAMPING_PCT = 3, 10**9, 85
+HITS_ITERATIONS, HITS_SCALE = 2, 10**6
+LPA_ITERATIONS = 3
+BFS_MAX_HOPS = 3
+SSSP_ITERATIONS = 4
+KCORE_K, KCORE_ROUNDS = 4, 3
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Undirected edges -> canonical orientation (u > v), self-loops
@@ -99,13 +109,11 @@ def _checksum(edges: DataFrame) -> tuple:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     max_iterations: int = 30,
     num_partitions: int | None = None,
     driver_threshold: int = 2_000_000,
 ) -> DataFrame:
-    """(src, dst) undirected edges -> (id, component) with component =
+    """(id_a, id_b) undirected edges -> (id, component) with component =
     min vertex id in the component. Isolated vertices don't appear
     (callers union them back with component = own id); vertices seen
     only in self-loops map to themselves.
@@ -128,7 +136,7 @@ def connected_components(
     """
     # edges may be an expensive pipeline (e.g. MinHash-LSH): materialize
     # once — both strategies consume the frame more than once
-    edges = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
+    edges = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).persist()
     n_edges = edges.count()
     if n_edges <= driver_threshold:
         out = _union_find_components(edges)
@@ -226,7 +234,7 @@ def dedup_clusters(
     is_canonical): every document assigned a cluster (singletons are
     their own), canonical = min id in cluster — the keep-set for
     cluster-level dedup."""
-    comps = connected_components(pairs, "id_a", "id_b", num_partitions=num_partitions)
+    comps = connected_components(pairs, num_partitions=num_partitions)
     out = (
         all_ids.select(F.col(id_col).alias("id"))
         .join(comps, on="id", how="left")
@@ -242,10 +250,10 @@ def dedup_clusters(
 def pagerank_int(
     nodes: DataFrame,
     edges: DataFrame,
-    iterations: int = 3,
     checkpoint_every: int = 5,
 ) -> DataFrame:
-    """PageRank power iteration in FIXED-POINT INTEGER arithmetic.
+    """PageRank power iteration in FIXED-POINT INTEGER arithmetic,
+    ``PAGERANK_ITERATIONS`` rounds.
 
     ``nodes``: one column ``node``; ``edges``: directed, deduped
     ``(src, dst)``. Returns ``(node, rank)`` with ranks scaled by
@@ -269,8 +277,8 @@ def pagerank_int(
     ``checkpoint_every`` rounds to truncate lineage to a leaf (the
     same iteration rule the connected-components loop above pins).
     One materialization per checkpoint is the price; flat per-round
-    plan size is the win (tests/test_extensions.py pins a
-    20-iteration run).
+    plan size is the win (tests/test_extensions.py pins it with a
+    checkpoint every round).
 
     The edge list (and the out-degree frame derived from it) is
     localCheckpoint()ed ONCE before the loop — but only when the rank
@@ -281,10 +289,11 @@ def pagerank_int(
     actions reuse cannot happen and a derived ``edges`` (the trade
     graph is a 6-way TPC-H join) would re-run per segment — the GraphX
     rule "persist the graph before iterating"."""
+    iterations = PAGERANK_ITERATIONS
     if iterations > checkpoint_every:
         edges = edges.localCheckpoint()
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    scale, damping_pct = 10**9, 85
+    scale, damping_pct = PAGERANK_SCALE, PAGERANK_DAMPING_PCT
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.select("node", F.lit(scale).cast("bigint").alias("rank"))
     for i in range(iterations):
@@ -313,12 +322,12 @@ def pagerank_int(
     return ranks
 
 
-def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle counts via DEGREE-ORDERED edge orientation
     (the compact-forward algorithm; Schank & Wagner 2005, the same
     orientation Cohen's MapReduce triangle paper and GraphFrames use).
 
-    Input: edges in any orientation (self-loops dropped, duplicates
+    Input: ``(src, dst)`` edges in any orientation (self-loops dropped, duplicates
     collapsed; treated as UNDIRECTED). Output: ``(id, deg, tri)`` —
     undirected degree and the number of distinct triangles through
     each vertex, for every vertex incident to >= 1 edge.
@@ -343,7 +352,7 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
     which Spark's ReusedExchange dedups for free (measured: an eager
     localCheckpoint here is ~10% SLOWER — it adds a full extra
     evaluation to save recomputes that were never happening)."""
-    und = _canonical(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    und = _canonical(edges.select(F.col("src").alias("u"), F.col("dst").alias("v")))
     sym = und.unionByName(
         und.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -393,11 +402,10 @@ def bfs_hops(
     nodes: DataFrame,
     edges: DataFrame,
     source,
-    max_hops: int = 3,
     checkpoint_every: int = 5,
 ) -> DataFrame:
     """Breadth-first hop distances from ``source`` over DIRECTED
-    ``(src, dst)`` edges, bounded at ``max_hops`` supersteps.
+    ``(src, dst)`` edges, bounded at ``BFS_MAX_HOPS`` supersteps.
 
     Returns ``(node, hops)`` for every node in ``nodes``: 0 for the
     source, the minimum edge count for nodes reached within the bound,
@@ -420,6 +428,7 @@ def bfs_hops(
     ACTIONS (max_hops > checkpoint_every) — across actions a derived
     edge frame re-runs per segment; within one action ReusedExchange
     dedups it for free."""
+    max_hops = BFS_MAX_HOPS
     if max_hops > checkpoint_every:
         edges = edges.localCheckpoint()
     visited = nodes.filter(F.col("node") == source).select(
@@ -448,13 +457,10 @@ def bfs_hops(
     )
 
 
-def label_propagation(
-    nodes: DataFrame,
-    edges: DataFrame,
-    iterations: int = 3,
-) -> DataFrame:
+def label_propagation(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Weighted SYNCHRONOUS label propagation (Raghavan et al. 2007,
-    determinized): labels init to the node id; each round every node
+    determinized), ``LPA_ITERATIONS`` rounds: labels init to the node
+    id; each round every node
     adopts the label carrying the max total incident weight among its
     in-neighbors' PREVIOUS-round labels, ties to the smallest label;
     isolated nodes keep theirs. Communities = the fixed labels.
@@ -470,22 +476,15 @@ def label_propagation(
     Scale: each round is one join of labels against the edge list
     (shuffle on src) + a groupBy (dst, label) + a per-NODE window
     over its candidate labels (bounded by degree, never graph-sized).
-    Lineage is localCheckpoint()ed every 5 rounds
-    — the iteration rule connected_components and pagerank_int pin.
+    A few rounds run as ONE action, where ReusedExchange dedups the
+    edge subtree across rounds, so nothing is checkpointed.
 
     ``edges``: (src, dst, w) directed — symmetrize first for
-    undirected community semantics. The edge list is
-    localCheckpoint()ed ONCE before the loop when the label
-    checkpoints will split the run into multiple ACTIONS (iterations >
-    5) — across actions a derived edge frame re-runs
-    per segment; within one action ReusedExchange dedups it for
-    free."""
+    undirected community semantics."""
     from pyspark.sql import Window
 
-    if iterations > 5:
-        edges = edges.localCheckpoint()
     labels = nodes.select("node", F.col("node").alias("label"))
-    for i in range(iterations):
+    for _ in range(LPA_ITERATIONS):
         contrib = (
             edges.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"), "label")
@@ -502,8 +501,6 @@ def label_propagation(
         labels = labels.join(best, "node", "left").select(
             "node", F.coalesce("__new", "label").alias("label")
         )
-        if (i + 1) % 5 == 0 and (i + 1) < iterations:
-            labels = labels.localCheckpoint()
     return labels
 
 
@@ -529,16 +526,11 @@ def _peel_round(alive: DataFrame, k: int) -> DataFrame:
     )
 
 
-def k_core(
-    nodes: DataFrame,
-    edges: DataFrame,
-    k: int = 3,
-    rounds: int = 3,
-) -> DataFrame:
+def k_core(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """k-core decomposition by iterative degree peeling: each round
     drops every vertex whose UNDIRECTED degree in the current
-    subgraph is < k (and every edge touching one), for a FIXED number
-    of ``rounds``. Returns ``(node, deg, in_core)`` for every node in
+    subgraph is < k = ``KCORE_K`` (and every edge touching one), for a
+    FIXED number of ``KCORE_ROUNDS`` rounds. Returns ``(node, deg, in_core)`` for every node in
     ``nodes``: degree within the surviving subgraph (0 when peeled or
     isolated) and whether that degree still clears k.
 
@@ -570,8 +562,9 @@ def k_core(
     always truncates per round); each materialization is the
     shrinking edge set, the same cost GraphX's iterative peeling
     pays."""
+    k = KCORE_K
     alive = _canonical(edges.select(F.col("u"), F.col("v"))).localCheckpoint()
-    for _ in range(rounds):
+    for _ in range(KCORE_ROUNDS):
         alive = _peel_round(alive, k).localCheckpoint()
     sym = alive.unionByName(
         alive.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -584,14 +577,9 @@ def k_core(
     )
 
 
-def sssp_bounded(
-    nodes: DataFrame,
-    edges: DataFrame,
-    source: DataFrame,
-    iterations: int = 4,
-) -> DataFrame:
+def sssp_bounded(nodes: DataFrame, edges: DataFrame, source: DataFrame) -> DataFrame:
     """Single-source shortest paths (Bellman-Ford supersteps), bounded
-    to ``iterations`` hops, in EXACT integer arithmetic.
+    to ``SSSP_ITERATIONS`` hops, in EXACT integer arithmetic.
 
     ``nodes``: one column ``node``; ``edges``: directed
     ``(src, dst, w)`` with non-negative BIGINT weights; ``source``:
@@ -611,9 +599,8 @@ def sssp_bounded(
     localCheckpoint()s EVERY round — the multiplicative-self-
     reference rule k_core pins (operators/graph.py:k_core)."""
     dist = source.select("node", F.lit(0).cast("bigint").alias("dist")).localCheckpoint()
-    if iterations > 1:
-        edges = edges.localCheckpoint()
-    for _ in range(iterations):
+    edges = edges.localCheckpoint()
+    for _ in range(SSSP_ITERATIONS):
         relaxed = (
             edges.join(
                 dist.select(F.col("node").alias("src"), F.col("dist").alias("d0")),
@@ -633,11 +620,7 @@ def sssp_bounded(
     return nodes.join(dist, "node", "left")
 
 
-def hits_int(
-    nodes: DataFrame,
-    edges: DataFrame,
-    iterations: int = 2,
-) -> DataFrame:
+def hits_int(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg JACM'99) in FIXED-POINT
     INTEGER arithmetic — the link-analysis complement to
     ``pagerank_int`` above: PageRank scores global endorsement flow,
@@ -647,8 +630,9 @@ def hits_int(
     out-neighbors.
 
     ``nodes``: one column ``node``; ``edges``: directed, deduped
-    ``(src, dst)``. Returns ``(node, authority, hub)`` scaled by
-    ``scale`` = 10^6 (each round's max score = ``scale`` = 1.0).
+    ``(src, dst)``. Runs ``HITS_ITERATIONS`` rounds and returns
+    ``(node, authority, hub)`` scaled by ``scale`` = 10^6 (each
+    round's max score = ``scale`` = 1.0).
 
     Why integers: the standard HITS normalizes by the L2 norm —
     irrational, engine-divergent. L-infinity normalization
@@ -662,16 +646,10 @@ def hits_int(
     Scale: each half-round is one join of scores against the edge
     list (shuffle on src or dst) plus a groupBy — a Pregel superstep;
     the round max is a single broadcast scalar (one-row crossJoin),
-    never a collect. Lineage: same rules as pagerank_int — edges
-    checkpointed once IF score checkpoints split the run into
-    multiple actions; scores every 5 rounds."""
-    if iterations > 5:
-        edges = edges.localCheckpoint()
-    # only `hub` seeds the recursion (the first half-round overwrites
-    # auth before any read); this init is returned solely when
-    # iterations == 0
-    scale = 10**6
-    auth = nodes.select("node", F.lit(scale).cast("bigint").alias("a"))
+    never a collect. The few rounds run as ONE action, so nothing is
+    checkpointed."""
+    scale = HITS_SCALE
+    # only `hub` seeds the recursion: the first half-round computes auth
     hub = nodes.select("node", F.lit(scale).cast("bigint").alias("h"))
 
     def _half(scores: DataFrame, col: str, join_key: str, out_key: str,
@@ -699,14 +677,11 @@ def hits_int(
             .cast("bigint").alias(out_col),
         )
 
-    for i in range(iterations):
+    for _ in range(HITS_ITERATIONS):
         # authorities from hubs (in-edges), then hubs from the NEW
         # authorities (out-edges) — the standard update order
         auth = _half(hub, "h", "src", "dst", "a")
         hub = _half(auth, "a", "dst", "src", "h")
-        if (i + 1) % 5 == 0 and (i + 1) < iterations:
-            auth = auth.localCheckpoint()
-            hub = hub.localCheckpoint()
     return (
         auth.join(hub, "node")
         .select("node", F.col("a").alias("authority"), F.col("h").alias("hub"))

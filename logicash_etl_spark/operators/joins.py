@@ -105,11 +105,9 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
 ) -> DataFrame:
     """As-of join: for each left row, the latest right row with
-    ``right_ts <= left_ts``, per key; right columns come back with a
+    ``right.ts <= left.ts``, per key; right columns come back with a
     ``_right`` suffix.
 
     Strategy (pure DataFrame, no Python boundary): union the two
@@ -126,8 +124,8 @@ def asof_join(
     skewed keys split via AQE.
     """
     keys = [on] if isinstance(on, str) else list(on)
-    lcols = [c for c in left.columns if c not in keys and c != left_ts]
-    rcols = [c for c in right.columns if c not in keys and c != right_ts]
+    lcols = [c for c in left.columns if c not in keys and c != "ts"]
+    rcols = [c for c in right.columns if c not in keys and c != "ts"]
     # r13 (ADVICE): reject EVERY internal working name on BOTH sides,
     # not just __rt — a left column named __r/__t/__is_left was
     # silently clobbered by the union's tag/payload columns and came
@@ -149,7 +147,7 @@ def asof_join(
     # window ordered NULLS FIRST, they sort before
     # every right row and naturally resolve to a NULL payload (the
     # left-outer posture) in the same single pass.
-    right = right.filter(F.col(right_ts).isNotNull())
+    right = right.filter(F.col("ts").isNotNull())
 
     # right-side payload rides as ONE struct: the struct is non-null
     # for every right row even when its FIELDS are null, so
@@ -159,22 +157,22 @@ def asof_join(
     # take the whole row, nulls included)
     r_payload = F.struct(
         *[F.col(c).alias(c) for c in rcols],
-        F.col(right_ts).alias("__rt"),
+        F.col("ts").alias("__rt"),
     )
     r_struct_type = T.StructType(
         [T.StructField(c, right.schema[c].dataType) for c in rcols]
-        + [T.StructField("__rt", right.schema[right_ts].dataType)]
+        + [T.StructField("__rt", right.schema["ts"].dataType)]
     )
     l_tag = left.select(
         *keys,
-        F.col(left_ts).alias("__t"),
+        F.col("ts").alias("__t"),
         F.lit(1).alias("__is_left"),
         *[F.col(c) for c in lcols],
         F.lit(None).cast(r_struct_type).alias("__r"),
     )
     r_tag = right.select(
         *keys,
-        F.col(right_ts).alias("__t"),
+        F.col("ts").alias("__t"),
         F.lit(0).alias("__is_left"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
         r_payload.alias("__r"),
@@ -199,10 +197,10 @@ def asof_join(
     # containing a dot would break the path parse
     return filled.filter(F.col("__is_left") == 1).select(
         *keys,
-        F.col("__t").alias(left_ts),
+        F.col("__t").alias("ts"),
         *[F.col(c) for c in lcols],
         *[F.col("__r").getField(c).alias(f"{c}_right") for c in rcols],
-        F.col("__r").getField("__rt").alias(f"{right_ts}_right"),
+        F.col("__r").getField("__rt").alias("ts_right"),
     )
 
 
@@ -376,16 +374,16 @@ def join_with_skew_salt(
     big: DataFrame,
     small: DataFrame,
     on: str,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Equi-join with manual key salting for pathological skew.
 
-    The big side gets a random salt in [0, salt_buckets); the small
-    side is replicated across every salt value, then the join runs on
+    The big side gets a random salt in [0, 8); the small side is
+    replicated across every salt value, then the join runs on
     (key, salt). Use when AQE's skew splitting is not available/enough
     (e.g. skewed *broadcast-ineligible* dimension). At 100 TB a single
     hot key (null, 'UNKNOWN', ...) otherwise pins one task forever.
     """
+    salt_buckets = 8
     salted_big = big.withColumn("__salt", (F.rand(seed=7) * salt_buckets).cast("int"))
     salts = small.sparkSession.range(salt_buckets).select(F.col("id").cast("int").alias("__salt"))
     salted_small = small.crossJoin(F.broadcast(salts))
@@ -584,15 +582,11 @@ def bloom_filter_probe_literal(
     )
 
 
-def qgram_edit_join(
-    df: DataFrame,
-    str_col: str,
-    max_dist: int = 2,
-    q: int = 2,
-) -> DataFrame:
+def qgram_edit_join(df: DataFrame, str_col: str) -> DataFrame:
     """LOSSLESS edit-distance self-join over the DISTINCT values of
-    ``str_col``: every unordered pair within ``max_dist`` Levenshtein
-    edits, with no blocking recall loss — the complement to
+    ``str_col``: every unordered pair within ``max_dist`` = 2
+    Levenshtein edits, via positional ``q`` = 2-grams, with no
+    blocking recall loss — the complement to
     ``fuzzy_self_join`` (which trades recall for prefix/suffix
     blocking).
 
@@ -624,6 +618,7 @@ def qgram_edit_join(
     """
     from logicash_etl_spark.operators.caching import scoped_persist
 
+    max_dist, q = 2, 2
     # names is the vocabulary-bounded distinct frame and feeds SIX
     # consumers (both gram sides, both length sides, both short-pool
     # sides) — unpersisted, each re-scanned the fact-sized input

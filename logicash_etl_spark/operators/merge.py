@@ -28,7 +28,7 @@ def upsert_if_newer(
     updates: DataFrame,
     keys: list[str],
     order_by: str,
-    tiebreak: list[str] | None = None,
+    tiebreak: list[str],
 ) -> DataFrame:
     """Conditional upsert: an update replaces the target row only when
     it is NEWER (``MERGE ... WHEN MATCHED AND s.ts > t.ts``). A plain
@@ -47,30 +47,21 @@ def scd2_apply(
     updates: DataFrame,
     keys: list[str],
     effective_ts: str,
-    tracked_cols: list[str] | None = None,
+    tracked_cols: list[str],
 ) -> DataFrame:
     """SCD Type 2: keep full history with [valid_from, valid_to)
     ranges and an is_current flag.
 
     ``dim`` must carry valid_from/valid_to/is_current (bootstrap with
-    ``scd2_init``). For each update whose tracked attributes differ
+    ``scd2_init``). For each update whose ``tracked_cols`` differ
     from the key's current row: close the current row
     (valid_to = update ts) and append the update as the new current
     version. Unchanged updates are no-ops; brand-new keys insert.
     """
-    tracked = tracked_cols or [
-        c
-        for c in updates.columns
-        if c not in keys and c != effective_ts
-    ]
-    if not tracked:
+    if not tracked_cols:
         # a None changed-predicate would null out BOTH the keep-current
         # and closed filters below and silently drop matched rows
-        raise ValueError(
-            "scd2_apply: no tracked columns (updates carry only keys + "
-            f"{effective_ts!r}) — nothing to version; pass tracked_cols "
-            "explicitly if attribute columns live outside `updates`"
-        )
+        raise ValueError("scd2_apply: no tracked columns — nothing to version")
     cur = dim.filter(F.col("is_current"))
     hist = dim.filter(~F.col("is_current"))
     dim_cols = dim.columns
@@ -90,7 +81,7 @@ def scd2_apply(
     joined = scoped_persist(cur.join(upd, on=cond, how="full"))
 
     changed_pred = None
-    for c in tracked:
+    for c in tracked_cols:
         neq = F.coalesce(F.col(c).cast("string"), F.lit("\0")) != F.coalesce(
             F.col(f"__u_{c}").cast("string"), F.lit("\0")
         )

@@ -9,10 +9,11 @@ asks. Decode / feature-extract / resize / frame-sample run as
 Arrow-batched ``mapInPandas`` so bytes cross the Python boundary once
 per batch, not per row.
 
-Decode kernels auto-select: PIL when importable, else a deterministic
-fake decoder (this container has no codecs). The Spark-side plumbing —
-schema, batching, partition sizing, UDF signatures — is identical for
-both and tested with an injected custom kernel as well.
+Decode runs deterministic stand-in kernels (``_fake_image_decode``,
+``_fake_pixel_grid``) derived from a content digest: no codec is
+installed, and the catalog's oracles model byte identity. The
+Spark-side plumbing — schema, batching, partition sizing, UDF
+signatures — is what a real codec kernel would ride unchanged.
 """
 
 from __future__ import annotations
@@ -47,58 +48,25 @@ def media_stats(df: DataFrame) -> DataFrame:
 
 def _fake_image_decode(data: bytes) -> tuple[int, int, str]:
     """Deterministic stand-in for a real decoder: derives (width,
-    height, format) from a content digest. Used only when no real
-    codec is importable."""
+    height, format) from a content digest."""
     if data is None:
         raise ValueError("no bytes")
     h = hashlib.sha256(data).digest()
     return 16 + h[0] % 64, 16 + h[1] % 64, "png" if h[2] % 2 else "jpeg"
 
 
-def _pil_image_decode(data: bytes) -> tuple[int, int, str]:
-    """Real decode kernel: PIL header parse (lazy import so the probe
-    runs in the worker process that executes the batch)."""
-    import io
-
-    import PIL.Image
-
-    with PIL.Image.open(io.BytesIO(data)) as img:
-        return img.width, img.height, (img.format or "unknown").lower()
-
-
-def _pil_available() -> bool:
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _select_kernel():
-    """Real codec when importable, deterministic fake otherwise — the
-    fake is the fallback, never the override."""
-    return _pil_image_decode if _pil_available() else _fake_image_decode
-
-
 IMAGE_META_SCHEMA = "id long, width int, height int, format string, media_bytes long"
 
 
-def decode_image_meta(
-    df: DataFrame,
-    id_col: str = "id",
-    kernel=None,
-) -> DataFrame:
-    """Decode image dimensions via Arrow-batched mapInPandas.
+def decode_image_meta(df: DataFrame) -> DataFrame:
+    """Decode image dimensions of ``(doc_id, media)`` rows via
+    Arrow-batched mapInPandas.
 
     Plumbing is real: one Python roundtrip per Arrow batch, schema
-    declared, nulls preserved. The decode kernel auto-selects — PIL
-    when importable, else the deterministic stub — or inject one via
-    ``kernel`` (a ``bytes -> (width, height, format)`` callable; the
-    tests use this to drive the plumbing with a custom codec).
+    declared, nulls preserved. The kernel is the deterministic
+    ``_fake_image_decode``.
     """
-    kernel = kernel or _select_kernel()
-    cols = df.select(F.col(id_col).alias("id"), F.col("media.data").alias("data"))
+    cols = df.select(F.col("doc_id").alias("id"), F.col("media.data").alias("data"))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -111,7 +79,7 @@ def decode_image_meta(
                 if data is None:
                     w, h, fmt, nb = None, None, None, None
                 else:
-                    w, h, fmt = kernel(bytes(data))
+                    w, h, fmt = _fake_image_decode(bytes(data))
                     nb = len(data)
                 out["id"].append(i)
                 out["width"].append(w)
@@ -131,50 +99,44 @@ def decode_image_meta(
     return cols.mapInPandas(batches, schema=IMAGE_META_SCHEMA)
 
 
-def frame_sample_plan(
-    df: DataFrame, id_col: str = "id", every_n: int = 10
-) -> DataFrame:
-    """Video frame-sampling *plan*: emits (id, frame_idx) rows the
-    decoder would materialize — demonstrates the explode/partition
-    shape (1 video row -> k frame rows) without a codec. Frame count
-    is derived from byte length as a deterministic stand-in."""
+def frame_sample_plan(df: DataFrame) -> DataFrame:
+    """Video frame-sampling *plan*: emits (id, frame_idx) rows, every
+    10th frame of each ``doc_id``, that the decoder would materialize —
+    demonstrates the explode/partition shape (1 video row -> k frame
+    rows) without a codec. Frame count is derived from byte length as
+    a deterministic stand-in."""
     n_frames = (F.length(F.col("media.data")) / 100).cast("int") + 1
     return df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))).alias("frame_idx"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.sequence(F.lit(0), n_frames - 1, F.lit(10))).alias("frame_idx"),
     )
 
 
-def _fake_pixel_grid(data: bytes, w: int = 9, h: int = 8) -> list[int]:
-    """Deterministic stand-in for decode+resize: w*h grayscale pixels
-    derived from a counter-mode sha256 stream of the content — byte-
-    identical media always produce the same grid (so dHash finds true
-    content dups), distinct media get ~independent grids. Used only
-    when no real codec is importable."""
+# dHash grid: 9 columns x 8 rows of grayscale pixels -> 8 x 8 gradients
+_GRID_W, _GRID_H = 9, 8
+
+
+def _fake_pixel_grid(data: bytes) -> list[int]:
+    """Deterministic stand-in for decode+resize: a row-major grid of
+    grayscale pixels derived from a counter-mode sha256 stream of the
+    content — byte-identical media always produce the same grid (so
+    dHash finds true content dups), distinct media get ~independent
+    grids."""
     out: list[int] = []
     i = 0
-    while len(out) < w * h:
+    while len(out) < _GRID_W * _GRID_H:
         out.extend(hashlib.sha256(data + i.to_bytes(4, "big")).digest())
         i += 1
-    return out[: w * h]
+    return out[: _GRID_W * _GRID_H]
 
 
-def _pil_pixel_grid(data: bytes, w: int = 9, h: int = 8) -> list[int]:
-    """Real kernel: decode, resize to (w, h), grayscale pixel list."""
-    import io
-
-    import PIL.Image
-
-    with PIL.Image.open(io.BytesIO(data)) as img:
-        return list(img.convert("L").resize((w, h)).getdata())
-
-
-def _dhash64(grid: list[int], w: int = 9, h: int = 8) -> int:
+def _dhash64(grid: list[int]) -> int:
     """Difference hash: bit (r*8 + c) = 1 iff pixel(r,c) < pixel(r,c+1)
     — 8 rows x 8 horizontal gradients = 64 bits, robust to global
     brightness/scale changes on real images."""
+    w = _GRID_W
     v = 0
-    for r in range(h):
+    for r in range(_GRID_H):
         for c in range(w - 1):
             if grid[r * w + c] < grid[r * w + c + 1]:
                 v |= 1 << (r * (w - 1) + c)
@@ -182,25 +144,17 @@ def _dhash64(grid: list[int], w: int = 9, h: int = 8) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def phash_image(
-    df: DataFrame,
-    id_col: str = "id",
-    pixel_kernel=None,
-) -> DataFrame:
-    """Perceptual (difference) hash per media row -> (id, phash long),
-    via Arrow-batched mapInPandas — bytes cross the Python boundary
-    once per batch. Kernel auto-selects (PIL resize when importable,
-    deterministic fake grid otherwise) or inject via ``pixel_kernel``
-    (``bytes -> list[int]`` of 72 grayscale values).
+def phash_image(df: DataFrame) -> DataFrame:
+    """Perceptual (difference) hash per ``(doc_id, media)`` row ->
+    (id, phash long), via Arrow-batched mapInPandas — bytes cross the
+    Python boundary once per batch. The pixel grid is the deterministic
+    ``_fake_pixel_grid``.
 
     Feed the result to
     :func:`~logicash_etl_spark.operators.dedup.banded_hamming_pairs`
     for near-dup pairs — the image-side twin of SimHash text dedup.
     """
-    if pixel_kernel is None:
-        pixel_kernel = _pil_pixel_grid if _pil_available() else _fake_pixel_grid
-
-    cols = df.select(F.col(id_col).alias("id"), F.col("media.data").alias("data"))
+    cols = df.select(F.col("doc_id").alias("id"), F.col("media.data").alias("data"))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -213,7 +167,7 @@ def phash_image(
                 # oracle's NULL-never-equals join semantics)
                 hashes.append(
                     None if data is None
-                    else _dhash64(pixel_kernel(bytes(data)))
+                    else _dhash64(_fake_pixel_grid(bytes(data)))
                 )
             yield pd.DataFrame(
                 {
@@ -225,19 +179,13 @@ def phash_image(
     return cols.mapInPandas(batches, schema="id long, phash long")
 
 
-def audio_chunk_plan(
-    df: DataFrame,
-    id_col: str = "id",
-    sample_rate: int = 16_000,
-    bytes_per_sample: int = 2,
-    channels: int = 1,
-    chunk_seconds: float = 1.0,
-) -> DataFrame:
-    """Audio chunking *plan*: emits one row per fixed-duration chunk
-    (id, chunk_idx, start_sample, n_samples) from declared PCM
-    parameters — the explode/partition shape audio feature extraction
-    fans out over (1 clip row -> k chunk rows), computed entirely from
-    byte length: JVM arithmetic, zero decode, zero Python.
+def audio_chunk_plan(df: DataFrame) -> DataFrame:
+    """Audio chunking *plan*: emits one row per 160-sample chunk
+    (10 ms at 16 kHz) of each ``doc_id`` clip of 16-bit mono PCM
+    (id, chunk_idx, start_sample, n_samples) — the explode/partition
+    shape audio feature extraction fans out over (1 clip row -> k
+    chunk rows), computed entirely from byte length: JVM arithmetic,
+    zero decode, zero Python.
 
     A real pipeline feeds the chunk rows to an Arrow-batched decoder
     kernel exactly like ``decode_image_meta`` does for images; the
@@ -245,14 +193,13 @@ def audio_chunk_plan(
     sizing at 100 TB, so it is the part that must stay map-only.
     Clips shorter than one chunk still emit their single partial
     chunk; zero-byte clips emit none."""
-    frame_bytes = bytes_per_sample * channels
-    n_samples = (F.length(F.col("media.data")) / frame_bytes).cast("bigint")
-    chunk_samples = int(sample_rate * chunk_seconds)
+    n_samples = (F.length(F.col("media.data")) / 2).cast("bigint")
+    chunk_samples = 160
     n_chunks = F.ceil(n_samples / F.lit(chunk_samples)).cast("bigint")
     start = F.col("chunk_idx") * chunk_samples
     return (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             n_samples.alias("__n"),
             F.explode(
                 F.when(

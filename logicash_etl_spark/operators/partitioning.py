@@ -239,15 +239,15 @@ def grouped_prefix_peak(
     bucket_key: str,
     order_cols: list,
     value_col: str,
-    out_col: str = "peak",
     buckets: int = 32,
 ) -> DataFrame:
-    """Per-group MAX of the inclusive running sum of ``value_col`` —
-    one row per group — without materializing the prefix series.
+    """Per-group MAX of the inclusive running sum of ``value_col``, as
+    ``__peak`` — one row per group — without materializing the prefix
+    series.
 
     Algebraically identical to
     ``grouped_prefix_sum(..., inclusive=True)`` followed by
-    ``groupBy(group).agg(max(out_col))`` (pinned in
+    ``groupBy(group).agg(max(prefix_sum))`` (pinned in
     tests/test_round14_opts.py), but where the general operator must
     ATTACH the bucket offset to every row (a rows-sized join) and the
     caller then aggregates the rows-sized prefix series back down,
@@ -330,7 +330,7 @@ def grouped_prefix_peak(
         .agg(
             F.max(F.col("__gpp_mx") + F.col("__gpp_off"))
             .cast(sum_type)
-            .alias(out_col)
+            .alias("__peak")
         )
     )
 

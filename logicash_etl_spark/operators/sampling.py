@@ -28,13 +28,11 @@ def _u(id_col: Column, salt: str) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("double") / _DENOM
 
 
-def train_test_split(
-    df: DataFrame, id_col: str, test_fraction: float = 0.1
-) -> tuple[DataFrame, DataFrame]:
-    """(train, test): disjoint, exhaustive, and stable — a row's side
-    never changes when data is added elsewhere (the property random
-    splits lack)."""
-    is_test = _u(F.col(id_col), "split") < test_fraction
+def train_test_split(df: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]:
+    """(train, test), test ~10% of rows: disjoint, exhaustive, and
+    stable — a row's side never changes when data is added elsewhere
+    (the property random splits lack)."""
+    is_test = _u(F.col(id_col), "split") < 0.1
     return df.filter(~is_test), df.filter(is_test)
 
 
@@ -43,12 +41,11 @@ def stratified_sample(
     id_col: str,
     stratum_col: str,
     fractions: dict[str, float],
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Per-stratum deterministic fractions (e.g. downsample the
-    majority class, keep all of the rare one). Unlisted strata get
-    ``default_fraction``."""
-    frac = F.lit(default_fraction)
+    majority class, keep all of the rare one). Unlisted strata keep
+    10%."""
+    frac = F.lit(0.1)
     for value, f in fractions.items():
         frac = F.when(F.col(stratum_col) == value, F.lit(f)).otherwise(frac)
     return df.filter(_u(F.col(id_col), "strata") < frac)

@@ -28,6 +28,19 @@ from logicash_etl_spark.operators.partitioning import scale_out
 ID_COL = "vec_id"
 VEC_COL = "embedding"
 
+# Search shape of the catalog's embedding queries, read by the operators
+# below and by the oracles in queries/similarity.py:
+TOP_K = 5  # neighbours per query (cosine, LSH, IVF and PQ top-k)
+EMBED_DIM = 64  # width of the fixture embeddings
+# hyperplane LSH: LSH_TABLES tables of LSH_PLANES sign bits; each query
+# also probes its LSH_PROBES least-confident single-bit flips per table
+LSH_PLANES, LSH_TABLES, LSH_PROBES = 4, 8, 2
+# k-means and PQ codebooks train on the TRAIN_SAMPLE lowest-xxhash64 ids
+TRAIN_SAMPLE = 8192
+# greedy MMR: MMR_PICKS exemplars scored MMR_RELEVANCE * rel -
+# MMR_DIVERSITY * msim (both exact literals: 1 - 0.7 is not 0.3)
+MMR_PICKS, MMR_RELEVANCE, MMR_DIVERSITY = 5, 0.7, 0.3
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
@@ -42,12 +55,8 @@ def as_double(vec: Column | str) -> Column:
     return c.cast("array<double>")
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-) -> DataFrame:
-    """Exact top-k neighbors per query by cosine.
+def cosine_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact TOP_K neighbors per query by cosine.
 
     queries is broadcast (small Q); the corpus streams once; per-query
     heap via window row_number. Deterministic: doubles from a
@@ -82,7 +91,7 @@ def cosine_topk(
     w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.col(ID_COL).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
     )
 
 
@@ -100,21 +109,13 @@ def _sign_matrix(dim: int, planes: int, plane_offset: int = 0) -> list[list[floa
     return out
 
 
-def lsh_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int = 64,
-    planes: int = 4,
-    tables: int = 8,
-    k: int = 5,
-    multi_probe: int = 0,
-) -> DataFrame:
+def lsh_ann_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH.
 
-    Each of ``tables`` hash tables buckets vectors by the signs of
-    ``planes`` dot products (distinct hyperplanes per table via index
-    offset); candidates = union over tables of same-bucket pairs,
-    deduped, then exact cosine re-rank on candidates only.
+    Each of ``LSH_TABLES`` hash tables buckets vectors by the signs of
+    ``LSH_PLANES`` dot products (distinct hyperplanes per table via
+    index offset); candidates = union over tables of same-bucket
+    pairs, deduped, then exact cosine re-rank on candidates only.
 
     Tuning: candidate fraction ~= tables / 2^planes; recall rises with
     tables and falls with planes. planes=4/tables=8 suits ~1e3-row
@@ -122,13 +123,14 @@ def lsh_ann_topk(
     cut is ~2^-12 — the whole point at 100 TB. Recall is property-
     tested against cosine_topk (tests/test_extensions.py).
 
-    ``multi_probe`` > 0 additionally probes, per table, the buckets
-    reached by flipping the query's ``multi_probe`` least-confident
-    sign bits (smallest |margin| first — multi-probe LSH, Lv et al.
-    2007). Probing is QUERY-side only: recall comparable to ~2x the
-    tables at half the corpus-side index size — at scale the corpus
-    side is the one that costs shuffle and memory.
+    Each query also probes, per table, the buckets reached by flipping
+    its ``LSH_PROBES`` least-confident sign bits (smallest |margin|
+    first — multi-probe LSH, Lv et al. 2007). Probing is QUERY-side
+    only: recall comparable to ~2x the tables at half the corpus-side
+    index size — at scale the corpus side is the one that costs
+    shuffle and memory.
     """
+    dim, planes, tables = EMBED_DIM, LSH_PLANES, LSH_TABLES
     # All T signatures in one Arrow pass: dense vector x sign-matrix is
     # exactly the workload pandas UDFs are for — (N,D) @ (D, T*P) BLAS
     # matmul, then bit-pack: ~50x less plan/codegen overhead than
@@ -146,14 +148,14 @@ def lsh_ann_topk(
 
     @F.pandas_udf("array<long>")
     def _sigs_probed(col: pd.Series) -> pd.Series:
-        # per table: base bucket + multi_probe single-bit flips, least-
+        # per table: base bucket + LSH_PROBES single-bit flips, least-
         # confident (smallest |margin|) bits first
         v = np.vstack(col.values)
         proj = (v @ mflat).reshape(len(v), tables, planes)
         base = ((proj > 0) * pow2).sum(axis=2).astype("int64")  # (n, T)
         order = np.argsort(np.abs(proj), axis=2)                # (n, T, P)
         out = [base]
-        for j in range(multi_probe):
+        for j in range(LSH_PROBES):
             out.append(base ^ (1 << order[:, :, j]).astype("int64"))
         stacked = np.stack(out, axis=2)                         # (n, T, 1+mp)
         return pd.Series(list(stacked.reshape(len(v), -1)))
@@ -172,7 +174,7 @@ def lsh_ann_topk(
         )
 
     c_keys = keyed(corpus, "cand_id")
-    q_keys = keyed(queries, "query_id", probes=multi_probe)
+    q_keys = keyed(queries, "query_id", probes=LSH_PROBES)
     cand = (
         q_keys.join(c_keys, on=["tbl", "bucket"])
         .filter(F.col("cand_id") != F.col("query_id"))
@@ -205,7 +207,7 @@ def lsh_ann_topk(
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.col(ID_COL).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= TOP_K)
 
 
 def knn_label_vote(topk: DataFrame, labels: DataFrame) -> DataFrame:
@@ -225,45 +227,41 @@ def knn_label_vote(topk: DataFrame, labels: DataFrame) -> DataFrame:
 # IVF: k-means coarse quantizer + cell-probed exact re-rank
 # ---------------------------------------------------------------------------
 
-def kmeans_lite(
-    vectors: DataFrame,
-    k: int = 16,
-    iterations: int = 5,
-    train_sample: int = 65536,
-) -> DataFrame:
-    """Deterministic coarse quantizer, trained the way production IVF
-    indexes train (FAISS practice): Lloyd's k-means in numpy on a
-    driver-sized sample — the quantizer never needs the full corpus;
-    only the CELL ASSIGNMENT pass (ivf_ann_topk) is distributed.
+def kmeans_lite(vectors: DataFrame) -> DataFrame:
+    """Deterministic 8-cell coarse quantizer, trained the way production
+    IVF indexes train (FAISS practice): 2 Lloyd's k-means iterations in
+    numpy on a driver-sized sample — the quantizer never needs the full
+    corpus; only the CELL ASSIGNMENT pass (ivf_ann_topk) is distributed.
+    FAISS practice is ~256 samples per centroid, so 8k >> enough for 8.
 
-    The sample is the ``train_sample`` rows with the lowest
+    The sample is the ``TRAIN_SAMPLE`` rows with the lowest
     xxhash64(id): uniform-ish, fully reproducible (no RNG), and
     selected with TakeOrderedAndProject — per-partition top-K then a
     driver merge, so at 100 TB it costs one scan and O(K) memory per
     partition, never a full sort shuffle. Init = the k lowest-id
     sample vectors. Returns (centroid_id, centroid array<double>).
     """
+    k = 8
     v = vectors.select(F.col(ID_COL).alias("id"), as_double(VEC_COL).alias("v"))
-    # Arrow transfer (toPandas), not collect(): a 64k x 64-double
-    # sample is ~33 MB — Row-object deserialization costs seconds,
+    # Arrow transfer (toPandas), not collect(): Row-object
+    # deserialization of the sample costs seconds at 64k x 64 doubles,
     # the Arrow batch milliseconds
     pdf = (
         v.orderBy(F.xxhash64(F.col("id")), F.col("id"))
-        .limit(train_sample)
+        .limit(TRAIN_SAMPLE)
         .toPandas()
         .sort_values("id")
     )
     if len(pdf) < k:
         raise ValueError(
-            f"kmeans_lite: training sample has {len(pdf)} vectors < k={k} "
-            "— shrink k or widen train_sample"
+            f"kmeans_lite: training sample has {len(pdf)} vectors < k={k}"
         )
     M = np.vstack(pdf["v"].to_numpy())                   # (n, d)
     # eps-guard: an all-zero embedding otherwise yields NaN rows that
     # poison every cosine assignment they touch
     Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
     C = M[:k].copy()                                     # k lowest-id init
-    for _ in range(iterations):
+    for _ in range(2):
         Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
         cell = np.argmax(Mn @ Cn.T, axis=1)              # cosine assignment
         for c in range(k):
@@ -281,24 +279,19 @@ def ivf_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    k: int = 5,
-    n_probe: int = 3,
-    broadcast_queries: bool = False,
 ) -> DataFrame:
     """IVF search: corpus rows live in their nearest centroid's cell;
-    each query probes its ``n_probe`` nearest cells and exact-cosine
-    re-ranks only those cells' members. Candidate fraction ~ n_probe/k.
+    each query probes its 3 nearest cells and exact-cosine re-ranks
+    only those cells' members. Candidate fraction ~ 3/#centroids.
 
     The inverted-file structure is just a partitioned DataFrame —
     persist (or write bucketed by cell) to amortize across queries.
 
-    ``broadcast_queries=True`` broadcasts the probed query side of the
-    cell join. The cell key has only ``#centroids`` distinct values,
-    so the default shuffle join funnels the WHOLE corpus into that
-    many skewed partitions; with a small query batch the broadcast
-    keeps the corpus map-side (measured 2.4x at sf0.1). Leave False
-    when Q is large (batch self-search) — there the corpus-side
-    shuffle is amortized over many queries.
+    The probed query side of the cell join is broadcast. The cell key
+    has only ``#centroids`` distinct values, so a shuffle join would
+    funnel the WHOLE corpus into that many skewed partitions; with a
+    small query batch the broadcast keeps the corpus map-side
+    (measured 2.4x at sf0.1).
     """
     cent = [(int(r.centroid_id), np.array(r.centroid)) for r in centroids.collect()]
     C = np.array([c for _, c in cent])
@@ -326,10 +319,9 @@ def ivf_ann_topk(
         F.col(ID_COL).alias("query_id"),
         as_double(VEC_COL).alias("__qv"),
         _norm(as_double(VEC_COL)).alias("__qn"),
-        F.explode(cells_udf(n_probe)(as_double(VEC_COL))).alias("cell"),
+        F.explode(cells_udf(3)(as_double(VEC_COL))).alias("cell"),
     )
-    if broadcast_queries:
-        q_vec = F.broadcast(q_vec)
+    q_vec = F.broadcast(q_vec)
     scored = (
         q_vec.join(c_vec, on="cell")
         .filter(F.col("cand_id") != F.col("query_id"))
@@ -349,7 +341,7 @@ def ivf_ann_topk(
         # (query, candidate) pair joins at most once
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.col(ID_COL).asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= TOP_K)
 
 
 def assign_cells(
@@ -389,15 +381,11 @@ def assign_cells(
     return vectors.withColumn("cell", F.array_max(scored)["cell"])
 
 
-def semantic_dedup(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    threshold: float = 0.4,
-) -> DataFrame:
+def semantic_dedup(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means cells
     as the blocking key, exact cosine within each cell, and a greedy
     keep-lowest-id policy — a vector is removed iff some SMALLER-id
-    vector in its cell is within ``threshold`` cosine. Cross-cell
+    vector in its cell has cosine >= 0.4 to it. Cross-cell
     near-dups are invisible by design (the paper's recall trade);
     raise k to bound cell sizes, since within-cell scoring is
     quadratic in the cell population.
@@ -441,7 +429,7 @@ def semantic_dedup(
         .filter(
             _dot(F.col("__va"), F.col("__vb"))
             / (F.col("__na") * F.col("__nb"))
-            >= threshold
+            >= 0.4
         )
         .select(F.col("id_b").alias("id"))
         .distinct()
@@ -462,29 +450,22 @@ def semantic_dedup(
 # Product quantization (PQ) — memory-bound ANN (Jegou et al. 2011)
 # ---------------------------------------------------------------------------
 
-def pq_train_codebooks(
-    vectors: DataFrame,
-    dim: int = 64,
-    m: int = 8,
-    k_codes: int = 16,
-    iterations: int = 5,
-    train_sample: int = 65536,
-) -> list[list[list[float]]]:
-    """Train ``m`` per-subspace codebooks (``k_codes`` centroids of
-    ``dim/m`` dims each) with L2 Lloyd's on a driver-sized sample —
-    the same deterministic sampling rule as ``kmeans_lite`` (lowest
-    xxhash64(id) rows via TakeOrderedAndProject, k lowest-id init, no
-    RNG). Returns plain nested lists: the codebooks are MODEL
-    literals (m * k_codes * dim/m doubles ~ 8 KB at defaults) meant
-    to be inlined into encode/search expressions and shipped inside
-    the plan, exactly like the IVF centroids and LSH hyperplanes."""
-    if dim % m:
-        raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    dsub = dim // m
+def pq_train_codebooks(vectors: DataFrame) -> list[list[list[float]]]:
+    """Train ``m`` = 8 per-subspace codebooks (``k_codes`` = 16
+    centroids of ``EMBED_DIM/m`` = 8 dims each) with 3 L2 Lloyd's
+    iterations on a driver-sized sample — the same deterministic
+    sampling rule as ``kmeans_lite`` (lowest xxhash64(id) rows via
+    TakeOrderedAndProject, k lowest-id init, no RNG). Returns plain
+    nested lists: the codebooks are MODEL literals (m * k_codes *
+    dim/m doubles ~ 8 KB) meant to be inlined into encode/search
+    expressions and shipped inside the plan, exactly like the IVF
+    centroids and LSH hyperplanes."""
+    m, k_codes = 8, 16
+    dsub = EMBED_DIM // m
     v = vectors.select(F.col(ID_COL).alias("id"), as_double(VEC_COL).alias("v"))
     pdf = (
         v.orderBy(F.xxhash64(F.col("id")), F.col("id"))
-        .limit(train_sample)
+        .limit(TRAIN_SAMPLE)
         .toPandas()
         .sort_values("id")
     )
@@ -497,7 +478,7 @@ def pq_train_codebooks(
     for s in range(m):
         S = M[:, s * dsub:(s + 1) * dsub]
         C = S[:k_codes].copy()  # k lowest-id init, per subspace
-        for _ in range(iterations):
+        for _ in range(3):
             d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             cell = np.argmin(d2, axis=1)
             for c in range(k_codes):
@@ -549,9 +530,10 @@ def pq_encode(
     element yields a NULL code for its own subspace only, as in the
     fold, where it made every distance of that subspace NULL.
 
-    Output rows are m ints instead of dim floats (32x compression at
-    the defaults: the property that lets a 100 TB embedding corpus
-    fit hot storage as codes while raw vectors stay cold). Only the
+    Output rows are m ints instead of dim floats (32x compression for
+    8 one-byte codes per 64 float32s: the property that lets a 100 TB
+    embedding corpus fit hot storage as codes while raw vectors stay
+    cold). Only the
     two needed columns cross the Python boundary (§4.1 column-pruning
     caveat: mapInArrow ships whatever it is given — so it is given
     exactly (id, vector))."""
@@ -617,8 +599,6 @@ def pq_ann_topk(
     vectors: DataFrame,
     queries: DataFrame,
     books: list[list[list[float]]],
-    k: int = 5,
-    rerank_candidates: int = 0,
 ) -> DataFrame:
     """PQ asymmetric-distance top-k: approx squared L2 from each query
     to each corpus vector = sum over subspaces of ||q_sub -
@@ -627,19 +607,19 @@ def pq_ann_topk(
     PQ deal: m byte-lookups + adds per row instead of dim float
     multiplies, over 32x less data).
 
-    With ``rerank_candidates = C > 0`` this runs the way production
-    PQ indexes run (FAISS's IndexPQ + refine): the code scan builds a
-    per-query shortlist of C candidates, and ONLY those C rows fetch
-    their raw vectors for an exact L2 re-rank — quantization error
-    then only costs recall if a true neighbor falls outside the
-    shortlist, and the expensive exact arithmetic touches C rows per
-    query, never the corpus. ``approx_sq_l2`` holds the exact re-rank
-    distance in that mode.
+    This runs the way production PQ indexes run (FAISS's IndexPQ +
+    refine): the code scan builds a per-query shortlist of C = 64
+    candidates, and ONLY those C rows fetch their raw vectors for an
+    exact L2 re-rank — quantization error then only costs recall if a
+    true neighbor falls outside the shortlist, and the expensive exact
+    arithmetic touches C rows per query, never the corpus.
+    ``approx_sq_l2`` holds the exact re-rank distance.
 
     Plan: queries broadcast (small batch), codes scanned once,
     centroid lookup = element_at into the literal codebook, per-query
-    top-k via window over the query partition. Returns (query_id,
-    vec_id, approx_sq_l2, rank). Self-matches excluded."""
+    shortlist via window over the query partition. Returns (query_id,
+    vec_id, approx_sq_l2, rank), rank <= TOP_K. Self-matches
+    excluded."""
     dsub = len(books[0][0])
     m = len(books)
     codes = pq_encode(vectors, books)
@@ -666,14 +646,10 @@ def pq_ann_topk(
     w = W.partitionBy("query_id").orderBy(
         F.col("approx_sq_l2").asc(), F.col(ID_COL).asc()
     )
-    # a shortlist smaller than k could only shrink the answer set
-    shortlist_n = max(rerank_candidates, k) if rerank_candidates > 0 else k
     shortlist = (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= shortlist_n)
+        .filter(F.col("rank") <= 64)
     )
-    if rerank_candidates <= 0:
-        return shortlist
     # exact re-rank: raw vectors fetched for the C shortlist rows only
     raw = vectors.select(F.col(ID_COL), as_double(VEC_COL).alias("__rv"))
     exact = F.aggregate(
@@ -689,20 +665,16 @@ def pq_ann_topk(
     )
     return (
         rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
     )
 
 
-def mmr_select(
-    corpus: DataFrame,
-    query_vec: list[float],
-    k: int = 5,
-    lam: float = 0.7,
-) -> DataFrame:
+def mmr_select(corpus: DataFrame, query_vec: list[float]) -> DataFrame:
     """Greedy MAXIMAL MARGINAL RELEVANCE selection (Carbonell &
-    Goldstein, SIGIR'98): pick ``k`` exemplars that are relevant to
-    ``query_vec`` but mutually diverse — at step i the winner
-    maximizes ``lam * cos(x, q) - (1 - lam) * max_{s in S} cos(x, s)``
+    Goldstein, SIGIR'98): pick k = ``MMR_PICKS`` exemplars that are
+    relevant to ``query_vec`` but mutually diverse — at step i the
+    winner maximizes ``lam * cos(x, q) - (1 - lam) * max_{s in S}
+    cos(x, s)`` with lam = ``MMR_RELEVANCE``
     over the not-yet-selected pool (first pick: relevance alone).
     The selection a few-shot prompt builder or eval-set curator wants
     instead of plain top-k, whose neighbors are often near-copies.
@@ -720,11 +692,11 @@ def mmr_select(
     Determinism: every cosine is a sequential IEEE fold with the
     1e-12 norm floor (bitwise reproducible — the lsh_ann_topk
     convention); the selected vectors re-enter as literals whose
-    doubles round-trip exactly; ``lam`` and ``1-lam`` must BOTH be
-    given as exact literals by the caller convention (0.7/0.3 —
-    computing 1-0.7 would yield 0.30000000000000004); ties break by
-    ascending id. Scores round to 6dp IN the plan (engine rounding,
-    not Python's banker's rounding)."""
+    doubles round-trip exactly; ``lam`` and ``1-lam`` are BOTH exact
+    literals (``MMR_RELEVANCE``/``MMR_DIVERSITY`` — computing 1-0.7
+    would yield 0.30000000000000004); ties break by ascending id.
+    Scores round to 6dp IN the plan (engine rounding, not Python's
+    banker's rounding)."""
     import math
 
     from logicash_etl_spark.operators.caching import scoped_persist
@@ -757,11 +729,11 @@ def mmr_select(
             / F.greatest(F.col("__n") * q_norm, F.lit(1e-12)),
         )
     )
-    lam_c = F.lit(float(lam))
-    div_c = F.lit(round(1.0 - lam, 10))
+    lam_c = F.lit(MMR_RELEVANCE)
+    div_c = F.lit(MMR_DIVERSITY)
     selected: list[tuple] = []
     out: list[tuple] = []
-    for step in range(1, k + 1):
+    for step in range(1, MMR_PICKS + 1):
         if selected:
             sims = [
                 _dot(F.col("__v"), F.array(*[F.lit(float(x)) for x in sv]))

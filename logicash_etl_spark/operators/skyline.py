@@ -88,18 +88,15 @@ def pareto_frontier_2d(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    maximize_x: bool = True,
-    maximize_y: bool = True,
     buckets: int = 32,
 ) -> DataFrame:
-    """Exact 2-D Pareto frontier of ``df``: rows not dominated in the
-    (x, y) plane. Minimized dimensions are negated internally; output
-    columns are untouched. Returns the surviving input rows."""
-    x = F.col(x_col) if maximize_x else -F.col(x_col)
-    y = F.col(y_col) if maximize_y else -F.col(y_col)
+    """Exact 2-D Pareto frontier of ``df`` maximizing ``x_col`` and
+    minimizing ``y_col``: rows not dominated in the (x, y) plane. The
+    minimized dimension is negated internally; output columns are
+    untouched. Returns the surviving input rows."""
     pts = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull()).withColumn(
-        "__x", x
-    ).withColumn("__y", y)
+        "__x", F.col(x_col)
+    ).withColumn("__y", -F.col(y_col))
     g = pts.groupBy("__x").agg(F.max("__y").alias("__gmax"))
     gh = _exclusive_prefix_max_desc(g, "__x", "__gmax", "__H", buckets=buckets)
     survivors = (

@@ -16,6 +16,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# merge rules ``bpe_train`` learns per run
+BPE_MERGES = 8
+
 # Tiny per-language stopword marker sets for the n-gram/stopword
 # language-ID heuristic. Word-boundary regexes keep the scoring
 # O(len) per doc and JVM-side.
@@ -113,10 +116,11 @@ def lang_scores(text: Column | str) -> dict[str, Column]:
     return {lang: _marker_hits(c, words) for lang, words in LANG_MARKERS.items()}
 
 
-def predict_lang(df: DataFrame, text: str = "text") -> DataFrame:
-    """``lang_pred`` = argmax over language marker scores; deterministic
-    tiebreak by language code order; 'und' when no marker hits at all."""
-    scores = lang_scores(text)
+def predict_lang(df: DataFrame) -> DataFrame:
+    """``lang_pred`` = argmax over the language marker scores of
+    ``text``; deterministic tiebreak by language code order; 'und'
+    when no marker hits at all."""
+    scores = lang_scores("text")
     # build argmax as chained CASE WHEN over a greatest() pivot
     langs = sorted(scores)
     greatest = F.greatest(*[scores[l] for l in langs])
@@ -169,10 +173,11 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
 
 def bpe_train(
     word_counts: DataFrame,
-    n_merges: int = 8,
     driver_vocab_threshold: int = 2_000_000,
 ) -> list[tuple[str, str, str, int]]:
-    """Byte-pair-encoding merge training, Spark-first: the corpus is
+    """Byte-pair-encoding merge training (``BPE_MERGES`` merges; the
+    catalog's unrolled-CTE oracles in queries/pipeline_ops.py read the
+    same constant), Spark-first: the corpus is
     touched ONCE (the ``word_counts`` aggregate of ``(word, n)`` rows
     the caller builds);
     every merge iteration then runs on the VOCABULARY frame — pair
@@ -212,7 +217,7 @@ def bpe_train(
         wc = dict(zip(pdf["w"], pdf["n"].astype(int)))
         vocab = {w: list(w) for w in wc}
         merges: list[tuple[str, str, str, int]] = []
-        for _ in range(n_merges):
+        for _ in range(BPE_MERGES):
             counts: dict[tuple[str, str], int] = {}
             for w, s in vocab.items():
                 cnt = wc[w]
@@ -241,7 +246,7 @@ def bpe_train(
     ).persist()
     merges: list[tuple[str, str, str, int]] = []
     try:
-        for _ in range(n_merges):
+        for _ in range(BPE_MERGES):
             pairs = syms.select(
                 "__n",
                 F.explode(
@@ -312,7 +317,7 @@ def bpe_encode(
     r"""Apply a trained merge table (``bpe_train`` output, in merge
     order) to a word -> ``array<string>`` of BPE symbols.
 
-    Spark-first shape: the merge chain compiles to ``n_merges``
+    Spark-first shape: the merge chain compiles to ``len(merges)``
     chained ``replace`` expressions over the wrapped symbol string —
     all JVM literals inside whole-stage codegen, no UDF, no per-row
     Python. Intended use at scale: encode the DISTINCT-WORD frame

@@ -387,7 +387,7 @@ def train_test_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.sampling import train_test_split
 
     o = read_table(spark, sf_dir, "orders")
-    train, test = train_test_split(o, "o_orderkey", test_fraction=0.1)
+    train, test = train_test_split(o, "o_orderkey")
     return (
         train.withColumn("is_test", F.lit(False))
         .unionByName(test.withColumn("is_test", F.lit(True)))
@@ -975,13 +975,13 @@ def doc_stats_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _morton_sql(xc: str, yc: str, bits: int = 10) -> str:
-    """SQL text for the Morton (Z-order) interleave of two
-    bits-wide non-negative integer columns — generated from one
-    loop so the Spark expression below and the DuckDB oracle share
-    the exact arithmetic."""
+def _morton_sql(xc: str, yc: str) -> str:
+    """SQL text for the Morton (Z-order) interleave of two 10-bit
+    non-negative integer columns — generated from one loop so the
+    Spark expression below and the DuckDB oracle share the exact
+    arithmetic."""
     terms = []
-    for i in range(bits):
+    for i in range(10):
         terms.append(f"((({xc} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({yc} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
@@ -1230,7 +1230,9 @@ def _hilbert_stage_sql(s: int, n: int) -> dict[str, str]:
     }
 
 
-def _hilbert_stages(order: int = 10) -> list[dict[str, str]]:
+def _hilbert_stages() -> list[dict[str, str]]:
+    """The 10 xy->d stages of an order-10 (1024 x 1024) Hilbert curve."""
+    order = 10
     n = 1 << order
     return [
         _hilbert_stage_sql(1 << (order - 1 - i), n) for i in range(order)

@@ -420,22 +420,16 @@ def sentence_explode_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode fan-out, driver-visible: documents packed as media blobs
     -> Arrow-batched ``mapInPandas`` decode -> per-format profile. The
-    injected kernel is the deterministic digest-based stub (this
-    container ships no media corpus), whose arithmetic the oracle
-    reproduces in SQL — so the correctness signal covers the REAL
-    plumbing: struct packing, Arrow batch transfer, schema contract,
-    and the aggregate over decoder output. The PIL kernel (same
-    signature, auto-selected when importable) is exercised on synthetic
-    images in tests/test_multimodal.py."""
-    from logicash_etl_spark.operators.multimodal import (
-        _fake_image_decode,
-        decode_image_meta,
-        pack_media,
-    )
+    kernel is the deterministic digest-based stub (the fixtures hold no
+    media corpus), whose arithmetic the oracle reproduces in SQL — so
+    the correctness signal covers the REAL plumbing: struct packing,
+    Arrow batch transfer, schema contract, and the aggregate over
+    decoder output."""
+    from logicash_etl_spark.operators.multimodal import decode_image_meta, pack_media
 
     docs = scale_out(read_table(spark, sf_dir, "documents").select("doc_id", "text"))
     media = pack_media(docs.withColumn("blob", F.encode("text", "utf-8")), "blob", "text/plain")
-    meta = decode_image_meta(media, id_col="doc_id", kernel=_fake_image_decode)
+    meta = decode_image_meta(media)
     return meta.groupBy("format").agg(
         F.count("*").alias("n_media"),
         F.sum("width").cast("bigint").alias("total_width"),
@@ -508,7 +502,7 @@ def frame_sample_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = scale_out(read_table(spark, sf_dir, "documents").select("doc_id", "source", "text"))
     media = pack_media(docs.withColumn("blob", F.encode("text", "utf-8")), "blob", "video/fake")
-    frames = frame_sample_plan(media, id_col="doc_id", every_n=10)
+    frames = frame_sample_plan(media)
     return (
         frames.join(docs.select(F.col("doc_id").alias("id"), "source"), on="id")
         .groupBy("source")
@@ -547,7 +541,7 @@ def skew_salted_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = read_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
     )
-    joined = join_with_skew_salt(li, sup, on="l_suppkey", salt_buckets=8)
+    joined = join_with_skew_salt(li, sup, on="l_suppkey")
     return joined.groupBy("s_nationkey").agg(
         F.count("*").alias("n_items"),
         F.sum("price").cast("double").alias("revenue"),
@@ -887,16 +881,10 @@ def media_phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the image modality. With the deterministic fake-decode kernel (no
     codec in this image) only byte-identical media collide, so the
     equal-bytes self-join IS the oracle (hamming 0; a random
-    distinct-content pair lands within Hamming<=2 with p ~ 1e-16).
-    With PIL installed the same query finds resized/re-encoded dups —
-    the plumbing, banding, and verify are identical."""
+    distinct-content pair lands within Hamming<=2 with p ~ 1e-16)."""
     from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.dedup import banded_hamming_pairs
-    from logicash_etl_spark.operators.multimodal import (
-        _fake_pixel_grid,
-        pack_media,
-        phash_image,
-    )
+    from logicash_etl_spark.operators.multimodal import pack_media, phash_image
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     replay = docs.filter(F.col("doc_id") % 25 == 0).select(
@@ -908,15 +896,9 @@ def media_phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "blob",
         "image/png",
     )
-    # pin the deterministic kernel: the oracle models byte-identity,
-    # which only the fake grid guarantees (PIL would also match true
-    # visual dups — correct behavior, different oracle)
-    sig = scoped_persist(
-        phash_image(media, id_col="doc_id", pixel_kernel=_fake_pixel_grid)
-    )
-    return banded_hamming_pairs(
-        sig, id_col="id", sig_col="phash", max_hamming=2, bands=4
-    )
+    # the oracle models byte-identity, which the fake grid guarantees
+    sig = scoped_persist(phash_image(media))
+    return banded_hamming_pairs(sig, id_col="id", sig_col="phash", max_hamming=2)
 
 
 @query(
@@ -954,14 +936,7 @@ def audio_chunk_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
         "blob",
         "audio/pcm",
     )
-    chunks = audio_chunk_plan(
-        clips,
-        id_col="doc_id",
-        sample_rate=16_000,
-        bytes_per_sample=2,
-        channels=1,
-        chunk_seconds=0.01,  # 160-sample chunks: real fan-out on doc-sized clips
-    )
+    chunks = audio_chunk_plan(clips)  # 160-sample chunks: real fan-out on doc-sized clips
     return (
         chunks.groupBy(F.col("id").alias("doc_id"))
         .agg(

@@ -223,7 +223,7 @@ def _bpe_budget_oracle() -> str:
     from logicash_etl_spark.queries.pipeline_ops import _bpe_train_ctes
 
     return (
-        _bpe_train_ctes(8)
+        _bpe_train_ctes()
         + r""",
     wlen AS (
       SELECT w, CAST(len(string_split(trim(s, chr(10)), chr(10)||chr(10)))
@@ -287,7 +287,7 @@ def token_budget_sample_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    merges = bpe_train(wc, n_merges=8)
+    merges = bpe_train(wc)
     wlen = wc.select(
         "word",
         F.size(bpe_encode(F.col("word"), merges)).cast("bigint").alias("__n_sym"),
@@ -930,7 +930,7 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     q = qa.filter(F.col("quality_keep")).select("doc_id", "text", "n_tokens")
-    e = scoped_persist(exact_dedup(q, "doc_id", "text"))
+    e = scoped_persist(exact_dedup(q, "doc_id"))
     # near-dup evidence comes from the corpus-wide exact-Jaccard pair
     # lot (shared + materialized once per process — the same evidence
     # ngram_jaccard_dups/dedup_clusters read), restricted to pairs

@@ -73,14 +73,7 @@ def _exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "exact_jaccard_pairs",
-        lambda: jaccard_pairs(
-            read_table(spark, sf_dir, "documents"),
-            "doc_id",
-            "text",
-            shingle_n=3,
-            threshold=0.35,
-            max_doc_freq=100,
-        ),
+        lambda: jaccard_pairs(read_table(spark, sf_dir, "documents"), "doc_id"),
     )
 
 
@@ -91,14 +84,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "minhash_pairs",
-        lambda: minhash_dedup_pairs(
-            read_table(spark, sf_dir, "documents"),
-            "doc_id",
-            "text",
-            threshold=0.35,
-            num_hashes=64,
-            bands=16,
-        ),
+        lambda: minhash_dedup_pairs(read_table(spark, sf_dir, "documents"), "doc_id"),
     )
 
 
@@ -119,7 +105,7 @@ def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on normalized-content md5, keep the
     min doc_id of each group (deterministic survivor)."""
     docs = read_table(spark, sf_dir, "documents")
-    return exact_dedup(docs, "doc_id", "text").select("doc_id", "source", "n_chars")
+    return exact_dedup(docs, "doc_id").select("doc_id", "source", "n_chars")
 
 
 # Exact 3-gram-Jaccard pair SQL (threshold 0.35, max_doc_freq 100) —
@@ -317,7 +303,7 @@ def simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "simhash_pairs",
-        lambda: simhash_dup_pairs(docs, "doc_id", "text", max_hamming=3, bands=4),
+        lambda: simhash_dup_pairs(docs, "doc_id"),
     )
 
 
@@ -418,10 +404,7 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hist = docs.filter(F.col("doc_id") % 10 < 8)
     incoming = docs.filter(F.col("doc_id") % 10 >= 8)
-    pairs = minhash_probe_pairs(
-        incoming, hist, "doc_id", "text",
-        threshold=0.35, num_hashes=64, bands=16, shingle_n=3,
-    )
+    pairs = minhash_probe_pairs(incoming, hist, "doc_id")
     per = pairs.groupBy("id_in").agg(
         F.count("*").cast("bigint").alias("n_hist_matches"),
         F.max("jaccard").alias("best_jaccard"),
@@ -494,14 +477,7 @@ def prefix_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.dedup import prefix_filter_pairs
 
     with cache_scope():
-        out = prefix_filter_pairs(
-            read_table(spark, sf_dir, "documents"),
-            "doc_id",
-            "text",
-            shingle_n=3,
-            threshold=0.5,
-            max_doc_freq=100,
-        )
+        out = prefix_filter_pairs(read_table(spark, sf_dir, "documents"), "doc_id")
         out = out.localCheckpoint()
     return out
 

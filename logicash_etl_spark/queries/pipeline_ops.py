@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.operators.sampling import stratified_sample
-from logicash_etl_spark.operators.text import tokens, word_shingles
+from logicash_etl_spark.operators.text import BPE_MERGES, tokens, word_shingles
 from logicash_etl_spark.queries._lots import build_once
 from logicash_etl_spark.queries.registry import query
 from logicash_etl_spark.sources.readers import read_table
@@ -123,7 +123,6 @@ def stratified_sample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = stratified_sample(
         docs, id_col="doc_id", stratum_col="source",
         fractions={"src0": 1.0, "src1": 0.5, "src2": 0.25},
-        default_fraction=0.1,
     )
     return kept.groupBy("source").agg(F.count("*").alias("n_kept"))
 
@@ -765,10 +764,10 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_train_ctes(n_merges: int = 8) -> str:
+def _bpe_train_ctes() -> str:
     r"""Chained-CTE SQL that TRAINS the same BPE merge table
     ``operators/text.bpe_train`` learns — the iterative argmax loop
-    unrolled into ``n_merges`` static stages, each: adjacent-pair
+    unrolled into ``BPE_MERGES`` static stages, each: adjacent-pair
     weighted counts over the current vocabulary, top-1 by (count desc,
     left asc, right asc), and a greedy left-to-right rewrite.
 
@@ -793,7 +792,7 @@ def _bpe_train_ctes(n_merges: int = 8) -> str:
       GROUP BY w
     )"""
     ]
-    for k in range(1, n_merges + 1):
+    for k in range(1, BPE_MERGES + 1):
         parts.append(f"""p{k} AS (
       SELECT pr.l AS l, pr.r AS r, CAST(SUM(n) AS BIGINT) AS cnt
       FROM (SELECT n, string_split(trim(s, {nl}), {sep}) AS ws FROM v{k - 1}),
@@ -814,13 +813,13 @@ def _bpe_train_ctes(n_merges: int = 8) -> str:
     return "WITH " + ",\n    ".join(parts)
 
 
-def _bpe_merges_oracle(n_merges: int = 8) -> str:
+def _bpe_merges_oracle() -> str:
     stages = "\n      UNION ALL\n      ".join(
         f"SELECT CAST({k} AS INTEGER) AS merge_rank, l AS left_sym, "
         f"r AS right_sym, l || r AS merged, cnt AS weighted_count FROM m{k}"
-        for k in range(1, n_merges + 1)
+        for k in range(1, BPE_MERGES + 1)
     )
-    return f"{_bpe_train_ctes(n_merges)}\n    {stages}"
+    return f"{_bpe_train_ctes()}\n    {stages}"
 
 
 @query("bpe_merges_report", oracle=_bpe_merges_oracle())
@@ -847,7 +846,7 @@ def bpe_merges_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    merges = bpe_train(wc, n_merges=8)
+    merges = bpe_train(wc)
     return spark.createDataFrame(
         [(i + 1, l, r, m, c) for i, (l, r, m, c) in enumerate(merges)],
         "merge_rank int, left_sym string, right_sym string, merged string, weighted_count bigint",
@@ -856,7 +855,7 @@ def bpe_merges_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bpe_token_counts",
-    oracle=_bpe_train_ctes(8)
+    oracle=_bpe_train_ctes()
     + r""",
     wlen AS (
       SELECT w, CAST(len(string_split(trim(s, chr(10)), chr(10)||chr(10)))
@@ -900,7 +899,7 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    merges = bpe_train(wc, n_merges=8)
+    merges = bpe_train(wc)
     wlen = wc.select(
         "word", F.size(bpe_encode(F.col("word"), merges)).cast("bigint").alias("__n_sym")
     )
@@ -1218,9 +1217,7 @@ def repeated_substring_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.dedup import repeated_substring_spans
 
     docs = read_table(spark, sf_dir, "documents")
-    return repeated_substring_spans(
-        docs, id_col="doc_id", text_col="text", min_tokens=8
-    )
+    return repeated_substring_spans(docs, id_col="doc_id")
 
 
 @query(
@@ -1297,9 +1294,7 @@ def exact_substring_cut_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.text import token_count
 
     docs = read_table(spark, sf_dir, "documents")
-    spans = repeated_substring_spans(
-        docs, id_col="doc_id", text_col="text", min_tokens=8
-    )
+    spans = repeated_substring_spans(docs, id_col="doc_id")
     cut = merge_spans_stats(spans, "doc_id")
     per_doc = docs.select(
         "doc_id", "source",
@@ -1403,9 +1398,7 @@ def exact_substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", tok_fn(F.lower(F.col("text"))).alias("__t")
         )
     )
-    spans = repeated_substring_spans(
-        toks, id_col="doc_id", min_tokens=8, tokens_col="__t"
-    )
+    spans = repeated_substring_spans(toks, id_col="doc_id", tokens_col="__t")
     # fold the spans to ONE small row per affected doc; docs without
     # spans keep every token via the left join + empty-array default
     span_arr = spans.groupBy("doc_id").agg(
@@ -1791,7 +1784,7 @@ def fs_linkage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bpe_fertility_by_lang",
-    oracle=_bpe_train_ctes(8)
+    oracle=_bpe_train_ctes()
     + r""",
     wlen AS (
       SELECT w, CAST(len(string_split(trim(s, chr(10)), chr(10)||chr(10)))
@@ -1857,7 +1850,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = scoped_persist(
         tokenized.groupBy("word").agg(F.count("*").alias("n"))
     )
-    merges = bpe_train(wc, n_merges=8)
+    merges = bpe_train(wc)
     wlen = wc.select(
         "word",
         F.size(bpe_encode(F.col("word"), merges)).cast("bigint").alias("__n_sym"),
@@ -1971,7 +1964,7 @@ def golden_record_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p_partkey_b").alias("id_b"),
         )
     )
-    lab = connected_components(matches, "id_a", "id_b").select(
+    lab = connected_components(matches).select(
         F.col("id").alias("p_partkey"),
         F.col("component").cast("bigint").alias("cluster_id"),
     )

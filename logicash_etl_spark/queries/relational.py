@@ -287,7 +287,7 @@ def asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "event_id", "ts")
     purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    out = asof_join(clicks, purchases, on="user_id", left_ts="ts", right_ts="ts")
+    out = asof_join(clicks, purchases, on="user_id")
     return out.select("user_id", "event_id", "ts", "value_right", "ts_right")
 
 
@@ -615,7 +615,6 @@ def session_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="__ord",
         order_cols=[F.col("__ord").asc()],
         value_col="net",
-        out_col="__peak",
     ).select(
         "day", F.col("__peak").cast("bigint").alias("peak_concurrent")
     )
@@ -1220,7 +1219,7 @@ def part_name_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.joins import qgram_edit_join
 
     part = read_table(spark, sf_dir, "part")
-    return qgram_edit_join(part, "p_name", max_dist=2, q=2)
+    return qgram_edit_join(part, "p_name")
 
 
 @query(

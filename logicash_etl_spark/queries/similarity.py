@@ -17,6 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.operators.similarity import (
+    EMBED_DIM,
+    LSH_PLANES,
+    LSH_PROBES,
+    LSH_TABLES,
+    MMR_DIVERSITY,
+    MMR_PICKS,
+    MMR_RELEVANCE,
+    TOP_K,
     cosine_topk,
     knn_label_vote,
     lsh_ann_topk,
@@ -53,7 +61,7 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     product (bitwise-deterministic doubles)."""
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    out = cosine_topk(emb, queries, k=5)
+    out = cosine_topk(emb, queries)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -80,7 +88,7 @@ def knn_label_vote_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors."""
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    top5 = cosine_topk(emb, queries, k=5)
+    top5 = cosine_topk(emb, queries)
     return knn_label_vote(top5, emb)
 
 
@@ -130,9 +138,9 @@ def embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.filter(F.col("cosine_sim") >= 0.4)
 
 
-def _lsh_oracle_sql(dim: int = 64, planes: int = 4, tables: int = 8,
-                    k: int = 5, multi_probe: int = 2) -> str:
-    """Full SQL twin of the multi-probe hyperplane-LSH pipeline.
+def _lsh_oracle_sql() -> str:
+    """Full SQL twin of the multi-probe hyperplane-LSH pipeline, at
+    the operator's own ``LSH_*``/``TOP_K`` constants.
 
     The hyperplanes are deterministic +-1 literal matrices computed on
     the driver (operators/similarity._sign_matrix — seeded PRNG, no
@@ -147,8 +155,8 @@ def _lsh_oracle_sql(dim: int = 64, planes: int = 4, tables: int = 8,
     from logicash_etl_spark.operators.similarity import _sign_matrix
 
     rows = []
-    for t in range(tables):
-        for p, h in enumerate(_sign_matrix(dim, planes, t * planes)):
+    for t in range(LSH_TABLES):
+        for p, h in enumerate(_sign_matrix(EMBED_DIM, LSH_PLANES, t * LSH_PLANES)):
             lit = "[" + ", ".join("1.0" if x > 0 else "-1.0" for x in h) + "]"
             rows.append(f"({t}, {p}, {lit}::DOUBLE[])")
     values = ",\n      ".join(rows)
@@ -181,7 +189,7 @@ def _lsh_oracle_sql(dim: int = 64, planes: int = 4, tables: int = 8,
       SELECT c.vec_id, c.tbl,
              xor(b.bucket, CAST(1 AS BIGINT) << c.plane)
       FROM qconf c JOIN qbase b USING (vec_id, tbl)
-      WHERE c.conf_rank <= {multi_probe}
+      WHERE c.conf_rank <= {LSH_PROBES}
     ), cand AS (
       SELECT DISTINCT p.vec_id AS query_id, c.vec_id AS cand_id
       FROM qprobe p JOIN cbuck c ON p.tbl = c.tbl AND p.bucket = c.bucket
@@ -199,7 +207,7 @@ def _lsh_oracle_sql(dim: int = 64, planes: int = 4, tables: int = 8,
                     ORDER BY cosine_sim DESC, vec_id) AS INT) AS rank
       FROM scored
     )
-    SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
+    SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {TOP_K}
     """
 
 
@@ -227,7 +235,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
     queries = emb.filter(F.col("vec_id") < 10)
-    out = lsh_ann_topk(emb, queries, dim=64, planes=4, tables=8, k=5, multi_probe=2)
+    out = lsh_ann_topk(emb, queries)
     return out
 
 
@@ -244,9 +252,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: deterministic k-means coarse quantizer (lowest-id
     init, Lloyd iterations on a driver-sampled training set),
-    inverted-file cells, n_probe nearest cells exact-re-ranked per
+    inverted-file cells, the 3 nearest of 8 cells exact-re-ranked per
     query. The other classic ANN scale path beside LSH: candidate
-    fraction ~ n_probe/k, and the cell assignment doubles as the
+    fraction ~ 3/8, and the cell assignment doubles as the
     blocking key for embedding dedup (cf. embedding_dup_pairs).
 
     Oracle upgrade (r5, bound-check-boolean pattern — the
@@ -276,18 +284,12 @@ def ivf_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scoped_persist(
         read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
-    # 8k training rows bound the driver pull; FAISS practice is
-    # ~256 samples per centroid, so 8k >> enough for k=8
-    centroids = kmeans_lite(emb, k=8, iterations=2, train_sample=8192)
+    centroids = kmeans_lite(emb)
     queries = emb.filter(F.col("vec_id") < 10)
     # 10-query batch vs the whole corpus: broadcast the probed query
     # side so the 8-distinct-value cell join never shuffles the corpus
-    approx = scoped_persist(
-        ivf_ann_topk(
-            emb, queries, centroids, k=5, n_probe=3, broadcast_queries=True
-        )
-    )
-    exact = cosine_topk(emb, queries, k=5).select(
+    approx = scoped_persist(ivf_ann_topk(emb, queries, centroids))
+    exact = cosine_topk(emb, queries).select(
         "query_id", F.col("vec_id").alias("__exact_id")
     )
     hits = approx.join(
@@ -356,8 +358,8 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scoped_persist(
         read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
-    centroids = kmeans_lite(emb, k=8, iterations=2, train_sample=8192)
-    marked = semantic_dedup(emb, centroids, threshold=0.4)
+    centroids = kmeans_lite(emb)
+    marked = semantic_dedup(emb, centroids)
     per_cell = marked.groupBy("cell").agg(
         F.count("*").alias("n_vecs"),
         F.sum(F.col("removed").cast("long")).alias("n_removed"),
@@ -425,13 +427,9 @@ def pq_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scoped_persist(
         read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
-    books = pq_train_codebooks(
-        emb, dim=64, m=8, k_codes=16, iterations=3, train_sample=8192
-    )
+    books = pq_train_codebooks(emb)
     queries = emb.filter(F.col("vec_id") < 10)
-    approx = scoped_persist(
-        pq_ann_topk(emb, queries, books, k=5, rerank_candidates=64)
-    )
+    approx = scoped_persist(pq_ann_topk(emb, queries, books))
     # exact L2 top-5 by brute force, in-query, for the recall verdict
     q = queries.select(
         F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
@@ -980,12 +978,13 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Maximal Marginal Relevance — diverse exemplar selection
 # ---------------------------------------------------------------------------
-def _mmr_ctes(k: int = 5) -> str:
+def _mmr_ctes() -> str:
     """Unrolled greedy-MMR oracle (the BPE-train unrolled-loop
-    convention): stage i picks argmax of round(0.7*rel - 0.3*msim, 6)
-    over the pool minus stages 1..i-1, msim = max cosine to the
-    already-selected vectors. Cosines are sequential folds with the
-    1e-12 norm floor — bitwise identical to the Spark operator's."""
+    convention), at the operator's own ``MMR_*`` constants: stage i
+    picks argmax of round(0.7*rel - 0.3*msim, 6) over the pool minus
+    stages 1..i-1, msim = max cosine to the already-selected vectors.
+    Cosines are sequential folds with the 1e-12 norm floor — bitwise
+    identical to the Spark operator's."""
 
     def cos(a: str, b: str) -> str:
         return (
@@ -1008,11 +1007,11 @@ def _mmr_ctes(k: int = 5) -> str:
         + """ AS rel
       FROM base, q
     ), s1 AS (
-      SELECT vec_id, v, round(0.7 * rel, 6) AS score
+      SELECT vec_id, v, round(""" + repr(MMR_RELEVANCE) + """ * rel, 6) AS score
       FROM rel ORDER BY score DESC, vec_id LIMIT 1
     )"""
     ]
-    for i in range(2, k + 1):
+    for i in range(2, MMR_PICKS + 1):
         prev_ids = " UNION ALL ".join(
             f"SELECT vec_id FROM s{j}" for j in range(1, i)
         )
@@ -1026,19 +1025,19 @@ def _mmr_ctes(k: int = 5) -> str:
               FROM ({prev_vs}) s(v)) AS msim
       FROM rel r WHERE r.vec_id NOT IN ({prev_ids})
     ), s{i} AS (
-      SELECT vec_id, v, round(0.7 * rel - 0.3 * msim, 6) AS score
+      SELECT vec_id, v, round({MMR_RELEVANCE!r} * rel - {MMR_DIVERSITY!r} * msim, 6) AS score
       FROM c{i} ORDER BY score DESC, vec_id LIMIT 1
     )"""
         )
     finals = " UNION ALL ".join(
         f"SELECT CAST({i} AS INT) AS rank, vec_id, score AS mmr_score"
         f" FROM s{i}"
-        for i in range(1, k + 1)
+        for i in range(1, MMR_PICKS + 1)
     )
     return "".join(parts) + "\n    " + finals
 
 
-@query("mmr_diverse_exemplars", oracle=_mmr_ctes(5))
+@query("mmr_diverse_exemplars", oracle=_mmr_ctes())
 def mmr_diverse_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diverse exemplar selection via greedy MMR (Carbonell &
     Goldstein SIGIR'98): the 5 vectors most relevant to the query
@@ -1065,6 +1064,4 @@ def mmr_diverse_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mmr_diverse_exemplars: query vector vec_id=0 not found "
             "(empty or filtered embeddings table)"
         )
-    return mmr_select(
-        emb.filter(F.col("vec_id") > 0), qrows[0][0], k=5, lam=0.7
-    )
+    return mmr_select(emb.filter(F.col("vec_id") > 0), qrows[0][0])

@@ -271,7 +271,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain = _drain_state("session_windows", sf_dir, "lq_stream_sess_")
     root = drain["root"]
     stream = stream_parquet_dir(spark, lot, S.EVENTS)
-    sess = session_windows(stream, gap="30 minutes", key="user_id", watermark="1 hour")
+    sess = session_windows(stream)
     out = f"{root}/out"
     run_available_now_to_parquet(
         sess, f"{root}/ckpt", out, state_partitions=_state_parts(spark, lot)
@@ -313,9 +313,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain = _drain_state("tumbling_counts", sf_dir, "lq_stream_tumble_")
     root = drain["root"]
     stream = stream_parquet_dir(spark, lot, S.EVENTS)
-    agg = windowed_counts(
-        stream, window="1 hour", watermark="30 minutes", keys=["event_type"]
-    )
+    agg = windowed_counts(stream)
     out = f"{root}/out"
     run_available_now_to_parquet(
         agg, f"{root}/ckpt", out, state_partitions=_state_parts(spark, lot)
@@ -357,7 +355,7 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain = _drain_state("dedup_counts", sf_dir, "lq_stream_dedup_")
     root = drain["root"]
     stream = stream_parquet_dir(spark, dup_lot, S.EVENTS)
-    deduped = dedup_stream(stream, keys=["event_id"], watermark="1 hour")
+    deduped = dedup_stream(stream, keys=["event_id"])
     out = f"{root}/deduped"
     run_available_now_to_parquet(
         deduped, f"{root}/ckpt", out,
@@ -425,8 +423,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         on="j_user",
         left_ts="l_ts",
         right_ts="r_ts",
-        within="1 hour",
-        watermark="1 hour",
     )
     from logicash_etl_spark.streaming.sources import (
         run_available_now_to_parquet,
@@ -763,9 +759,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream_docs.filter(F.col("doc_id") % 10 == int(tag)).write.format(
                 "logicash_lot"
             ).mode("append").option("path", f"{lots_root}/lot_{tag}").save()
-    apply_batch = incremental_dedup_batch_fn(
-        spark, hist_dir, verdicts, out_partitions=4
-    )
+    apply_batch = incremental_dedup_batch_fn(spark, hist_dir, verdicts)
     q = (
         spark.readStream.format("logicash_lot")
         .schema("doc_id long, source string, fp string")
@@ -898,9 +892,7 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream_parquet_dir(
         spark, lot, S.EVENTS, max_files_per_trigger=1
     )
-    agg = windowed_counts(
-        stream, window="1 hour", watermark="30 minutes", keys=["event_type"]
-    )
+    agg = windowed_counts(stream)
     out = f"{root}/out"
     run_available_now_to_parquet(
         agg, f"{root}/ckpt", out,
@@ -1014,8 +1006,6 @@ def streaming_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
         on="j_user",
         left_ts="l_ts",
         right_ts="r_ts",
-        within="1 hour",
-        watermark="1 hour",
         how="left_outer",
     )
     from logicash_etl_spark.streaming.sources import (

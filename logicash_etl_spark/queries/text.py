@@ -94,7 +94,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic (stopword-marker argmax) evaluated as a
     confusion matrix against the labeled lang column."""
     docs = read_table(spark, sf_dir, "documents")
-    pred = predict_lang(docs, "text")
+    pred = predict_lang(docs)
     return pred.groupBy("lang", "lang_pred").agg(F.count("*").alias("n"))
 
 

@@ -33,6 +33,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from logicash_etl_spark.functions.money import money
+from logicash_etl_spark.operators.graph import (
+    BFS_MAX_HOPS,
+    HITS_ITERATIONS,
+    HITS_SCALE,
+    KCORE_K,
+    KCORE_ROUNDS,
+    LPA_ITERATIONS,
+    PAGERANK_DAMPING_PCT,
+    PAGERANK_ITERATIONS,
+    PAGERANK_SCALE,
+    SSSP_ITERATIONS,
+)
 from logicash_etl_spark.operators.joins import broadcast_bounded
 from logicash_etl_spark.queries._lots import build_once
 from logicash_etl_spark.queries.registry import query
@@ -580,12 +592,13 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle(iterations: int = 3, scale: int = 10**9, d: int = 85) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled integer-PageRank CTE chain — one (s_i, r_i) pair per
     power iteration, floor division throughout, so DuckDB reproduces
     the Spark loop bit-for-bit (every SUM is cast back to BIGINT: the
     r4 lesson — DuckDB SUM(BIGINT) widens to HUGEINT which pandas
     materializes as float64)."""
+    iterations, scale, d = PAGERANK_ITERATIONS, PAGERANK_SCALE, PAGERANK_DAMPING_PCT
     base = (100 - d) * scale // 100
     sql = _TRADE_EDGE_SQL + f"""
     , nodes AS (
@@ -633,7 +646,7 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _trade_edges(spark, sf_dir)
     nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
-    ranks = pagerank_int(nodes, edges, iterations=3)
+    ranks = pagerank_int(nodes, edges)
     # global ranking window over #nations rows — driver-scale frame
     w = W.orderBy(F.desc("rank"), F.asc("node"))
     return ranks.select(
@@ -643,11 +656,12 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_oracle(iterations: int = 3, final_select: str | None = None) -> str:
+def _lpa_oracle(final_select: str | None = None) -> str:
     """Unrolled synchronous-LPA CTE chain over the symmetrized nation
     trade graph — one (c_i, b_i, l_i) triple per round, integer
     weights and a deterministic (weight desc, label asc) argmax, so
     DuckDB reproduces the Spark loop label-for-label."""
+    iterations = LPA_ITERATIONS
     sql = _TRADE_PAIR_SQL + """
     , sym AS (
       SELECT src, dst, CAST(SUM(n) AS BIGINT) AS w FROM (
@@ -721,7 +735,7 @@ def nation_trade_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sym = _trade_sym(spark, sf_dir)
     nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
-    labels = label_propagation(nodes, sym, iterations=3)
+    labels = label_propagation(nodes, sym)
     # community sizes: a window over #nations rows — driver-scale
     w = W.partitionBy("label")
     return labels.select(
@@ -782,7 +796,7 @@ def trade_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.graph import triangle_counts
 
     edges = _trade_edges(spark, sf_dir)
-    stats = triangle_counts(edges, src="src", dst="dst")
+    stats = triangle_counts(edges)
     nations = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("nation"))
     return (
         nations.join(stats, nations.nation == stats.id, "left")
@@ -801,10 +815,11 @@ def trade_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bfs_oracle(max_hops: int = 3) -> str:
+def _bfs_oracle() -> str:
     """Unrolled BFS CTE chain: frontier_i = unvisited out-neighbors of
     frontier_{i-1}; hop counts are integers, so the iterative Spark
     loop hash-matches exactly."""
+    max_hops = BFS_MAX_HOPS
     sql = _TRADE_EDGE_SQL + """
     , v0 AS (
       SELECT (SELECT min(n_name) FROM nation) AS node, 0 AS hops
@@ -847,11 +862,11 @@ def trade_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _trade_edges(spark, sf_dir)
     nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
     source = nodes.agg(F.min("node")).collect()[0][0]
-    out = bfs_hops(nodes, edges, source, max_hops=3)
+    out = bfs_hops(nodes, edges, source)
     return out.select(F.col("node").alias("nation"), "hops")
 
 
-def _kcore_oracle(k: int = 4, rounds: int = 3) -> str:
+def _kcore_oracle() -> str:
     """Unrolled k-core peeling CTE chain: round i keeps the edges
     whose BOTH endpoints had degree >= k in round i-1's subgraph.
     Integer degrees, so the iterative Spark loop hash-matches.
@@ -860,6 +875,7 @@ def _kcore_oracle(k: int = 4, rounds: int = 3) -> str:
     three times by the next, and DuckDB otherwise inlines a CTE into
     every reference, so the unrolled chain grows geometrically (out
     of memory at sf0.01 under a 3 GB cap)."""
+    k, rounds = KCORE_K, KCORE_ROUNDS
     sql = _TRADE_EDGE_SQL + """
     , a0 AS MATERIALIZED (
       SELECT DISTINCT greatest(src, dst) AS u, least(src, dst) AS v
@@ -906,7 +922,7 @@ def trade_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
     nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
-    return k_core(nodes, edges, k=4, rounds=3).select(
+    return k_core(nodes, edges).select(
         F.col("node").alias("nation"), "deg", "in_core"
     )
 
@@ -942,9 +958,7 @@ def pareto_part_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = read_table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_size", "p_retailprice"
     )
-    return pareto_frontier_2d(
-        part, "p_size", "p_retailprice", maximize_x=True, maximize_y=False
-    )
+    return pareto_frontier_2d(part, "p_size", "p_retailprice")
 
 
 _LINK_PRED_SQL = _TRADE_EDGE_SQL + """
@@ -1012,10 +1026,11 @@ def trade_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sssp_oracle(iterations: int = 4) -> str:
+def _sssp_oracle() -> str:
     """Unrolled Bellman-Ford CTE chain over the weighted trade-pair
     graph — min/+ on BIGINT throughout, so DuckDB reproduces the
     Spark supersteps bit-for-bit."""
+    iterations = SSSP_ITERATIONS
     sql = _TRADE_PAIR_SQL + """
     , d0 AS (
       SELECT min(n_name) AS node, CAST(0 AS BIGINT) AS dist FROM nation
@@ -1051,16 +1066,17 @@ def trade_min_cost_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pair.select("src", "dst", F.col("n").alias("w"))
     nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
     source = nodes.agg(F.min("node").alias("node"))
-    return sssp_bounded(nodes, edges, source, iterations=4).select(
+    return sssp_bounded(nodes, edges, source).select(
         F.col("node").alias("nation"), F.col("dist").alias("min_cost")
     )
 
 
-def _hits_oracle(iterations: int = 2, scale: int = 10**6) -> str:
+def _hits_oracle() -> str:
     """Unrolled integer-HITS CTE chain — four CTEs per round
     (authority raw/normalized, hub raw/normalized), L-infinity
     normalization as ``raw * scale // max(raw)``, every SUM cast back
     to BIGINT (DuckDB widens SUM(BIGINT) to HUGEINT)."""
+    iterations, scale = HITS_ITERATIONS, HITS_SCALE
     sql = _TRADE_EDGE_SQL + f"""
     , nodes AS (
       SELECT n_name AS node FROM nation
@@ -1121,7 +1137,7 @@ def nation_trade_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _trade_edges(spark, sf_dir)
     nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
-    res = hits_int(nodes, edges, iterations=2)
+    res = hits_int(nodes, edges)
     w = W.orderBy(F.desc("authority"), F.asc("node"))
     return res.select(
         F.col("node").alias("nation"),
@@ -1131,13 +1147,13 @@ def nation_trade_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _modularity_select(iterations: int = 3) -> str:
+def _modularity_select() -> str:
     """Final SELECT for _lpa_oracle: modularity over round-N labels.
-    Interpolates l{iterations} so the label round always matches the
-    oracle chain it extends."""
+    Interpolates l{LPA_ITERATIONS} so the label round always matches
+    the oracle chain it extends."""
     return f"""
     , lab AS (
-      SELECT node, label FROM l{iterations}
+      SELECT node, label FROM l{LPA_ITERATIONS}
     ), cstat AS (
       SELECT la.label AS community,
              CAST(SUM(CASE WHEN la.label = lb.label THEN e.w ELSE 0 END)
@@ -1187,7 +1203,7 @@ def trade_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sym = _trade_sym(spark, sf_dir)
     nodes = read_table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
-    lab = label_propagation(nodes, sym, iterations=3).select("node", "label")
+    lab = label_propagation(nodes, sym).select("node", "label")
     la = lab.select(F.col("node").alias("src"), F.col("label").alias("ca"))
     lb = lab.select(F.col("node").alias("dst"), F.col("label").alias("cb"))
     cstat = (

@@ -118,7 +118,6 @@ def incremental_dedup_batch_fn(
     hist_dir: str,
     verdicts_dir: str,
     keep_gens: int = 8,
-    out_partitions: int | None = None,
 ):
     """The foreachBatch body of the continuous-ingest dedup: join the
     lot against the fingerprint store below this epoch, write
@@ -126,15 +125,14 @@ def incremental_dedup_batch_fn(
     generation, then compact if the store has sprawled. Every write is
     epoch-keyed + overwrite, so at-least-once retries are no-ops.
 
-    ``out_partitions``: coalesce the per-epoch verdict/generation
-    writes (partitions-follow-volume rule: a kilobyte lot under the
+    The per-epoch verdict/generation writes coalesce to 4 partitions
+    (partitions-follow-volume rule: a kilobyte lot under the
     32-partition shuffle default otherwise writes 32 near-empty files
-    per epoch, pure filesystem bookkeeping). Leave ``None`` on a real
-    cluster where lots are partition-sized already."""
+    per epoch, pure filesystem bookkeeping)."""
     from pyspark.sql.window import Window
 
     def _sized(df: DataFrame) -> DataFrame:
-        return df.coalesce(out_partitions) if out_partitions else df
+        return df.coalesce(4)
 
     def apply_batch(bdf: DataFrame, epoch_id: int) -> None:
         cur = spark.read.schema(_HIST_SCHEMA).parquet(

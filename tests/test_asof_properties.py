@@ -37,7 +37,7 @@ def _spark_asof(spark, lrows, rrows):
     right = spark.createDataFrame(
         [(k, t, v) for k, t, v in rrows], "k long, ts timestamp, rval double"
     )
-    out = asof_join(left, right, on="k", left_ts="ts", right_ts="ts")
+    out = asof_join(left, right, on="k")
     return {
         (r.k, r.ts, r.lval): (r.rval_right, r.ts_right) for r in out.collect()
     }

@@ -63,7 +63,7 @@ def test_operator_persists_freed_by_scope(spark, sf_dir):
     docs = read_table(spark, sf_dir, "documents").limit(200)
     before = _n_persisted(spark)
     with cache_scope():
-        rows = minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.35).collect()
+        rows = minhash_dedup_pairs(docs, "doc_id").collect()
         assert _n_persisted(spark) > before
     assert _n_persisted(spark) == before
     assert all(r.jaccard >= 0.35 for r in rows)

@@ -175,9 +175,7 @@ def test_repeated_substring_spans_handcrafted(spark):
         ],
         "doc_id int, text string",
     )
-    spans = repeated_substring_spans(
-        docs, "doc_id", "text", min_tokens=8
-    )
+    spans = repeated_substring_spans(docs, "doc_id")
     got = {
         r.doc_id: (r.span_start, r.span_end, r.span_tokens)
         for r in spans.collect()

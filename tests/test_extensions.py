@@ -40,20 +40,18 @@ def emb(spark, sf_dir):
 def test_minhash_verified_pairs_are_true_dups(docs):
     """Every LSH+verify pair must be a genuine >=threshold Jaccard pair
     (verification step guarantees precision=1.0 vs ground truth)."""
-    got = {
-        (r.id_a, r.id_b)
-        for r in minhash_dedup_pairs(docs, "doc_id", threshold=0.35).collect()
+    got = {(r.id_a, r.id_b) for r in minhash_dedup_pairs(docs, "doc_id").collect()}
+    # a cap of the document count: no shingle is hot, the full index
+    exact = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in jaccard_pairs(docs, "doc_id", max_doc_freq=docs.count()).collect()
     }
-    truth = {
-        (r.id_a, r.id_b) for r in jaccard_pairs(docs, "doc_id", threshold=0.35).collect()
-    }
+    truth = set(exact)
     assert got <= truth, f"false positives: {sorted(got - truth)[:5]}"
     # LSH @ 64 hashes / 16 bands has ~P(collide)=1-(1-s^4)^16 ≈ 0.97
     # at s=0.5; at 0.35 it's ~0.22 per band -> recall is probabilistic.
     # Demand decent recall on the clearly-duplicated (s>=0.5) pairs.
-    strong = {
-        (r.id_a, r.id_b) for r in jaccard_pairs(docs, "doc_id", threshold=0.5).collect()
-    }
+    strong = {k for k, v in exact.items() if v >= 0.5}
     if strong:
         recall = len(got & strong) / len(strong)
         assert recall >= 0.8, f"recall on strong dups {recall:.2f} < 0.8"
@@ -72,7 +70,7 @@ def test_simhash_self_consistency(docs):
 def test_simhash_pairs_sane(docs):
     """Hamming<=3 pairs: symmetric-free (a<b), bounded hamming, and
     every reported pair shares most signature bits."""
-    pairs = simhash_dup_pairs(docs, "doc_id", max_hamming=3).collect()
+    pairs = simhash_dup_pairs(docs, "doc_id").collect()
     for r in pairs:
         assert r.id_a < r.id_b
         assert 0 <= r.hamming <= 3
@@ -80,11 +78,11 @@ def test_simhash_pairs_sane(docs):
 
 def test_lsh_ann_recall_vs_bruteforce(emb):
     """Bucketed ANN must recover a reasonable fraction of the true
-    top-5 (single-probe LSH: recall is traded for the candidate cut;
-    we assert it's material, not perfect)."""
+    top-5 (multi-probe LSH over 8 tables: recall is traded for the
+    candidate cut; we assert it's material, not perfect)."""
     queries = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(emb, queries, k=5).collect()
-    approx = lsh_ann_topk(emb, queries, dim=64, planes=4, tables=16, k=5).collect()
+    exact = cosine_topk(emb, queries).collect()
+    approx = lsh_ann_topk(emb, queries).collect()
     truth = {(r.query_id, r.vec_id) for r in exact}
     got = {(r.query_id, r.vec_id) for r in approx}
     recall = len(got & truth) / len(truth)
@@ -94,26 +92,6 @@ def test_lsh_ann_recall_vs_bruteforce(emb):
     for r in approx:
         if (r.query_id, r.vec_id) in exact_sims:
             assert abs(r.cosine_sim - exact_sims[(r.query_id, r.vec_id)]) < 1e-12
-
-
-def test_multi_probe_lsh_recall(emb):
-    """Multi-probe at HALF the tables must recover at least the recall
-    of the same half-table index single-probed (probes only ever add
-    buckets), and stay material in absolute terms — the corpus-side
-    index is the expensive half at scale."""
-    queries = emb.filter(F.col("vec_id") < 20)
-    truth = {(r.query_id, r.vec_id)
-             for r in cosine_topk(emb, queries, k=5).collect()}
-
-    def recall(**kw):
-        got = {(r.query_id, r.vec_id)
-               for r in lsh_ann_topk(emb, queries, dim=64, planes=4, k=5, **kw).collect()}
-        return len(got & truth) / len(truth)
-
-    single = recall(tables=8)
-    probed = recall(tables=8, multi_probe=2)
-    assert probed >= single, f"multi-probe lost recall: {probed:.2f} < {single:.2f}"
-    assert probed >= 0.6, f"multi-probe recall {probed:.2f} < 0.6"
 
 
 def test_approx_sketch_accuracy(spark, sf_dir):
@@ -150,7 +128,7 @@ def test_skew_salted_join_matches_plain(spark, sf_dir):
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
     plain = orders.join(cust, on="o_custkey").select("o_orderkey", "c_mktsegment")
-    salted = join_with_skew_salt(orders, cust, on="o_custkey", salt_buckets=8).select(
+    salted = join_with_skew_salt(orders, cust, on="o_custkey").select(
         "o_orderkey", "c_mktsegment"
     )
     assert plain.exceptAll(salted).count() == 0
@@ -163,8 +141,7 @@ def test_connected_components_vs_union_find(spark, docs):
     from logicash_etl_spark.operators.dedup import minhash_dedup_pairs
     from logicash_etl_spark.operators.graph import dedup_clusters
 
-    pairs = [(r.id_a, r.id_b) for r in
-             minhash_dedup_pairs(docs, "doc_id", threshold=0.35).collect()]
+    pairs = [(r.id_a, r.id_b) for r in minhash_dedup_pairs(docs, "doc_id").collect()]
     got = {
         r.doc_id: r.cluster_id
         for r in dedup_clusters(
@@ -228,10 +205,9 @@ def test_jaccard_stop_shingles_exact_scores(docs):
     from logicash_etl_spark.operators.dedup import jaccard_pairs
 
     full = {(r.id_a, r.id_b): r.jaccard
-            for r in jaccard_pairs(docs, "doc_id", threshold=0.35).collect()}
+            for r in jaccard_pairs(docs, "doc_id", max_doc_freq=docs.count()).collect()}
     capped = {(r.id_a, r.id_b): r.jaccard
-              for r in jaccard_pairs(docs, "doc_id", threshold=0.35,
-                                     max_doc_freq=10).collect()}
+              for r in jaccard_pairs(docs, "doc_id", max_doc_freq=10).collect()}
     assert set(capped) <= set(full)
     for k, v in capped.items():
         assert abs(v - full[k]) < 1e-12, f"{k}: {v} != {full[k]}"
@@ -267,10 +243,10 @@ def test_ivf_recall_vs_bruteforce(spark, emb):
         kmeans_lite,
     )
 
-    centroids = kmeans_lite(emb, k=16, iterations=3)
+    centroids = kmeans_lite(emb)
     queries = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(emb, queries, k=5).collect()
-    approx = ivf_ann_topk(emb, queries, centroids, k=5, n_probe=6).collect()
+    exact = cosine_topk(emb, queries).collect()
+    approx = ivf_ann_topk(emb, queries, centroids).collect()
     truth = {(r.query_id, r.vec_id) for r in exact}
     got = {(r.query_id, r.vec_id) for r in approx}
     recall = len(got & truth) / len(truth)
@@ -383,12 +359,11 @@ def test_jaccard_hot_shingle_skew_bounded(spark):
 
     # planted pair found, score exact vs unfiltered run
     capped = {(r.id_a, r.id_b): r.jaccard
-              for r in jaccard_pairs(df, "doc_id", threshold=0.35,
-                                     max_doc_freq=20).collect()}
+              for r in jaccard_pairs(df, "doc_id", max_doc_freq=20).collect()}
     assert (7, n) in capped
     assert abs(capped[(7, n)] - 7.0 / 8.0) < 1e-12
     full = {(r.id_a, r.id_b): r.jaccard
-            for r in jaccard_pairs(df, "doc_id", threshold=0.35).collect()}
+            for r in jaccard_pairs(df, "doc_id", max_doc_freq=df.count()).collect()}
     for k, v in capped.items():
         assert abs(v - full[k]) < 1e-12, f"{k}: capped {v} != exact {full[k]}"
 
@@ -441,8 +416,8 @@ def test_large_star_small_star_random_vs_union_find(spark):
 
 def test_kmeans_guards_zero_vectors_and_small_sample(spark):
     """kmeans_lite: a zero embedding must not poison assignments with
-    NaN, and a training sample smaller than k must raise, not silently
-    return fewer centroids."""
+    NaN, and a training sample smaller than its 8 cells must raise,
+    not silently return fewer centroids."""
     from logicash_etl_spark.operators.similarity import ivf_ann_topk, kmeans_lite
 
     rows = [(i, [float(i + 1), float(2 * i + 1), 1.0]) for i in range(20)]
@@ -450,12 +425,12 @@ def test_kmeans_guards_zero_vectors_and_small_sample(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     with pytest.raises(ValueError, match="< k"):
-        kmeans_lite(df, k=50)
+        kmeans_lite(df.filter("vec_id < 5"))
 
-    cents = kmeans_lite(df, k=4)
+    cents = kmeans_lite(df)
     vals = [x for r in cents.collect() for x in r.centroid]
     assert all(x == x for x in vals), "NaN centroid"
-    out = ivf_ann_topk(df, df.filter("vec_id < 3"), cents, k=2).collect()
+    out = ivf_ann_topk(df, df.filter("vec_id < 3"), cents).collect()
     assert out and all(r.cosine_sim == r.cosine_sim for r in out)
 
 
@@ -527,8 +502,8 @@ def test_semantic_dedup_matches_numpy_twin(spark, emb):
         semantic_dedup,
     )
 
-    centroids = kmeans_lite(emb, k=8, iterations=2, train_sample=8192)
-    marked = semantic_dedup(emb, centroids, threshold=0.4)
+    centroids = kmeans_lite(emb)
+    marked = semantic_dedup(emb, centroids)
     got = {r.vec_id: (r.cell, r.removed) for r in marked.collect()}
 
     cent = {int(r.centroid_id): np.array(r.centroid) for r in centroids.collect()}
@@ -579,8 +554,8 @@ def test_bpe_train_matches_python_twin(spark, sf_smoke):
         .agg(F.count("*").alias("n"))
     )
     # force the distributed per-round path; the driver path must agree
-    got = bpe_train(wc_df, n_merges=8, driver_vocab_threshold=0)
-    got_driver = bpe_train(wc_df, n_merges=8)
+    got = bpe_train(wc_df, driver_vocab_threshold=0)
+    got_driver = bpe_train(wc_df)
     assert got == got_driver
 
     wc = {r.word: r.n for r in wc_df.collect()}
@@ -736,7 +711,7 @@ def test_global_prefix_sum_rejects_partial_null_keys(spark):
 
 
 def test_bpe_oracle_survives_merge_exhaustion(spark):
-    """A corpus whose vocabulary supports fewer than n_merges merges:
+    """A corpus whose vocabulary supports fewer than BPE_MERGES merges:
     the SQL training CTEs must pass the vocabulary through exhausted
     stages unchanged (LEFT JOIN + CASE) so downstream token counts
     stay real — and equal the Spark bpe_train/bpe_encode path, which
@@ -754,7 +729,7 @@ def test_bpe_oracle_survives_merge_exhaustion(spark):
         "CREATE VIEW documents AS SELECT * FROM (VALUES (1, 'ab ab'), (2, 'ab'))"
         " d(doc_id, text)"
     )
-    sql = _bpe_train_ctes(8) + """
+    sql = _bpe_train_ctes() + """
     , wlen AS (SELECT w, len(string_split(trim(s, chr(10)),
                              chr(10)||chr(10))) AS n FROM v8)
     SELECT w, n FROM wlen ORDER BY w"""
@@ -766,7 +741,7 @@ def test_bpe_oracle_survives_merge_exhaustion(spark):
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    merges = bpe_train(wc, n_merges=8)
+    merges = bpe_train(wc)
     assert len(merges) < 8  # the exhaustion case is actually exercised
     got = {
         r.word: len(r.e)
@@ -790,7 +765,7 @@ def test_pagerank_int_invariants(spark):
         "src string, dst string",
     )
     scale = 10**9
-    out = {r.node: r.rank for r in pagerank_int(nodes, edges, 3).collect()}
+    out = {r.node: r.rank for r in pagerank_int(nodes, edges).collect()}
     base = 15 * scale // 100
     # isolated node: damping base only
     assert out["z"] == base
@@ -803,9 +778,7 @@ def test_pagerank_int_invariants(spark):
     # deterministic under physical layout changes
     out2 = {
         r.node: r.rank
-        for r in pagerank_int(
-            nodes.repartition(4), edges.repartition(3), 3
-        ).collect()
+        for r in pagerank_int(nodes.repartition(4), edges.repartition(3)).collect()
     }
     assert out == out2
 
@@ -858,12 +831,10 @@ def test_quantile_sketch_single_median_bucket(spark, sf_dir):
 
 
 def test_pagerank_deep_iteration_flat_plan(spark):
-    """20 supersteps must complete without Catalyst blow-up: the loop
-    localCheckpoint()s ranks every 5 rounds, so the analyzed-plan size
-    is flat (bounded by one checkpoint window, not 20 nested joins) —
-    the iteration rule connected_components pins, applied here."""
-    from pyspark.sql import functions as F
-
+    """Checkpointing truncates the plan without changing the numbers:
+    with a checkpoint after every superstep the analyzed plan holds
+    fewer joins than the three nested supersteps without one — the
+    iteration rule connected_components pins, applied here."""
     from logicash_etl_spark.operators.graph import pagerank_int
 
     nodes = spark.createDataFrame(
@@ -874,28 +845,20 @@ def test_pagerank_deep_iteration_flat_plan(spark):
         + [(f"n{i}", f"n{(i + 3) % 10}") for i in range(10)],
         "src string, dst string",
     )
-    deep = pagerank_int(nodes, edges, iterations=20)
-    # plan truncated to at most one checkpoint window of supersteps:
-    # without checkpointing 20 rounds nest ~60 joins; with it the
-    # final plan holds at most 5 rounds' worth
-    plan = deep._jdf.queryExecution().analyzed().toString()
-    assert plan.count("Join") <= 4 * 6
-    out = {r.node: r.rank for r in deep.collect()}
+    flat = pagerank_int(nodes, edges, checkpoint_every=1)
+    nested = pagerank_int(nodes, edges)
+
+    def joins(df):
+        return df._jdf.queryExecution().analyzed().toString().count("Join")
+
+    assert joins(flat) < joins(nested)
+    out = {r.node: r.rank for r in flat.collect()}
     assert len(out) == 10
     # ring+chord is vertex-transitive: every node has identical rank,
-    # and 20 rounds of integer floor ops stay mass-bounded
+    # and the integer floor ops stay mass-bounded
     assert len(set(out.values())) == 1
     assert 0 < out["n0"] <= 10**9
-    # checkpoint cadence must not change the numbers: 3 iterations
-    # (no checkpoint fires) == 3 iterations with cadence 1
-    a = {r.node: r.rank for r in pagerank_int(nodes, edges, 3).collect()}
-    b = {
-        r.node: r.rank
-        for r in pagerank_int(
-            nodes, edges, 3, checkpoint_every=1
-        ).collect()
-    }
-    assert a == b
+    assert out == {r.node: r.rank for r in nested.collect()}
 
 
 def test_grouped_prefix_sum_matches_plain_window(spark):
@@ -957,8 +920,8 @@ def test_grouped_prefix_sum_matches_plain_window(spark):
 
 def test_pq_encode_and_topk_invariants(spark):
     """PQ contracts on a synthetic clustered corpus: codes stay in
-    [0, k_codes), are layout-invariant, and the shortlist+re-rank
-    top-k returns exactly the true cluster neighbors."""
+    [0, 16), are layout-invariant, and the shortlist+re-rank top-5
+    returns exactly the true cluster neighbors."""
     import random
 
     from pyspark.sql import functions as F
@@ -970,33 +933,31 @@ def test_pq_encode_and_topk_invariants(spark):
     )
 
     rng = random.Random(7)
-    centers = [[10.0 * c] * 16 for c in range(3)]
+    centers = [[10.0 * c] * 64 for c in range(3)]
     rows = []
     for i in range(90):
         c = i % 3
         rows.append(
-            (i, [centers[c][j] + rng.uniform(-0.5, 0.5) for j in range(16)])
+            (i, [centers[c][j] + rng.uniform(-0.5, 0.5) for j in range(64)])
         )
     emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    books = pq_train_codebooks(
-        emb, dim=16, m=4, k_codes=8, iterations=3, train_sample=90
-    )
+    books = pq_train_codebooks(emb)
     codes = pq_encode(emb, books)
     vals = codes.collect()
     for r in vals:
-        for s in range(4):
-            assert 0 <= r[f"code_{s}"] < 8
+        for s in range(8):
+            assert 0 <= r[f"code_{s}"] < 16
     # layout invariance: same codes after repartition
     again = {
-        r.vec_id: tuple(r[f"code_{s}"] for s in range(4))
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8))
         for r in pq_encode(emb.repartition(7), books).collect()
     }
     assert again == {
-        r.vec_id: tuple(r[f"code_{s}"] for s in range(4)) for r in vals
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8)) for r in vals
     }
     # a query from cluster 0 must retrieve only cluster-0 members
     qs = emb.filter(F.col("vec_id") == 0)
-    top = pq_ann_topk(emb, qs, books, k=5, rerank_candidates=20).collect()
+    top = pq_ann_topk(emb, qs, books).collect()
     assert len(top) == 5
     assert all(r.vec_id % 3 == 0 and r.vec_id != 0 for r in top)
     assert [r.rank for r in sorted(top, key=lambda r: r.rank)] == [1, 2, 3, 4, 5]
@@ -1036,10 +997,7 @@ def test_grouped_bottom_k_matches_plain_window(spark):
 
 def test_label_propagation_known_communities(spark):
     """Two dense triangles joined by one weak bridge: LPA must settle
-    each triangle on its min label, layout-invariantly; a 12-round run
-    stays flat-planned via the checkpoint cadence."""
-    from pyspark.sql import functions as F
-
+    each triangle on its min label, layout-invariantly."""
     from logicash_etl_spark.operators.graph import label_propagation
 
     tri = [("a", "b"), ("b", "c"), ("a", "c"),
@@ -1053,22 +1011,15 @@ def test_label_propagation_known_communities(spark):
     )
     got = {
         r.node: r.label
-        for r in label_propagation(nodes, edges, iterations=4).collect()
+        for r in label_propagation(nodes, edges).collect()
     }
     assert got["a"] == got["b"] == got["c"] == "a"
     assert got["x"] == got["y"] == got["z"] == "x"
     again = {
         r.node: r.label
-        for r in label_propagation(
-            nodes.repartition(3), edges.repartition(5), iterations=4
-        ).collect()
+        for r in label_propagation(nodes.repartition(3), edges.repartition(5)).collect()
     }
     assert again == got
-    # deep run completes with bounded plan (checkpoint every 5 rounds)
-    deep = label_propagation(nodes, edges, iterations=12)
-    plan = deep._jdf.queryExecution().analyzed().toString()
-    assert plan.count("Join") <= 30
-    assert {r.label for r in deep.collect()} == {"a", "x"}
 
 
 def test_triangle_counts_vs_bruteforce(spark):
@@ -1088,7 +1039,7 @@ def test_triangle_counts_vs_bruteforce(spark):
         u, v = rng.randrange(n), rng.randrange(n)
         edges.add((u, v))
     rows = list(edges) + [(v, u) for (u, v) in list(edges)[:10]] + [(3, 3)]
-    df = spark.createDataFrame(rows, "u bigint, v bigint")
+    df = spark.createDataFrame(rows, "src bigint, dst bigint")
 
     und = {(min(u, v), max(u, v)) for u, v in edges if u != v}
     adj = {}
@@ -1106,22 +1057,22 @@ def test_triangle_counts_vs_bruteforce(spark):
 
 def test_bfs_hops_chain_and_unreached(spark):
     """Chain 0->1->2->3->4 plus an isolated node and a back-edge:
-    distances are exact, the bound truncates, direction respected,
-    unreached nodes get -1."""
+    distances are exact, the 3-hop bound truncates, direction
+    respected, unreached nodes get -1; a checkpoint after every hop
+    changes nothing."""
     from logicash_etl_spark.operators.graph import bfs_hops
 
     nodes = spark.createDataFrame([(i,) for i in range(6)], "node bigint")
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (3, 4), (4, 0)], "src bigint, dst bigint"
     )
-    got = {r.node: r.hops for r in bfs_hops(nodes, edges, 0, max_hops=3).collect()}
+    got = {r.node: r.hops for r in bfs_hops(nodes, edges, 0).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: -1, 5: -1}
-    # deeper bound reaches node 4; checkpoint cadence must not change results
-    got6 = {
+    every = {
         r.node: r.hops
-        for r in bfs_hops(nodes, edges, 0, max_hops=6, checkpoint_every=2).collect()
+        for r in bfs_hops(nodes, edges, 0, checkpoint_every=1).collect()
     }
-    assert got6 == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: -1}
+    assert every == got
 
 
 def test_rolling_zscore_flags_spike_not_constant(spark, tmp_path):
@@ -1163,59 +1114,56 @@ def test_rolling_zscore_flags_spike_not_constant(spark, tmp_path):
 
 
 def test_k_core_peels_pendants_keeps_clique(spark):
-    """A 4-clique (everyone degree 3) survives a 3-core; a pendant
-    chain hanging off it peels — including the cascade: removing the
-    chain tip drops its parent below k the NEXT round. Reversed /
-    duplicate edges canonicalize away."""
+    """A 5-clique (everyone degree 4) survives the 4-core; a pendant
+    chain hanging off it peels. Reversed / duplicate edges
+    canonicalize away."""
     from logicash_etl_spark.operators.graph import k_core
 
-    clique = [(a, b) for a in range(4) for b in range(4) if a < b]
-    chain = [(3, 4), (4, 5)]
-    edges = clique + chain + [(1, 0), (3, 2)]  # dup + reversed noise
-    nodes = spark.createDataFrame([(i,) for i in range(7)], "node bigint")
+    clique = [(a, b) for a in range(5) for b in range(5) if a < b]
+    chain = [(4, 5), (5, 6)]
+    edges = clique + chain + [(1, 0), (4, 2)]  # dup + reversed noise
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "node bigint")
     df = spark.createDataFrame(edges, "u bigint, v bigint")
-    out = {r.node: (r.deg, r.in_core) for r in
-           k_core(nodes, df, k=3, rounds=3).collect()}
-    # 0,1,2 keep their 3 clique neighbors; 3 loses the chain edge but
-    # keeps 3 clique neighbors; 4,5 peel (4 has deg 2 in round 1, and
-    # once 5 is gone stays below k); 6 is isolated
-    assert out[0] == (3, True) and out[1] == (3, True) and out[2] == (3, True)
-    assert out[3] == (3, True)
-    assert out[4] == (0, False) and out[5] == (0, False) and out[6] == (0, False)
+    out = {r.node: (r.deg, r.in_core) for r in k_core(nodes, df).collect()}
+    # 0..3 keep their 4 clique neighbors; 4 loses the chain edge but
+    # keeps 4 clique neighbors; 5,6 peel (degrees 2 and 1); 7 is isolated
+    assert all(out[i] == (4, True) for i in range(5))
+    assert out[5] == (0, False) and out[6] == (0, False) and out[7] == (0, False)
 
 
 def test_k_core_matches_bruteforce_fixpoint(spark):
-    """On a seeded random graph, 10 peel rounds reach the fixpoint an
-    in-Python peel computes by iterating to convergence — degrees and
-    membership match exactly for every vertex."""
+    """On a seeded random graph, the operator's bounded peel matches
+    an in-Python peel of the same rounds (each round keeps the edges
+    whose both endpoints have degree >= k) — degrees and membership
+    match exactly for every vertex."""
     import random
 
-    from logicash_etl_spark.operators.graph import k_core
+    from logicash_etl_spark.operators.graph import KCORE_K, KCORE_ROUNDS, k_core
 
     rng = random.Random(7)
-    n, k = 16, 3
+    n, k = 16, KCORE_K
     und = set()
-    for _ in range(40):
+    for _ in range(60):
         u, v = rng.randrange(n), rng.randrange(n)
         if u != v:
             und.add((min(u, v), max(u, v)))
-    adj = {i: set() for i in range(n)}
-    for u, v in und:
-        adj[u].add(v)
-        adj[v].add(u)
-    alive = {i for i in range(n) if adj[i]}
-    while True:
-        drop = {x for x in alive if len(adj[x] & alive) < k}
-        if not drop:
-            break
-        alive -= drop
-    expect = {
-        i: (len(adj[i] & alive) if i in alive else 0) for i in range(n)
-    }
+
+    def degrees(es):
+        deg = dict.fromkeys(range(n), 0)
+        for u, v in es:
+            deg[u] += 1
+            deg[v] += 1
+        return deg
+
+    alive = set(und)
+    for _ in range(KCORE_ROUNDS):
+        deg = degrees(alive)
+        alive = {(u, v) for u, v in alive if deg[u] >= k and deg[v] >= k}
+    expect = degrees(alive)
+    assert 0 < len(alive) < len(und)  # the peel both keeps and drops
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node bigint")
     edges = spark.createDataFrame(sorted(und), "u bigint, v bigint")
-    got = {r.node: (r.deg, r.in_core) for r in
-           k_core(nodes, edges, k=k, rounds=10).collect()}
+    got = {r.node: (r.deg, r.in_core) for r in k_core(nodes, edges).collect()}
     assert got == {i: (d, d >= k) for i, d in expect.items()}
 
 
@@ -1343,8 +1291,8 @@ def test_value_drift_psi_flags_shifted_distribution(spark, tmp_path):
 
 
 def test_pareto_frontier_matches_bruteforce(spark):
-    """Randomized 2-D skyline vs the O(n^2) dominance scan, across
-    maximize/minimize orientations, with duplicate points and ties."""
+    """Randomized 2-D skyline (x maximized, y minimized) vs the O(n^2)
+    dominance scan, with duplicate points and ties."""
     import random
 
     from logicash_etl_spark.operators.skyline import pareto_frontier_2d
@@ -1355,25 +1303,13 @@ def test_pareto_frontier_matches_bruteforce(spark):
     pts += [(1000, 5, 5.0), (1001, 5, 5.0), (1002, 20, 0.0), (1003, 0, 10.0)]
     df = spark.createDataFrame(pts, "id bigint, x int, y double")
 
-    for mx in (True, False):
-        for my in (True, False):
-            def better(a, b, maximize):
-                return a > b if maximize else a < b
+    def dominated(p, q):
+        # q dominates p: x no smaller, y no larger, one of them strictly
+        return q[1] >= p[1] and q[2] <= p[2] and (q[1] > p[1] or q[2] < p[2])
 
-            def dominated(p, q):
-                ge_x = q[1] == p[1] or better(q[1], p[1], mx)
-                ge_y = q[2] == p[2] or better(q[2], p[2], my)
-                strict = better(q[1], p[1], mx) or better(q[2], p[2], my)
-                return ge_x and ge_y and strict
-
-            expect = {p[0] for p in pts if not any(dominated(p, q) for q in pts)}
-            got = {
-                r.id
-                for r in pareto_frontier_2d(
-                    df, "x", "y", maximize_x=mx, maximize_y=my, buckets=7
-                ).collect()
-            }
-            assert got == expect, (mx, my)
+    expect = {p[0] for p in pts if not any(dominated(p, q) for q in pts)}
+    got = {r.id for r in pareto_frontier_2d(df, "x", "y", buckets=7).collect()}
+    assert got == expect
 
 
 def test_pareto_frontier_null_dims_and_empty(spark):
@@ -1383,20 +1319,20 @@ def test_pareto_frontier_null_dims_and_empty(spark):
         [(1, None, 1.0), (2, 3, None), (3, 1, 1.0), (4, 2, 2.0)],
         "id bigint, x int, y double",
     )
-    # null-dim rows neither survive nor dominate: (3,1,1.0) is dominated
-    # by (4,2,2.0); the null rows are simply excluded
+    # null-dim rows neither survive nor dominate: (3,1,1.0) has the
+    # smaller y and (4,2,2.0) the larger x, so both survive; the null
+    # rows are simply excluded
     got = {r.id for r in pareto_frontier_2d(df, "x", "y").collect()}
-    assert got == {4}
+    assert got == {3, 4}
     empty = df.filter("id < 0")
     assert pareto_frontier_2d(empty, "x", "y").count() == 0
 
 
 def test_prefix_filter_pairs_lossless_vs_full_index(spark):
     """Prefix filtering must emit EXACTLY the full inverted-index
-    join's pair set (recall 1 by the prefix theorem, precision 1 by
-    verification) on a randomized corpus with planted near-dups, at
-    two thresholds; and the prefix index must be strictly smaller
-    than the full index."""
+    join's pair set at its t = 1/2 (recall 1 by the prefix theorem,
+    precision 1 by verification) on a randomized corpus with planted
+    near-dups."""
     import random
 
     from logicash_etl_spark.operators.caching import cache_scope
@@ -1416,22 +1352,18 @@ def test_prefix_filter_pairs_lossless_vs_full_index(spark):
         docs.append((100 + j, " ".join(base)))
     df = spark.createDataFrame(docs, "doc_id bigint, text string")
 
-    for t in (0.5, 0.8):
-        with cache_scope():
-            got = {
-                (r.id_a, r.id_b, round(r.jaccard, 9))
-                for r in prefix_filter_pairs(
-                    df, "doc_id", "text", shingle_n=3, threshold=t
-                ).collect()
-            }
-            want = {
-                (r.id_a, r.id_b, round(r.jaccard, 9))
-                for r in jaccard_pairs(
-                    df, "doc_id", "text", shingle_n=3, threshold=t
-                ).collect()
-            }
-        assert got == want, t
-        assert want, t  # planted dups must actually appear
+    with cache_scope():
+        got = {
+            (r.id_a, r.id_b, round(r.jaccard, 9))
+            for r in prefix_filter_pairs(df, "doc_id").collect()
+        }
+        want = {
+            (r.id_a, r.id_b, round(r.jaccard, 9))
+            for r in jaccard_pairs(df, "doc_id").collect()
+            if r.jaccard >= 0.5
+        }
+    assert got == want
+    assert want  # planted dups must actually appear
 
 
 def test_prefix_index_smaller_and_df_cap_bounds_postings(spark):
@@ -1463,8 +1395,8 @@ def test_prefix_index_smaller_and_df_cap_bounds_postings(spark):
 
 def test_qgram_edit_join_lossless_vs_bruteforce(spark):
     """Randomized vocabulary incl. strings below the q-gram cutoff
-    (q*(d+1)): the count+length filters are lossless theorems, so the
-    output must EQUAL the brute-force Levenshtein scan."""
+    (q*(d+1) = 6): the count+length filters are lossless theorems, so
+    the output must EQUAL the brute-force Levenshtein scan."""
     import random
 
     from logicash_etl_spark.operators.joins import qgram_edit_join
@@ -1488,19 +1420,15 @@ def test_qgram_edit_join_lossless_vs_bruteforce(spark):
     names = sorted(vocab)
     df = spark.createDataFrame([(n,) for n in names], "nm string")
 
-    for d in (1, 2):
-        got = {
-            (r.name_a, r.name_b, r.dist)
-            for r in qgram_edit_join(df, "nm", max_dist=d, q=2).collect()
-        }
-        want = {
-            (a, b, lev(a, b))
-            for i, a in enumerate(names)
-            for b in names[i + 1 :]
-            if lev(a, b) <= d
-        }
-        assert got == want, d
-        assert want
+    got = {(r.name_a, r.name_b, r.dist) for r in qgram_edit_join(df, "nm").collect()}
+    want = {
+        (a, b, lev(a, b))
+        for i, a in enumerate(names)
+        for b in names[i + 1 :]
+        if lev(a, b) <= 2
+    }
+    assert got == want
+    assert want
 
 
 def test_sssp_bounded_matches_python_bellman_ford(spark):
@@ -1509,7 +1437,7 @@ def test_sssp_bounded_matches_python_bellman_ford(spark):
     within the hop budget."""
     import random
 
-    from logicash_etl_spark.operators.graph import sssp_bounded
+    from logicash_etl_spark.operators.graph import SSSP_ITERATIONS, sssp_bounded
 
     rng = random.Random(41)
     n = 30
@@ -1520,23 +1448,20 @@ def test_sssp_bounded_matches_python_bellman_ford(spark):
         edges.add((nodes[a], nodes[b]))
     wedges = [(s, d, rng.randint(1, 50)) for s, d in sorted(edges)]
 
-    for k in (1, 3, 5):
-        dist = {nodes[0]: 0}
-        for _ in range(k):
-            nxt = dict(dist)
-            for s, d, w in wedges:
-                if s in dist and dist[s] + w < nxt.get(d, 1 << 60):
-                    nxt[d] = dist[s] + w
-            dist = nxt
-        ndf = spark.createDataFrame([(x,) for x in nodes], "node string")
-        edf = spark.createDataFrame(wedges, "src string, dst string, w bigint")
-        src = ndf.agg(F.min("node").alias("node"))
-        got = {
-            r.node: r.dist
-            for r in sssp_bounded(ndf, edf, src, iterations=k).collect()
-        }
-        want = {x: dist.get(x) for x in nodes}
-        assert got == want, k
+    dist = {nodes[0]: 0}
+    for _ in range(SSSP_ITERATIONS):
+        nxt = dict(dist)
+        for s, d, w in wedges:
+            if s in dist and dist[s] + w < nxt.get(d, 1 << 60):
+                nxt[d] = dist[s] + w
+        dist = nxt
+    ndf = spark.createDataFrame([(x,) for x in nodes], "node string")
+    edf = spark.createDataFrame(wedges, "src string, dst string, w bigint")
+    src = ndf.agg(F.min("node").alias("node"))
+    got = {r.node: r.dist for r in sssp_bounded(ndf, edf, src).collect()}
+    want = {x: dist.get(x) for x in nodes}
+    assert got == want
+    assert None in got.values()  # the hop budget truncates
 
 
 def test_interval_union_matches_python_merge(spark):
@@ -1611,7 +1536,7 @@ def test_hits_int_geometry(spark):
     scale = 10**6
     out = {
         r.node: (r.authority, r.hub)
-        for r in hits_int(nodes, edges, iterations=2).collect()
+        for r in hits_int(nodes, edges).collect()
     }
     # c: max authority (both hubs point at it), zero hub (no out-edges)
     assert out["c"] == (scale, 0)
@@ -1626,90 +1551,26 @@ def test_hits_int_geometry(spark):
 
 
 def test_prefix_filter_pairs_exact_rational_boundary(spark):
-    """Threshold arithmetic must be exact at J == t (advice r6): with
-    t = 0.1 the double 0.1*30 rounds UP (3.0000000000000004), so a
-    float length filter drops a (3, 30)-shingle pair whose Jaccard is
-    exactly 3/30 = 0.1. The rational p/q filters must keep it."""
+    """Threshold arithmetic must be exact at J == t: a (10, 20)-shingle
+    pair whose Jaccard is exactly 10/20 = 1/2 passes the prefix,
+    length and final filters, and one shingle less of overlap fails
+    them."""
     from logicash_etl_spark.operators.dedup import prefix_filter_pairs
 
-    small_words = [f"w{i}" for i in range(5)]  # 5 words -> 3 shingles
-    extra = [f"x{i}" for i in range(27)]  # + 27 -> 30 shingles total
+    small_words = [f"w{i}" for i in range(12)]  # 12 words -> 10 shingles
+    extra = [f"x{i}" for i in range(10)]  # + 10 -> 20 shingles total
+    other = [f"v{i}" for i in range(11)]
     docs = [
         (1, " ".join(small_words)),
         (2, " ".join(small_words + extra)),
+        # 9 of the 10 shingles shared: J = 9/21 < 1/2
+        (3, " ".join(other + ["y"])),
+        (4, " ".join(other + ["z"] + [f"u{i}" for i in range(10)])),
     ]
     df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    got = prefix_filter_pairs(
-        df, "doc_id", "text", shingle_n=3, threshold=0.1
-    ).collect()
-    assert len(got) == 1
-    assert (got[0].id_a, got[0].id_b) == (1, 2)
-    assert abs(got[0].jaccard - 0.1) < 1e-12
-
-
-def test_prefix_filter_pairs_reduces_repeating_threshold(spark):
-    """A threshold like 2/3 arrives as the float 0.6666666666666666
-    whose exact fraction has denominator 10^16 — large enough that
-    the integer bound products overflow int64 for realistic shingle
-    sets and wrap SILENTLY with ANSI off (advice r8). The guard must
-    reduce it to the exact 2/3 (which round-trips to the same float)
-    and produce correct pairs — here J = 28/42 = 2/3 EXACTLY, right
-    at the boundary, with 40+ shingles per doc (the old 10^16-scaled
-    products would sit ~100x past int64)."""
-    from logicash_etl_spark.operators.dedup import prefix_filter_pairs
-
-    shared = [f"s{i}" for i in range(30)]
-    a_only = [f"a{i}" for i in range(9)]
-    b_only = [f"b{i}" for i in range(9)]
-    # BELOW the boundary: doc = shared ++ 9 unique words = 39 words
-    # -> 37 shingles; 28 lie fully inside the shared run (positions
-    # 0..27), the 2 seam shingles mix shared+unique words and the 7
-    # suffix shingles are unique. J = 28/(37+37-28) = 14/23 < 2/3 ->
-    # must produce NO pair (and the bound arithmetic ran 10^16-free).
-    docs = [
-        (1, " ".join(shared + a_only)),
-        (2, " ".join(shared + b_only)),
-    ]
-    df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    got = prefix_filter_pairs(
-        df, "doc_id", "text", shingle_n=3, threshold=2 / 3
-    ).collect()
-    assert got == []
-    # AT the boundary: 7 unique words -> 35 shingles per doc, still
-    # 28 shared; J = 28/(35+35-28) = 28/42 = 2/3 EXACTLY -> must
-    # survive (the reduced 2/3 fraction keeps recall exact at J = t).
-    trimmed = [
-        (1, " ".join(shared + a_only[:7])),
-        (2, " ".join(shared + b_only[:7])),
-    ]
-    df2 = spark.createDataFrame(trimmed, "doc_id bigint, text string")
-    got2 = prefix_filter_pairs(
-        df2, "doc_id", "text", shingle_n=3, threshold=2 / 3
-    ).collect()
-    assert len(got2) == 1 and (got2[0].id_a, got2[0].id_b) == (1, 2)
-    assert abs(got2[0].jaccard - 2 / 3) < 1e-12
-
-
-def test_prefix_filter_pairs_rejects_unreducible_threshold(spark):
-    """A threshold whose exact fraction needs q > 2^31 AND does not
-    round-trip through limit_denominator must raise loudly instead of
-    computing wrapped int64 bounds."""
-    import pytest
-
-    from logicash_etl_spark.operators.dedup import prefix_filter_pairs
-
-    df = spark.createDataFrame(
-        [(1, "a b c d e")], "doc_id bigint, text string"
-    )
-    # 0.700000000000001's exact fraction needs q = 10^15 and its
-    # best q<=2^31 approximation is 7/10 — a DIFFERENT threshold
-    # (float(7/10) != 0.700000000000001), so silently reducing would
-    # evaluate the caller's bounds at the wrong t. Must raise.
-    with pytest.raises(ValueError, match="denominator"):
-        prefix_filter_pairs(
-            df, "doc_id", "text", shingle_n=3,
-            threshold=0.700000000000001,
-        )
+    got = prefix_filter_pairs(df, "doc_id").collect()
+    assert [(r.id_a, r.id_b) for r in got] == [(1, 2)]
+    assert got[0].jaccard == 0.5
 
 
 def test_bloom_probe_literal_rejects_m_bits_mismatch(spark):
@@ -1740,6 +1601,6 @@ def test_hits_int_edgeless_graph_yields_zeros(spark):
     edges = spark.createDataFrame([], "src string, dst string")
     out = {
         r.node: (r.authority, r.hub)
-        for r in hits_int(nodes, edges, iterations=2).collect()
+        for r in hits_int(nodes, edges).collect()
     }
     assert out == {"a": (0, 0), "b": (0, 0)}

@@ -202,3 +202,110 @@ def test_unset_as_of_is_one_literal_per_run(pipeline_result, spark, tmp_path):
     clean = ctx2["load_silver"]["clean_rows"]
     assert spark.read.parquet(f"{lot.silver_dir}/transactions").count() == clean
     assert ctx2["validate"]["audit"][0]["total_rows"] == clean
+
+
+def test_empty_and_missing_lots_give_defined_results(spark, tmp_path):
+    """A lot of header-only CSVs runs through with zero counts and
+    0-row outputs; a lot whose directories are missing fails at
+    extract and writes nothing."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    from logicash_etl_spark import schemas as S
+
+    raw = tmp_path / "raw"
+    for name, schema in (("dim_atms", S.DIM_ATMS), ("fact_transactions", S.FACT_TRANSACTIONS)):
+        (raw / name).mkdir(parents=True)
+        (raw / name / "part-00000.csv").write_text(",".join(schema.fieldNames()) + "\n")
+    (raw / "_READY").write_text("ok\n")
+    cfg = LogicashConfig(
+        raw_dir=str(raw),
+        silver_dir=str(tmp_path / "silver"),
+        gold_dir=str(tmp_path / "gold"),
+        as_of=AS_OF,
+    )
+    ctx = run_logicash_pipeline(spark, cfg)
+    assert [m["status"] for m in ctx["__manifest__"]] == ["ok"] * 5
+    assert ctx["load_silver"]["total_rows"] == 0
+    assert set(ctx["load_silver"].values()) == {0}
+    assert ctx["validate"]["top_atms"] == [] and ctx["validate"]["daily_summary"] == []
+    assert [tuple(r) for r in ctx["validate"]["audit"]] == [(0, 0, 0, 0)]
+    for path in (
+        f"{cfg.silver_dir}/quarantine",
+        *(f"{cfg.gold_dir}/{name}" for name in ("dim_atms", "rpt_diario_balance", "top_atms_ranking")),
+    ):
+        assert spark.read.parquet(path).count() == 0, path
+    # no day partition: only the commit marker, so inference fails and
+    # the silver frame's schema reads the directory as 0 rows
+    transactions = f"{cfg.silver_dir}/transactions"
+    assert [f for f in os.listdir(transactions) if not f.startswith(".")] == ["_SUCCESS"]
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        spark.read.parquet(transactions)
+    with cache_scope():
+        schema = transform(*extract(spark, cfg), cfg)[0].schema
+    assert spark.read.schema(schema).parquet(transactions).count() == 0
+
+    missing = LogicashConfig(
+        raw_dir=str(tmp_path / "no_such_lot"),
+        silver_dir=str(tmp_path / "silver_missing"),
+        gold_dir=str(tmp_path / "gold_missing"),
+        as_of=AS_OF,
+    )
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_logicash_pipeline(spark, missing)
+    assert not os.path.exists(missing.silver_dir)
+    assert not os.path.exists(missing.gold_dir)
+
+
+def test_killed_run_reruns_to_the_clean_result(spark, tmp_path, monkeypatch):
+    """A run that dies partway through gold (one gold table written),
+    run again into the same directories, gives what one clean run into
+    fresh directories gives: silver, quarantine, the three gold tables
+    and the validate rows; and neither run leaves a frame persisted."""
+    import logicash_etl_spark.pipeline.logicash as lp
+
+    write_lot(spark, str(tmp_path / "raw"), n_atms=50, n_tx=2_000, as_of=AS_OF)
+
+    def lot(name):
+        return LogicashConfig(
+            raw_dir=str(tmp_path / "raw"),
+            silver_dir=str(tmp_path / name / "silver"),
+            gold_dir=str(tmp_path / name / "gold"),
+            as_of=AS_OF,
+        )
+
+    class _DiesAfterOneTable(dict):
+        def items(self):
+            yield next(iter(super().items()))
+            raise RuntimeError("killed mid-gold")
+
+    real_build_gold = lp.build_gold
+    persisted_before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    killed = lot("killed")
+    monkeypatch.setattr(lp, "build_gold", lambda silver: _DiesAfterOneTable(real_build_gold(silver)))
+    with pytest.raises(RuntimeError, match="killed mid-gold"):
+        run_logicash_pipeline(spark, killed)
+    monkeypatch.setattr(lp, "build_gold", real_build_gold)
+    assert sorted(p.name for p in (tmp_path / "killed" / "gold").iterdir()) == ["dim_atms"]
+    rerun = run_logicash_pipeline(spark, killed)
+    clean_cfg = lot("clean")
+    clean = run_logicash_pipeline(spark, clean_cfg)
+
+    tables = [
+        "silver_dir/transactions",
+        "silver_dir/quarantine",
+        "gold_dir/dim_atms",
+        "gold_dir/rpt_diario_balance",
+        "gold_dir/top_atms_ranking",
+    ]
+    for table in tables:
+        attr, name = table.split("/")
+        a = spark.read.parquet(f"{getattr(killed, attr)}/{name}")
+        b = spark.read.parquet(f"{getattr(clean_cfg, attr)}/{name}")
+        assert a.count() > 0, table
+        assert a.exceptAll(b).count() == 0, table
+        assert b.exceptAll(a).count() == 0, table
+    assert rerun["validate"] == clean["validate"]
+    assert rerun["load_silver"] == clean["load_silver"]
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= persisted_before

@@ -57,9 +57,9 @@ def test_scd2_history(spark):
 
 
 def test_scd2_empty_tracked_raises(spark):
-    """Updates carrying only keys + ts have nothing to version — a
-    None changed-predicate would silently drop matched current rows,
-    so the operator must refuse instead."""
+    """An empty tracked-column list has nothing to version — a None
+    changed-predicate would silently drop matched current rows, so
+    the operator must refuse instead."""
     import pytest
 
     from logicash_etl_spark.operators.merge import scd2_apply, scd2_init
@@ -72,4 +72,4 @@ def test_scd2_empty_tracked_raises(spark):
         [(1, "2024-02-01 00:00:00")], "k int, ts string"
     ).withColumn("ts", F.to_timestamp("ts"))
     with pytest.raises(ValueError, match="no tracked columns"):
-        scd2_apply(dim, upd, keys=["k"], effective_ts="ts")
+        scd2_apply(dim, upd, keys=["k"], effective_ts="ts", tracked_cols=[])

@@ -33,7 +33,7 @@ def test_pack_and_stats(spark, sf_smoke):
 
 def test_decode_image_meta_batched(spark, sf_smoke):
     m = _media_df(spark, sf_smoke)
-    meta = decode_image_meta(m, id_col="doc_id")
+    meta = decode_image_meta(m)
     rows = meta.collect()
     assert len(rows) == 50
     for r in rows:
@@ -41,76 +41,33 @@ def test_decode_image_meta_batched(spark, sf_smoke):
         assert r.format in ("png", "jpeg")
         assert r.media_bytes > 0
     # deterministic: re-run yields identical metadata
-    again = {r.id: (r.width, r.height, r.format) for r in decode_image_meta(m, "doc_id").collect()}
+    again = {r.id: (r.width, r.height, r.format) for r in decode_image_meta(m).collect()}
     first = {r.id: (r.width, r.height, r.format) for r in rows}
     assert first == again
 
 
 def test_frame_sample_plan(spark, sf_smoke):
     m = _media_df(spark, sf_smoke)
-    plan = frame_sample_plan(m, id_col="doc_id", every_n=10)
+    plan = frame_sample_plan(m)
     agg = plan.groupBy("id").agg(F.count("*").alias("n"), F.max("frame_idx").alias("mx"))
     for r in agg.collect():
         assert r.n >= 1
         assert r.mx % 10 == 0
 
 
-def test_kernel_selection_both_branches(monkeypatch):
-    """Auto-selection: PIL kernel when importable, fake otherwise —
-    the fake must be the FALLBACK, never the override."""
-    import logicash_etl_spark.operators.multimodal as mm
-
-    monkeypatch.setattr(mm, "_pil_available", lambda: False)
-    assert mm._select_kernel() is mm._fake_image_decode
-    monkeypatch.setattr(mm, "_pil_available", lambda: True)
-    assert mm._select_kernel() is mm._pil_image_decode
-
-
-def test_pil_kernel_with_synthetic_pil(monkeypatch):
-    """Drive the real-codec kernel through a synthetic PIL module: the
-    kernel's contract (open bytes -> width/height/format, lowercase
-    format, context-managed) holds without the real library."""
-    import sys
-    import types
-
-    import logicash_etl_spark.operators.multimodal as mm
-
-    class _Img:
-        def __init__(self, data):
-            self.width, self.height = len(data) % 100 + 1, len(data) % 50 + 1
-            self.format = "PNG"
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    image_mod = types.ModuleType("PIL.Image")
-    image_mod.open = lambda buf: _Img(buf.read())
-    pil_mod = types.ModuleType("PIL")
-    pil_mod.Image = image_mod
-    monkeypatch.setitem(sys.modules, "PIL", pil_mod)
-    monkeypatch.setitem(sys.modules, "PIL.Image", image_mod)
-
-    w, h, fmt = mm._pil_image_decode(b"0123456789abc")
-    assert (w, h, fmt) == (14, 14, "png")
-    assert mm._pil_available()
-    assert mm._select_kernel() is mm._pil_image_decode
-
-
 def test_decode_with_injected_kernel(spark, sf_smoke):
-    """End-to-end plumbing with a CUSTOM kernel shipped to the workers:
-    proves the mapInPandas path is codec-agnostic (same path a real
-    PIL kernel takes on a cluster with codecs installed)."""
-    def kernel(data: bytes):
-        return len(data) % 7 + 1, len(data) % 11 + 1, "custom"
+    """End-to-end plumbing with the kernel the batch function ships to
+    the workers: each row that crosses the Arrow batch boundary comes
+    back with exactly what the kernel gives its bytes."""
+    from logicash_etl_spark.operators.multimodal import _fake_image_decode
 
     m = _media_df(spark, sf_smoke)
-    rows = decode_image_meta(m, id_col="doc_id", kernel=kernel).collect()
+    blobs = {r.doc_id: bytes(r.media.data) for r in m.select("doc_id", "media").collect()}
+    rows = decode_image_meta(m).collect()
     assert len(rows) == 50
     for r in rows:
-        assert r.format == "custom"
-        assert r.width == r.media_bytes % 7 + 1
-        assert r.height == r.media_bytes % 11 + 1
+        assert (r.width, r.height, r.format) == _fake_image_decode(blobs[r.id])
+        assert r.media_bytes == len(blobs[r.id])
 
 
 def test_phash_brightness_invariance_and_determinism(spark):
@@ -130,12 +87,9 @@ def test_phash_brightness_invariance_and_determinism(spark):
 
     rows = [(1, b"alpha"), (2, b"beta"), (3, b"alpha")]
     df = pack_media(
-        spark.createDataFrame(rows, "id long, blob binary"), "blob", "image/png"
+        spark.createDataFrame(rows, "doc_id long, blob binary"), "blob", "image/png"
     )
-    got = {
-        r.id: r.phash
-        for r in phash_image(df, pixel_kernel=_fake_pixel_grid).collect()
-    }
+    got = {r.id: r.phash for r in phash_image(df).collect()}
     assert got[1] == got[3] != got[2]
 
 
@@ -153,11 +107,9 @@ def test_audio_chunk_plan_boundaries(spark):
         (3, b""),             # empty -> no chunks
         (4, b"\x00" * 321),   # 160 samples (floor) + half byte dropped
     ]
-    df = spark.createDataFrame(rows, "id long, blob binary")
+    df = spark.createDataFrame(rows, "doc_id long, blob binary")
     clips = pack_media(df, "blob", "audio/pcm")
-    chunks = audio_chunk_plan(
-        clips, id_col="id", sample_rate=16_000, chunk_seconds=0.01
-    ).collect()
+    chunks = audio_chunk_plan(clips).collect()
     by_id = {}
     for r in chunks:
         by_id.setdefault(r.id, []).append((r.chunk_idx, r.start_sample, r.n_samples))

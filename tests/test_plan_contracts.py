@@ -456,7 +456,7 @@ def test_semantic_dedup_assignment_is_map_side(spark, sf_dir):
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = kmeans_lite(emb, k=8, iterations=1, train_sample=8192)
+    cents = kmeans_lite(emb)
     assigned = assign_cells(emb, cents)
     assert count_exchanges(assigned) == 0
     assert join_strategies(assigned) == []
@@ -569,9 +569,7 @@ def test_pq_encode_zero_shuffle(spark, sf_dir):
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
-    books = pq_train_codebooks(
-        emb, dim=64, m=4, k_codes=8, iterations=1, train_sample=512
-    )
+    books = pq_train_codebooks(emb)
     codes = pq_encode(emb, books)
     assert count_exchanges(codes) == 0
     assert "Join" not in plan_string(codes)
@@ -742,15 +740,13 @@ def test_pq_expressions_compile_in_codegen(spark, sf_dir):
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
-    books = pq_train_codebooks(
-        emb, dim=64, m=8, k_codes=16, iterations=1, train_sample=1024
-    )
+    books = pq_train_codebooks(emb)
     old = spark.conf.get("spark.sql.codegen.fallback", "true")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
         assert pq_encode(emb, books).count() > 0
         q = emb.filter(F.col("vec_id") < 2)
-        assert pq_ann_topk(emb, q, books, k=3, rerank_candidates=8).count() > 0
+        assert pq_ann_topk(emb, q, books).count() > 0
     finally:
         spark.conf.set("spark.sql.codegen.fallback", old)
 

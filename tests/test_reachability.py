@@ -1,7 +1,8 @@
 """Dead-code guards over ``logicash_etl_spark/``:
 - every top-level definition must be reachable from an entry point;
-- every defaulted parameter of a public engine function must be passed
-  by some entry-point call (or be allowlisted with its reason);
+- every defaulted parameter of a top-level engine function other than a
+  ``@query`` must take more than one value across its entry-point calls
+  (or be allowlisted with its reason);
 - every parameter of a top-level engine function other than a ``@query``
   must be read by its body;
 - no module, test or root script imports a name it never reads.
@@ -14,8 +15,8 @@ Definitions are top-level functions, classes and module constants
 - all code in ``__spark_entry__.py``, ``perfbench/*.py`` and the root
   ``*.py`` scripts.
 
-Tests are not roots: a definition or option that only its own tests
-use is dead.
+Tests are not roots: a definition or option value that only its own
+tests use is dead.
 ``__init__`` re-exports are followed as aliases, never counted as uses.
 Names resolve through each module's imports (``from m import x``,
 ``import m``, ``m.x``); a name that resolves to nothing is ignored.
@@ -212,13 +213,15 @@ def test_scan_sees_the_catalog():
 
 
 # ---------------------------------------------------------------------------
-# Option guard: every defaulted parameter of a public engine function must be
-# passed by some entry-point call. A parameter no caller sets only renames a
-# column or selects a branch nobody takes: inline its default.
+# Option guard: every defaulted parameter of a top-level engine function
+# (other than a ``@query``) must take more than one value across its
+# entry-point calls. A parameter that every call gives the same constant
+# (or that every call leaves at its default) only renames a column or
+# selects a branch nobody takes: inline the value.
 #
 # The allowlist names each kept parameter's reason: a deployment setting, or
-# a test seam (a tier-1 test sets it to reach, on a small input, a path the
-# entry points reach only with larger inputs).
+# a test seam ``file::test`` (that tier-1 test sets it to reach, on a small
+# input, a path the entry points reach only with larger inputs).
 ALLOWED_OPTIONS = {
     "session.get_spark.master": "deployment setting: the cluster to run on",
     "operators.graph.connected_components.driver_threshold":
@@ -237,6 +240,8 @@ ALLOWED_OPTIONS = {
         "test_round14_opts::test_grouped_prefix_peak_matches_prefix_sum_then_max",
     "operators.partitioning.grouped_bottom_k.salt_buckets":
         "test_extensions::test_grouped_bottom_k_matches_plain_window",
+    "operators.dedup.jaccard_pairs.max_doc_freq":
+        "test_extensions::test_jaccard_hot_shingle_skew_bounded",
     "operators.skyline.pareto_frontier_2d.buckets":
         "test_extensions::test_pareto_frontier_matches_bruteforce",
     "streaming.history.incremental_dedup_batch_fn.keep_gens":
@@ -244,86 +249,142 @@ ALLOWED_OPTIONS = {
 }
 
 
-def _public_engine_fns(scan: _Scan):
+def _engine_fns(scan: _Scan):
     for module, mod in scan.modules.items():
         if not module.startswith(PKG) or module in ALLOWLIST_MODULES:
             continue
         for name, node in mod.defs.items():
-            if (
-                not name.startswith("_")
-                and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-                and not any(_is_query_decorator(d) for d in node.decorator_list)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not any(
+                _is_query_decorator(d) for d in node.decorator_list
             ):
                 yield module, name, node
 
 
-def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
-    """(position, or None if keyword-only; name) of defaulted parameters."""
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str, ast.expr]]:
+    """(position, or None if keyword-only; name; default) of defaulted
+    parameters."""
     a = fn.args
     pos = [*a.posonlyargs, *a.args]
     first = len(pos) - len(a.defaults)
-    out = [(i, p.arg) for i, p in enumerate(pos) if i >= first]
-    out += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    out = [(i, p.arg, a.defaults[i - first]) for i, p in enumerate(pos) if i >= first]
+    out += [(None, p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
     return out
 
 
-def _options_passed(scan: _Scan) -> dict[tuple[str, str], set]:
-    """(module, function) -> what its entry-point uses pass: keyword
-    names, ``("pos", n)`` for n positional arguments, and ``"*"`` for
-    ``*args``/``**kwargs`` or a use as a value (which may pass anything)."""
-    public = {(m, n) for m, n, _ in _public_engine_fns(scan)}
-    passed: dict[tuple[str, str], set] = {}
+_ARITHMETIC = (ast.Constant, ast.BinOp, ast.UnaryOp, ast.operator, ast.unaryop)
+
+
+def _constant(scan: _Scan, module: str, node: ast.expr):
+    """A hashable key for a constant expression, or None if it may vary.
+    Constants: literals, arithmetic on literals, tuples or lists of
+    constants, and names that resolve to one engine definition."""
+    if isinstance(node, (ast.Tuple, ast.List)):
+        items = tuple(_constant(scan, module, e) for e in node.elts)
+        return None if None in items else ("seq", items)
+    if all(isinstance(n, _ARITHMETIC) for n in ast.walk(node)):
+        value = eval(compile(ast.Expression(node), "<constant>", "eval"), {"__builtins__": {}})
+        return (type(value).__name__, value)
+    if isinstance(node, (ast.Name, ast.Attribute)):
+        refs = scan.resolve(module, node)
+        return ("def", *next(iter(refs))) if len(refs) == 1 else None
+    return None
+
+
+def _option_values(scan: _Scan) -> dict[str, set]:
+    """``module.function.parameter`` (package prefix dropped) -> the
+    values its entry-point uses give it: the passed expression, or the
+    default where a call omits it. None stands for a value that may vary:
+    a variable, a ``*args``/``**kwargs`` call, or a use of the function as
+    a value."""
+    fns = {(m, n): node for m, n, node in _engine_fns(scan)}
+    values: dict[str, set] = {
+        f"{m[len(PKG) + 1:]}.{n}.{param}": set()
+        for (m, n), node in fns.items()
+        for _, param, _ in _defaulted(node)
+    }
     for module, mod in scan.modules.items():
         calls = {id(n.func): n for n in ast.walk(mod.tree) if isinstance(n, ast.Call)}
         for sub in ast.walk(mod.tree):
-            for ref in scan.resolve(module, sub) & public:
-                got = passed.setdefault(ref, set())
+            for ref in scan.resolve(module, sub) & fns.keys():
                 call = calls.get(id(sub))
-                if call is None or any(isinstance(a, ast.Starred) for a in call.args) or any(
+                opaque = call is None or any(isinstance(a, ast.Starred) for a in call.args) or any(
                     k.arg is None for k in call.keywords
-                ):
-                    got.add("*")
-                    continue
-                got.add(("pos", len(call.args)))
-                got.update(k.arg for k in call.keywords)
-    return passed
+                )
+                passed = {} if opaque else {k.arg: k.value for k in call.keywords}
+                for i, param, default in _defaulted(fns[ref]):
+                    got = values[f"{ref[0][len(PKG) + 1:]}.{ref[1]}.{param}"]
+                    if opaque:
+                        got.add(None)
+                    elif param in passed:
+                        got.add(_constant(scan, module, passed[param]))
+                    elif i is not None and i < len(call.args):
+                        got.add(_constant(scan, module, call.args[i]))
+                    else:
+                        got.add(_constant(scan, ref[0], default))
+    return values
 
 
-def _unset_options(scan: _Scan) -> list[str]:
-    passed = _options_passed(scan)
-    out = []
-    for module, name, node in _public_engine_fns(scan):
-        got = passed.get((module, name), set())
-        if "*" in got:
-            continue
-        n_pos = max((g[1] for g in got if isinstance(g, tuple)), default=0)
-        out += [
-            f"{module[len(PKG) + 1:]}.{name}.{param}"
-            for i, param in _defaulted(node)
-            if param not in got and (i is None or i >= n_pos)
-        ]
-    return out
+def _one_value_options(scan: _Scan) -> set[str]:
+    return {opt for opt, got in _option_values(scan).items() if len(got) == 1 and None not in got}
 
 
-def test_every_engine_option_is_set_by_an_entry_point():
-    unset = set(_unset_options(_Scan()))
-    fresh = sorted(unset - ALLOWED_OPTIONS.keys())
+def test_every_engine_option_takes_more_than_one_value():
+    one_value = _one_value_options(_Scan())
+    fresh = sorted(one_value - ALLOWED_OPTIONS.keys())
     assert not fresh, (
-        "options no entry point sets (inline the default and delete the "
-        "branches only other values select):\n  " + "\n  ".join(fresh)
+        "options every entry point gives the same constant (inline it and "
+        "delete the branches only other values select):\n  " + "\n  ".join(fresh)
     )
-    stale = sorted(ALLOWED_OPTIONS.keys() - unset)
+    stale = sorted(ALLOWED_OPTIONS.keys() - one_value)
     assert not stale, (
-        "allowlisted options that are gone or now set by an entry point:\n  "
+        "allowlisted options that are gone or now take several values:\n  "
         + "\n  ".join(stale)
     )
 
 
+def _passes(test: ast.FunctionDef, fn: str, param: str, position: int | None) -> bool:
+    for call in ast.walk(test):
+        if not isinstance(call, ast.Call):
+            continue
+        name = call.func.attr if isinstance(call.func, ast.Attribute) else getattr(call.func, "id", None)
+        if name == fn and (
+            any(k.arg == param for k in call.keywords)
+            or (position is not None and position < len(call.args))
+        ):
+            return True
+    return False
+
+
+def test_every_test_seam_names_a_test_that_sets_it():
+    """A seam must not outlive the test that justified it: the named
+    ``tests/<file>.py::<test>`` must exist and pass the parameter."""
+    scan = _Scan()
+    fns = {f"{m[len(PKG) + 1:]}.{n}": node for m, n, node in _engine_fns(scan)}
+    wrong = []
+    for option, reason in ALLOWED_OPTIONS.items():
+        if reason.startswith("deployment setting"):
+            continue
+        file, test = reason.split("::")
+        path = REPO / "tests" / f"{file}.py"
+        tests = [
+            n for n in (ast.walk(ast.parse(path.read_text())) if path.exists() else [])
+            if isinstance(n, ast.FunctionDef) and n.name == test
+        ]
+        qualname, param = option.rsplit(".", 1)
+        position = next(i for i, p, _ in _defaulted(fns[qualname]) if p == param) if qualname in fns else None
+        if not any(_passes(t, qualname.rsplit(".", 1)[1], param, position) for t in tests):
+            wrong.append(f"{option}: {reason}")
+    assert not wrong, "test seams whose named test is gone or does not set them:\n  " + "\n  ".join(wrong)
+
+
 def test_option_scan_resolves_a_known_keyword():
     """Guard the guard: perfbench's ``get_spark(..., extra_conf=...)``
-    must count as setting ``extra_conf``."""
-    passed = _options_passed(_Scan())
-    assert "extra_conf" in passed[(f"{PKG}.session", "get_spark")]
+    passes a variable, which may vary; ``get_spark(master)`` is left at
+    its default by every caller, which is one value."""
+    scan = _Scan()
+    values = _option_values(scan)
+    assert None in values["session.get_spark.extra_conf"]
+    assert "session.get_spark.master" in _one_value_options(scan)
 
 
 def test_no_unused_imports():

@@ -90,13 +90,10 @@ def test_decode_image_meta_null_binary(spark):
     )
 
     df = spark.createDataFrame(
-        [(1, bytearray(b"payload")), (2, None)], "id long, blob binary"
+        [(1, bytearray(b"payload")), (2, None)], "doc_id long, blob binary"
     )
     media = pack_media(df, "blob", "image/png")
-    rows = {
-        r["id"]: r
-        for r in decode_image_meta(media, id_col="id").collect()
-    }
+    rows = {r["id"]: r for r in decode_image_meta(media).collect()}
     assert rows[1]["width"] is not None
     assert rows[1]["media_bytes"] == 7
     assert rows[2]["width"] is None
@@ -125,13 +122,11 @@ def test_phash_null_binary(spark, nulls_dir):
     )
 
     df = spark.createDataFrame(
-        [(1, bytearray(b"payload")), (2, None)], "id long, blob binary"
+        [(1, bytearray(b"payload")), (2, None)], "doc_id long, blob binary"
     )
     sig = {
         r["id"]: r["phash"]
-        for r in phash_image(
-            pack_media(df, "blob", "image/png"), id_col="id"
-        ).collect()
+        for r in phash_image(pack_media(df, "blob", "image/png")).collect()
     }
     assert sig[1] is not None and sig[2] is None
     name = "media_phash_dups"
@@ -167,7 +162,7 @@ def test_asof_join_null_field_not_skipped(spark):
     right = spark.createDataFrame(
         [(1, 10, 100.0), (1, 20, None)], "k long, ts long, v double"
     )
-    out = asof_join(left, right, on="k", left_ts="ts", right_ts="ts").collect()
+    out = asof_join(left, right, on="k").collect()
     assert len(out) == 1
     assert out[0]["ts_right"] == 20  # latest right row matched...
     assert out[0]["v_right"] is None  # ...with ITS value, null included
@@ -206,7 +201,7 @@ def test_lang_id_null_text_is_und(spark, nulls_dir):
     from logicash_etl_spark.operators.text import predict_lang
 
     df = spark.createDataFrame([(None,), ("the cat and dog",)], "text string")
-    got = {r["text"]: r["lang_pred"] for r in predict_lang(df, "text").collect()}
+    got = {r["text"]: r["lang_pred"] for r in predict_lang(df).collect()}
     assert got[None] == "und" and got["the cat and dog"] == "en"
     name = "lang_id_confusion"
     compare(QUERIES[name](spark, nulls_dir), ORACLES[name], nulls_dir)

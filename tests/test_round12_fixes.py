@@ -100,49 +100,3 @@ def test_robust_stats_exclude_null_values(spark, null_corpus):
     assert "refund" not in rows
     assert rows["purchase"].n == 2
     assert rows["purchase"].mean_milli == 1000 * (1000 + 3000) // 2
-
-
-# --- LSH knee preset (r11 longdoc adjudication hardening) -----------
-
-def _shingle_set(text, n=3):
-    t = text.split()
-    return {" ".join(t[i:i + n]) for i in range(len(t) - n + 1)}
-
-
-def test_lsh_preset_catches_longdoc_knee_pair(spark):
-    """The r11 longdoc adjudication: mixed-tail docs form TRUE pairs
-    at J~0.38, below the default 64x16 s-curve knee (P(candidate)
-    ~28%). The calibrated 128x64 config (the smallest band count whose
-    s-curve clears 0.95 recall at J=0.35) must catch exactly this shape."""
-    from logicash_etl_spark.operators.caching import cache_scope
-    from logicash_etl_spark.operators.dedup import minhash_dedup_pairs
-
-    tail = (
-        "alpha bravo charlie delta echo foxtrot golf hotel india "
-        "juliet kilo lima mike november oscar papa quebec romeo "
-        "sierra tango uniform victor whiskey xray yankee zulu "
-    ) * 3
-    # 20 distinct prefix words per side puts the shared-tail pair at
-    # J~0.39 — inside the adjudicated 0.377-0.491 knee zone
-    pref_a = " ".join(f"aardvark{i}" for i in range(20)) + " "
-    pref_b = " ".join(f"bobolink{i}" for i in range(20)) + " "
-    a, b_txt = pref_a + tail, pref_b + tail
-    inter = _shingle_set(a) & _shingle_set(b_txt)
-    union = _shingle_set(a) | _shingle_set(b_txt)
-    j = len(inter) / len(union)
-    assert 0.3 < j < 0.5, f"fixture drifted out of the knee zone: J={j}"
-
-    docs = spark.createDataFrame(
-        [(1, a), (2, b_txt), (3, "completely unrelated filler words here")],
-        "doc_id long, text string",
-    )
-    n_hashes, bands = 128, 64
-    with cache_scope():
-        pairs = {
-            (r.id_a, r.id_b)
-            for r in minhash_dedup_pairs(
-                docs, "doc_id", threshold=0.35,
-                num_hashes=n_hashes, bands=bands,
-            ).collect()
-        }
-    assert (1, 2) in pairs or (2, 1) in pairs

@@ -101,20 +101,14 @@ def test_asof_join_rejects_all_reserved_names(spark):
         [(1, "2024-01-01 00:00:00", 9)], "k bigint, ts string, __r bigint"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     right = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", 5)], "k bigint, rts string, v bigint"
-    ).withColumn("rts", F.col("rts").cast("timestamp"))
+        [(1, "2024-01-01 00:00:00", 5)], "k bigint, ts string, v bigint"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
     with pytest.raises(ValueError, match="__r"):
-        asof_join(left, right, on="k", left_ts="ts", right_ts="rts")
+        asof_join(left, right, on="k")
     for bad in ("__t", "__is_left", "__rt"):
         r2 = right.withColumnRenamed("v", bad)
         with pytest.raises(ValueError, match=bad):
-            asof_join(
-                left.withColumnRenamed("__r", "ok"),
-                r2,
-                on="k",
-                left_ts="ts",
-                right_ts="rts",
-            )
+            asof_join(left.withColumnRenamed("__r", "ok"), r2, on="k")
 
 
 def test_vocab_drift_count_table_matches_token_stream_rollup(spark):
@@ -185,16 +179,12 @@ def test_exact_substring_rowlocal_filter_matches_retired_antijoin(spark):
         (9, None),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    spans = repeated_substring_spans(
-        docs, id_col="doc_id", text_col="text", min_tokens=8
-    )
+    spans = repeated_substring_spans(docs, id_col="doc_id")
     # pre-tokenized path must yield the SAME spans as the text path
     toks = docs.select(
         "doc_id", tok_fn(F.lower(F.col("text"))).alias("__t")
     )
-    spans_pre = repeated_substring_spans(
-        toks, id_col="doc_id", min_tokens=8, tokens_col="__t"
-    )
+    spans_pre = repeated_substring_spans(toks, id_col="doc_id", tokens_col="__t")
     key = lambda df: sorted(  # noqa: E731
         (r["doc_id"], r["span_start"], r["span_end"], r["span_tokens"])
         for r in df.collect()

@@ -129,11 +129,9 @@ def test_grouped_prefix_peak_matches_prefix_sum_then_max(spark):
         .groupBy("g")
         .agg(F.max("__c").alias("peak"))
     )
-    got = grouped_prefix_peak(
-        df, "g", "k", order, "v", out_col="peak", buckets=8
-    )
+    got = grouped_prefix_peak(df, "g", "k", order, "v", buckets=8)
     exp = {r["g"]: r["peak"] for r in expected.collect()}
-    act = {r["g"]: r["peak"] for r in got.collect()}
+    act = {r["g"]: r["__peak"] for r in got.collect()}
     assert act == exp
 
 
@@ -300,21 +298,19 @@ def test_pq_encode_arrow_matches_retired_expression_fold(spark):
 
     rng = random.Random(14)
     rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(120)
+        (i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(120)
     ]
     # exact-duplicate vectors exercise tie-adjacent distances
     rows += [(200 + i, list(rows[i][1])) for i in range(5)]
     emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    books = pq_train_codebooks(
-        emb, dim=16, m=4, k_codes=8, iterations=2, train_sample=200
-    )
+    books = pq_train_codebooks(emb)
 
     new = {
-        r.vec_id: tuple(r[f"code_{s}"] for s in range(4))
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8))
         for r in pq_encode(emb, books).collect()
     }
     old = {
-        r.vec_id: tuple(r[f"code_{s}"] for s in range(4))
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8))
         for r in fold_encode(emb, books).collect()
     }
     assert new == old
@@ -323,23 +319,23 @@ def test_pq_encode_arrow_matches_retired_expression_fold(spark):
     # in its subspace only (both paths); short vector -> all-NULL codes
     # on the arrow path (pinned contract)
     weird = spark.createDataFrame(
-        [(1, None), (2, [0.0] * 16), (3, [1.0, 2.0]), (4, [0.5] * 5 + [None] + [0.5] * 10)],
+        [(1, None), (2, [0.0] * 64), (3, [1.0, 2.0]), (4, [0.5] * 9 + [None] + [0.5] * 54)],
         "vec_id int, embedding array<double>",
     )
     got = {
-        r.vec_id: tuple(r[f"code_{s}"] for s in range(4))
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8))
         for r in pq_encode(weird, books).collect()
     }
-    assert got[1] == (None, None, None, None)
-    assert got[3] == (None, None, None, None)
+    assert got[1] == (None,) * 8
+    assert got[3] == (None,) * 8
     assert None not in got[2]
     old_null = {
-        r.vec_id: tuple(r[f"code_{s}"] for s in range(4))
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8))
         for r in fold_encode(
             weird.filter(F.col("vec_id") != 3), books
         ).collect()
     }
-    assert old_null[1] == (None, None, None, None)
+    assert old_null[1] == (None,) * 8
     assert got[2] == old_null[2]
     assert got[4][1] is None and None not in (got[4][0], *got[4][2:])
     assert got[4] == old_null[4]

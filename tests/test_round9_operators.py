@@ -103,7 +103,8 @@ def test_mmr_skips_the_duplicate_topk_would_take(spark):
     v3 = (.375, 0, .5) has rel = 0.6 and cos(v3, v1) = 0.48. Greedy
     MMR at lam = 0.7 picks v1 (0.56), then must SKIP the duplicate
     (0.7*0.8 - 0.3*1.0 = 0.26) for the diverse v3
-    (0.7*0.6 - 0.3*0.48 = 0.276)."""
+    (0.7*0.6 - 0.3*0.48 = 0.276); the duplicate comes last, and the
+    exhausted pool stops the 5 picks at 3."""
     from logicash_etl_spark.operators.similarity import mmr_select
 
     pad = [0.0] * 61
@@ -116,9 +117,10 @@ def test_mmr_skips_the_duplicate_topk_would_take(spark):
         "vec_id long, embedding array<float>, label int",
     )
     q = [1.0, 0.0, 0.0] + pad
-    out = {r.rank: r for r in mmr_select(pool, q, k=2, lam=0.7).collect()}
+    out = {r.rank: r for r in mmr_select(pool, q).collect()}
     assert out[1].vec_id == 1 and abs(out[1].mmr_score - 0.56) < 1e-9
     assert out[2].vec_id == 3 and abs(out[2].mmr_score - 0.276) < 1e-9
+    assert sorted(out) == [1, 2, 3] and out[3].vec_id == 2
 
 
 def _py_hilbert(order: int, x: int, y: int) -> int:

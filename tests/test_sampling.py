@@ -14,13 +14,13 @@ from logicash_etl_spark.sources.readers import read_table
 
 def test_split_disjoint_exhaustive_monotone(spark, sf_dir):
     o = read_table(spark, sf_dir, "orders")
-    train, test = train_test_split(o, "o_orderkey", 0.1)
+    train, test = train_test_split(o, "o_orderkey")
     nt, ns = train.count(), test.count()
     assert nt + ns == o.count()
     assert train.join(test, "o_orderkey", "inner").count() == 0
     # stability: membership unchanged on a subset of the data
     half = o.filter(F.col("o_orderkey") % 2 == 0)
-    _, test_half = train_test_split(half, "o_orderkey", 0.1)
+    _, test_half = train_test_split(half, "o_orderkey")
     full_test_ids = {r.o_orderkey for r in test.select("o_orderkey").collect()}
     for r in test_half.select("o_orderkey").collect():
         assert r.o_orderkey in full_test_ids
@@ -28,14 +28,13 @@ def test_split_disjoint_exhaustive_monotone(spark, sf_dir):
 
 def test_stratified_fractions(spark, sf_dir):
     o = read_table(spark, sf_dir, "orders")
-    sampled = stratified_sample(
-        o, "o_orderkey", "o_orderstatus", {"F": 1.0, "O": 0.1}, default_fraction=0.0
-    )
+    sampled = stratified_sample(o, "o_orderkey", "o_orderstatus", {"F": 1.0, "O": 0.5})
     counts = {r.o_orderstatus: r.n for r in sampled.groupBy("o_orderstatus").agg(F.count("*").alias("n")).collect()}
     full = {r.o_orderstatus: r.n for r in o.groupBy("o_orderstatus").agg(F.count("*").alias("n")).collect()}
     assert counts.get("F") == full["F"]            # keep-all stratum intact
-    assert "P" not in counts                        # default 0.0 drops unlisted
-    assert 0.05 * full["O"] < counts.get("O", 0) < 0.15 * full["O"]
+    assert 0.4 * full["O"] < counts.get("O", 0) < 0.6 * full["O"]
+    # unlisted strata keep the default 10%
+    assert counts.get("P", 0) < 0.25 * full["P"]
 
 
 def test_weighted_topk_sample_contract(spark, sf_dir):

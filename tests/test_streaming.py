@@ -82,8 +82,7 @@ def test_windowed_counts_match_batch(spark, events_lot):
     must agree with the batch groupBy(window) on the same closed lot."""
     root, lot, ev = events_lot
     stream = stream_parquet_dir(spark, lot, S.EVENTS)
-    agg = windowed_counts(stream, window="1 hour", watermark="10 minutes",
-                          keys=["event_type"])
+    agg = windowed_counts(stream)
     out = _drain(spark, agg, root, "win_out")
     batch = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -103,7 +102,7 @@ def test_windowed_counts_match_batch(spark, events_lot):
 def test_session_windows(spark, events_lot):
     root, lot, ev = events_lot
     stream = stream_parquet_dir(spark, lot, S.EVENTS)
-    sess = session_windows(stream, gap="30 minutes", watermark="1 hour")
+    sess = session_windows(stream)
     out = _drain(spark, sess, root, "sess_out")
     rows = out.collect()
     assert rows
@@ -119,7 +118,7 @@ def test_dedup_stream(spark, events_lot, tmp_path_factory):
     ev.write.mode("overwrite").parquet(dup_dir)
     ev.write.mode("append").parquet(dup_dir)  # exact duplicates
     stream = stream_parquet_dir(spark, dup_dir, S.EVENTS)
-    dedup = dedup_stream(stream, keys=["event_id"], watermark="10 years")
+    dedup = dedup_stream(stream, keys=["event_id"])
     out = _drain(spark, dedup, root, "dedup_out")
     assert out.count() == ev.count()
 
@@ -637,9 +636,7 @@ def test_late_data_split_watermark_metrics(spark, sf_dir):
 
     lot = _late_events_lot(spark, sf_dir)
     stream = stream_parquet_dir(spark, lot, S.EVENTS, max_files_per_trigger=1)
-    agg = windowed_counts(
-        stream, window="1 hour", watermark="30 minutes", keys=["event_type"]
-    )
+    agg = windowed_counts(stream)
     q = (
         agg.writeStream.outputMode("append")
         .format("memory")
