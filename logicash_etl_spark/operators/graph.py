@@ -247,11 +247,7 @@ def dedup_clusters(
     return out
 
 
-def pagerank_int(
-    nodes: DataFrame,
-    edges: DataFrame,
-    checkpoint_every: int = 5,
-) -> DataFrame:
+def pagerank_int(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """PageRank power iteration in FIXED-POINT INTEGER arithmetic,
     ``PAGERANK_ITERATIONS`` rounds.
 
@@ -271,32 +267,15 @@ def pagerank_int(
     Scale: each iteration is one join of ranks against the edge list
     (shuffle on src) plus a groupBy dst — the standard Pregel-style
     superstep; nothing ever collects to the driver. Each superstep
-    nests ~3 joins into the logical plan, so for deep iteration
-    counts Catalyst analysis — not the data — would become the
-    bottleneck; the loop localCheckpoint()s ``ranks`` every
-    ``checkpoint_every`` rounds to truncate lineage to a leaf (the
-    same iteration rule the connected-components loop above pins).
-    One materialization per checkpoint is the price; flat per-round
-    plan size is the win (tests/test_extensions.py pins it with a
-    checkpoint every round).
-
-    The edge list (and the out-degree frame derived from it) is
-    localCheckpoint()ed ONCE before the loop — but only when the rank
-    checkpoints will split the run into multiple ACTIONS (iterations >
-    checkpoint_every): within a single action Spark's ReusedExchange
-    already dedups the identical edge subtree across supersteps, so an
-    eager materialization there is one pure extra evaluation; across
-    actions reuse cannot happen and a derived ``edges`` (the trade
-    graph is a 6-way TPC-H join) would re-run per segment — the GraphX
-    rule "persist the graph before iterating"."""
-    iterations = PAGERANK_ITERATIONS
-    if iterations > checkpoint_every:
-        edges = edges.localCheckpoint()
+    nests 3 joins into the logical plan. The few supersteps run as
+    ONE action, where Spark's ReusedExchange dedups the identical edge
+    subtree (a derived ``edges``: the trade graph is a 6-way TPC-H
+    join) across supersteps, so nothing is checkpointed."""
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     scale, damping_pct = PAGERANK_SCALE, PAGERANK_DAMPING_PCT
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.select("node", F.lit(scale).cast("bigint").alias("rank"))
-    for i in range(iterations):
+    for _ in range(PAGERANK_ITERATIONS):
         contrib = (
             edges.join(ranks.withColumnRenamed("node", "src"), "src")
             .join(outdeg, "src")
@@ -315,10 +294,6 @@ def pagerank_int(
                 )
             ).cast("bigint").alias("rank"),
         )
-        # sever lineage every few supersteps: eager=True materializes
-        # once and replaces the nested-join plan with a leaf
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint()
     return ranks
 
 
@@ -398,12 +373,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def bfs_hops(
-    nodes: DataFrame,
-    edges: DataFrame,
-    source,
-    checkpoint_every: int = 5,
-) -> DataFrame:
+def bfs_hops(nodes: DataFrame, edges: DataFrame, source) -> DataFrame:
     """Breadth-first hop distances from ``source`` over DIRECTED
     ``(src, dst)`` edges, bounded at ``BFS_MAX_HOPS`` supersteps.
 
@@ -417,25 +387,16 @@ def bfs_hops(
     set) against the edge list — shuffle bounded by frontier x degree
     — then anti-joins the visited set to keep first discoveries. The
     visited set grows monotonically and is the only state carried
-    between rounds; lineage is localCheckpoint()ed every
-    ``checkpoint_every`` rounds (the iteration rule every loop in this
-    module pins). A fixed ``max_hops`` makes the result exactly
+    between rounds. The fixed hop bound makes the result exactly
     reproducible as an unrolled SQL CTE chain — hop counts are
-    integers, so there is no float drift anywhere.
-
-    The edge list is localCheckpoint()ed ONCE before the loop when
-    the visited-set checkpoints will split the walk into multiple
-    ACTIONS (max_hops > checkpoint_every) — across actions a derived
-    edge frame re-runs per segment; within one action ReusedExchange
-    dedups it for free."""
-    max_hops = BFS_MAX_HOPS
-    if max_hops > checkpoint_every:
-        edges = edges.localCheckpoint()
+    integers, so there is no float drift anywhere. The few hops run as
+    ONE action, where ReusedExchange dedups the edge subtree, so
+    nothing is checkpointed."""
     visited = nodes.filter(F.col("node") == source).select(
         "node", F.lit(0).cast("int").alias("hops")
     )
     frontier = visited.select("node")
-    for h in range(1, max_hops + 1):
+    for h in range(1, BFS_MAX_HOPS + 1):
         nxt = (
             frontier.join(edges, frontier.node == edges.src)
             .select(F.col("dst").alias("node"))
@@ -446,9 +407,6 @@ def bfs_hops(
         )
         visited = visited.unionByName(new)
         frontier = new.select("node")
-        if h % checkpoint_every == 0 and h < max_hops:
-            visited = visited.localCheckpoint()
-            frontier = frontier.localCheckpoint()
     return (
         nodes.join(visited, on="node", how="left")
         .select(
@@ -551,7 +509,7 @@ def k_core(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
     Checkpoint discipline — STRICTER than the linear loops: pagerank/
     BFS/LPA compute state' = f(state, constant-edges), so their plans
-    grow one join per round and a sparse checkpoint cadence suffices.
+    grow one join per round and their few rounds need no checkpoint.
     Peeling is MULTIPLICATIVELY self-referential: the next edge set
     references the previous one FIVE times (twice inside the degree
     count's symmetrization, twice via the two semi-joins' keep sets,

@@ -38,8 +38,10 @@ LSH_PLANES, LSH_TABLES, LSH_PROBES = 4, 8, 2
 # k-means and PQ codebooks train on the TRAIN_SAMPLE lowest-xxhash64 ids
 TRAIN_SAMPLE = 8192
 # greedy MMR: MMR_PICKS exemplars scored MMR_RELEVANCE * rel -
-# MMR_DIVERSITY * msim (both exact literals: 1 - 0.7 is not 0.3)
-MMR_PICKS, MMR_RELEVANCE, MMR_DIVERSITY = 5, 0.7, 0.3
+# MMR_DIVERSITY * msim; rounding makes the weight the exact literal 0.3
+# (1 - 0.7 is 0.30000000000000004)
+MMR_PICKS, MMR_RELEVANCE = 5, 0.7
+MMR_DIVERSITY = round(1.0 - MMR_RELEVANCE, 10)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -232,7 +234,6 @@ def kmeans_lite(vectors: DataFrame) -> DataFrame:
     IVF indexes train (FAISS practice): 2 Lloyd's k-means iterations in
     numpy on a driver-sized sample — the quantizer never needs the full
     corpus; only the CELL ASSIGNMENT pass (ivf_ann_topk) is distributed.
-    FAISS practice is ~256 samples per centroid, so 8k >> enough for 8.
 
     The sample is the ``TRAIN_SAMPLE`` rows with the lowest
     xxhash64(id): uniform-ish, fully reproducible (no RNG), and
@@ -243,9 +244,8 @@ def kmeans_lite(vectors: DataFrame) -> DataFrame:
     """
     k = 8
     v = vectors.select(F.col(ID_COL).alias("id"), as_double(VEC_COL).alias("v"))
-    # Arrow transfer (toPandas), not collect(): Row-object
-    # deserialization of the sample costs seconds at 64k x 64 doubles,
-    # the Arrow batch milliseconds
+    # Arrow transfer (toPandas), not collect(): the sample arrives as
+    # Arrow batches instead of one deserialized Row object per vector
     pdf = (
         v.orderBy(F.xxhash64(F.col("id")), F.col("id"))
         .limit(TRAIN_SAMPLE)
@@ -693,8 +693,9 @@ def mmr_select(corpus: DataFrame, query_vec: list[float]) -> DataFrame:
     1e-12 norm floor (bitwise reproducible — the lsh_ann_topk
     convention); the selected vectors re-enter as literals whose
     doubles round-trip exactly; ``lam`` and ``1-lam`` are BOTH exact
-    literals (``MMR_RELEVANCE``/``MMR_DIVERSITY`` — computing 1-0.7
-    would yield 0.30000000000000004); ties break by ascending id.
+    literals (``MMR_RELEVANCE``/``MMR_DIVERSITY``, the latter 1-0.7
+    rounded, since the plain difference is 0.30000000000000004); ties
+    break by ascending id.
     Scores round to 6dp IN the plan (engine rounding, not Python's
     banker's rounding)."""
     import math

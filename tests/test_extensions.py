@@ -831,11 +831,11 @@ def test_quantile_sketch_single_median_bucket(spark, sf_dir):
 
 
 def test_pagerank_deep_iteration_flat_plan(spark):
-    """Checkpointing truncates the plan without changing the numbers:
-    with a checkpoint after every superstep the analyzed plan holds
-    fewer joins than the three nested supersteps without one — the
-    iteration rule connected_components pins, applied here."""
-    from logicash_etl_spark.operators.graph import pagerank_int
+    """The supersteps nest into one plan, three joins per superstep (a
+    checkpoint would cut the nesting to a leaf), run as one action; on
+    a vertex-transitive graph every node ends with the same
+    mass-bounded rank."""
+    from logicash_etl_spark.operators.graph import PAGERANK_ITERATIONS, pagerank_int
 
     nodes = spark.createDataFrame(
         [(f"n{i}",) for i in range(10)], "node string"
@@ -845,20 +845,15 @@ def test_pagerank_deep_iteration_flat_plan(spark):
         + [(f"n{i}", f"n{(i + 3) % 10}") for i in range(10)],
         "src string, dst string",
     )
-    flat = pagerank_int(nodes, edges, checkpoint_every=1)
-    nested = pagerank_int(nodes, edges)
-
-    def joins(df):
-        return df._jdf.queryExecution().analyzed().toString().count("Join")
-
-    assert joins(flat) < joins(nested)
-    out = {r.node: r.rank for r in flat.collect()}
+    ranks = pagerank_int(nodes, edges)
+    analyzed = ranks._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("Join") == 3 * PAGERANK_ITERATIONS
+    out = {r.node: r.rank for r in ranks.collect()}
     assert len(out) == 10
     # ring+chord is vertex-transitive: every node has identical rank,
     # and the integer floor ops stay mass-bounded
     assert len(set(out.values())) == 1
     assert 0 < out["n0"] <= 10**9
-    assert out == {r.node: r.rank for r in nested.collect()}
 
 
 def test_grouped_prefix_sum_matches_plain_window(spark):
@@ -1058,8 +1053,7 @@ def test_triangle_counts_vs_bruteforce(spark):
 def test_bfs_hops_chain_and_unreached(spark):
     """Chain 0->1->2->3->4 plus an isolated node and a back-edge:
     distances are exact, the 3-hop bound truncates, direction
-    respected, unreached nodes get -1; a checkpoint after every hop
-    changes nothing."""
+    respected, unreached nodes get -1."""
     from logicash_etl_spark.operators.graph import bfs_hops
 
     nodes = spark.createDataFrame([(i,) for i in range(6)], "node bigint")
@@ -1068,11 +1062,6 @@ def test_bfs_hops_chain_and_unreached(spark):
     )
     got = {r.node: r.hops for r in bfs_hops(nodes, edges, 0).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: -1, 5: -1}
-    every = {
-        r.node: r.hops
-        for r in bfs_hops(nodes, edges, 0, checkpoint_every=1).collect()
-    }
-    assert every == got
 
 
 def test_rolling_zscore_flags_spike_not_constant(spark, tmp_path):

@@ -228,10 +228,6 @@ ALLOWED_OPTIONS = {
         "test_extensions::test_components_distributed_matches_driver_path",
     "operators.graph.connected_components.max_iterations":
         "test_extensions::test_large_star_small_star_path_graph",
-    "operators.graph.pagerank_int.checkpoint_every":
-        "test_extensions::test_pagerank_deep_iteration_flat_plan",
-    "operators.graph.bfs_hops.checkpoint_every":
-        "test_extensions::test_bfs_hops_chain_and_unreached",
     "operators.text.bpe_train.driver_vocab_threshold":
         "test_extensions::test_bpe_train_matches_python_twin",
     "operators.partitioning.grouped_prefix_sum.buckets":
