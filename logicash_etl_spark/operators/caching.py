@@ -1,26 +1,23 @@
 """Cache-scope management for operators that persist intermediates.
 
-Several operators (MinHash banding, exact-Jaccard inverted index,
-SimHash signatures) ``persist()`` an intermediate frame because the
-downstream plan consumes it 2-4x. Those handles must outlive the
-operator call (the returned DataFrame is lazy), so the operator cannot
-unpersist them itself — historically "callers own cleanup" via
-``spark.catalog.clearCache()``, which is a sledgehammer: it also drops
-caches the caller DID want.
-
-``cache_scope()`` makes the lifecycle explicit and composable::
+Catalyst does no common-subexpression materialisation: a frame that
+feeds several consumers re-runs its lineage once per consumer unless
+it is persisted. A persist stays in the engine only where paired,
+materialised timing of the queries that reach it, or a plan contract
+in the tests, shows that it pays. The handle must outlive the operator
+call (the returned DataFrame is lazy), so the operator cannot unpersist
+it itself: callers own cleanup, through ``spark.catalog.clearCache()``
+or ``cache_scope()``::
 
     with cache_scope():
         pairs = minhash_dedup_pairs(docs, "doc_id").collect()
     # every intermediate persisted by the operators above is now freed
 
-Operators register their persists via ``scoped_persist`` — a drop-in
-for ``DataFrame.persist()`` that attaches the handle to the innermost
-active scope (no scope active -> plain persist, the historical
-behavior). Scopes nest; each unpersists only its own handles, in
-reverse creation order. Thread-local on purpose NOT: a Spark driver
-program is single-threaded per job graph in this engine; one process
-wide stack keeps the contract obvious.
+``scoped_persist`` is ``DataFrame.persist()`` plus registration with
+the innermost active scope (no scope active: a plain persist). Scopes
+nest; each unpersists only its own handles, in reverse creation order.
+The scope stack is one per process: the engine builds each job graph
+from a single driver thread.
 """
 
 from __future__ import annotations

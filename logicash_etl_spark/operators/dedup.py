@@ -460,13 +460,8 @@ def repeated_substring_spans(
     ).select(
         id_col, (F.col("__p0") + 1).alias("pos"), F.col("__s").alias("s")
     )
-    # sh feeds BOTH the duplicate-shingle agg and the semi join;
-    # unpersisted, the corpus is re-tokenized and re-hashed per
-    # consumer (2 scans, audited r10). The cached frame is (id, pos,
-    # 16-byte hash) — narrower than the text it derives from, and
-    # MEMORY_AND_DISK spills at scale.
-    from logicash_etl_spark.operators.caching import scoped_persist
-
+    # persisted: sh feeds both the duplicate-shingle agg and the semi
+    # join, each of which would re-tokenize and re-hash the corpus
     sh = scoped_persist(sh)
     dup = sh.groupBy("s").agg(F.count("*").alias("__n")).filter(
         F.col("__n") > 1
@@ -552,6 +547,7 @@ def minhash_probe_pairs(
     |hist-bucket|; both sides of the join carry only (id, band,
     bhash) so AQE's skew split applies, and the verify join caps the
     damage at candidate count, not pair count squared."""
+    # persisted: each shingle frame feeds its band keys and the verify join
     sh_in = scoped_persist(
         scale_out(incoming.select(id_col, "text")).select(
             F.col(id_col),
@@ -650,21 +646,13 @@ def prefix_filter_pairs(df: DataFrame, id_col: str) -> DataFrame:
         )
         .select(id_col, F.xxhash64("__s").alias("sh"))
     )
-    # r13 restructure (guide 2.3/2.4 — fewer passes over the shingle
-    # stream): ONE shingling pass and ONE df-count shuffle. The raw
-    # (id, hash) frame persists and the per-shingle counts persist;
-    # the hot filter AND the prefix ranks both read the count table
-    # (dropping hot shingles cannot change any surviving shingle's
-    # count, so post-filter df == pre-filter df for every kept
-    # shingle). Previously: shingling ran twice (hot lineage + sh
-    # materialization) and the df groupBy shuffled the stream twice
-    # (hot + dfreq).
-    sh = scoped_persist(sh)
+    # ONE df-count shuffle: the hot filter AND the prefix ranks both
+    # read the persisted count table (dropping hot shingles cannot
+    # change any surviving shingle's count, so post-filter df ==
+    # pre-filter df for every kept shingle).
     wc = scoped_persist(sh.groupBy("sh").agg(F.count("*").alias("tdf")))
     hot = wc.filter(F.col("tdf") > 100).select("sh")
-    # broadcast anti-join stays map-side over the cached frame; its
-    # two consumers (prefix ranks, verify sets) re-run only the
-    # row-local probe, never the shingling
+    # broadcast anti-join: stays map-side
     sh = sh.join(F.broadcast(hot), on="sh", how="left_anti")
     dfreq = wc.filter(F.col("tdf") <= 100)
 

@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from logicash_etl_spark.operators.caching import scoped_persist
+
 
 def enrich(
     fact: DataFrame,
@@ -261,18 +263,12 @@ def fuzzy_self_join(
 
     Returns (key_a, key_b, edit_dist) with key_a < key_b.
     """
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     blocks = list(block_cols or [])
     if collapse_exact:
         # unit = one distinct (blocks, text) combination; the unit key
         # embeds the block values so identical texts under DIFFERENT
         # blocks stay distinct units and never cross-expand.
-        # base is persisted: ids feeds BOTH expansion sides and units
-        # feeds the whole block/verify pipeline — unpersisted, the
-        # (fact-sized at TPC-H 100 TB) input was re-scanned up to 8x
-        # (audited r10)
-        base = scoped_persist(df.select(*blocks, id_col, text_col))
+        base = df.select(*blocks, id_col, text_col)
         ukey = F.concat_ws("\x1f", *blocks, F.col(text_col))
         ids = base.select(
             ukey.alias("__ukey"), F.col(id_col).alias("__id")
@@ -311,9 +307,8 @@ def fuzzy_self_join(
             )
         )
         return cross.unionByName(same)
-    # both block passes consume keyed from both join sides (4 scans
-    # of the input unpersisted); the frame is a narrow id/text/keys
-    # projection
+    # persisted: both block passes consume keyed from both join sides;
+    # the frame is a narrow id/text/keys projection
     keyed = scoped_persist(
         df.select(
             *blocks,
@@ -616,14 +611,8 @@ def qgram_edit_join(df: DataFrame, str_col: str) -> DataFrame:
 
     Returns (name_a, name_b, dist) with name_a < name_b, dist BIGINT.
     """
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     max_dist, q = 2, 2
-    # names is the vocabulary-bounded distinct frame and feeds SIX
-    # consumers (both gram sides, both length sides, both short-pool
-    # sides) — unpersisted, each re-scanned the fact-sized input
-    # (6 scans, audited r10); grams feeds both inverted-index sides
-    names = scoped_persist(
+    names = (
         df.select(F.col(str_col).alias("nm"))
         .filter(F.col("nm").isNotNull())
         .distinct()
@@ -631,7 +620,8 @@ def qgram_edit_join(df: DataFrame, str_col: str) -> DataFrame:
     )
     cutoff = q * (max_dist + 1)
 
-    # positional q-gram multiset -> (nm, gram, cnt)
+    # positional q-gram multiset -> (nm, gram, cnt); persisted: it feeds
+    # both inverted-index sides
     grams = scoped_persist(
         names.filter(F.col("ln") >= q)
         .select(

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.operators.aggregates import scd1_latest
+from logicash_etl_spark.operators.caching import scoped_persist
 
 # valid_to of every open (current) SCD2 version
 END_OF_TIME = "9999-12-31 00:00:00"
@@ -76,8 +77,6 @@ def scd2_apply(
     # persist, Catalyst re-derives the full-outer join — and the whole
     # upstream dim/update lineage, including their table scans — once
     # per consumer (no common-subexpression materialization)
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     joined = scoped_persist(cur.join(upd, on=cond, how="full"))
 
     changed_pred = None

@@ -411,14 +411,8 @@ def skew_profile(df: DataFrame, key: str) -> DataFrame:
     exactly as idle tasks would."""
     from pyspark.sql import functions as F
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     cnts = df.groupBy(key).agg(F.count("*").alias("cnt"))
-    # b (the per-key count frame — the thing being measured) feeds
-    # the totals agg, the top-10 and the bucket loads; unpersisted,
-    # each consumer re-ran the corpus groupBy (3 fact scans per
-    # profiled key — audited r9). Persist it: one scan per key.
-    b = scoped_persist(cnts.select(
+    b = cnts.select(
         F.col(key).cast("string").alias("k"),
         "cnt",
         (
@@ -427,7 +421,7 @@ def skew_profile(df: DataFrame, key: str) -> DataFrame:
             ).cast("bigint")
             % SKEW_REDUCERS
         ).alias("bucket"),
-    ))
+    )
     tot = b.agg(
         F.count("*").cast("bigint").alias("n_keys"),
         F.sum("cnt").cast("bigint").alias("total_rows"),

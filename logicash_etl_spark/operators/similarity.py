@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.operators.partitioning import scale_out
 
 # column names of the embedding tables (fixtures' embeddings.parquet)
@@ -395,11 +396,9 @@ def semantic_dedup(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     so n/k rows fit a partition (FAISS sizing practice), and skewed
     cells fall to AQE skew-join splitting.
     """
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     # assigned feeds THREE consumers (both pair-join sides + the final
-    # verdict join); unpersisted, Catalyst re-ran the scan and the
-    # centroid-argmax fold per consumer (r13 scan-audit fix).
+    # verdict join); persisted so the scan and the centroid-argmax
+    # fold run once, not per consumer.
     assigned = scoped_persist(
         assign_cells(
             scale_out(vectors.select(ID_COL, VEC_COL)), centroids
@@ -680,7 +679,7 @@ def mmr_select(corpus: DataFrame, query_vec: list[float]) -> DataFrame:
     instead of plain top-k, whose neighbors are often near-copies.
 
     Scale contract: greedy MMR is inherently k sequential passes —
-    each pass is ONE scan of the (persisted) relevance-scored pool
+    each pass is ONE scan of the relevance-scored pool
     with the selected set as k LITERAL vectors folded map-side (no
     join, no shuffle; the per-candidate work is |S| sequential-fold
     cosines). Driver state is the k selected (id, vector) rows —
@@ -700,8 +699,6 @@ def mmr_select(corpus: DataFrame, query_vec: list[float]) -> DataFrame:
     banker's rounding)."""
     import math
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     spark = corpus.sparkSession
 
     def _pynorm(vec) -> float:
@@ -718,17 +715,11 @@ def mmr_select(corpus: DataFrame, query_vec: list[float]) -> DataFrame:
     q_lit = F.array(*[F.lit(float(v)) for v in query_vec])
     q_norm = F.lit(_pynorm(query_vec))
     xv = as_double(VEC_COL)
-    # __n rides in the persisted pool: each pass's |S| cosine folds
-    # reuse it instead of re-deriving the candidate norm per selected
-    # vector (the step-i expression previously held i+1 norm folds per
-    # row; now exactly the dot folds remain)
-    base = scoped_persist(
-        corpus.select(F.col(ID_COL), xv.alias("__v"), _norm(xv).alias("__n"))
-        .withColumn(
-            "__rel",
-            _dot(F.col("__v"), q_lit)
-            / F.greatest(F.col("__n") * q_norm, F.lit(1e-12)),
-        )
+    # __n rides in the pool: each pass's |S| cosine folds reuse it
+    # instead of re-deriving the candidate norm per selected vector
+    base = corpus.select(F.col(ID_COL), xv.alias("__v"), _norm(xv).alias("__n")).withColumn(
+        "__rel",
+        _dot(F.col("__v"), q_lit) / F.greatest(F.col("__n") * q_norm, F.lit(1e-12)),
     )
     lam_c = F.lit(MMR_RELEVANCE)
     div_c = F.lit(MMR_DIVERSITY)

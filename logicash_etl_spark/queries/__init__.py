@@ -6,18 +6,18 @@ with (where SQL-expressible) a DuckDB oracle for differential testing.
 sf0.001/sf0.01 and compare row-count + schema + order-insensitive
 values, mirroring the driver's correctness gate.
 
-Caching contract — CALLER OWNS CLEANUP: query functions persist()
-small internal frames (multi-consumer lineage would otherwise re-scan
-the fact per consumer; see scan_audit.py) and deliberately do NOT
-unpersist before returning — the returned DataFrame's lineage still
-references the cached frame, and eager cleanup would re-trigger the
-scans the persist exists to avoid. A caller that executes many catalog
-queries in one session must either wrap each execute+collect in
-`operators.caching.cache_scope()` or call
-`spark.catalog.clearCache()` between queries, as perfbench,
-scan_audit.py, and tests/test_oracle_parity.py do. Without cleanup the
-only cost is executor-memory pressure (Spark's cache LRU-evicts);
-results are never wrong.
+Caching contract: a query persists an internal frame only where paired,
+materialised timing of that query (call + toPandas + clearCache, as
+perfbench times it), or a plan contract in the tests, shows that the
+persist pays; CHANGES.md keeps the audit of every site. A persisted
+frame is not unpersisted before the query returns, because the returned
+DataFrame's lineage still reads it. CALLERS OWN CLEANUP: a caller that
+runs many catalog queries in one session wraps each run in
+`operators.caching.cache_scope()` or calls `spark.catalog.clearCache()`
+between queries, as perfbench, scan_audit.py, head_determinism_check.py,
+corpus_robustness_check.py and tests/test_oracle_parity.py do. Without
+cleanup the only cost is executor-memory pressure (Spark's cache
+LRU-evicts); results are never wrong.
 """
 
 from logicash_etl_spark.queries.registry import QUERIES, ORACLES, query

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from logicash_etl_spark.dq.profile import percentiles
 from logicash_etl_spark.functions.money import dsum
+from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.operators.joins import broadcast_bounded
 from logicash_etl_spark.queries.registry import query
 from logicash_etl_spark.sources.readers import read_table
@@ -847,26 +848,8 @@ def copurchase_lift_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     often already bucketed by) and the item-frequency count; the
     token-domain sibling is collocation_lift_top20. Top-20 by lift
     via TakeOrderedAndProject with a full deterministic tiebreak."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # items feeds BOTH sides of the basket self-join, the frequency
-    # count and the basket total; unpersisted, lineitem re-scanned
-    # (and re-distincted) per consumer — 5 executed scans (audited
-    # r9). The persisted frame is the 2-column distinct projection.
-    items = scoped_persist(
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    # freq feeds BOTH broadcast sides (fa and fb) — unpersisted, the
-    # per-part groupBy ran twice (plan-verified: two independent
-    # HashAggregate+Exchange subtrees over the items cache). The frame
-    # is O(|parts|) rows — catalog-sized, cheap to hold.
-    freq = scoped_persist(
-        items.groupBy("l_partkey").agg(
-            F.count("*").cast("bigint").alias("n")
-        )
-    )
+    items = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    freq = items.groupBy("l_partkey").agg(F.count("*").cast("bigint").alias("n"))
     tot = items.agg(
         F.countDistinct("l_orderkey").cast("bigint").alias("n_orders")
     )
@@ -1489,10 +1472,9 @@ def rendezvous_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_hrw_assign_sql(_HEX2INT_SPARK, 8)).alias("a8"),
         F.expr(_hrw_assign_sql(_HEX2INT_SPARK, 9)).alias("a9"),
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # cell (<=81 rows) feeds TWO rollups; persist so the documents
-    # fact is hashed and scanned ONCE, not re-derived per branch.
+    # persisted: tests/test_plan_contracts.py::
+    # test_rendezvous_is_map_side_no_explode pins one documents scan
+    # (cell feeds both per-shard rollups)
     cell = scoped_persist(
         assigned.groupBy("a8", "a9").agg(
             F.count("*").cast("bigint").alias("n")

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.functions.money import money
+from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.operators.joins import broadcast_bounded
 from logicash_etl_spark.operators.partitioning import SKEW_REDUCERS
 from logicash_etl_spark.queries.registry import query
@@ -67,14 +68,8 @@ def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).filter(F.col("ts") > F.col("__prev"))
         return e.groupBy("user_id").agg(F.min("ts").alias("t"))
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # each stage frame feeds the NEXT stage and its own count;
-    # unpersisted, the chained lineage re-scanned events per consumer
-    # (6 executed scans — audited r9). The persisted frames are one
-    # (user, ts) row per user per stage.
-    v = scoped_persist(stage("view", None))
-    c = scoped_persist(stage("click", v))
+    v = stage("view", None)
+    c = stage("click", v)
     p = stage("purchase", c)
     counts = [
         df.agg(F.count("*").alias(name))
@@ -171,13 +166,7 @@ def value_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds (sketches merge; two passes stay two passes)."""
     from logicash_etl_spark.dq.profile import percentiles
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # ev feeds the median build, the MAD build and the final flag
-    # pass — persist the 2-column projection for one events scan.
-    ev = scoped_persist(
-        read_table(spark, sf_dir, "events").select("event_type", "value")
-    )
+    ev = read_table(spark, sf_dir, "events").select("event_type", "value")
     med = ev.groupBy("event_type").agg(
         F.round(percentiles("value", 0.5, exact=True), 6).alias("med")
     )
@@ -322,7 +311,6 @@ def revenue_concentration_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-row aggregate. At corpus sizes where n*Σx nears 2^63, coarsen
     the currency unit (Gini is scale-invariant; the floor-div
     quantization is the only change) or lift to DECIMAL(38,0)."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.partitioning import grouped_prefix_sum
 
     o = read_table(spark, sf_dir, "orders").select(
@@ -332,15 +320,12 @@ def revenue_concentration_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # has NULL o_totalprice has UNKNOWN revenue — excluded from the
     # Gini population rather than ranked at an arbitrary NULL sort
     # position (grouped_prefix_sum would refuse the NULL bucket key
-    # loudly anyway); mirrored by the oracle's IS NOT NULL. The
-    # per-customer rollup (4 narrow cols) persists: the bucket-stat
-    # and rank passes inside grouped_prefix_sum re-read it instead
-    # of re-running the orders scan + join per pass.
+    # loudly anyway); mirrored by the oracle's IS NOT NULL.
     cust_rev = o.groupBy("o_custkey").agg(
         (F.sum("__p") * 100).cast("bigint").alias("cents")
     )
     c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    cr = scoped_persist(
+    cr = (
         cust_rev.join(
             broadcast_bounded(c, bounded=False), cust_rev.o_custkey == c.c_custkey
         )
@@ -432,14 +417,9 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only arithmetic against broadcast range/midpoint rows; the
     count rollup is a 20-group map-side-combinable aggregate. Nothing
     shuffles but 10 rows per map task."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     ev = read_table(spark, sf_dir, "events").select("ts", "value")
-    # the one-row midpoint feeds BOTH the reference-range pass and the
-    # binning pass through `tagged`; unpersisted, each consumer
-    # re-derived the min/max-ts scan (4 executed events scans, audited
-    # r10-r12) — persisting the single row reaches the sequential
-    # floor of 3 passes (midpoint -> reference range -> bin rollup).
+    # persisted: the one-row midpoint feeds both the reference-range
+    # pass and the binning pass, each of which would re-scan events
     mid = scoped_persist(
         ev.agg(
             F.expr("(min(unix_micros(ts)) + max(unix_micros(ts))) div 2").alias("m")
@@ -464,12 +444,9 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint").alias("bin"),
     )
     bins = spark.range(0, 10).select(F.col("id").cast("bigint").alias("bin"))
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # the 10-row counts frame feeds the totals agg AND the final
-    # select; unpersisted, each consumer re-derived the whole binning
-    # lineage (8 executed events scans — audited r9). Persisting the
-    # tiny frame collapses that to 3 (midpoint, range, bin pass).
+    # persisted: the 10-row counts frame feeds the totals agg and the
+    # final select, each of which would re-run the binning pass
     counts = scoped_persist(
         bins.join(binned, on="bin", how="left")
         .groupBy("bin")
@@ -786,18 +763,12 @@ def robust_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup for n, the bucketed rank scan, one 5-row report."""
     from logicash_etl_spark.operators.partitioning import grouped_prefix_sum
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # ev feeds the rank scan's several internal consumers plus the
-    # per-type count — 5 executed events scans unpersisted (audited
-    # r9). The persisted frame is the 3-narrow-column projection, not
-    # the raw events table.
     # NULL-value posture (r12 [contract] decision): EXCLUDED. A
     # trimmed/winsorized mean over unknown values is undefined, and
     # SQL aggregates ignore NULLs — the oracle filters identically;
     # without the filter a NULL cents violates the rank scan's
     # non-null bucket-key contract (loud raise on the nulls corpus).
-    ev = scoped_persist(
+    ev = (
         read_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
         .select(
@@ -943,12 +914,9 @@ def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("post_s").cast("double") / F.col("post_n")).alias("post_m"),
         )
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # pu feeds the theta/covariance aggregate AND the adjusted-arm
-    # pass; unpersisted, the event fact re-scanned per consumer (8
-    # executed scans — audited r9). The persisted frame is the
-    # per-user (grp, pre_m, post_m) triple.
+    # persisted: pu feeds the theta/covariance aggregate and the
+    # adjusted-arm pass, each of which would re-scan events
     pu = scoped_persist(pu)
     g = pu.agg(
         (F.covar_samp("pre_m", "post_m") / F.var_samp("pre_m")).alias("theta"),
@@ -1391,18 +1359,11 @@ def cusum_changepoint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily frame is small enough to widen to decimal(38,0) in place."""
     from pyspark.sql import Window as W
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     ev = read_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("day"),
         F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
     )
-    # daily feeds TWO consumers (the totals agg and the prefix
-    # window); without the persist Catalyst re-derives the lineage and
-    # the events fact gets scanned TWICE — at 100 TB the dominant cost
-    # of the whole query. The persisted frame is the tiny daily series
-    # (calendar-bounded), not the fact.
-    daily = scoped_persist(ev.groupBy("day").agg(F.sum("cents").alias("x")))
+    daily = ev.groupBy("day").agg(F.sum("cents").alias("x"))
     tot = daily.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("s"),
@@ -1545,12 +1506,8 @@ def km_return_time_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nxt").isNull().cast("int").alias("censored"),
         )
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # the life table feeds TWO consumers (its own total and the
-    # at-risk windows): persist it so the events window runs ONCE —
-    # the persisted frame is duration-hours rows, horizon-bounded
-    byh = scoped_persist(
+    byh = (
         gaps.groupBy("dur_h").agg(
             F.sum(1 - F.col("censored")).alias("churned"),
             F.sum("censored").alias("n_censored"),
@@ -1869,13 +1826,8 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("m100"),
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # per feeds the asof extremum, the scoring select and the
-    # cutpoint aggregate — persist the per-customer rollup
-    # (dimension-sized) so orders is scanned exactly once; the global
-    # max order date IS the max of the per-customer maxes.
-    per = scoped_persist(per)
+    # the global max order date IS the max of the per-customer maxes
     asof = per.agg(F.max("last_dt").alias("asof"))
     per = per.crossJoin(F.broadcast(asof)).select(
         F.datediff("asof", "last_dt").cast("bigint").alias("rec_days"),
@@ -2011,12 +1963,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).groupBy("event_type", "day").agg(
         F.sum("cents").cast("bigint").alias("y")
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # the calendar-bounded daily frame feeds mn, the pair self-join
-    # (both sides) and the OLS moments — persist it so the events
-    # fact is scanned ONCE, not once per consumer.
-    daily = scoped_persist(daily)
     mn = daily.agg(F.min("day").alias("d0"))
     dx = daily.crossJoin(F.broadcast(mn)).select(
         "event_type",
@@ -2244,11 +2191,7 @@ def mutual_information_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("x"),
         F.floor(F.col("value") / 100).cast("bigint").alias("y"),
     ).agg(F.count("*").cast("bigint").alias("n_xy"))
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # the cell frame feeds the marginal windows AND the totals row —
-    # persist so events is scanned once.
-    joint = scoped_persist(joint)
     m = joint.select(
         "x",
         "y",
@@ -2341,12 +2284,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t0").cast("date").alias("d0"),
         F.date_trunc("week", "t0").cast("date").alias("cohort_week"),
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # the per-user frame feeds the cohort rollup AND the purchase
-    # join — persist it (dimension-sized) so events is scanned once
-    # for first-seen and once for purchases, never re-derived.
-    first_seen = scoped_persist(first_seen)
     cohorts = first_seen.groupBy("cohort_week").agg(
         F.count("*").cast("bigint").alias("cohort_users")
     )
@@ -2444,11 +2382,7 @@ def time_to_convert_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("conv_us"),
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # per_user feeds the population count AND the converter-delay
-    # summary — persist (dimension-sized) for a single events scan.
-    per_user = scoped_persist(per_user)
     n_users = per_user.agg(F.count("*").cast("bigint").alias("n_users"))
     delays = per_user.filter(F.col("conv_us").isNotNull()).select(
         F.expr("(conv_us - first_us) div 60000000").alias("delay_min")
@@ -2528,10 +2462,7 @@ def weekday_seasonality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.weekday("ts").cast("bigint").alias("weekday"),
     ).agg(F.count("*").cast("bigint").alias("n"))
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # cells feed both window marginals; persist for one events scan.
-    cells = scoped_persist(cells)
     w = W.partitionBy("event_type")
     m = cells.select(
         "event_type",
@@ -2614,11 +2545,8 @@ def abc_inventory_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # part_rev feeds the total AND the prefix-sum scan (which itself
-    # consumes its input more than once) — persist the per-part
-    # rollup so lineitem is scanned exactly once.
+    # persisted: tests/test_plan_contracts.py::test_abc_single_lineitem_scan
+    # pins one lineitem scan (part_rev feeds the total and the prefix sum)
     part_rev = scoped_persist(part_rev)
     tot = part_rev.agg(F.sum("cents").cast("bigint").alias("t"))
     pr = part_rev.select(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.operators.partitioning import scale_out
 from logicash_etl_spark.operators.text import tokens
 from logicash_etl_spark.queries.registry import query
@@ -145,15 +146,10 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny and broadcast, so at 100 TB the train corpus streams once and
     nothing quadratic exists (vs. the pairwise overlap a naive
     implementation would join)."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.text import word_shingles
 
     docs = read_table(spark, sf_dir, "documents")
-    # the fingerprint frame feeds the bench side AND the train side;
-    # unpersisted, each consumer re-ran the scan + shingle + hash
-    # (the r11 bloom_history_dedup precedent). 16 bytes/row — keys,
-    # not payloads — so the persist is metadata-scale at 100 TB.
-    sh = scoped_persist(
+    sh = (
         scale_out(docs.select("doc_id", "text")).select(
             "doc_id",
             F.explode(F.array_distinct(word_shingles("text", 5))).alias("__s"),
@@ -212,21 +208,16 @@ def sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     each source) — packing stays parallel even when one source holds
     most of the corpus, where a plain per-source window would
     serialize it through one task at 100 TB."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.partitioning import grouped_prefix_sum
 
     docs = scale_out(read_table(spark, sf_dir, "documents").select("doc_id", "source", "text"))
     # NULL text packs as 0 tokens (coalesce BEFORE tokenize — Spark's
     # size(NULL) is -1, which would walk the running offsets
-    # backwards); the per-doc count frame (3 narrow cols) persists so
-    # grouped_prefix_sum's bucket-stat and rank passes re-read it
-    # instead of re-tokenizing the corpus per pass
-    t = scoped_persist(
-        docs.select(
-            "doc_id",
-            "source",
-            F.size(tokens(F.coalesce(F.col("text"), F.lit("")))).alias("n_tokens"),
-        )
+    # backwards)
+    t = docs.select(
+        "doc_id",
+        "source",
+        F.size(tokens(F.coalesce(F.col("text"), F.lit("")))).alias("n_tokens"),
     )
     packed = grouped_prefix_sum(
         t,
@@ -580,16 +571,12 @@ def unigram_surprisal_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     runtime size allows, and falls back to a shuffled join beyond the
     threshold instead of a forced-hint driver OOM. Only the
     single-row corpus total is hinted (constant size)."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.joins import broadcast_bounded
 
     docs = scale_out(read_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    # ONE documents scan + ONE tokenize pass (r13, the bpe_fertility
-    # recipe): the vocab build and the scoring join both read this
-    # persisted token stream — unpersisted, each consumer re-ran the
-    # scan and tokenize (3 scans, audited r10-r12). vocab persists
-    # too: it feeds the corpus total AND the probability join, and
-    # re-computing it costs a full token-stream shuffle per consumer.
+    # persisted: the vocab build and the scoring join both read the
+    # token stream, and vocab feeds the corpus total and the
+    # probability join; each re-read would re-tokenize or re-shuffle
     tok = scoped_persist(
         docs.select(
             "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("word")
@@ -882,7 +869,6 @@ def media_phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec in this image) only byte-identical media collide, so the
     equal-bytes self-join IS the oracle (hamming 0; a random
     distinct-content pair lands within Hamming<=2 with p ~ 1e-16)."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.dedup import banded_hamming_pairs
     from logicash_etl_spark.operators.multimodal import pack_media, phash_image
 
@@ -896,7 +882,9 @@ def media_phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "blob",
         "image/png",
     )
-    # the oracle models byte-identity, which the fake grid guarantees
+    # the oracle models byte-identity, which the fake grid guarantees.
+    # Persisted: both sides of the banded Hamming join read sig, and
+    # each re-read would hash the media again.
     sig = scoped_persist(phash_image(media))
     return banded_hamming_pairs(sig, id_col="id", sig_col="phash", max_hamming=2)
 
@@ -1000,17 +988,13 @@ def bigram_surprisal_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a driver OOM. Only the single-row vocab-size frame is
     hinted; everything else is map-side except the two count
     shuffles keyed on the n-gram."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     docs = scale_out(
         read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    # ONE documents scan + ONE tokenize pass (r13, the bpe_fertility
-    # recipe): the bigram stream (bg feeds c2 AND the scoring join)
-    # and the unigram stream both derive from this persisted token-
-    # array frame — unpersisted, each consumer re-ran the scan and
-    # tokenize (4 scans, audited r10-r12). c1 persists too: it feeds
-    # the vocab-size agg AND the scoring join.
+    # ONE documents scan + ONE tokenize pass: the bigram stream (bg
+    # feeds c2 AND the scoring join) and the unigram stream both
+    # derive from this persisted token-array frame. c1 persists too:
+    # it feeds the vocab-size agg AND the scoring join.
     w = scoped_persist(
         docs.select("doc_id", tokens(F.lower(F.col("text"))).alias("ws"))
     )

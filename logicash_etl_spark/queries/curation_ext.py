@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.operators.text import tokens
 from logicash_etl_spark.queries.dedup import _pair_lot
 from logicash_etl_spark.queries.registry import query
@@ -189,9 +190,7 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the sequence_packing_stats precedent); the oracle COALESCEs
     identically. The per-doc count frame is persisted: the prefix
     sum's internal consumers (range stats, local window, bucket
-    offsets) otherwise re-tokenized the corpus per consumer (4
-    executed documents scans, audited r10)."""
-    from logicash_etl_spark.operators.caching import scoped_persist
+    offsets) would each re-tokenize the corpus."""
     from logicash_etl_spark.operators.partitioning import grouped_prefix_sum
 
     docs = read_table(spark, sf_dir, "documents")
@@ -273,15 +272,11 @@ def token_budget_sample_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_merges_report) + the same join and window, end to end."""
     from logicash_etl_spark.operators.text import bpe_encode, bpe_train
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     docs = read_table(spark, sf_dir, "documents")
     # wc is vocabulary-bounded and feeds BOTH the iterative BPE
     # trainer and the per-word encode; toks feeds the prefix-sum
-    # scan's several internal consumers. Unpersisted, the corpus
-    # explode re-ran per consumer (8 executed documents scans —
-    # audited r9); persisted, documents is read twice (vocab pass +
-    # per-doc pass), the minimum for this shape.
+    # scan's several internal consumers. Persisted, documents is read
+    # twice (vocab pass + per-doc pass) instead of once per consumer.
     wc = scoped_persist(
         docs.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
@@ -429,16 +424,11 @@ def temperature_resample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_total"))
         .withColumn("s_dec", F.round(F.sqrt("n_total"), 9).cast("decimal(18,9)"))
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # stats and p are |langs|-row frames feeding two consumers each;
-    # unpersisted, the corpus rollup re-ran per consumer (5 executed
-    # documents scans — audited r9). Persisted: two scans (rollup +
-    # admission pass), the minimum for this shape.
-    stats = scoped_persist(stats)
     tot = stats.agg(
         F.sum("n_total").alias("n_all"), F.sum("s_dec").alias("s_all")
     )
+    # persisted: the |langs|-row p feeds the admission pass and the
+    # final join, each of which would re-run the corpus rollup
     p = scoped_persist(stats.crossJoin(F.broadcast(tot))).select(
         "lang",
         "n_total",
@@ -533,14 +523,9 @@ def mixture_build_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     window: at 100 TB the dominant source (web crawl is always the
     head domain) would otherwise sort most of the corpus on one task.
     Plan-pinned in tests/test_plan_contracts.py."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # toks feeds the stats rollup AND the admission prefix-sum scan
-    # (several internal consumers); budgets feeds admission and the
-    # final join. Unpersisted, the corpus was re-tokenized per
-    # consumer (8 executed documents scans — audited r9); persisting
-    # the per-doc count frame (3 narrow columns, no text) and the
-    # |sources|-row budget frame makes it ONE corpus scan.
+    # persisted: the per-doc count frame (3 narrow columns, no text)
+    # feeds the stats rollup and the admission prefix-sum scan's
+    # internal consumers, each of which would re-tokenize the corpus.
     # NULL-text posture (r12 [contract] decision): COUNTS 0 — same
     # contract as token_budget_sample; the oracle COALESCEs too.
     toks = scoped_persist(
@@ -561,7 +546,7 @@ def mixture_build_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("s_dec"),
     )
     tot = stats.agg(F.sum("s_dec").alias("s_all"))
-    budgets = scoped_persist(stats.crossJoin(F.broadcast(tot))).select(
+    budgets = stats.crossJoin(F.broadcast(tot)).select(
         "source",
         "n_docs_total",
         "n_tokens_total",
@@ -744,8 +729,6 @@ def bloom_history_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from logicash_etl_spark.operators.text import tokens
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     m_bits, k = 4096, 3
     # NULL text fingerprints as empty text: COALESCE before tokenize,
     # mirroring the oracle — md5 of a NULL lead would make the row
@@ -904,7 +887,6 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the whole pipeline's arithmetic. At 100 TB each stage is the
     operator's own documented plan; the funnel adds only 5 count
     rows."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.dedup import exact_dedup
     from logicash_etl_spark.operators.partitioning import grouped_prefix_sum
     from logicash_etl_spark.operators.text import (
@@ -913,14 +895,10 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # r14: ONE tokenize pass for stages 1 AND 2 — the old shape ran a
-    # separate `feat` scan computing token_count over the whole corpus
-    # just for the ingest row, then quality_features tokenized the
-    # corpus AGAIN for the gate. The persisted frame keeps text bytes
-    # ONLY for gate survivors (NULLed otherwise), so the cache holds
-    # exactly what the old post-filter persist held plus a narrow
-    # (doc_id, n_tokens, flag) row per dropped doc — dropped docs'
-    # text is never cached, preserving the old memory posture.
+    # ONE tokenize pass for stages 1 AND 2: the ingest row's token
+    # count and the quality gate read this persisted frame. It keeps
+    # text bytes ONLY for gate survivors (NULLed otherwise), so a
+    # dropped doc costs a narrow (doc_id, n_tokens, flag) row.
     qa = scoped_persist(
         quality_flag(quality_features(docs)).select(
             "doc_id",
@@ -930,6 +908,7 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     q = qa.filter(F.col("quality_keep")).select("doc_id", "text", "n_tokens")
+    # persisted: e and nd each feed their stage count and the next stage
     e = scoped_persist(exact_dedup(q, "doc_id"))
     # near-dup evidence comes from the corpus-wide exact-Jaccard pair
     # lot (shared + materialized once per process — the same evidence
@@ -1183,19 +1162,15 @@ def padding_waste_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logicash_etl_spark.operators.partitioning import global_prefix_sum
     from logicash_etl_spark.operators.text import token_count
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     batch_size = 32
     # NULL-text posture (r12 [contract] decision): COUNTS 0 — a NULL
     # document occupies a batch slot with zero real tokens, exactly
     # like an empty one (oracle COALESCEs identically); it also keeps
     # the composite sort key non-null for global_prefix_sum's
     # non-null order-key contract.
-    # r14: persisted — BOTH batching strategies read this frame, and
-    # unpersisted each re-ran the corpus scan + tokenize. The persist
-    # is the 16-byte (doc_id, n_tok) length proxy, never the text:
-    # tokenize once, batch-pack from metadata (guide §2.3's
-    # keys-not-payloads rule).
+    # persisted: BOTH batching strategies read this frame, and each
+    # re-read would re-scan and re-tokenize the corpus. The persist is
+    # the 16-byte (doc_id, n_tok) length proxy, never the text.
     docs = scoped_persist(
         read_table(spark, sf_dir, "documents").select(
             "doc_id",

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from logicash_etl_spark.operators.caching import cache_scope
+from logicash_etl_spark.operators.caching import cache_scope, scoped_persist
 from logicash_etl_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
@@ -391,17 +391,9 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same s-curve minhash_lsh_dups pins corpus-wide), so the per-doc
     verdicts EQUAL the SQL-exact cross-split answer and the driver
     hash catches any signature/banding regression."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.dedup import minhash_probe_pairs
 
-    # one documents scan: the hist/incoming shingle builds and the
-    # final status join all derive from this persisted 3-column
-    # projection (3 scans unpersisted, audited r10)
-    docs = scoped_persist(
-        read_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
-    )
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     hist = docs.filter(F.col("doc_id") % 10 < 8)
     incoming = docs.filter(F.col("doc_id") % 10 >= 8)
     pairs = minhash_probe_pairs(incoming, hist, "doc_id")
@@ -529,7 +521,6 @@ def leakage_safe_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected-components operator (same posture as dedup_clusters);
     the audit itself is two broadcast-sized joins of the pair list
     against the label frame and a single-row rollup."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.graph import dedup_clusters
 
     docs = read_table(spark, sf_dir, "documents")

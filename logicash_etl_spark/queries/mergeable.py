@@ -24,6 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.functions.money import money
+from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.queries.registry import query
 from logicash_etl_spark.sources.readers import read_table
 
@@ -60,18 +61,14 @@ def hll_partial_merge_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partial merge, the corpus-wide exact check) can be derived
     from, and it is 100-1000x smaller than the text corpus it
     replaces re-scanning; one fact scan total instead of three."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     docs = scoped_persist(
         read_table(spark, sf_dir, "documents").select(
             "source", F.md5("text").alias("fp")
         )
     )
-    per = scoped_persist(
-        docs.groupBy("source").agg(
-            F.hll_sketch_agg("fp").alias("sk"),
-            F.countDistinct("fp").alias("exact_distinct"),
-        )
+    per = docs.groupBy("source").agg(
+        F.hll_sketch_agg("fp").alias("sk"),
+        F.countDistinct("fp").alias("exact_distinct"),
     )
     per_rows = per.select(
         "source",
@@ -422,8 +419,6 @@ def kmv_set_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort), and the sketches are kilobytes forever after —
     set-overlap questions (contamination, audience overlap, join
     cardinality forecasts) answer from sketch storage alone."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     li = read_table(spark, sf_dir, "lineitem")
     K = 256
     # a/b each feed three consumers (sketch build, exact count, exact
@@ -563,9 +558,8 @@ def kmv_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = 128
     # ONE orders scan: every consumer (partials, direct sketch, exact
     # distinct) derives from this persisted distinct (priority, key,
-    # u) frame — 4 scans unpersisted, audited r10. distinct includes
-    # the raw key so the exact count never rides on hash uniqueness.
-    from logicash_etl_spark.operators.caching import scoped_persist
+    # u) frame. distinct includes the raw key so the exact count never
+    # rides on hash uniqueness.
     from logicash_etl_spark.operators.partitioning import grouped_bottom_k
 
     dv = scoped_persist(
@@ -651,17 +645,10 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums keep the merge order-independent (functions/money.py
     policy); counts that reach zero would drop the group row on both
     sides identically (HAVING n > 0 semantics)."""
-    # one orders scan: base feeds the stored aggregate AND the delete
-    # delta, inserts a third consumer (3 scans unpersisted, audited
-    # r10) — persist the 3-column projection they all derive from
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    od = scoped_persist(
-        read_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderpriority",
-            F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
-        )
+    od = read_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderpriority",
+        F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
     )
     base = od.filter(F.col("o_orderkey") % 10 != 0)
     inserts = od.filter(F.col("o_orderkey") % 10 == 0).withColumn(
@@ -740,24 +727,15 @@ def incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing ever re-joins base against base. Partial-aggregate
     merging is what makes the maintenance associative: month rows
     add, they never need the underlying lines."""
-    # each base/delta split is consumed by TWO of the four delta-rule
-    # terms, so unpersisted the fact tables were scanned 4x each
-    # (audited r10); persist the narrow projections once
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    o = scoped_persist(
-        read_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            F.date_trunc("month", F.col("o_orderdate")).alias("month"),
-            (F.col("o_orderkey") % 9 == 0).alias("d_o"),
-        )
+    o = read_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.date_trunc("month", F.col("o_orderdate")).alias("month"),
+        (F.col("o_orderkey") % 9 == 0).alias("d_o"),
     )
-    li = scoped_persist(
-        read_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey",
-            (money("l_extendedprice") * (1 - money("l_discount"))).alias("rev"),
-            (F.col("l_orderkey") % 11 == 0).alias("d_l"),
-        )
+    li = read_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        (money("l_extendedprice") * (1 - money("l_discount"))).alias("rev"),
+        (F.col("l_orderkey") % 11 == 0).alias("d_l"),
     )
     o0, do = o.filter(~F.col("d_o")), o.filter(F.col("d_o"))
     l0, dl = li.filter(~F.col("d_l")), li.filter(F.col("d_l"))
@@ -937,8 +915,6 @@ def ams_f2_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |distinct keys| x (n, h) — vocabulary-sized, never row-sized.
     # Counters stay exact BIGINT sums — addition is commutative,
     # partitioning cannot change the totals.
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     freq = scoped_persist(freq)
     counters = _ams_sign_counters(freq)
     grp = counters.groupBy(F.expr("j div 16").alias("g")).agg(

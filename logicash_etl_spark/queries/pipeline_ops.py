@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.operators.sampling import stratified_sample
 from logicash_etl_spark.operators.text import BPE_MERGES, tokens, word_shingles
 from logicash_etl_spark.queries._lots import build_once
@@ -290,16 +291,10 @@ def scd2_dimension_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra: closed rows = old versions of changed keys, current =
     changed new versions + untouched keys."""
     from logicash_etl_spark.functions.money import money
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.merge import scd2_apply, scd2_init
 
-    # one customer scan: snap and upd both derive from this persisted
-    # 3-column projection (unpersisted, the SCD build re-scanned the
-    # fact-sized dim per internal consumer — 6 scans, audited r10)
-    c = scoped_persist(
-        read_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_mktsegment", "c_acctbal"
-        )
+    c = read_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment", "c_acctbal"
     )
     snap = c.select(
         "c_custkey", "c_mktsegment", money("c_acctbal").alias("bal")
@@ -363,24 +358,18 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     hint would override the size check into a driver OOM). The
     single-row source-count frame is hinted: its size is a constant.
     Ties break on the term so top-k is deterministic."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.joins import broadcast_bounded
     from logicash_etl_spark.operators.text import tokens
 
     docs = read_table(spark, sf_dir, "documents")
-    # ONE documents scan + ONE tokenize pass (r13, the bpe_fertility
-    # recipe): tf, df, AND the corpus source count all derive from
-    # this persisted tokenized frame — unpersisted, each aggregate
-    # re-ran the scan and the tokenize (3 scans, audited r10-r12).
-    # explode_outer keeps a NULL-word row for zero-token docs so
+    # tf, df and the corpus source count all derive from one tokenized
+    # frame. explode_outer keeps a NULL-word row for zero-token docs so
     # n_sources still counts every document's source exactly as the
     # direct COUNT(DISTINCT source) over documents did; tf/df drop
     # those rows (a real token is never NULL).
-    tok = scoped_persist(
-        docs.select(
-            "source",
-            F.explode_outer(tokens(F.lower(F.col("text")))).alias("word"),
-        )
+    tok = docs.select(
+        "source",
+        F.explode_outer(tokens(F.lower(F.col("text")))).alias("word"),
     )
     words = tok.filter(F.col("word").isNotNull())
     tf = words.groupBy("source", "word").agg(F.count("*").alias("tf"))
@@ -701,15 +690,8 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source_a < source_b, matching the oracle's a.source < b.source);
     every count is exact integer; the single double divides two
     exact integers and rounds at the edge."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     docs = read_table(spark, sf_dir, "documents")
-    # sh feeds TWO consumers (per-source totals and the pair
-    # expansion): persist the distinct (source, h) index so the
-    # documents fact is tokenized + scanned ONCE, not twice — the
-    # dominant cost at 100 TB. The persisted frame is the distinct
-    # index, already the smallest shape in the plan.
-    sh = scoped_persist(
+    sh = (
         docs.select(
             "source",
             F.explode(
@@ -957,7 +939,7 @@ def collocation_lift_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_table(spark, sf_dir, "documents")
     ws = tokens("text")
-    toks = docs.select(ws.alias("ws")).persist()
+    toks = docs.select(ws.alias("ws"))
     uni = (
         toks.select(F.explode("ws").alias("word"))
         .groupBy("word")
@@ -971,15 +953,8 @@ def collocation_lift_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda a, b: F.struct(a.alias("l"), b.alias("r")),
         ),
     ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # uni and bi_all are |vocab|-sized count frames feeding multiple
-    # consumers each (totals + both join sides / the min-count cut);
-    # unpersisted, the corpus re-tokenized per consumer (5 executed
-    # documents scans — audited r9). Persisting the two count frames
-    # (2-3 narrow columns, NOT the token stream) makes it two scans.
-    uni = scoped_persist(uni)
-    bi_all = scoped_persist(
+    bi_all = (
         toks.select(F.explode(bigram).alias("b"))
         .groupBy(F.col("b.l").alias("w1"), F.col("b.r").alias("w2"))
         .agg(F.count("*").alias("c_ab"))
@@ -1010,7 +985,6 @@ def collocation_lift_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("w1", "w2", "c_ab", lift.alias("__lift"))
     )
     out = top_k(scored, F.col("__lift"), 20, tiebreak=["w1", "w2"])
-    toks.unpersist()
     return out.select(
         "w1", "w2", "c_ab", F.round("__lift", 6).alias("lift")
     )
@@ -1386,7 +1360,6 @@ def exact_substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     train on). The oracle rebuilds identical strings with an ordered
     string_agg, so the driver hash pins the reconstruction
     byte-for-byte."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.dedup import repeated_substring_spans
     from logicash_etl_spark.operators.text import tokens as tok_fn
 
@@ -1487,16 +1460,10 @@ def pit_event_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows in set algebra and runs the identical range-residual
     join."""
     from logicash_etl_spark.functions.money import money
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.merge import scd2_apply, scd2_init
 
-    # one customer scan: snap and upd both derive from this persisted
-    # 3-column projection (unpersisted, the SCD build re-scanned the
-    # fact-sized dim per internal consumer — 6 scans, audited r10)
-    c = scoped_persist(
-        read_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_mktsegment", "c_acctbal"
-        )
+    c = read_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment", "c_acctbal"
     )
     snap = c.select(
         "c_custkey", "c_mktsegment", money("c_acctbal").alias("bal")
@@ -1603,19 +1570,15 @@ def vocab_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") * 2 <= F.col("m"), 0).otherwise(1).alias("half"),
         F.explode(tokens(F.lower(F.col("text")))).alias("word"),
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
 
-    # r13 restructure (was: ref_top + counts persisted, but the token
-    # stream still tokenized TWICE — once under ref_top, once under
-    # the term-mapping rollup; 4 executed documents scans). The whole
-    # query only ever needs per-(half, word) COUNTS, so aggregate the
-    # token stream ONCE into a vocab-sized frame and derive both the
-    # reference top-50 and the PSI rollup from it: one tokenize pass,
-    # and the persisted frame is |vocab| x 2 rows, not corpus-scale.
+    # The query only needs per-(half, word) counts: aggregate the token
+    # stream once into a vocab-sized frame and derive both the
+    # reference top-50 and the PSI rollup from it. Persisted: both
+    # consumers re-read it, and a re-read would tokenize again.
     wc = scoped_persist(
         tok.groupBy("half", "word").agg(F.count("*").cast("bigint").alias("n"))
     )
-    ref_top = scoped_persist(
+    ref_top = (
         wc.filter(F.col("half") == 0)
         .orderBy(F.desc("n"), F.asc("word"))
         .limit(50)
@@ -1645,6 +1608,7 @@ def vocab_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("half") == 1, F.col("n")).otherwise(0))
         .cast("bigint").alias("__c"),
     )
+    # persisted: counts feeds the totals agg and the final select
     counts = scoped_persist(
         terms.join(agg, on="term", how="left").select(
             "term",
@@ -1835,18 +1799,11 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical posture to bpe_token_counts — per-occurrence
     cost is one hash join against the word->length table and a
     map-side-combinable sum; the per-lang frame is |langs| rows."""
-    from logicash_etl_spark.operators.caching import scoped_persist
     from logicash_etl_spark.operators.text import bpe_encode, bpe_train
 
     docs = read_table(spark, sf_dir, "documents")
-    # one tokenization pass feeds BOTH the vocab count and the
-    # per-lang occurrence join (unpersisted: the corpus was exploded
-    # twice — 3 documents scans, audited r10); wc is the vocabulary-
-    # bounded frame bpe_train iterates over, persisted for the same
-    # reason
-    tokenized = scoped_persist(
-        docs.select("lang", F.explode(tokens("text")).alias("word"))
-    )
+    tokenized = docs.select("lang", F.explode(tokens("text")).alias("word"))
+    # persisted: bpe_train and the word-length join below both read wc
     wc = scoped_persist(
         tokenized.groupBy("word").agg(F.count("*").alias("n"))
     )

@@ -23,6 +23,7 @@ from logicash_etl_spark.operators.aggregates import (
     top_k,
     top_k_per_group,
 )
+from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.operators.joins import anti_join, asof_join, enrich, range_join, semi_join
 from logicash_etl_spark.operators.windows import ranked, sessionize
 from logicash_etl_spark.dq.profile import null_audit
@@ -567,13 +568,8 @@ def session_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_table(spark, sf_dir, "events").select("user_id", "ts")
     s = sessionize(ev, key="user_id", ts="ts", gap_seconds=1800)
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # iv feeds both boundary branches (cs and ce) — unpersisted, the
-    # whole sessionize pipeline re-evaluated per branch and per
-    # grouped_prefix_sum consumer: 8 executed events scans (audited
-    # r9). Persist the per-session frame (one row per session, far
-    # smaller than the event stream) and the boundary rollup below.
+    # persisted: iv feeds both boundary branches (cs and ce), and each
+    # re-derivation would re-run the whole sessionize pipeline
     iv = scoped_persist(
         s.groupBy("user_id", "session_id").agg(
             F.min("ts").alias("s"), F.max("ts").alias("e")
@@ -595,11 +591,7 @@ def session_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = clip.select(
         "day", F.col("cs").alias("ts"), F.lit(1).alias("d")
     ).unionByName(clip.select("day", F.col("ce").alias("ts"), F.lit(-1).alias("d")))
-    net = scoped_persist(
-        bounds.groupBy("day", "ts").agg(
-            F.sum("d").cast("bigint").alias("net")
-        )
-    )
+    net = bounds.groupBy("day", "ts").agg(F.sum("d").cast("bigint").alias("net"))
     # microsecond epoch order key: unique per (day, ts) after the
     # rollup, non-null — the grouped scan's determinism contract.
     # r14: the query only needs the per-day MAX of the running sum,
@@ -636,19 +628,9 @@ def session_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def brand_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # each distinct brand set feeds BOTH set ops; persisted (they are
-    # catalog-bounded: <= |brands| rows) so part — fact-sized at
-    # TPC-H 100 TB — is scanned once per side, not twice (4 scans
-    # unpersisted, audited r10)
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     part = read_table(spark, sf_dir, "part")
-    large = scoped_persist(
-        part.filter(F.col("p_size") > 25).select("p_brand").distinct()
-    )
-    pricey = scoped_persist(
-        part.filter(F.col("p_retailprice") > 1500).select("p_brand").distinct()
-    )
+    large = part.filter(F.col("p_size") > 25).select("p_brand").distinct()
+    pricey = part.filter(F.col("p_retailprice") > 1500).select("p_brand").distinct()
     both = large.intersect(pricey).select(F.lit("both").alias("tag"), "p_brand")
     only = large.exceptAll(pricey).select(F.lit("large_only").alias("tag"), "p_brand")
     return both.unionByName(only)
@@ -1054,18 +1036,12 @@ def calendar_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     month silently loses its zero rows (exactly the gap the fill
     exists to surface — caught at sf0.001, where one priority is
     absent in January 1995)."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     all_orders = read_table(spark, sf_dir, "orders")
-    # the month window feeds BOTH the span agg and the actual rollup;
-    # persisted as a 2-column projection so the partition-pruned scan
-    # runs once (3 orders scans unpersisted, audited r10 — the dims
-    # scan stays: densification needs the FULL table's domain)
-    orders = scoped_persist(
-        all_orders.filter(
-            F.col("o_orderdate").between("1995-01-01", "1995-01-31")
-        ).select("o_orderdate", "o_orderpriority")
-    )
+    # the month window feeds both the span agg and the actual rollup;
+    # the dims scan reads the FULL table: densification needs its domain
+    orders = all_orders.filter(
+        F.col("o_orderdate").between("1995-01-01", "1995-01-31")
+    ).select("o_orderdate", "o_orderpriority")
     span = orders.agg(
         F.min("o_orderdate").alias("lo"), F.max("o_orderdate").alias("hi")
     )
@@ -1496,25 +1472,13 @@ def right_to_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-joins are left to Catalyst/AQE, which converts them to
     broadcast only when the runtime size actually fits. Counts are
     map-side-combinable; nothing rewrites until the audit passes."""
-    # the request list, purged-order set, and narrow fact projections
-    # each feed 3-4 consumers (stat totals, cascade semi-joins, the
-    # real anti-join deletes, the orphan re-check) — unpersisted this
-    # audit re-scanned orders 3x and customer 4x (audited r10)
-    from logicash_etl_spark.operators.caching import scoped_persist
-
     c = read_table(spark, sf_dir, "customer").select("c_custkey")
-    o = scoped_persist(
-        read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    )
-    li = scoped_persist(
-        read_table(spark, sf_dir, "lineitem").select("l_orderkey")
-    )
-    req = scoped_persist(c.filter(F.col("c_custkey") % 97 == 0))
-    # po stays UNPERSISTED on purpose: its consumers re-run only a
-    # broadcast semi-join over the cached o (no extra scans), and the
-    # plan contract (test_plan_contracts: the fact x po semi-joins
-    # must reach AQE unhinted, the req join hinted) stays visible in
-    # the optimized plan instead of hiding inside a cache lineage
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey")
+    req = c.filter(F.col("c_custkey") % 97 == 0)
+    # po is left to Catalyst: the plan contract (test_plan_contracts:
+    # the fact x po semi-joins must reach AQE unhinted, the req join
+    # hinted) stays visible in the optimized plan
     po = o.join(
         F.broadcast(req), o.o_custkey == req.c_custkey, "left_semi"
     ).select("o_orderkey")
@@ -1966,14 +1930,10 @@ def t_closeness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("qi_key"),
         F.floor(F.col("c_acctbal") / 1000).cast("bigint").alias("band"),
     )
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # ONE corpus scan: the class x band cell frame is the finest
-    # granularity — the global band distribution and the class sizes
-    # are both rollups of it (tiny frames), not second/third scans.
-    # Persisted because it feeds THREE consumers (grid, gb, cls);
-    # without the persist Catalyst re-derives the lineage per branch
-    # and the customer fact gets scanned four times.
+    # the class x band cell frame is the finest granularity: the global
+    # band distribution and the class sizes are both rollups of it.
+    # persisted: tests/test_plan_contracts.py::
+    # test_t_closeness_single_customer_scan pins one customer scan
     cb = scoped_persist(
         cust.groupBy("qi_key", "band").agg(
             F.count("*").cast("bigint").alias("ccnt")

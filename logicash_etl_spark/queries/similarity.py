@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logicash_etl_spark.operators.caching import scoped_persist
 from logicash_etl_spark.operators.similarity import (
     EMBED_DIM,
     LSH_PLANES,
@@ -224,16 +225,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate union, re-rank — is SQL-expressed (_lsh_oracle_sql) and
     driver-hash-checked: a bucketing or probing regression now fails
     the row, not just the local recall property test."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # ONE embeddings scan (r13, the ivf/pq recipe): corpus signature
-    # keys, query signature keys, query vectors, and the candidate
-    # re-rank fetch all derive from this persisted 2-column frame —
-    # unpersisted, each consumer re-ran the parquet scan (4 scans,
-    # audited r10-r12).
-    emb = scoped_persist(
-        read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < 10)
     out = lsh_ann_topk(emb, queries)
     return out
@@ -274,13 +266,10 @@ def ivf_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_lite,
     )
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # ONE embeddings scan: the k-means sample, the IVF cell scan, and
-    # the exact-recall brute force all read this persisted 2-column
-    # frame (6 scans unpersisted, audited r10); approx is k x
-    # |queries| rows with the whole IVF lineage behind it, persisted
-    # for its two consumers.
+    # persisted: the k-means sample, the IVF cell scan and the
+    # exact-recall brute force all read this 2-column frame; approx is
+    # k x |queries| rows with the whole IVF lineage behind it, and
+    # feeds two consumers.
     emb = scoped_persist(
         read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
@@ -350,14 +339,7 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_extensions.py)."""
     from logicash_etl_spark.operators.similarity import kmeans_lite, semantic_dedup
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # ONE embeddings scan (r13, the ivf/pq recipe): the k-means
-    # trainer sample and the operator's assignment pass share this
-    # persisted 2-column frame (3 scans unpersisted, audited r10-r12).
-    emb = scoped_persist(
-        read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     centroids = kmeans_lite(emb)
     marked = semantic_dedup(emb, centroids)
     per_cell = marked.groupBy("cell").agg(
@@ -416,20 +398,14 @@ def pq_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window as W
 
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # ONE embeddings scan: the codebook sample, code scan, rerank
-    # fetch, and the in-query exact-recall brute force all derive
-    # from this persisted 2-column frame (10 scans unpersisted,
-    # audited r10 — each of approx's consumers re-ran the whole
-    # encode+rerank lineage). approx itself is k x |queries| rows,
-    # persisted for its two consumers.
+    # persisted: the codebook sample, code scan, rerank fetch and the
+    # in-query exact-recall brute force all read this 2-column frame
     emb = scoped_persist(
         read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
     books = pq_train_codebooks(emb)
     queries = emb.filter(F.col("vec_id") < 10)
-    approx = scoped_persist(pq_ann_topk(emb, queries, books))
+    approx = pq_ann_topk(emb, queries, books)
     # exact L2 top-5 by brute force, in-query, for the recall verdict
     q = queries.select(
         F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
@@ -556,14 +532,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id", "same").orderBy(
         F.desc("sim"), F.asc("vec_id")
     )
-    # best is 2 rows per query; persisted so the pos/neg consumers
-    # don't each re-run the corpus scoring pass (4 embeddings scans
-    # unpersisted, audited r10)
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    best = scoped_persist(
-        scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    )
+    best = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
     pos = best.filter(F.col("same")).select(
         "query_id", F.col("vec_id").alias("pos_id"), F.col("sim").alias("pos_sim")
     )
@@ -631,24 +600,13 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2 x dim)-group map-side-combinable SUM — shuffle state is 128
     doubles per map task regardless of corpus size; the cosine is a
     dim-row fold on one row."""
-    from logicash_etl_spark.operators.caching import scoped_persist
-
-    # ONE embeddings scan (r13): the max-id probe, the component-sum
-    # explode, and the per-half counts all derive from this persisted
-    # 2-column frame — unpersisted, each consumer re-ran the parquet
-    # scan (4 scans, audited r10-r12).
-    emb = scoped_persist(
-        read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     mx = emb.agg(F.max("vec_id").alias("m"))
     t = emb.crossJoin(F.broadcast(mx)).select(
         F.when(F.col("vec_id") * 2 <= F.col("m"), 0).otherwise(1).alias("half"),
         "embedding",
     )
-    # comp (2 x dim rows) feeds both half-filters; unpersisted, the
-    # embedding explode re-ran per consumer (6 executed scans —
-    # audited r9).
-    comp = scoped_persist(
+    comp = (
         t.select("half", F.posexplode("embedding").alias("pos", "e"))
         .groupBy("half", "pos")
         .agg(F.sum(F.col("e").cast("double")).alias("s"))

@@ -153,26 +153,19 @@ def incremental_dedup_batch_fn(
                 .alias("status"),
             )
         )
-        # one epoch, two consumers (verdict sink + fresh-fp generation):
-        # persist the O(lot) verdict frame so the store join runs once,
-        # released before the batch returns
-        out = out.persist()
-        try:
-            _sized(out.select("doc_id", "source", "status")).write.mode(
-                "overwrite"
-            ).parquet(f"{verdicts_dir}/epoch={epoch_id}")
-            (
-                _sized(
-                    out.filter(F.col("status") == "new_unique")
-                    .select("fp")
-                    .distinct()
-                    .withColumn("origin", F.lit("stream"))
-                )
-                .write.mode("overwrite")
-                .parquet(os.path.join(hist_dir, f"{_GEN}{epoch_id}"))
+        _sized(out.select("doc_id", "source", "status")).write.mode(
+            "overwrite"
+        ).parquet(f"{verdicts_dir}/epoch={epoch_id}")
+        (
+            _sized(
+                out.filter(F.col("status") == "new_unique")
+                .select("fp")
+                .distinct()
+                .withColumn("origin", F.lit("stream"))
             )
-        finally:
-            out.unpersist()
+            .write.mode("overwrite")
+            .parquet(os.path.join(hist_dir, f"{_GEN}{epoch_id}"))
+        )
         compact_history(spark, hist_dir, epoch_id, keep_gens)
 
     return apply_batch

@@ -12,9 +12,13 @@ per fact in each catalog query's FORMATTED plan (which renders an
 InMemoryTableScan as a leaf, so persisted lineage is correctly not
 double-counted) and prints every query at or above the threshold.
 
-The round-9 sweep fixed every >=5 offender by persisting the SMALLEST
-frame in the plan (see COVERAGE.md "Engine-wide scan-count audit");
-re-run this after adding queries:
+A flagged query is a prompt, not a verdict: persisting the smallest
+frame that feeds the repeated scans is the candidate fix, and paired,
+materialised timing of the query (call + toPandas + clearCache, ten
+ABBA pairs, as perfbench times it) decides whether the persist stays.
+Scan counts alone do not: a re-scan of a small fact can cost less than
+the persist (see the site audit in CHANGES.md and COVERAGE.md
+"Engine-wide scan-count audit"). Re-run this after adding queries:
 
     python scan_audit.py [min_scans]      # default 3
     python scan_audit.py --check          # gate against MANIFEST:
@@ -43,38 +47,83 @@ FACTS = (
     "customer", "part", "supplier",
 )
 
-# --check manifest: the measured-and-adjudicated state at threshold 3
-# (round 10; see COVERAGE.md "Scan-audit deferred list" for per-query
-# verdicts and the r11/r12 fix queue). The check fails on any query
+# --check manifest: every query at or above threshold 3, with the
+# scans of each fact it is allowed. The check fails on any query
 # exceeding its manifest count (a scan-count REGRESSION) and on any
 # manifest entry that no longer flags (a fix landed -> shrink the
 # manifest deliberately). Keys: query -> {fact: max allowed scans}.
+#
+# Repeats BY DESIGN: the bloom pair compares pruned vs unpruned scans
+# (the extra pass IS the measurement); referential_integrity_audit is
+# per-FK-edge; knn_label_vote's third scan is the label join;
+# value_drift_psi's 3 passes are sequentially dependent. Every other
+# row is a query whose persist was deleted because paired,
+# materialised timing showed it did not pay; the comment gives the
+# timing: pairs the persisted side won of ten ABBA pairs of call +
+# toPandas + clearCache at sf0.1, and both medians (CHANGES.md has
+# the site audit).
 MANIFEST: dict[str, dict[str, int]] = {
-    # The r13 sweep landed the 7 FIXABLE + 2 PARTIAL rows the r12
-    # pre-adjudication queued (COVERAGE.md): persisted 2-col
-    # embeddings projections in ann_lsh_topk / semantic_dedup_stats /
-    # embedding_centroid_drift (the ivf/pq recipe; semantic_dedup
-    # additionally persists its assigned frame), shared persisted
-    # tokenized frames in tfidf_top_terms (explode_outer so the
-    # source count rides along) / unigram_surprisal_score /
-    # bigram_surprisal_score, the per-(half, word) count-table
-    # restructure in vocab_drift_psi (4 -> 2, tokenize 2x -> 1x),
-    # the persisted one-row midpoint in value_drift_psi (4 -> its
-    # sequential floor 3), and the persisted fingerprint frame in
-    # benchmark_contamination (3 -> 2).
-    #
-    # What remains is adjudicated repeat-BY-DESIGN (judge-reviewed
-    # r12: the bloom pair compares pruned vs unpruned scans — the
-    # extra pass IS the measurement; conversion_funnel keeps one
-    # pushed-down filter per stage; referential_integrity_audit is
-    # per-FK-edge; knn_label_vote's third scan is the label join;
-    # value_drift_psi's 3 passes are sequentially dependent):
+    # persist won 5/10, median 1.22 s kept vs 1.28 s deleted
+    "ann_lsh_topk": {"embeddings": 4},
+    # persist won 0/10, median 0.72 s kept vs 0.65 s deleted
+    "benchmark_contamination": {"documents": 3},
     "bloom_join_prune_stats": {"lineitem": 3},
     "bloom_pruned_revenue": {"lineitem": 3},
-    "conversion_funnel": {"events": 3},
+    # persist won 0/10, median 0.95 s kept vs 0.85 s deleted
+    "bpe_fertility_by_lang": {"documents": 3},
+    # persists won 1/10, median 0.35 s kept vs 0.24 s deleted
+    "brand_set_ops": {"part": 4},
+    # persist won 2/10, median 0.28 s kept vs 0.27 s deleted
+    "calendar_gap_fill": {"orders": 3},
+    # persist won 3/10, median 0.49 s kept vs 0.46 s deleted
+    "cohort_ltv_curve": {"events": 3},
+    # persists won 1/10, median 1.41 s kept vs 1.00 s deleted
+    "collocation_lift_top20": {"documents": 5},
+    # persists won 1/10, median 0.71 s kept vs 0.63 s deleted
+    "conversion_funnel": {"events": 6},
+    # persists won 2/10, median 2.37 s kept vs 2.17 s deleted
+    "copurchase_lift_top20": {"lineitem": 5},
+    # persists won 1/10, median 0.54 s kept vs 0.46 s deleted
+    "embedding_centroid_drift": {"embeddings": 6},
+    # persist won 5/10, median 1.05 s kept vs 0.99 s deleted
+    "fuzzy_name_match": {"part": 5},
+    # persist won 5/10, median 0.90 s kept vs 0.91 s deleted
+    "hard_negative_mining": {"embeddings": 4},
+    # persist won 1/10, median 0.73 s kept vs 0.54 s deleted
+    "incremental_agg_maintenance": {"orders": 3},
+    # persists won 0/10, median 2.12 s kept vs 1.41 s deleted
+    "incremental_join_maintenance": {"lineitem": 4, "orders": 4},
+    # persist won 4/10, median 2.27 s kept vs 2.23 s deleted
+    "incremental_minhash_dedup": {"documents": 3},
+    # persist won 2/10, median 0.76 s kept vs 0.58 s deleted
+    "join_skew_profile": {"events": 6},
+    # persist won 1/10, median 0.66 s kept vs 0.62 s deleted
+    "km_return_time_survival": {"events": 4},
     "knn_label_vote": {"embeddings": 3},
+    # persist won 5/10, median 0.58 s kept vs 0.64 s deleted
+    "part_name_edit_pairs": {"part": 5},
     "referential_integrity_audit": {"lineitem": 3},
+    # persist won 4/10, median 0.89 s kept vs 0.89 s deleted
+    "revenue_concentration_gini": {"customer": 4, "orders": 4},
+    # persist won 3/10, median 0.77 s kept vs 0.74 s deleted
+    "rfm_segmentation": {"orders": 4},
+    # persists won 2/10, median 2.16 s kept vs 2.00 s deleted
+    "right_to_erasure_audit": {"customer": 4, "orders": 3},
+    # persist won 4/10, median 1.21 s kept vs 1.14 s deleted
+    "robust_value_stats": {"events": 5},
+    # persist won 1/10, median 0.60 s kept vs 0.54 s deleted
+    "sequence_packing_stats": {"documents": 4},
+    # persist won 1/10, median 2.20 s kept vs 1.95 s deleted
+    "source_overlap_matrix": {"documents": 3},
+    # persist won 2/10, median 0.72 s kept vs 0.79 s deleted
+    "temperature_resample_counts": {"documents": 3},
+    # persist won 0/10, median 0.97 s kept vs 0.78 s deleted
+    "tfidf_top_terms": {"documents": 3},
+    # persist won 1/10, median 0.65 s kept vs 0.47 s deleted
+    "theil_sen_trend": {"events": 6},
     "value_drift_psi": {"events": 3},
+    # persist won 1/10, median 0.85 s kept vs 0.75 s deleted
+    "value_outlier_mad": {"events": 4},
 }
 
 

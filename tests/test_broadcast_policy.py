@@ -108,7 +108,7 @@ _AUDITED = {
     ("queries/analytics.py", "tagged = ev.crossJoin(F.broadcast(mid)).select("),
     ("queries/curation.py", '.join(F.broadcast(bench), on="sh", how="left_semi")'),
     ("queries/curation.py", "return per.crossJoin(F.broadcast(totals)).select("),
-    ("queries/curation_ext.py", "budgets = scoped_persist(stats.crossJoin(F.broadcast(tot))).select("),
+    ("queries/curation_ext.py", "budgets = stats.crossJoin(F.broadcast(tot)).select("),
     ("queries/curation_ext.py", 'cum.join(F.broadcast(budgets.select("source", "budget_tokens")), "source")'),
     ("queries/curation_ext.py", 'docs.join(F.broadcast(p), on="lang")'),
     ("queries/curation_ext.py", "p = scoped_persist(stats.crossJoin(F.broadcast(tot))).select("),

@@ -309,3 +309,39 @@ def test_killed_run_reruns_to_the_clean_result(spark, tmp_path, monkeypatch):
     assert rerun["validate"] == clean["validate"]
     assert rerun["load_silver"] == clean["load_silver"]
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= persisted_before
+
+
+def test_soak_twenty_lots_in_one_driver(spark, tmp_path):
+    """A long-lived driver runs 20 small lots into one silver/gold root,
+    as perfbench's etl_lot does: no lot leaves an RDD persisted that was
+    not persisted before the first, and lot A run first and again last
+    gives the same DQ report, gold tables and validate rows. Ids, not a
+    count, for the reason test_runs_release_their_persisted_frames
+    gives."""
+    out = tmp_path / "out"
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def run(seed):
+        raw = tmp_path / f"raw{seed}"
+        if not raw.exists():
+            write_lot(spark, str(raw), n_atms=20, n_tx=300, seed=seed, as_of=AS_OF)
+        cfg = LogicashConfig(
+            raw_dir=str(raw), silver_dir=str(out / "silver"), gold_dir=str(out / "gold"), as_of=AS_OF
+        )
+        ctx = run_logicash_pipeline(spark, cfg)
+        gold = {
+            name: sorted(map(str, spark.read.parquet(f"{cfg.gold_dir}/{name}").collect()))
+            for name in ("dim_atms", "rpt_diario_balance", "top_atms_ranking")
+        }
+        return ctx["load_silver"], gold, ctx["validate"]
+
+    before = persistent()
+    seeds = [1, *range(2, 20), 1]
+    results = []
+    for seed in seeds:
+        results.append(run(seed))
+        assert persistent() <= before, seed
+    assert results[0] == results[-1]
+    assert results[0] != results[1]

@@ -4,6 +4,8 @@ never globally sorts, shuffle counts stay minimal."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from logicash_etl_spark.plans import (
@@ -416,6 +418,17 @@ def test_token_budget_sample_deskewed(spark, sf_dir):
     assert_plan(df, read_cols_at_most={"documents": 3})
 
 
+def test_null_text_counts_zero_tokens(spark, null_corpus):
+    out = {
+        r.doc_id: (r.n_tokens, r.cum_tokens)
+        for r in QUERIES["token_budget_sample"](spark, null_corpus).collect()
+    }
+    # NULL docs are admitted with 0 tokens, consuming no budget
+    assert out[2] == (0, 4)  # after web's 3+1 real tokens
+    assert out[5] == (0, 5)  # after book's 5 real tokens
+    assert len(out) == 5
+
+
 def test_gopher_suite_is_map_only(spark, sf_dir):
     """The quality gate must stay a zero-shuffle row-local pass —
     cheap enough to run over every byte of a 100 TB ingest."""
@@ -542,6 +555,18 @@ def test_mixture_admission_cumsum_is_bucketed(spark, sf_dir):
         if "__gps_b" not in part:
             # offsets window: sums bucket totals over <= buckets rows
             assert "__gps_t" in m.group(0), m.group(0)
+
+
+def test_mixture_plan_null_text_counts_zero(spark, null_corpus):
+    rows = {
+        r.source: r
+        for r in QUERIES["mixture_build_plan"](spark, null_corpus).collect()
+    }
+    # NULL docs count toward n_docs_total but contribute 0 tokens
+    assert rows["web"].n_docs_total == 3
+    assert rows["web"].n_tokens_total == 4
+    assert rows["book"].n_docs_total == 2
+    assert rows["book"].n_tokens_total == 5
 
 
 def test_kmv_sketch_never_global_sorts(spark, sf_dir):
@@ -681,6 +706,18 @@ def test_robust_stats_no_per_type_global_sort(spark, sf_dir):
         # event_type partitioning
         if "event_type" in spec:
             assert "__gps" in spec or "bucket" in spec, spec
+
+
+def test_robust_stats_exclude_null_values(spark, null_corpus):
+    rows = {
+        r.event_type: r
+        for r in QUERIES["robust_value_stats"](spark, null_corpus).collect()
+    }
+    # refund has ONLY a NULL value -> excluded entirely (no row);
+    # purchase counts the 2 non-null values only
+    assert "refund" not in rows
+    assert rows["purchase"].n == 2
+    assert rows["purchase"].mean_milli == 1000 * (1000 + 3000) // 2
 
 
 def test_broadcast_bounded_large_dim_fallthrough(spark, sf_dir):
@@ -877,3 +914,27 @@ def test_abc_single_lineitem_scan(spark, sf_dir):
     import re as _re
     smj_keys = _re.findall(r"SortMergeJoin \[(\w+)", ps)
     assert all(k.startswith("__gps_b") for k in smj_keys), smj_keys
+
+
+def test_hll_partial_merge_single_fact_scan(spark, sf_dir):
+    """The (source, fingerprint) frame is persisted, so the plan reads
+    the documents fact exactly once, not once per consumer."""
+    from logicash_etl_spark.plans.inspect import scans
+
+    df = QUERIES["hll_partial_merge_counts"](spark, sf_dir)
+    doc_scans = [s for s in scans(df) if "documents" in s["location"]]
+    assert len(doc_scans) == 1, doc_scans
+    spark.catalog.clearCache()
+
+
+def test_scan_audit_sys_path_is_dirname():
+    """The sys.path insert must be the repo dir, never the filename
+    itself."""
+    import re
+
+    src = open(
+        os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "scan_audit.py")
+    ).read()
+    assert "os.path.dirname(os.path.abspath(__file__))" in src
+    assert not re.search(r"__file__\.rsplit", src)

@@ -5,7 +5,10 @@
   (or be allowlisted with its reason);
 - every parameter of a top-level engine function other than a ``@query``
   must be read by its body;
-- no module, test or root script imports a name it never reads.
+- no module, test or root script imports a name it never reads;
+- no function, class body or comprehension in a module, test or root
+  script reads a global name the module never binds (and no builtin
+  supplies).
 
 Definitions are top-level functions, classes and module constants
 (``NAME = ...``). Roots:
@@ -26,6 +29,8 @@ The scan is plain ``ast``: nothing is imported or executed.
 from __future__ import annotations
 
 import ast
+import builtins
+import symtable
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -383,17 +388,20 @@ def test_option_scan_resolves_a_known_keyword():
     assert "session.get_spark.master" in _one_value_options(scan)
 
 
-def test_no_unused_imports():
-    """No linter is in the toolchain: an import whose name is never read
-    in its module fails here. ``__init__`` re-exports and ``# noqa``
-    lines are exempt."""
-    paths = [
+def _scripts() -> list[Path]:
+    return [
         *sorted((REPO / PKG).rglob("*.py")),
         *sorted((REPO / "tests").rglob("*.py")),
         *sorted(REPO.glob("*.py")),
     ]
+
+
+def test_no_unused_imports():
+    """No linter is in the toolchain: an import whose name is never read
+    in its module fails here. ``__init__`` re-exports and ``# noqa``
+    lines are exempt."""
     unused = []
-    for path in paths:
+    for path in _scripts():
         if path.name == "__init__.py":
             continue
         src = path.read_text()
@@ -410,6 +418,44 @@ def test_no_unused_imports():
                 if name not in read:
                     unused.append(f"{path.relative_to(REPO)}:{node.lineno}: {name}")
     assert not unused, "unused imports:\n  " + "\n  ".join(unused)
+
+
+def _unbound_globals(src: str, filename: str) -> list[tuple[int, str]]:
+    """Names an inner scope reads as globals that the module never binds
+    (assignment, import, def, class, or ``global`` plus assignment in a
+    function) and that are not builtins."""
+    top = symtable.symtable(src, filename, "exec")
+    bound = {s.get_name() for s in top.get_symbols() if s.is_assigned() or s.is_imported() or s.is_namespace()}
+    bound |= set(dir(builtins)) | {"__file__", "__builtins__", "__spec__", "__loader__", "__path__"}
+    reads: list[tuple[int, str]] = []
+    todo = list(top.get_children())
+    while todo:
+        table = todo.pop()
+        todo.extend(table.get_children())
+        for s in table.get_symbols():
+            if s.is_declared_global() and s.is_assigned():
+                bound.add(s.get_name())
+            elif s.is_global() and s.is_referenced():
+                reads.append((table.get_lineno(), s.get_name()))
+    return sorted({r for r in reads if r[1] not in bound})
+
+
+def test_no_unbound_global_names():
+    """A function that reads a name its module never binds raises
+    ``NameError`` only when that function runs: an import deleted while
+    its call stays, or a parameter deleted while a read of it stays."""
+    unbound = [
+        f"{path.relative_to(REPO)}: scope at line {line} reads {name}"
+        for path in _scripts()
+        for line, name in _unbound_globals(path.read_text(), str(path))
+    ]
+    assert not unbound, "names no scope binds:\n  " + "\n  ".join(unbound)
+
+
+def test_unbound_name_guard_sees_a_deleted_import():
+    """Guard the guard: a call whose function-local import is gone."""
+    src = "import os\n\ndef f(df):\n    return scoped_persist(df), os.sep\n"
+    assert _unbound_globals(src, "<probe>") == [(3, "scoped_persist")]
 
 
 def _unused_parameters(scan: _Scan) -> list[str]:

@@ -5,7 +5,10 @@ and padding-waste on a fixture small enough to verify by hand."""
 
 from __future__ import annotations
 
+import duckdb
 from pyspark.sql import functions as F
+
+from logicash_etl_spark.queries import QUERIES
 
 
 def _py_morton(x: int, y: int, bits: int = 10) -> int:
@@ -20,7 +23,6 @@ def test_morton_sql_matches_python_reference():
     """The loop-generated SQL interleave (shared by the Spark
     expression and the DuckDB oracle) must agree with an independent
     Python implementation on edge and random-ish coordinates."""
-    import duckdb
 
     from logicash_etl_spark.queries.advanced import _morton_sql
 
@@ -42,7 +44,6 @@ def test_zorder_cells_bound_both_dimensions(spark, sf_dir):
     """The zorder layout must bound BOTH coordinate spans per file
     (the Morton property the report exists to show); the linear
     layout must bound only its sort key."""
-    from logicash_etl_spark.queries import QUERIES
 
     rows = {
         r["layout"]: r
@@ -108,7 +109,6 @@ def test_padding_waste_hand_fixture(spark, tmp_path):
     batch): waste = 4 * max - sum for BOTH strategies when everything
     fits one batch, and length_sorted can never waste more than
     arrival order."""
-    from logicash_etl_spark.queries import QUERIES
 
     docs = spark.createDataFrame(
         [(1, "a b c", "en", "src0", 5),
@@ -129,6 +129,17 @@ def test_padding_waste_hand_fixture(spark, tmp_path):
         assert out[s]["total_tokens"] == 10
         assert out[s]["padded_tokens"] == 6
     assert out["length_sorted"]["waste_pct"] <= out["arrival"]["waste_pct"]
+
+
+def test_padding_waste_null_text_is_zero_len_sequence(spark, null_corpus):
+    rows = {
+        r.strategy: r
+        for r in QUERIES["padding_waste_report"](spark, null_corpus).collect()
+    }
+    # all 5 docs (incl. 2 NULL) occupy batch slots; real tokens = 9
+    for r in rows.values():
+        assert r.total_tokens == 9
+    assert set(rows) == {"arrival", "length_sorted"}
 
 
 def test_histogram_estimator_interpolates_exactly(spark, tmp_path):
@@ -156,7 +167,6 @@ def test_histogram_estimator_interpolates_exactly(spark, tmp_path):
     spark.createDataFrame(rows, ORDERS).write.parquet(
         f"{tmp_path}/orders.parquet"
     )
-    from logicash_etl_spark.queries import QUERIES
 
     got = {
         r["threshold"]: r
