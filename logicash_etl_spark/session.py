@@ -11,12 +11,41 @@ ANSI-off decimal behavior pinned explicitly.
 Locally we run ``local[N]``; on a real cluster the same config applies
 unchanged except ``master``/``shuffle.partitions`` which deployments
 override via ``extra_conf``.
+
+Local file system. Without native Hadoop IO, Hadoop's
+``RawLocalFileSystem.setPermission`` forks a ``chmod`` process for every
+file, ``.crc`` sidecar and directory it creates, so the silver day
+fan-out (730 partitions) spent most of its time starting processes.
+``jvm/NioLocalFileSystem.java`` is Hadoop's checksummed
+``LocalFileSystem`` over a raw file system whose ``setPermission`` calls
+``Files.setPosixFilePermissions`` for modes within 0777 (anything else,
+such as the sticky bit, goes to Hadoop's own code), so every mode comes
+out as Hadoop would set it. The session compiles it once with the JDK's
+``javac`` (``$JAVA_HOME/bin``, else ``PATH``) against the Spark jars,
+into ``${XDG_CACHE_HOME:-~/.cache}/logicash_etl_spark/nio-fs-<source
+hash>``, puts that directory on ``spark.driver.extraClassPath`` and
+registers the class as ``spark.hadoop.fs.file.impl``. In local mode the
+executors run in the driver JVM, so that is enough. It replaces the
+class Hadoop's service loader would pick, which with Spark's Hive jars
+is Hive's ``ProxyLocalFileSystem``: the same ``LocalFileSystem`` except
+that ``rename`` onto an existing file returns false instead of replacing
+it (Spark's committers delete the target first). Without a ``javac`` (a
+JRE-only host) the session keeps that stock local file system. A
+cluster deployment must ship the class directory to its executors
+(``spark.executor.extraClassPath``), or set
+``spark.hadoop.fs.file.impl`` back to
+``org.apache.hadoop.fs.LocalFileSystem`` through ``extra_conf``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Shuffle partitions: ~cores locally. On a real cluster this should be
@@ -26,7 +55,9 @@ _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
 
 def session_config(cpus: str | int | None = None) -> dict[str, str]:
-    """The engine's default Spark conf, as a plain dict (testable)."""
+    """The engine's default Spark conf, as a plain dict (testable
+    without a JVM; the first call on a machine compiles the local file
+    system class)."""
     n = str(cpus or _DEFAULT_CPUS)
     return {
         "spark.sql.shuffle.partitions": n,
@@ -74,6 +105,65 @@ def session_config(cpus: str | int | None = None) -> dict[str, str]:
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
+        **_local_fs_conf(),
+    }
+
+
+_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java")
+_FS_CLASS = "logicash_etl_spark.jvm.NioLocalFileSystem"
+
+
+def _javac() -> str | None:
+    home = os.environ.get("JAVA_HOME")
+    javac = os.path.join(home, "bin", "javac") if home else ""
+    return javac if os.access(javac, os.X_OK) else shutil.which("javac")
+
+
+def _class_dir(source: bytes) -> str:
+    """Cache directory of the compiled class, keyed by its source."""
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    key = hashlib.sha256(source).hexdigest()[:16]
+    return os.path.join(cache, "logicash_etl_spark", f"nio-fs-{key}")
+
+
+def _build_local_fs(javac: str) -> str:
+    """Compile the local file system class once per source; return its
+    class directory. Each build goes to a temporary directory renamed
+    into place, so JVMs starting at once cannot see a half-built one."""
+    with open(_FS_SOURCE, "rb") as fh:
+        out = _class_dir(fh.read())
+    if os.path.isdir(out):
+        return out
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=".build-", dir=os.path.dirname(out))
+    try:
+        jars = os.path.join(_find_spark_home(), "jars", "*")
+        res = subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-cp", jars, "-d", tmp, _FS_SOURCE],
+            capture_output=True,
+            text=True,
+        )
+        if res.returncode:
+            raise RuntimeError(f"javac failed on {_FS_SOURCE}:\n{res.stderr}")
+        try:
+            os.replace(tmp, out)
+        except OSError:
+            if not os.path.isdir(out):  # not a concurrent build that won
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """Conf that swaps in the fork-free local file system, or nothing
+    when there is no JDK to compile it."""
+    javac = _javac()
+    if javac is None:
+        return {}
+    return {
+        "spark.driver.extraClassPath": _build_local_fs(javac),
+        "spark.hadoop.fs.file.impl": _FS_CLASS,
     }
 
 

@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from logicash_etl_spark.operators.joins import asof_join
 
@@ -123,3 +124,22 @@ def test_reserved_rt_column_raises(spark):
     )
     with pytest.raises(ValueError, match="__rt"):
         asof_join(left, right, on="k")
+
+
+def test_asof_join_rejects_all_reserved_names(spark):
+    """ADVICE r12: the reserved-name guard covered only a right __rt;
+    left or right columns named __r/__t/__is_left silently collided
+    with asof_join's internals. All four names must raise, on either
+    side."""
+    left = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", 9)], "k bigint, ts string, __r bigint"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    right = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", 5)], "k bigint, ts string, v bigint"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    with pytest.raises(ValueError, match="__r"):
+        asof_join(left, right, on="k")
+    for bad in ("__t", "__is_left", "__rt"):
+        r2 = right.withColumnRenamed("v", bad)
+        with pytest.raises(ValueError, match=bad):
+            asof_join(left.withColumnRenamed("__r", "ok"), r2, on="k")

@@ -190,3 +190,117 @@ def test_repeated_substring_spans_handcrafted(spark):
     )
     m = merge_spans_stats(overlap, "doc_id").first()
     assert (m.tokens_cut, m.n_spans_merged) == (13 + 6, 2)
+
+
+def test_exact_substring_rowlocal_filter_matches_retired_antijoin(spark):
+    """exact_substring_dedup_apply now rebuilds documents with a
+    row-local higher-order filter over a per-doc span ARRAY instead
+    of exploding the corpus to one row per token and shuffling that
+    stream through a range join + DISTINCT + anti-join + array_sort
+    reassembly. Both formulations must agree doc for doc, byte for
+    byte — including overlapping spans (runs closer than L fuse
+    coverage but stay separate rows), a doc that is cut entirely
+    (must DISAPPEAR), a span-free doc (kept verbatim), an empty doc
+    and a NULL doc (both absent)."""
+    from logicash_etl_spark.operators.dedup import repeated_substring_spans
+    from logicash_etl_spark.operators.text import tokens as tok_fn
+
+    rep = " ".join(f"w{i}" for i in range(8))  # the duplicated 8-shingle
+    rows = [
+        # doc 1 / doc 2: share the repeated block -> both get spans
+        (1, f"alpha {rep} beta gamma"),
+        (2, f"{rep} delta"),
+        # doc 3: entirely one repeated block -> fully cut, disappears
+        (3, rep),
+        (4, rep),
+        # doc 5: overlapping coverage — two occurrences 3 tokens apart
+        (5, f"{rep} x y z {rep} tail1 tail2"),
+        (6, f"pre1 pre2 {rep} x y z {rep}"),
+        # doc 7: no duplicated shingle -> kept verbatim
+        (7, "unique uno dos tres cuatro cinco seis siete ocho nueve"),
+        # empty / NULL docs: nothing to keep, absent from output
+        (8, ""),
+        (9, None),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    spans = repeated_substring_spans(docs, id_col="doc_id")
+    # pre-tokenized path must yield the SAME spans as the text path
+    toks = docs.select(
+        "doc_id", tok_fn(F.lower(F.col("text"))).alias("__t")
+    )
+    spans_pre = repeated_substring_spans(toks, id_col="doc_id", tokens_col="__t")
+    key = lambda df: sorted(  # noqa: E731
+        (r["doc_id"], r["span_start"], r["span_end"], r["span_tokens"])
+        for r in df.collect()
+    )
+    assert key(spans_pre) == key(spans)
+
+    # retired r12 formulation: explode -> range join -> DISTINCT ->
+    # anti-join -> collect_list + array_sort
+    tokpos = docs.select(
+        "doc_id",
+        F.posexplode(tok_fn(F.lower(F.col("text")))).alias("pos0", "w"),
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "w")
+    cut = (
+        tokpos.join(
+            spans,
+            on=[
+                tokpos["doc_id"] == spans["doc_id"],
+                tokpos["pos"].between(
+                    F.col("span_start"), F.col("span_end")
+                ),
+            ],
+        )
+        .select(tokpos["doc_id"], tokpos["pos"])
+        .distinct()
+    )
+    kept = tokpos.join(cut, on=["doc_id", "pos"], how="left_anti")
+    ref = kept.groupBy("doc_id").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "w"))),
+                lambda x: x["w"],
+            ),
+            " ",
+        ).alias("clean_text"),
+        F.count("*").cast("bigint").alias("n_tokens_kept"),
+    )
+
+    # landed r13 formulation: span array + row-local (token, pos) filter
+    span_arr = spans.groupBy("doc_id").agg(
+        F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
+    )
+    got = (
+        toks.join(span_arr, on="doc_id", how="left")
+        .select(
+            "doc_id",
+            F.filter(
+                F.col("__t"),
+                lambda w, i: ~F.exists(
+                    F.coalesce(
+                        F.col("__spans"),
+                        F.array().cast(
+                            "array<struct<span_start:bigint,span_end:bigint>>"
+                        ),
+                    ),
+                    lambda s: (i + 1 >= s["span_start"])
+                    & (i + 1 <= s["span_end"]),
+                ),
+            ).alias("__kept"),
+        )
+        .filter(F.size("__kept") > 0)
+        .select(
+            "doc_id",
+            F.array_join("__kept", " ").alias("clean_text"),
+            F.size("__kept").cast("bigint").alias("n_tokens_kept"),
+        )
+    )
+    as_map = lambda df: {  # noqa: E731
+        r["doc_id"]: (r["clean_text"], r["n_tokens_kept"])
+        for r in df.collect()
+    }
+    ref_map, got_map = as_map(ref), as_map(got)
+    assert got_map == ref_map
+    assert 3 not in got_map and 4 not in got_map  # fully cut docs vanish
+    assert 8 not in got_map and 9 not in got_map  # empty/NULL absent
+    assert got_map[7][0] == rows[6][1]  # span-free doc kept verbatim

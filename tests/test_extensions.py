@@ -537,6 +537,41 @@ def test_semantic_dedup_matches_numpy_twin(spark, emb):
     assert 0 < n_removed < len(got)
 
 
+def test_mmr_driver_norm_is_bitwise_twin_of_jvm_fold(spark):
+    """mmr_select now computes literal-vector norms on the driver;
+    the Python fold must equal the JVM sequential fold bit for bit,
+    or the oracle's unrolled CTE argmax keys drift."""
+    import math
+
+    vecs = [
+        [0.1, 0.2, 0.3],
+        [1.5, -2.25, 3.125, 0.0625],
+        [1e-8, 1e8, -1e-8],
+        [0.0, 0.0],
+    ]
+
+    def pynorm(v):
+        s = 0.0
+        for x in v:
+            s += float(x) * float(x)
+        return math.sqrt(s)
+
+    df = spark.createDataFrame([(v,) for v in vecs], "v array<double>")
+    jvm = [
+        r[0]
+        for r in df.select(
+            F.sqrt(
+                F.aggregate(
+                    F.zip_with("v", "v", lambda a, b: a * b),
+                    F.lit(0.0),
+                    lambda s, x: s + x,
+                )
+            )
+        ).collect()
+    ]
+    assert jvm == [pynorm(v) for v in vecs]
+
+
 def test_bpe_train_matches_python_twin(spark, sf_smoke):
     """bpe_train: merge rules must equal a pure-python reference BPE
     (frequency-weighted pair counts, greedy left-to-right rewrite,
@@ -812,6 +847,51 @@ def test_cms_never_underestimates_full_vocab(spark, sf_dir):
         .agg(F.min("c").alias("est"))
     )
     assert est.filter(F.col("est") < F.col("n")).count() == 0
+
+
+def test_ams_jvm_bitslice_matches_sql_case_ladder(spark):
+    """The int-bit-op sign builder (_ams_sign_counters) must
+    reproduce the retired per-(key, j) substr/instr SQL-CASE counters
+    exactly — including the NULL-h row, which the CASE sent to the
+    ELSE branch (-1 on every counter) — and empty input must yield
+    zero counter rows, the retired explode + groupBy(j) posture."""
+    from logicash_etl_spark.queries.mergeable import _ams_sign_counters
+
+    rows = [
+        (3, "0123456789abcdef" * 4),
+        (1, "fedcba9876543210" * 4),
+        (7, "a" * 64),
+        (2, "0" * 64),
+        (5, None),  # NULL key -> NULL md5 concat
+    ]
+    df = spark.createDataFrame(rows, "n bigint, h string")
+    ref = (
+        df.select(
+            F.explode(F.sequence(F.lit(0), F.lit(255))).alias("j"), "n", "h"
+        )
+        .select(
+            "j",
+            (
+                F.col("n")
+                * F.expr(
+                    "CASE WHEN ((instr('0123456789abcdef',"
+                    " substr(h, CAST(j div 4 AS INT) + 1, 1)) - 1)"
+                    " div (CASE j % 4 WHEN 0 THEN 1 WHEN 1 THEN 2"
+                    " WHEN 2 THEN 4 ELSE 8 END)) % 2 = 0"
+                    " THEN 1 ELSE -1 END"
+                )
+            ).alias("sgn"),
+        )
+        .groupBy("j")
+        .agg(F.sum("sgn").cast("bigint").alias("c"))
+    )
+    got = _ams_sign_counters(df.select("n", "h"))
+    ref_map = {r["j"]: r["c"] for r in ref.collect()}
+    got_map = {r["j"]: r["c"] for r in got.collect()}
+    assert got_map == ref_map
+    assert len(got_map) == 256
+    empty = spark.createDataFrame([], "n bigint, h string")
+    assert _ams_sign_counters(empty).count() == 0
 
 
 def test_quantile_sketch_single_median_bucket(spark, sf_dir):
@@ -1277,6 +1357,43 @@ def test_value_drift_psi_flags_shifted_distribution(spark, tmp_path):
     write(flat, lambda i: 10.0 + (i % 20))          # same distribution
     psi0 = sum(r.psi_contrib for r in value_drift_psi(spark, flat).collect())
     assert psi0 < 0.05
+
+
+def test_vocab_drift_count_table_matches_token_stream_rollup(spark):
+    """vocab_drift_psi now rolls PSI counts up from the per-(half,
+    word) count table instead of re-tokenizing; grouped sums of the
+    count table must equal direct token-stream counts for any term
+    mapping."""
+    rows = [
+        (0, "a"), (0, "a"), (0, "b"), (0, "c"),
+        (1, "a"), (1, "c"), (1, "c"), (1, "d"),
+    ]
+    tok = spark.createDataFrame(rows, "half int, word string")
+    keep = {"a", "c"}
+    term = (
+        F.when(F.col("word").isin(*keep), F.col("word"))
+        .otherwise(F.lit("__other"))
+        .alias("term")
+    )
+    ref = (
+        tok.select("half", term)
+        .groupBy("term")
+        .agg(
+            F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("r"),
+            F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("c"),
+        )
+    )
+    wc = tok.groupBy("half", "word").agg(F.count("*").alias("n"))
+    got = (
+        wc.select("half", term, "n")
+        .groupBy("term")
+        .agg(
+            F.sum(F.when(F.col("half") == 0, F.col("n")).otherwise(0)).alias("r"),
+            F.sum(F.when(F.col("half") == 1, F.col("n")).otherwise(0)).alias("c"),
+        )
+    )
+    as_map = lambda df: {r["term"]: (r["r"], r["c"]) for r in df.collect()}  # noqa: E731
+    assert as_map(got) == as_map(ref)
 
 
 def test_pareto_frontier_matches_bruteforce(spark):
