@@ -5,25 +5,16 @@ one canonical doc per component of the similarity graph). Spark 4 does
 ship a recursive CTE (pinned by queries/tpch_shapes.py:
 recursive_cte_reachability), but its UNION ALL recursion enumerates
 WALKS — on a cyclic similarity graph that's edge^depth rows before the
-final dedup, where the loops here carry frontier/star state only. So
-these operators remain the engine's scalable *iterative* path, with
-two execution strategies picked adaptively:
+final dedup. Connected components instead collect the edge list once
+and run a path-compressed union-find on the driver: near-dup edge
+lists are orders of magnitude smaller than the corpus that produced
+them (the catalog's largest is 3,356 edges, ``golden_record_report``
+at sf0.1), so one pass with zero shuffle rounds beats any distributed
+contraction loop.
 
-- **driver union-find** when the edge list fits on the driver
-  (near-dup edge lists are orders of magnitude smaller than the corpus
-  that produced them) — one pass, zero shuffle rounds;
-- **large-star/small-star** (Kiveris et al., "Connected Components in
-  MapReduce and Beyond", SoCC 2014) above the threshold: alternating
-  min-propagation rounds that contract every component to a star in
-  O(log n) rounds even on pathological chain graphs — unlike plain
-  label propagation, whose round count is the graph DIAMETER. Each
-  round is two shuffles over the (shrinking) edge set; the driver only
-  ever sees one checksum per round, never data.
-
-Convergence is CHECKED, not assumed: the loop compares a per-round
-(count, hash-sum) checksum and raises if the cap is hit while the
-edge set is still moving — an unconverged result silently over-splits
-components, which for dedup means keeping near-duplicates.
+The other operators here are triangle counting and PageRank, HITS,
+label propagation, BFS, SSSP and k-core, each a fixed number of
+supersteps (the constants below) over edge frames.
 """
 
 from __future__ import annotations
@@ -54,149 +45,15 @@ def _canonical(edges: DataFrame) -> DataFrame:
     )
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """large-star(u): connect every strictly-larger neighbor of u to
-    m = min(N(u) + {u}). Emits (v, m) for v in N(u), v > u."""
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    mn = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mv"))
-        .select("u", F.least(F.col("mv"), F.col("u")).alias("m"))
-    )
-    return (
-        sym.join(mn, on="u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """small-star(u): orient edges toward the smaller endpoint, then
-    connect all of u's (smaller) neighbors and u itself to
-    m = min(N(u) + {u}). Output stays canonically oriented (u > v)."""
-    o = (
-        edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    mn = o.groupBy("u").agg(F.min("v").alias("m"))
-    nbrs = (
-        o.join(mn, on="u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-    centers = mn.select("u", F.col("m").alias("v"))
-    return (
-        nbrs.unionByName(centers)
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _checksum(edges: DataFrame) -> tuple:
-    """Cheap fixpoint detector: (row count, sum of 64-bit row hashes).
-    Equality across a large-star+small-star round means the edge set
-    is a stable star forest (hash-collision probability negligible)."""
-    # decimal sum: a long sum of 64-bit hashes overflows under ANSI
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
-
-
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 30,
-    num_partitions: int | None = None,
-    driver_threshold: int = 2_000_000,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(id_a, id_b) undirected edges -> (id, component) with component =
     min vertex id in the component. Isolated vertices don't appear
     (callers union them back with component = own id); vertices seen
     only in self-loops map to themselves.
 
-    Adaptive execution, same principle as the broadcast-join
-    threshold: when the edge list fits on the driver
-    (<= ``driver_threshold`` edges, ~16 bytes each -> ~32 MB at the
-    default) a single-pass union-find beats any number of distributed
-    rounds. Above it, alternating large-star/small-star contracts
-    every component to a star in O(log n) rounds — including
-    adversarial long chains, where plain label propagation needs
-    diameter rounds.
-
-    ``num_partitions`` sizes the per-round shuffles of the distributed
-    path: size to ~edges/1e6 on a cluster.
-
-    Raises ``RuntimeError`` if ``max_iterations`` rounds pass without
-    reaching the fixpoint (an unconverged result would silently
-    over-split components).
-    """
-    # edges may be an expensive pipeline (e.g. MinHash-LSH): materialize
-    # once — both strategies consume the frame more than once
-    edges = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).persist()
-    n_edges = edges.count()
-    if n_edges <= driver_threshold:
-        out = _union_find_components(edges)
-        edges.unpersist()
-        return out
-
-    # vertex universe up front: star contraction drops self-loop-only
-    # vertices, and roots must label themselves. localCheckpoint (not
-    # persist): severs lineage so the loop below can't re-trigger the
-    # upstream pair pipeline, and lets us release `edges` immediately.
-    vertices = (
-        edges.select(F.col("u").alias("id"))
-        .unionByName(edges.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    cur = _canonical(edges)
-    if num_partitions:
-        cur = cur.repartition(num_partitions, "u")
-    # ITERATION RULE: checkpoint every round. Each star references its
-    # input 2-3x, so a persist-only loop grows the logical plan
-    # exponentially and Catalyst analysis — not the data — becomes the
-    # bottleneck within ~10 rounds. localCheckpoint materializes to
-    # executor storage and truncates the plan to a leaf.
-    cur = cur.localCheckpoint()
-    edges.unpersist()
-    chk = _checksum(cur)
-    converged = chk[0] == 0  # no non-self-loop edges: nothing to contract
-    for _ in range(max_iterations):
-        if converged:
-            break
-        nxt = _small_star(_large_star(cur)).localCheckpoint()
-        nchk = _checksum(nxt)
-        cur = nxt
-        if nchk == chk:
-            converged = True
-        chk = nchk
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "large-star/small-star rounds — raise max_iterations "
-            f"(edge set still moving at checksum {chk})"
-        )
-
-    # fixpoint is a star forest: every non-root appears once as u with
-    # v = component root; roots and isolated/self-loop vertices label
-    # themselves via the left join
-    star = cur.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    return (
-        vertices.join(star, on="id", how="left")
-        .select("id", F.coalesce("component", "id").alias("component"))
-    )
-
-
-def _union_find_components(edges: DataFrame) -> DataFrame:
-    """Small-graph path: collect (u, v) longs, path-compressed
-    union-find on the driver, one createDataFrame back. Output schema
-    matches the distributed path: (id, component)."""
-    rows = edges.collect()
+    The edge list is collected once (~16 bytes per edge) and a
+    path-compressed union-find runs on the driver; the labels go back
+    as one createDataFrame."""
     parent: dict = {}
 
     def find(x):
@@ -208,33 +65,30 @@ def _union_find_components(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        ra, rb = find(r.u), find(r.v)
-        if ra != rb:
-            # min-id root so component == min vertex id, as distributed path
-            if ra < rb:
-                parent[rb] = ra
+    for u, v in edges.select("id_a", "id_b").collect():
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            # min-id root so component == min vertex id
+            if ru < rv:
+                parent[rv] = ru
             else:
-                parent[ra] = rb
-    out = [(x, find(x)) for x in list(parent)]
-    spark = edges.sparkSession
-    id_type = dict(edges.dtypes)["u"]
-    if not out:
-        return spark.createDataFrame([], f"id {id_type}, component {id_type}")
-    return spark.createDataFrame(out, f"id {id_type}, component {id_type}")
+                parent[ru] = rv
+    id_type = dict(edges.dtypes)["id_a"]
+    return edges.sparkSession.createDataFrame(
+        [(x, find(x)) for x in list(parent)], f"id {id_type}, component {id_type}"
+    )
 
 
 def dedup_clusters(
     pairs: DataFrame,
     all_ids: DataFrame,
     id_col: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs + the full id universe -> (id, cluster_id,
     is_canonical): every document assigned a cluster (singletons are
     their own), canonical = min id in cluster — the keep-set for
     cluster-level dedup."""
-    comps = connected_components(pairs, num_partitions=num_partitions)
+    comps = connected_components(pairs)
     out = (
         all_ids.select(F.col(id_col).alias("id"))
         .join(comps, on="id", how="left")

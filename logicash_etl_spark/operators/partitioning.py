@@ -133,6 +133,74 @@ def global_prefix_sum(
     )
 
 
+def _bucketed_local_prefix(
+    df: DataFrame,
+    group_col: str,
+    bucket_key: str,
+    order_cols: list,
+    value_col: str,
+    buckets: int,
+    inclusive: bool,
+    op: str,
+) -> tuple:
+    """The range split both grouped prefix operators share: the sum's
+    result type, ``df`` with its bucket ``__gps_b`` (the group's
+    [min, max] of ``bucket_key`` split into ``buckets`` equal ranges;
+    a NULL key raises executor-side, naming ``op``), and that frame
+    with ``__gps_local``, the running sum within (group, bucket) in
+    ``order_cols`` order (including the current row iff
+    ``inclusive``; 0, not NULL, where no value is summed yet)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    sum_type = df.select(F.sum(value_col)).schema[0].dataType
+    if isinstance(sum_type, T.NullType):
+        sum_type = T.LongType()
+    rng = df.groupBy(group_col).agg(
+        F.min(bucket_key).cast("double").alias("__gps_lo"),
+        F.max(bucket_key).cast("double").alias("__gps_hi"),
+    )
+    key = (
+        F.when(
+            F.col(bucket_key).isNull(),
+            F.raise_error(
+                F.lit(
+                    f"{op}: bucket_key {bucket_key!r} must "
+                    "be non-null (filter or fill before the scan)"
+                )
+            ).cast("double"),
+        )
+        .otherwise(F.col(bucket_key).cast("double"))
+    )
+    span = F.greatest(
+        (F.col("__gps_hi") - F.col("__gps_lo")) / buckets, F.lit(1e-9)
+    )
+    # no forced broadcast: rng/offs are O(groups) / O(groups x buckets)
+    # rows — tiny for the low-cardinality callers (segments, event
+    # types, sources), but the operator is general and a per-user
+    # group_col would make a forced hint a driver OOM. AQE converts
+    # these joins to broadcast at runtime whenever the actual size
+    # fits (session threshold 64m), which is the correct policy at
+    # every cardinality.
+    bucketed = df.join(rng, on=group_col).withColumn(
+        "__gps_b",
+        F.least(
+            F.lit(buckets - 1),
+            F.floor((key - F.col("__gps_lo")) / span),
+        ).cast("int"),
+    ).drop("__gps_lo", "__gps_hi")
+    w_local = (
+        Window.partitionBy(group_col, "__gps_b")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
+    )
+    local = bucketed.withColumn(
+        "__gps_local", F.coalesce(F.sum(value_col).over(w_local), F.lit(0))
+    )
+    return sum_type, bucketed, local
+
+
 def grouped_prefix_sum(
     df: DataFrame,
     group_col: str,
@@ -167,51 +235,10 @@ def grouped_prefix_sum(
     total INCLUDING the current row."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    sum_type = df.select(F.sum(value_col)).schema[0].dataType
-    if isinstance(sum_type, T.NullType):
-        sum_type = T.LongType()
-    rng = df.groupBy(group_col).agg(
-        F.min(bucket_key).cast("double").alias("__gps_lo"),
-        F.max(bucket_key).cast("double").alias("__gps_hi"),
-    )
-    key = (
-        F.when(
-            F.col(bucket_key).isNull(),
-            F.raise_error(
-                F.lit(
-                    f"grouped_prefix_sum: bucket_key {bucket_key!r} must "
-                    "be non-null (filter or fill before the scan)"
-                )
-            ).cast("double"),
-        )
-        .otherwise(F.col(bucket_key).cast("double"))
-    )
-    span = F.greatest(
-        (F.col("__gps_hi") - F.col("__gps_lo")) / buckets, F.lit(1e-9)
-    )
-    # no forced broadcast: rng/offs are O(groups) / O(groups x buckets)
-    # rows — tiny for the low-cardinality callers (segments, event
-    # types, sources), but the operator is general and a per-user
-    # group_col would make a forced hint a driver OOM. AQE converts
-    # these joins to broadcast at runtime whenever the actual size
-    # fits (session threshold 64m), which is the correct policy at
-    # every cardinality.
-    bucketed = df.join(rng, on=group_col).withColumn(
-        "__gps_b",
-        F.least(
-            F.lit(buckets - 1),
-            F.floor((key - F.col("__gps_lo")) / span),
-        ).cast("int"),
-    ).drop("__gps_lo", "__gps_hi")
-    w_local = (
-        Window.partitionBy(group_col, "__gps_b")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
-    )
-    local = bucketed.withColumn(
-        "__gps_local", F.coalesce(F.sum(value_col).over(w_local), F.lit(0))
+    sum_type, bucketed, local = _bucketed_local_prefix(
+        df, group_col, bucket_key, order_cols, value_col, buckets, inclusive,
+        "grouped_prefix_sum",
     )
     # exclusive running total of bucket sums: each window partition is
     # <= buckets rows, so this second window is trivially bounded
@@ -248,7 +275,7 @@ def grouped_prefix_peak(
     Algebraically identical to
     ``grouped_prefix_sum(..., inclusive=True)`` followed by
     ``groupBy(group).agg(max(prefix_sum))`` (pinned in
-    tests/test_round14_opts.py), but where the general operator must
+    tests/test_dq_properties.py), but where the general operator must
     ATTACH the bucket offset to every row (a rows-sized join) and the
     caller then aggregates the rows-sized prefix series back down,
     the peak decomposes per bucket:
@@ -268,67 +295,33 @@ def grouped_prefix_peak(
     arithmetic bucket split; groups with no rows are absent."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    sum_type = df.select(F.sum(value_col)).schema[0].dataType
-    if isinstance(sum_type, T.NullType):
-        sum_type = T.LongType()
-    rng = df.groupBy(group_col).agg(
-        F.min(bucket_key).cast("double").alias("__gpp_lo"),
-        F.max(bucket_key).cast("double").alias("__gpp_hi"),
-    )
-    key = (
-        F.when(
-            F.col(bucket_key).isNull(),
-            F.raise_error(
-                F.lit(
-                    f"grouped_prefix_peak: bucket_key {bucket_key!r} must "
-                    "be non-null (filter or fill before the scan)"
-                )
-            ).cast("double"),
-        )
-        .otherwise(F.col(bucket_key).cast("double"))
-    )
-    span = F.greatest(
-        (F.col("__gpp_hi") - F.col("__gpp_lo")) / buckets, F.lit(1e-9)
-    )
-    bucketed = df.join(rng, on=group_col).withColumn(
-        "__gpp_b",
-        F.least(
-            F.lit(buckets - 1),
-            F.floor((key - F.col("__gpp_lo")) / span),
-        ).cast("int"),
-    ).drop("__gpp_lo", "__gpp_hi")
-    w_local = (
-        Window.partitionBy(group_col, "__gpp_b")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # coalesce matches grouped_prefix_sum's local term exactly: an
-    # all-NULL-value bucket contributes its offset (local 0), not NULL
-    local = bucketed.withColumn(
-        "__gpp_local", F.coalesce(F.sum(value_col).over(w_local), F.lit(0))
+    # the local term is grouped_prefix_sum's exactly: an all-NULL-value
+    # bucket contributes its offset (local 0), not NULL
+    sum_type, _, local = _bucketed_local_prefix(
+        df, group_col, bucket_key, order_cols, value_col, buckets, True,
+        "grouped_prefix_peak",
     )
     # max local prefix AND bucket total in ONE aggregate, in the
     # window's own (group, bucket) hash partitioning — no exchange
-    per_bucket = local.groupBy(group_col, "__gpp_b").agg(
-        F.max("__gpp_local").alias("__gpp_mx"),
-        F.sum(value_col).alias("__gpp_t"),
+    per_bucket = local.groupBy(group_col, "__gps_b").agg(
+        F.max("__gps_local").alias("__gps_mx"),
+        F.sum(value_col).alias("__gps_t"),
     )
     # exclusive running total of PRIOR buckets: <= buckets rows per
     # group, trivially bounded
     w_off = (
         Window.partitionBy(group_col)
-        .orderBy("__gpp_b")
+        .orderBy("__gps_b")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return (
         per_bucket.withColumn(
-            "__gpp_off", F.coalesce(F.sum("__gpp_t").over(w_off), F.lit(0))
+            "__gps_off", F.coalesce(F.sum("__gps_t").over(w_off), F.lit(0))
         )
         .groupBy(group_col)
         .agg(
-            F.max(F.col("__gpp_mx") + F.col("__gpp_off"))
+            F.max(F.col("__gps_mx") + F.col("__gps_off"))
             .cast(sum_type)
             .alias("__peak")
         )

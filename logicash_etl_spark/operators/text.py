@@ -171,131 +171,50 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def bpe_train(
-    word_counts: DataFrame,
-    driver_vocab_threshold: int = 2_000_000,
-) -> list[tuple[str, str, str, int]]:
+def bpe_train(word_counts: DataFrame) -> list[tuple[str, str, str, int]]:
     """Byte-pair-encoding merge training (``BPE_MERGES`` merges; the
     catalog's unrolled-CTE oracles in queries/pipeline_ops.py read the
-    same constant), Spark-first: the corpus is
-    touched ONCE (the ``word_counts`` aggregate of ``(word, n)`` rows
-    the caller builds);
-    every merge iteration then runs on the VOCABULARY frame — pair
-    counts are weighted by word frequency, so at 100 TB the iteration
-    cost is bounded by distinct words, not corpus bytes (the shape
-    real tokenizer training uses).
+    same constant). The corpus is touched ONCE: the caller's
+    ``word_counts`` aggregate of ``(word, n)`` rows is collected in one
+    ``toPandas()`` (Arrow), and every merge round then runs in python
+    on that vocabulary — pair counts are weighted by word frequency, so
+    a round costs distinct words, not corpus bytes (the shape real
+    tokenizer training uses). The catalog's vocabulary is 31 words at
+    every fixture scale.
 
-    Per round: adjacent symbol pairs via ``zip_with`` on the symbol
-    array and its shifted self (row-local), one map-side-combinable
-    groupBy(pair) weighted sum, a deterministic top-1
-    (count desc, pair asc — TakeOrderedAndProject, never a sort), and
-    a greedy left-to-right fold (``aggregate``) that rewrites each
-    word's symbols under the new merge — all JVM expressions, the
-    driver sees ONE row per round.
+    Per round: adjacent symbol pairs weighted by word count, a
+    deterministic top-1 (count desc, pair asc), and a greedy
+    left-to-right rewrite of each word's symbols under the new merge;
+    a merged token is not re-merged in the same round (BPE contract
+    for runs like "aaa").
 
     Returns [(left, right, merged, weighted_count)] in merge order.
-
-    Adaptive (the union-find / k-means driver-sample pattern): when
-    the vocabulary fits ``driver_vocab_threshold`` rows it collects
-    ONCE (Arrow) and the merge loop runs in pure python — identical
-    rules, none of the per-round job overhead. Above the threshold
-    the distributed per-round loop runs; both paths are
-    equality-tested against each other.
     """
-    # bounded probe, not .count(): counting would run the caller's
-    # (typically unpersisted) aggregate end-to-end a THIRD time just to
-    # pick a path. limit(threshold+1) both decides the path and — when
-    # small — already IS the data; the driver never holds more than
-    # threshold+1 rows either way.
-    probe = (
-        word_counts.select(F.col("word").alias("w"), "n")
-        .limit(driver_vocab_threshold + 1)
-        .toPandas()
-    )
-    if len(probe) <= driver_vocab_threshold:
-        pdf = probe
-        wc = dict(zip(pdf["w"], pdf["n"].astype(int)))
-        vocab = {w: list(w) for w in wc}
-        merges: list[tuple[str, str, str, int]] = []
-        for _ in range(BPE_MERGES):
-            counts: dict[tuple[str, str], int] = {}
-            for w, s in vocab.items():
-                cnt = wc[w]
-                for a, b in zip(s, s[1:]):
-                    counts[(a, b)] = counts.get((a, b), 0) + cnt
-            if not counts:
-                break
-            (l, r), cnt = min(
-                counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-            )
-            merged = l + r
-            merges.append((l, r, merged, int(cnt)))
-            for w, s in vocab.items():
-                out: list[str] = []
-                for x in s:
-                    if out and out[-1] == l and x == r:
-                        out[-1] = merged
-                    else:
-                        out.append(x)
-                vocab[w] = out
-        return merges
-
-    syms = word_counts.select(
-        F.col("n").alias("__n"),
-        F.split(F.col("word"), "").alias("__s"),
-    ).persist()
+    pdf = word_counts.select("word", "n").toPandas()
+    wc = dict(zip(pdf["word"], pdf["n"].astype(int)))
+    vocab = {w: list(w) for w in wc}
     merges: list[tuple[str, str, str, int]] = []
-    try:
-        for _ in range(BPE_MERGES):
-            pairs = syms.select(
-                "__n",
-                F.explode(
-                    F.when(
-                        F.size("__s") >= 2,
-                        F.zip_with(
-                            F.slice("__s", 1, F.size("__s") - 1),
-                            F.slice("__s", 2, F.size("__s") - 1),
-                            lambda a, b: F.struct(
-                                a.alias("l"), b.alias("r")
-                            ),
-                        ),
-                    ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
-                ).alias("p"),
-            )
-            top = (
-                pairs.groupBy("p")
-                .agg(F.sum("__n").alias("cnt"))
-                .orderBy(F.col("cnt").desc(), F.col("p.l"), F.col("p.r"))
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break
-            l, r, cnt = top[0]["p"]["l"], top[0]["p"]["r"], int(top[0]["cnt"])
-            merged = l + r
-            merges.append((l, r, merged, cnt))
-            # greedy left-to-right rewrite: fold each symbol into the
-            # accumulator, merging when the tail matches (l, r); a
-            # merged token is not re-merged in the same round (BPE
-            # contract for runs like "aaa")
-            new_s = F.aggregate(
-                "__s",
-                F.array().cast("array<string>"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == F.lit(l))
-                    & (x == F.lit(r)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            )
-            nxt = syms.select("__n", new_s.alias("__s")).persist()
-            nxt.count()  # materialize before dropping the parent
-            syms.unpersist()
-            syms = nxt
-    finally:
-        syms.unpersist()
+    for _ in range(BPE_MERGES):
+        counts: dict[tuple[str, str], int] = {}
+        for w, s in vocab.items():
+            cnt = wc[w]
+            for a, b in zip(s, s[1:]):
+                counts[(a, b)] = counts.get((a, b), 0) + cnt
+        if not counts:
+            break
+        (l, r), cnt = min(
+            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
+        )
+        merged = l + r
+        merges.append((l, r, merged, int(cnt)))
+        for w, s in vocab.items():
+            out: list[str] = []
+            for x in s:
+                if out and out[-1] == l and x == r:
+                    out[-1] = merged
+                else:
+                    out.append(x)
+            vocab[w] = out
     return merges
 
 

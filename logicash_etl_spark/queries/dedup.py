@@ -237,20 +237,19 @@ _CLUSTERS_SQL = _CLUSTERS_CTES + """
 @query("dedup_clusters", oracle=_CLUSTERS_SQL)
 def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dup clustering: MinHash-LSH pairs -> connected
-    components (iterative label propagation) -> one canonical doc per
-    cluster.
+    components (driver union-find) -> one canonical doc per cluster.
 
     Oracle upgrade (r5): the MinHash edge set equals the exact-Jaccard
     edge set on the fixtures (see minhash_lsh_dups — exact-verified
     candidates, empirically total recall), so the recursive-CTE
     transitive-closure oracle of `dedup_clusters_exact` pins THIS
     query's output too: both the approximate edge generation and the
-    iterative clustering are driver-hash-checked end to end."""
+    clustering are driver-hash-checked end to end."""
     from logicash_etl_spark.operators.graph import dedup_clusters
 
     docs = read_table(spark, sf_dir, "documents")
     pairs = _minhash_pairs(spark, sf_dir)
-    return dedup_clusters(pairs.select("id_a", "id_b"), docs, "doc_id", num_partitions=8)
+    return dedup_clusters(pairs.select("id_a", "id_b"), docs, "doc_id")
 
 
 @query(
@@ -313,11 +312,11 @@ def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges are the exact n-gram-Jaccard pairs (SQL-expressible, unlike
     the xxhash64-seeded MinHash edges of `dedup_clusters`), and DuckDB
     reproduces the clustering itself with a recursive-CTE transitive
-    closure — so the iterative algorithm's OUTPUT is hash-checked, not
-    just row-counted. Same operator either way: driver union-find
-    under the edge threshold, large-star/small-star above it. The pair
-    frame is the lot `ngram_jaccard_dups` materializes (computed once
-    whichever query runs first)."""
+    closure — so the clustering's OUTPUT is hash-checked, not just
+    row-counted. Same operator either way: the driver union-find of
+    operators/graph.connected_components. The pair frame is the lot
+    `ngram_jaccard_dups` materializes (computed once whichever query
+    runs first)."""
     from logicash_etl_spark.operators.graph import dedup_clusters
 
     docs = read_table(spark, sf_dir, "documents")
@@ -517,8 +516,8 @@ def leakage_safe_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation AND clustering (a component split by a clustering
     regression shows up as a nonzero cluster_split_leaks).
 
-    Scale: rides the shared exact-pair lot and the adaptive
-    connected-components operator (same posture as dedup_clusters);
+    Scale: rides the shared exact-pair lot and the driver union-find
+    of connected_components (same posture as dedup_clusters);
     the audit itself is two broadcast-sized joins of the pair list
     against the label frame and a single-row rollup."""
     from logicash_etl_spark.operators.graph import dedup_clusters
@@ -529,9 +528,7 @@ def leakage_safe_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join sides, doc_stats, multi) — persisted, the clustering and
     # its documents scan execute once instead of per consumer
     lab = scoped_persist(
-        dedup_clusters(pairs, docs, "doc_id", num_partitions=8).select(
-            "doc_id", "cluster_id"
-        )
+        dedup_clusters(pairs, docs, "doc_id").select("doc_id", "cluster_id")
     )
     pv = (
         pairs.join(

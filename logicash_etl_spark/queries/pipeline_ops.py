@@ -1894,10 +1894,9 @@ def golden_record_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: scoring and thresholds are the integer milli-bit
     weights; clustering is exact transitive closure (Spark side:
-    operators/graph.connected_components — driver union-find under
-    the edge threshold, large-star/small-star above it; oracle side:
-    a recursive CTE propagating min labels, equivalent because the
-    component minimum reaches every member along monotone-guarded
+    operators/graph.connected_components, a driver union-find; oracle
+    side: a recursive CTE propagating min labels, equivalent because
+    the component minimum reaches every member along monotone-guarded
     paths); survivorship is deterministic argmax. The driver hash
     therefore pins blocking + scoring + transitive closure +
     survivorship END TO END.
@@ -1905,9 +1904,9 @@ def golden_record_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: candidate pairs are compound-blocked (quadratic only
     within (brand, size) blocks); the match graph is orders of
     magnitude smaller than the table (93 nodes at sf0.01), exactly
-    the regime connected_components' adaptive driver union-find
-    targets; survivorship is one rollup + one per-cluster argmax
-    window over member rows (bounded by cluster sizes)."""
+    the regime connected_components' driver union-find targets;
+    survivorship is one rollup + one per-cluster argmax window over
+    member rows (bounded by cluster sizes)."""
     from pyspark.sql import Window
 
     from logicash_etl_spark.operators.graph import connected_components

@@ -599,7 +599,7 @@ def session_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grouped_prefix_sum + groupBy(max) — the rows-sized offset join
     # and the rows-sized final aggregation both disappear (the
     # per-bucket max/total reduce in the window's own partitioning;
-    # equivalence pinned in tests/test_round14_opts.py)
+    # equivalence pinned in tests/test_dq_properties.py)
     keyed = net.withColumn("__ord", F.unix_micros("ts"))
     return grouped_prefix_peak(
         keyed,

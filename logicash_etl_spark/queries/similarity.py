@@ -807,9 +807,9 @@ def _jl_oracle_sql() -> str:
              list_transform(range(1, {_JL_K} + 1),
                j -> list_reduce(
                       list_transform(range(1, {_JL_D} + 1),
-                                     i -> diff[i] * ({m_lit})[j][i]),
+                                     i -> diff[i] * s.m[j][i]),
                       (acc, e) -> acc + e) * 0.25) AS proj
-      FROM pairs
+      FROM pairs, (SELECT {m_lit} AS m) s
     ), ratio AS (
       SELECT label,
              CAST(floor(1000000 * (

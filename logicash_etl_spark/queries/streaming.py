@@ -664,13 +664,9 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       output) and rewrites ``verdicts/epoch={N}`` and
       ``hist/gen_epoch{N}`` in place — re-running a batch is a no-op
       and the output is effectively exactly-once;
-    - generations don't sprawl on an always-on stream: once more than
-      ``keep_gens`` dirs are live, the batch folds everything below
-      its epoch into an epoch-keyed base snapshot
-      (streaming/history.py — readers ignore dirs below the fold
-      boundary, so partial cleanups are invisible and replays read
-      the identical fingerprint set). Steady-state reads touch at
-      most ``keep_gens + 1`` dirs regardless of uptime.
+    - a batch reads the ``base`` dir plus one generation dir per
+      earlier epoch (streaming/history.py); the two streamed lots
+      write two generations, so the store is never compacted.
 
     Lot consumption itself rides on the name-map stream offsets; the
     flag-last write guarantee means a mid-upload lot is never

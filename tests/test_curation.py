@@ -304,3 +304,97 @@ def test_exact_substring_rowlocal_filter_matches_retired_antijoin(spark):
     assert 3 not in got_map and 4 not in got_map  # fully cut docs vanish
     assert 8 not in got_map and 9 not in got_map  # empty/NULL absent
     assert got_map[7][0] == rows[6][1]  # span-free doc kept verbatim
+
+
+def test_funnel_ingest_row_from_quality_pass_matches_feat_scan(spark):
+    """curation_funnel_report's stage-1 row now aggregates the
+    quality-features frame instead of running a second token_count
+    scan, and stage 2 filters a persisted frame whose text is NULLed
+    for gate-dropped docs. Both must match the retired shape exactly —
+    including NULL text, empty text, and whitespace-only text."""
+    from pyspark.sql import functions as F
+
+    from logicash_etl_spark.operators.text import (
+        quality_features,
+        quality_flag,
+        token_count,
+    )
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog again and again"),
+        (2, None),
+        (3, ""),
+        (4, "   "),
+        (5, "0123456789 0123456789 0123456789"),  # digit-heavy: dropped
+        (6, "one two three four five six seven eight nine ten eleven"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+
+    # retired shape
+    feat_old = docs.select(token_count("text").cast("bigint").alias("n_tokens"))
+    s1_old = feat_old.agg(
+        F.count("*").alias("docs_out"), F.sum("n_tokens").alias("tokens_out")
+    ).collect()[0]
+    q_old = (
+        quality_flag(quality_features(docs))
+        .filter(F.col("quality_keep"))
+        .select(
+            "doc_id", "text", F.col("n_tokens").cast("bigint").alias("n_tokens")
+        )
+    )
+
+    # r14 shape
+    qa = quality_flag(quality_features(docs)).select(
+        "doc_id",
+        F.when(F.col("quality_keep"), F.col("text")).alias("text"),
+        F.col("n_tokens").cast("bigint").alias("n_tokens"),
+        "quality_keep",
+    )
+    s1_new = qa.agg(
+        F.count("*").alias("docs_out"), F.sum("n_tokens").alias("tokens_out")
+    ).collect()[0]
+    q_new = qa.filter(F.col("quality_keep")).select("doc_id", "text", "n_tokens")
+
+    assert tuple(s1_new) == tuple(s1_old)
+    assert sorted(map(tuple, q_new.collect())) == sorted(
+        map(tuple, q_old.collect())
+    )
+    assert q_new.count() > 0  # the gate keeps something, so the pin bites
+
+
+def test_padding_waste_hand_fixture(spark, tmp_path):
+    """Padding accounting on a 4-doc corpus with batch size 32 (one
+    batch): waste = 4 * max - sum for BOTH strategies when everything
+    fits one batch, and length_sorted can never waste more than
+    arrival order."""
+
+    docs = spark.createDataFrame(
+        [(1, "a b c", "en", "src0", 5),
+         (2, "a", "en", "src0", 1),
+         (3, "a b", "en", "src0", 3),
+         (4, "a b c d", "en", "src0", 7)],
+        ["doc_id", "text", "lang", "source", "n_chars"],
+    )
+    d = str(tmp_path / "mini")
+    docs.write.parquet(f"{d}/documents.parquet")
+    out = {
+        r["strategy"]: r
+        for r in QUERIES["padding_waste_report"](spark, d).collect()
+    }
+    # tokens: 3 + 1 + 2 + 4 = 10; one batch of 4, max 4 -> cap 16
+    for s in ("arrival", "length_sorted"):
+        assert out[s]["n_batches"] == 1
+        assert out[s]["total_tokens"] == 10
+        assert out[s]["padded_tokens"] == 6
+    assert out["length_sorted"]["waste_pct"] <= out["arrival"]["waste_pct"]
+
+
+def test_padding_waste_null_text_is_zero_len_sequence(spark, null_corpus):
+    rows = {
+        r.strategy: r
+        for r in QUERIES["padding_waste_report"](spark, null_corpus).collect()
+    }
+    # all 5 docs (incl. 2 NULL) occupy batch slots; real tokens = 9
+    for r in rows.values():
+        assert r.total_tokens == 9
+    assert set(rows) == {"arrival", "length_sorted"}

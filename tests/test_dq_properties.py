@@ -142,3 +142,48 @@ def test_grouped_prefix_sum_random_differential(spark, rows, buckets):
         ).collect()
     }
     assert got == want
+
+
+def test_grouped_prefix_peak_matches_prefix_sum_then_max(spark):
+    """grouped_prefix_peak must equal grouped_prefix_sum(inclusive)
+    followed by groupBy(max) on every group — including negative
+    deltas (the sweep-line's -1 boundaries), ties on the bucket key,
+    NULL values (skipped by both forms), single-row groups, and a
+    bucket count smaller than the group's distinct keys."""
+    from pyspark.sql import functions as F
+
+    from logicash_etl_spark.operators.partitioning import (
+        grouped_prefix_peak,
+        grouped_prefix_sum,
+    )
+
+    import random
+
+    rnd = random.Random(14)
+    rows = []
+    tie = 0
+    for g in ("a", "b", "c", "single"):
+        n = 1 if g == "single" else 200
+        for i in range(n):
+            rows.append(
+                (
+                    g,
+                    rnd.randrange(0, 50),  # bucket key with many ties
+                    rnd.choice([None, -3, -1, -1, 1, 1, 2, 5]),
+                    tie,  # deterministic tiebreak, assigned in Python
+                )
+            )
+            tie += 1
+    df = spark.createDataFrame(rows, "g string, k int, v int, __tie long")
+    order = [F.col("k").asc(), F.col("__tie").asc()]
+    expected = (
+        grouped_prefix_sum(
+            df, "g", "k", order, "v", out_col="__c", buckets=8, inclusive=True
+        )
+        .groupBy("g")
+        .agg(F.max("__c").alias("peak"))
+    )
+    got = grouped_prefix_peak(df, "g", "k", order, "v", buckets=8)
+    exp = {r["g"]: r["peak"] for r in expected.collect()}
+    act = {r["g"]: r["__peak"] for r in got.collect()}
+    assert act == exp

@@ -181,21 +181,15 @@ def test_connected_components_vs_union_find(spark, docs):
     assert per_cluster.filter("count != 1").count() == 0
 
 
-def test_components_distributed_matches_driver_path(spark):
-    """The label-propagation loop (forced via driver_threshold=0) and
-    the driver union-find fast path must agree component-for-component,
-    including a chain graph (worst case for min-propagation rounds)."""
+def test_components_label_chain_pair_and_two_cycle(spark):
+    """A chain, a single edge and a two-cycle each get their min vertex
+    id as the component label."""
     from logicash_etl_spark.operators.graph import connected_components
 
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    fast = {(r.id, r.component) for r in connected_components(df).collect()}
-    dist = {
-        (r.id, r.component)
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
-    assert fast == dist
-    assert fast == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (20, 20), (21, 20)}
+    got = {(r.id, r.component) for r in connected_components(df).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (20, 20), (21, 20)}
 
 
 def test_jaccard_stop_shingles_exact_scores(docs):
@@ -368,50 +362,45 @@ def test_jaccard_hot_shingle_skew_bounded(spark):
         assert abs(v - full[k]) < 1e-12, f"{k}: capped {v} != exact {full[k]}"
 
 
-def test_large_star_small_star_path_graph(spark):
-    """Round-2 contract for the distributed CC path: a 10k-vertex PATH
-    graph (the adversarial case — diameter 10k) must converge in
-    O(log n) large-star/small-star rounds. max_iterations=18 ~
-    log2(10k)+slack; plain label propagation would need ~10k rounds
-    and the loop raises on non-convergence, so finishing AT ALL under
-    this cap is the O(log n) assertion."""
+def test_components_path_graph_is_one_component(spark):
+    """A 10k-vertex PATH graph (diameter 10k, the worst case for
+    min-label propagation) is one component labelled 0."""
     from logicash_etl_spark.operators.graph import connected_components
 
     n = 10_000
     edges = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    out = connected_components(
-        edges, driver_threshold=0, max_iterations=18, num_partitions=8
-    )
-    rows = out.collect()
+    rows = connected_components(edges).collect()
     assert len(rows) == n
     assert {r.component for r in rows} == {0}
 
 
-def test_large_star_small_star_random_vs_union_find(spark):
-    """Distributed LS/SS labels must equal driver union-find labels on
-    a mixed graph: several chains, a clique, singleton self-loop."""
+def test_components_match_construction_on_mixed_graph(spark):
+    """Labels on a shuffled mixed graph equal the components it was
+    built from: five 51-vertex chains, each labelled with its minimum
+    id; a 10-clique labelled 9000; a self-loop-only vertex labelled
+    itself."""
     import random
 
     from logicash_etl_spark.operators.graph import connected_components
 
     rng = random.Random(7)
-    edges = []
-    for chain in range(5):  # chains of length 50
+    edges, want = [], set()
+    for chain in range(5):  # chains of 50 edges, 51 vertices
         base = chain * 1000
         edges += [(base + i, base + i + 1) for i in range(50)]
+        want |= {(base + i, base) for i in range(51)}
     clique = [9000 + i for i in range(10)]
     edges += [(a, b) for a in clique for b in clique if a < b]
+    want |= {(v, 9000) for v in clique}
     edges += [(7777, 7777)]  # self-loop-only vertex
+    want.add((7777, 7777))
     rng.shuffle(edges)
     df = spark.createDataFrame(edges, "id_a long, id_b long")
 
-    fast = {(r.id, r.component)
-            for r in connected_components(df).collect()}
-    dist = {(r.id, r.component)
-            for r in connected_components(df, driver_threshold=0).collect()}
-    assert fast == dist
+    got = {(r.id, r.component) for r in connected_components(df).collect()}
+    assert got == want
 
 
 def test_kmeans_guards_zero_vectors_and_small_sample(spark):
@@ -588,10 +577,7 @@ def test_bpe_train_matches_python_twin(spark, sf_smoke):
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    # force the distributed per-round path; the driver path must agree
-    got = bpe_train(wc_df, driver_vocab_threshold=0)
-    got_driver = bpe_train(wc_df)
-    assert got == got_driver
+    got = bpe_train(wc_df)
 
     wc = {r.word: r.n for r in wc_df.collect()}
     vocab = {w: list(w) for w in wc}
@@ -894,6 +880,86 @@ def test_ams_jvm_bitslice_matches_sql_case_ladder(spark):
     assert _ams_sign_counters(empty).count() == 0
 
 
+def test_kmv_membership_flags_match_filter_distinct_join(spark):
+    """kmv_set_overlap's one-scan membership-flag frame must decide
+    set a, set b, and the three exact counts exactly as the retired
+    two-scan filter+distinct shape and its a-join-b intersection —
+    including NULL order keys (never join-matched, but counted in the
+    per-set counts, as count(*) over a DISTINCT set counts its NULL
+    row), orders whose lines match both / one / neither filter, and
+    an input matching nothing (sum-over-empty must still report 0)."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        (1, "R", 10.0),  # order 1: set a via this line ...
+        (1, "N", 45.0),  # ... set b via this one -> in the intersection
+        (2, "R", 50.0),  # both sets via a single line
+        (3, "N", 41.0),  # b only
+        (4, "R", 5.0),   # a only
+        (5, "N", 1.0),   # neither
+        (None, "R", 99.0),  # NULL key lands in both sets' counts ...
+        (None, "N", 44.0),  # ... but never in the join intersection
+    ]
+    li = spark.createDataFrame(
+        rows, "l_orderkey long, l_returnflag string, l_quantity double"
+    )
+    pa = F.col("l_returnflag") == "R"
+    pb = F.col("l_quantity") >= 40
+
+    def old_shape(src):
+        a = src.filter(pa).select(F.col("l_orderkey").alias("v")).distinct()
+        b = src.filter(pb).select(F.col("l_orderkey").alias("v")).distinct()
+        return (
+            {r.v for r in a.collect()},
+            {r.v for r in b.collect()},
+            a.count(),
+            b.count(),
+            a.join(b, "v").count(),
+        )
+
+    def new_shape(src):
+        base = (
+            src.filter(pa | pb)
+            .select(
+                F.col("l_orderkey").alias("v"), pa.alias("pa"), pb.alias("pb")
+            )
+            .groupBy("v")
+            .agg(F.max("pa").alias("in_a"), F.max("pb").alias("in_b"))
+        )
+        ex = base.agg(
+            F.coalesce(F.sum(F.col("in_a").cast("long")), F.lit(0))
+            .cast("bigint")
+            .alias("exact_a"),
+            F.coalesce(F.sum(F.col("in_b").cast("long")), F.lit(0))
+            .cast("bigint")
+            .alias("exact_b"),
+            F.coalesce(
+                F.sum(
+                    (
+                        F.col("in_a") & F.col("in_b") & F.col("v").isNotNull()
+                    ).cast("long")
+                ),
+                F.lit(0),
+            )
+            .cast("bigint")
+            .alias("exact_inter"),
+        ).collect()[0]
+        return (
+            {r.v for r in base.filter(F.col("in_a")).select("v").collect()},
+            {r.v for r in base.filter(F.col("in_b")).select("v").collect()},
+            ex.exact_a,
+            ex.exact_b,
+            ex.exact_inter,
+        )
+
+    assert new_shape(li) == old_shape(li)
+    assert old_shape(li)[4] == 2  # the fixture exercises a real overlap
+
+    empty_match = li.filter(F.col("l_quantity") < 0)
+    assert new_shape(empty_match) == old_shape(empty_match)
+    assert new_shape(empty_match)[2:] == (0, 0, 0)
+
+
 def test_quantile_sketch_single_median_bucket(spark, sf_dir):
     from pyspark.sql import functions as F
 
@@ -993,6 +1059,23 @@ def test_grouped_prefix_sum_matches_plain_window(spark):
         ).collect()
 
 
+def test_skew_profile_on_crafted_frame(spark):
+    """skew_profile's integer statistics on a hand-built frame: one
+    key holding 90 of 100 rows -> top1_pct 90, n_keys 11, and the
+    hot key's bucket must dominate the reducer loads."""
+    from logicash_etl_spark.operators.partitioning import skew_profile
+
+    rows = [("hot",)] * 90 + [(f"k{i}",) for i in range(10)]
+    df = spark.createDataFrame(rows, ["k"])
+    r = skew_profile(df, "k").first()
+    assert r["key_name"] == "k"
+    assert r["n_keys"] == 11
+    assert r["total_rows"] == 100
+    assert r["top1_pct"] == 90.0
+    assert r["max_part_load"] >= 90  # the hot key's bucket
+    assert r["skew_ratio"] >= 90 / (100 / 32) * 0.999
+
+
 def test_pq_encode_and_topk_invariants(spark):
     """PQ contracts on a synthetic clustered corpus: codes stay in
     [0, 16), are layout-invariant, and the shortlist+re-rank top-5
@@ -1037,6 +1120,105 @@ def test_pq_encode_and_topk_invariants(spark):
     assert all(r.vec_id % 3 == 0 and r.vec_id != 0 for r in top)
     assert [r.rank for r in sorted(top, key=lambda r: r.rank)] == [1, 2, 3, 4, 5]
     assert all(r.approx_sq_l2 >= 0 for r in top)
+
+
+def test_pq_encode_arrow_matches_retired_expression_fold(spark):
+    """pq_encode's numpy mapInArrow argmin must produce EXACTLY the
+    codes of the retired literal-codebook expression fold on every
+    well-formed row (same IEEE accumulation order, same first-minimum
+    tie break), NULL codes on NULL vectors like the fold did, a NULL
+    code in exactly the subspace holding a NULL element (the fold's
+    answer too), and all-NULL codes on wrong-length vectors (the
+    fixed-dim contract)."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from logicash_etl_spark.operators.similarity import (
+        pq_encode,
+        pq_train_codebooks,
+    )
+
+    def _d(x):
+        return f"CAST('{x!r}' AS DOUBLE)"
+
+    def _book_sql(book):
+        return (
+            "array("
+            + ",".join(
+                "array(" + ",".join(_d(c) for c in row) + ")" for row in book
+            )
+            + ")"
+        )
+
+    def fold_encode(vectors, books, id_col="vec_id", vec_col="embedding"):
+        dsub = len(books[0][0])
+        m = len(books)
+        sq = [
+            f"transform({_book_sql(book)}, c -> "
+            f"aggregate(zip_with(slice(__pqv,{s * dsub + 1},{dsub}), c, "
+            "(a,b) -> (a-b)*(a-b)), 0D, (acc,x) -> acc + x))"
+            for s, book in enumerate(books)
+        ]
+        staged = vectors.select(
+            F.col(id_col), F.col(vec_col).cast("array<double>").alias("__pqv")
+        ).select(
+            id_col, *[F.expr(e).alias(f"__pqd{s}") for s, e in enumerate(sq)]
+        )
+        return staged.select(
+            id_col,
+            *[
+                F.expr(
+                    f"CAST(array_position(__pqd{s}, array_min(__pqd{s})) - 1"
+                    " AS INT)"
+                ).alias(f"code_{s}")
+                for s in range(m)
+            ],
+        )
+
+    rng = random.Random(14)
+    rows = [
+        (i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(120)
+    ]
+    # exact-duplicate vectors exercise tie-adjacent distances
+    rows += [(200 + i, list(rows[i][1])) for i in range(5)]
+    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    books = pq_train_codebooks(emb)
+
+    new = {
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8))
+        for r in pq_encode(emb, books).collect()
+    }
+    old = {
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8))
+        for r in fold_encode(emb, books).collect()
+    }
+    assert new == old
+
+    # NULL vector -> NULL codes (both paths); NULL element -> NULL code
+    # in its subspace only (both paths); short vector -> all-NULL codes
+    # on the arrow path (pinned contract)
+    weird = spark.createDataFrame(
+        [(1, None), (2, [0.0] * 64), (3, [1.0, 2.0]), (4, [0.5] * 9 + [None] + [0.5] * 54)],
+        "vec_id int, embedding array<double>",
+    )
+    got = {
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8))
+        for r in pq_encode(weird, books).collect()
+    }
+    assert got[1] == (None,) * 8
+    assert got[3] == (None,) * 8
+    assert None not in got[2]
+    old_null = {
+        r.vec_id: tuple(r[f"code_{s}"] for s in range(8))
+        for r in fold_encode(
+            weird.filter(F.col("vec_id") != 3), books
+        ).collect()
+    }
+    assert old_null[1] == (None,) * 8
+    assert got[2] == old_null[2]
+    assert got[4][1] is None and None not in (got[4][0], *got[4][2:])
+    assert got[4] == old_null[4]
 
 
 def test_grouped_bottom_k_matches_plain_window(spark):
@@ -1710,3 +1892,90 @@ def test_hits_int_edgeless_graph_yields_zeros(spark):
         for r in hits_int(nodes, edges).collect()
     }
     assert out == {"a": (0, 0), "b": (0, 0)}
+
+
+def _py_morton(x: int, y: int, bits: int = 10) -> int:
+    z = 0
+    for i in range(bits):
+        z |= ((x >> i) & 1) << (2 * i)
+        z |= ((y >> i) & 1) << (2 * i + 1)
+    return z
+
+
+def test_morton_sql_matches_python_reference():
+    """The loop-generated SQL interleave (shared by the Spark
+    expression and the DuckDB oracle) must agree with an independent
+    Python implementation on edge and random-ish coordinates."""
+    import duckdb
+
+    from logicash_etl_spark.queries.advanced import _morton_sql
+
+    pts = [(0, 0), (1023, 1023), (1, 0), (0, 1), (512, 511), (700, 45)]
+    sql = (
+        "SELECT "
+        + _morton_sql("x", "y")
+        + " AS z FROM (SELECT unnest("
+        + str([p[0] for p in pts])
+        + ") AS x, unnest("
+        + str([p[1] for p in pts])
+        + ") AS y)"
+    )
+    got = [r[0] for r in duckdb.sql(sql).fetchall()]
+    assert got == [_py_morton(x, y) for x, y in pts]
+
+
+def test_zorder_cells_bound_both_dimensions(spark, sf_dir):
+    """The zorder layout must bound BOTH coordinate spans per file
+    (the Morton property the report exists to show); the linear
+    layout must bound only its sort key."""
+    from logicash_etl_spark.queries import QUERIES
+
+    rows = {
+        r["layout"]: r
+        for r in QUERIES["zorder_file_skipping"](spark, sf_dir).collect()
+    }
+    z, lin = rows["zorder"], rows["linear_x"]
+    assert z["avg_x_span"] <= 128 and z["avg_y_span"] <= 128
+    assert lin["avg_x_span"] <= 16
+    # a y-band predicate prunes most zorder files but no linear ones
+    assert z["files_scan_y_band"] < lin["files_scan_y_band"]
+    assert lin["files_scan_y_band"] == lin["n_files"]
+
+
+def test_histogram_estimator_interpolates_exactly(spark, tmp_path):
+    """On a perfectly uniform integer column the equi-depth estimate
+    must be exact (zero relative error) for any threshold that lands
+    on a bucket boundary of the uniform grid."""
+    # 3200 rows, values 100..320000 step 100 -> buckets of equal
+    # width (full orders schema: the reader's contract fails fast on
+    # missing columns)
+    import datetime as dt
+
+    from logicash_etl_spark.queries import QUERIES
+    from logicash_etl_spark.schemas import ORDERS
+
+    rows = [
+        (
+            i,
+            i % 7,
+            "F",
+            float((i + 1) * 100),
+            dt.datetime(2024, 1, 1),
+            "1-URGENT",
+        )
+        for i in range(3200)
+    ]
+    spark.createDataFrame(rows, ORDERS).write.parquet(
+        f"{tmp_path}/orders.parquet"
+    )
+
+    got = {
+        r["threshold"]: r
+        for r in QUERIES["histogram_selectivity_report"](
+            spark, str(tmp_path)
+        ).collect()
+    }
+    # threshold 150000 -> exactly 1500 of 3200 rows
+    assert got[150000.0]["actual_rows"] == 1500
+    assert abs(got[150000.0]["est_rows"] - 1500) < 2
+    assert abs(got[150000.0]["rel_err_pct"]) < 0.15

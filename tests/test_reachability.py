@@ -3,6 +3,9 @@
 - every defaulted parameter of a top-level engine function other than a
   ``@query`` must take more than one value across its entry-point calls
   (or be allowlisted with its reason);
+- no allowlisted test seam is read in an ``if``/``while``/conditional
+  expression test or a ``for`` bound, in its own function or in an
+  engine function it is passed to;
 - every parameter of a top-level engine function other than a ``@query``
   must be read by its body;
 - no module, test or root script imports a name it never reads;
@@ -225,28 +228,21 @@ def test_scan_sees_the_catalog():
 # selects a branch nobody takes: inline the value.
 #
 # The allowlist names each kept parameter's reason: a deployment setting, or
-# a test seam ``file::test`` (that tier-1 test sets it to reach, on a small
-# input, a path the entry points reach only with larger inputs).
+# a test seam ``file::test`` (that tier-1 test sets it to size, on a small
+# input, an algorithm the entry points run, such as a bucket count). A seam
+# never selects a branch: ``test_no_test_seam_selects_a_branch``.
 ALLOWED_OPTIONS = {
     "session.get_spark.master": "deployment setting: the cluster to run on",
-    "operators.graph.connected_components.driver_threshold":
-        "test_extensions::test_components_distributed_matches_driver_path",
-    "operators.graph.connected_components.max_iterations":
-        "test_extensions::test_large_star_small_star_path_graph",
-    "operators.text.bpe_train.driver_vocab_threshold":
-        "test_extensions::test_bpe_train_matches_python_twin",
     "operators.partitioning.grouped_prefix_sum.buckets":
         "test_dq_properties::test_grouped_prefix_sum_random_differential",
     "operators.partitioning.grouped_prefix_peak.buckets":
-        "test_round14_opts::test_grouped_prefix_peak_matches_prefix_sum_then_max",
+        "test_dq_properties::test_grouped_prefix_peak_matches_prefix_sum_then_max",
     "operators.partitioning.grouped_bottom_k.salt_buckets":
         "test_extensions::test_grouped_bottom_k_matches_plain_window",
     "operators.dedup.jaccard_pairs.max_doc_freq":
         "test_extensions::test_jaccard_hot_shingle_skew_bounded",
     "operators.skyline.pareto_frontier_2d.buckets":
         "test_extensions::test_pareto_frontier_matches_bruteforce",
-    "streaming.history.incremental_dedup_batch_fn.keep_gens":
-        "test_streaming::test_history_compaction_bounds_dirs_and_preserves_verdicts",
 }
 
 
@@ -376,6 +372,77 @@ def test_every_test_seam_names_a_test_that_sets_it():
         if not any(_passes(t, qualname.rsplit(".", 1)[1], param, position) for t in tests):
             wrong.append(f"{option}: {reason}")
     assert not wrong, "test seams whose named test is gone or does not set them:\n  " + "\n  ".join(wrong)
+
+
+def _branch_reads(fn: ast.AST, param: str) -> list[int]:
+    """Lines where ``param`` is read in an ``if``/``while``/conditional
+    expression test or a ``for`` bound inside ``fn``."""
+    tests = []
+    for node in ast.walk(fn):
+        if isinstance(node, (ast.If, ast.While, ast.IfExp)):
+            tests.append(node.test)
+        elif isinstance(node, (ast.For, ast.AsyncFor, ast.comprehension)):
+            tests.append(node.iter)
+    return sorted({
+        n.lineno for t in tests for n in ast.walk(t) if isinstance(n, ast.Name) and n.id == param
+    })
+
+
+def _seams_selecting_branches(scan: _Scan) -> list[str]:
+    """Test seams read as a branch test or loop bound, in their own
+    function or in an engine function they are passed to (one call
+    deep)."""
+    fns = {(m, n): node for m, n, node in _engine_fns(scan)}
+    out = []
+    for option, reason in ALLOWED_OPTIONS.items():
+        qualname, param = option.rsplit(".", 1)
+        module, name = qualname.rsplit(".", 1)
+        fn = fns.get((f"{PKG}.{module}", name))
+        if reason.startswith("deployment setting") or fn is None:
+            continue
+        hits = [f"{qualname}:{line}" for line in _branch_reads(fn, param)]
+        for call in (n for n in ast.walk(fn) if isinstance(n, ast.Call)):
+            passed = [(i, None, a) for i, a in enumerate(call.args)]
+            passed += [(None, k.arg, k.value) for k in call.keywords]
+            for ref in scan.resolve(f"{PKG}.{module}", call.func) & fns.keys():
+                positional = [p.arg for p in [*fns[ref].args.posonlyargs, *fns[ref].args.args]]
+                for i, keyword, value in passed:
+                    if not any(isinstance(n, ast.Name) and n.id == param for n in ast.walk(value)):
+                        continue
+                    target = keyword or (positional[i] if i < len(positional) else None)
+                    if target:
+                        hits += [
+                            f"{ref[0][len(PKG) + 1:]}.{ref[1]}:{line}"
+                            for line in _branch_reads(fns[ref], target)
+                        ]
+        if hits:
+            out.append(f"{option} ({', '.join(hits)})")
+    return out
+
+
+def test_no_test_seam_selects_a_branch():
+    """A test seam may size an algorithm the entry points run (a bucket
+    count, a frequency cap), but must not pick a path: a branch only
+    the seam's test value takes is a second strategy no entry point
+    runs. Delete it with the seam."""
+    selecting = _seams_selecting_branches(_Scan())
+    assert not selecting, (
+        "test seams read in a branch test or loop bound:\n  " + "\n  ".join(selecting)
+    )
+
+
+def test_branch_read_guard_sees_each_construct():
+    """Guard the guard: each branch form is seen, a sizing use is not."""
+    src = (
+        "def f(xs, k=1):\n"
+        "    if k:\n        pass\n"
+        "    while xs < k:\n        pass\n"
+        "    y = 1 if k else 2\n"
+        "    for _ in range(k):\n        pass\n"
+        "    z = [x for x in range(k)]\n"
+        "    return xs.repartition(k)\n"
+    )
+    assert _branch_reads(ast.parse(src).body[0], "k") == [2, 4, 6, 7, 9]
 
 
 def test_option_scan_resolves_a_known_keyword():

@@ -126,3 +126,33 @@ def test_bloom_probe_literal_matches_keylevel(spark, sf_dir):
     )
     assert tn.count() == probe.count() + 1
     assert tn.filter(F.col("key").isNull()).first().bloom_pass is False
+
+
+def test_poisson_ladder_mean_is_one(spark):
+    """The integer CDF ladder must realize a Poisson(1)-like weight
+    distribution: mean within 2% of 1.0 and P(w=0) within 2% of
+    exp(-1) over 100k hash-seeded draws."""
+    df = spark.range(100_000).select(
+        (
+            F.conv(F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10)
+            .cast("bigint")
+            % 1_000_000
+        ).alias("m")
+    )
+    w = (
+        F.when(F.col("m") < 367879, 0)
+        .when(F.col("m") < 735759, 1)
+        .when(F.col("m") < 919699, 2)
+        .when(F.col("m") < 981012, 3)
+        .when(F.col("m") < 996340, 4)
+        .when(F.col("m") < 999406, 5)
+        .when(F.col("m") < 999917, 6)
+        .when(F.col("m") < 999990, 7)
+        .otherwise(8)
+    )
+    r = df.select(w.alias("w")).agg(
+        F.avg("w").alias("mean"),
+        F.avg((F.col("w") == 0).cast("double")).alias("p0"),
+    ).first()
+    assert abs(r["mean"] - 1.0) < 0.02
+    assert abs(r["p0"] - 0.36787944117144233) < 0.02 * 0.368 + 0.01

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logicash_etl_spark import schemas as S
+from logicash_etl_spark.sources.lot_datasource import lot_stream_quiet, register_lot_source
 from logicash_etl_spark.sources.readers import read_table
 from logicash_etl_spark.streaming.ops import dedup_stream, session_windows, windowed_counts
 from logicash_etl_spark.streaming.sources import run_available_now_to_parquet, stream_parquet_dir
@@ -488,136 +489,139 @@ def test_lot_stream_rejects_consumed_lot_deletion(spark, tmp_path):
         drain()
 
 
-def test_history_compaction_bounds_dirs_and_preserves_verdicts(spark, tmp_path):
-    """The always-on dedup stream must not sprawl one generation dir
-    per epoch forever: with keep_gens=K, after 2K+ epochs at most K+1
-    generation dirs are live — and the per-doc verdicts are IDENTICAL
-    to an uncompacted (keep_gens=inf) run, including a replayed epoch
-    reading the same fingerprint set after a fold."""
-    import os
+def _drain_lots_to_parquet(spark, root, ck, out):
+    q = (
+        spark.readStream.format("logicash_lot")
+        .schema("id long")
+        .option("path", root)
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
-    from pyspark.sql import functions as F
 
+def test_lot_stream_quiet_mirrors_reader_decision(spark, tmp_path):
+    """The quiet-period detector must say True exactly when a stream
+    restart would plan one empty no-new-lots micro-batch, and False on
+    every divergence the real reader acts on (new lot, mutated stamp,
+    vanished consumed lot, uncommitted batch) — so the fast path can
+    never skip a drain or mask a contract violation."""
+    register_lot_source(spark)
+    root = str(tmp_path / "lots")
+    ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
+    spark.range(5).write.format("logicash_lot").mode("append").option(
+        "path", f"{root}/lot_a"
+    ).save()
+
+    # before any drain: no checkpoint logs -> not quiet
+    assert not lot_stream_quiet(ck, root)
+
+    _drain_lots_to_parquet(spark, root, ck, out)
+    assert lot_stream_quiet(ck, root)
+
+    # a new READY lot is new data -> not quiet; the stream picks it up
+    # and the detector flips back to quiet afterwards
+    spark.range(5, 8).write.format("logicash_lot").mode("append").option(
+        "path", f"{root}/lot_b"
+    ).save()
+    assert not lot_stream_quiet(ck, root)
+    _drain_lots_to_parquet(spark, root, ck, out)
+    assert lot_stream_quiet(ck, root)
+    got = sorted(r.id for r in spark.read.parquet(out).collect())
+    assert got == list(range(8))
+
+    # mutated consumed lot (stamp changed) -> not quiet (stream raises)
+    flag = f"{root}/lot_a/_READY"
+    stamp = open(flag).read()
+    with open(flag, "w") as fh:
+        fh.write("rows=999 gen=deadbeef")
+    assert not lot_stream_quiet(ck, root)
+    with open(flag, "w") as fh:
+        fh.write(stamp)
+    # restoring bytes does NOT restore the stamp: mtime_ns moved
+    assert not lot_stream_quiet(ck, root)
+
+    # vanished consumed lot -> not quiet (stream raises)
+    saved = str(tmp_path / "saved_lot_b")
+    shutil.move(f"{root}/lot_b", saved)
+    assert not lot_stream_quiet(ck, root)
+    shutil.move(saved, f"{root}/lot_b")
+
+    # uncommitted latest batch (crash between offset write and commit)
+    # -> not quiet (the restart must replay the batch)
+    commits = sorted(
+        f for f in os.listdir(f"{ck}/commits") if f.lstrip("-").isdigit()
+    )
+    latest = f"{ck}/commits/{commits[-1]}"
+    saved_commit = str(tmp_path / "saved_commit")
+    shutil.move(latest, saved_commit)
+    assert not lot_stream_quiet(ck, root)
+    shutil.move(saved_commit, latest)
+
+
+def test_history_generations_verdicts_and_replay(spark, tmp_path):
+    """Eight epochs of the dedup stream's batch body against one
+    history store: every epoch's verdicts are the expected statuses,
+    the store below epoch 8 is the base plus eight generation dirs,
+    and replaying the last epoch (foreachBatch is at-least-once)
+    rewrites identical verdicts and the identical generation."""
     from logicash_etl_spark.streaming.history import (
         history_dirs,
         incremental_dedup_batch_fn,
         write_history_base,
     )
 
-    K, epochs = 3, 8
-
-    def run(tag, keep_gens):
-        hist = str(tmp_path / f"hist_{tag}")
-        verd = str(tmp_path / f"verd_{tag}")
-        base = spark.createDataFrame(
-            [(f"fp_base_{i}",) for i in range(5)], "fp string"
-        ).withColumn("origin", F.lit("base"))
-        write_history_base(base, hist)
-        fn = incremental_dedup_batch_fn(spark, hist, verd, keep_gens=keep_gens)
-        for e in range(epochs):
-            # each epoch: one base dup, one dup of epoch e-1, one
-            # within-batch dup pair, one unique
-            rows = [
-                (100 * e + 1, "s", f"fp_base_{e % 5}"),
-                (100 * e + 2, "s", f"fp_new_{max(e - 1, 0)}"),
-                (100 * e + 3, "s", f"fp_pair_{e}"),
-                (100 * e + 4, "s", f"fp_pair_{e}"),
-                (100 * e + 5, "s", f"fp_new_{e}"),
-            ]
-            fn(
-                spark.createDataFrame(
-                    rows, "doc_id long, source string, fp string"
-                ),
-                e,
-            )
-        return hist, verd
-
-    hist_c, verd_c = run("c", K)
-    hist_u, verd_u = run("u", 10**9)
-    got_c = {
-        (r.doc_id, r.status)
-        for r in spark.read.parquet(verd_c).collect()
-    }
-    got_u = {
-        (r.doc_id, r.status)
-        for r in spark.read.parquet(verd_u).collect()
-    }
-    assert got_c == got_u
-    assert len(got_c) == epochs * 5
-    # dir sprawl bounded: the compacted store's live view is at most
-    # K+1 gen dirs + 1 base; the uncompacted one grew one per epoch
-    live_c = history_dirs(hist_c, epochs)
-    assert len(live_c) <= K + 2, live_c
-    assert len(history_dirs(hist_u, epochs)) == epochs + 1
-    n_gen_dirs = sum(
-        1 for d in os.listdir(hist_c) if d.startswith("gen_epoch")
-    )
-    assert n_gen_dirs <= K + 1, sorted(os.listdir(hist_c))
-    # replay invariance: re-running the LAST epoch against the
-    # compacted store rewrites identical verdicts
-    fn = incremental_dedup_batch_fn(spark, hist_c, verd_c, keep_gens=K)
-    e = epochs - 1
-    rows = [
-        (100 * e + 1, "s", f"fp_base_{e % 5}"),
-        (100 * e + 2, "s", f"fp_new_{max(e - 1, 0)}"),
-        (100 * e + 3, "s", f"fp_pair_{e}"),
-        (100 * e + 4, "s", f"fp_pair_{e}"),
-        (100 * e + 5, "s", f"fp_new_{e}"),
-    ]
-    fn(
-        spark.createDataFrame(rows, "doc_id long, source string, fp string"),
-        e,
-    )
-    got_replay = {
-        (r.doc_id, r.status)
-        for r in spark.read.parquet(verd_c).collect()
-    }
-    assert got_replay == got_u
-
-
-def test_history_compaction_ignores_partial_snapshot(spark, tmp_path):
-    """A crash mid-fold leaves a base_epoch dir WITHOUT the _SUCCESS
-    marker: readers must skip it (using the previous base + gens,
-    which deletion hasn't touched yet), and a replayed compaction must
-    re-fold over it rather than trusting the partial dir."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from logicash_etl_spark.streaming.history import (
-        compact_history,
-        history_dirs,
-        incremental_dedup_batch_fn,
-        write_history_base,
-    )
-
+    epochs = 8
     hist = str(tmp_path / "hist")
     verd = str(tmp_path / "verd")
     base = spark.createDataFrame(
-        [(f"fp_base_{i}",) for i in range(4)], "fp string"
+        [(f"fp_base_{i}",) for i in range(5)], "fp string"
     ).withColumn("origin", F.lit("base"))
     write_history_base(base, hist)
-    fn = incremental_dedup_batch_fn(spark, hist, verd, keep_gens=2)
-    for e in range(3):
-        rows = [(10 * e + 1, "s", f"fp_new_{e}"), (10 * e + 2, "s", f"fp_base_{e}")]
-        fn(
-            spark.createDataFrame(rows, "doc_id long, source string, fp string"),
-            e,
-        )
-    # simulate a crashed fold at epoch 3: partial dir, no _SUCCESS
-    partial = os.path.join(hist, "base_epoch3")
-    os.makedirs(partial)
-    with open(os.path.join(partial, "part-00000.parquet"), "wb") as fh:
-        fh.write(b"\x00garbage")
-    before = history_dirs(hist, 3)
-    assert partial not in before  # partial snapshot invisible
-    # the replayed epoch's compaction re-folds and OVERWRITES it
-    assert compact_history(spark, hist, 3, keep_gens=0)
-    after = history_dirs(hist, 4)
-    assert after == [partial]  # now complete (re-written with _SUCCESS)
-    fps = {r.fp for r in spark.read.parquet(*after).collect()}
-    assert {f"fp_base_{i}" for i in range(4)} <= fps
-    assert {f"fp_new_{e}" for e in range(3)} <= fps
+    fn = incremental_dedup_batch_fn(spark, hist, verd)
+
+    def batch(e):
+        # each epoch: one base dup, one dup of epoch e-1 (of its own
+        # last row at epoch 0), one within-batch dup pair, one unique
+        rows = [
+            (100 * e + 1, "s", f"fp_base_{e % 5}"),
+            (100 * e + 2, "s", f"fp_new_{max(e - 1, 0)}"),
+            (100 * e + 3, "s", f"fp_pair_{e}"),
+            (100 * e + 4, "s", f"fp_pair_{e}"),
+            (100 * e + 5, "s", f"fp_new_{e}"),
+        ]
+        fn(spark.createDataFrame(rows, "doc_id long, source string, fp string"), e)
+
+    for e in range(epochs):
+        batch(e)
+
+    def verdicts():
+        return {(r.epoch, r.doc_id, r.status) for r in spark.read.parquet(verd).collect()}
+
+    want = set()
+    for e in range(epochs):
+        statuses = [
+            "dup_of_history",
+            "dup_of_earlier_lot" if e else "new_unique",
+            "new_unique",
+            "dup_in_lot",
+            "new_unique" if e else "dup_in_lot",
+        ]
+        want |= {(e, 100 * e + i + 1, st) for i, st in enumerate(statuses)}
+    assert verdicts() == want
+    dirs = history_dirs(hist, epochs)
+    assert len(dirs) == epochs + 1
+    assert dirs == [f"{hist}/base"] + [f"{hist}/gen_epoch{e}" for e in range(epochs)]
+
+    last = f"{hist}/gen_epoch{epochs - 1}"
+    gen_before = sorted(r.fp for r in spark.read.parquet(last).collect())
+    batch(epochs - 1)
+    assert verdicts() == want
+    assert sorted(r.fp for r in spark.read.parquet(last).collect()) == gen_before
 
 
 def test_late_data_split_watermark_metrics(spark, sf_dir):
@@ -678,6 +682,32 @@ def test_warm_redrain_returns_identical_results(spark, sf_smoke):
         warm = sorted(map(str, QUERIES[name](spark, sf_smoke).collect()))
         assert cold == warm, name
         assert cold, name
+
+
+def test_streaming_incremental_dedup_warm_fastpath_identical(spark, sf_smoke):
+    """The warm quiet-period fast path (sink readback without a stream
+    restart) must return byte-identical verdicts to the cold drain —
+    and a second warm call must stay identical too (the memoized drain
+    state is not consumed by the fast path)."""
+    from logicash_etl_spark.queries import QUERIES
+    from logicash_etl_spark.queries import streaming as _sq
+
+    # fresh drain state for this test regardless of what ran before
+    _sq._DRAIN_MEMO.pop(("incremental_dedup", os.path.abspath(sf_smoke)), None)
+    cold = sorted(
+        map(tuple, QUERIES["streaming_incremental_dedup"](spark, sf_smoke).collect())
+    )
+    state = _sq._drain_state("incremental_dedup", sf_smoke, "lq_inc_stream_")
+    assert state["cold"] is False  # second _drain_state call is warm
+    assert lot_stream_quiet(f"{state['root']}/ckpt", f"{state['root']}/lots")
+    warm1 = sorted(
+        map(tuple, QUERIES["streaming_incremental_dedup"](spark, sf_smoke).collect())
+    )
+    warm2 = sorted(
+        map(tuple, QUERIES["streaming_incremental_dedup"](spark, sf_smoke).collect())
+    )
+    assert warm1 == cold
+    assert warm2 == cold
 
 
 def test_failed_cold_drain_never_warms():
